@@ -167,7 +167,12 @@ object Bench {
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     // per query: all measurement attempts, in order; official = best.
-    // A failed query carries the single sentinel attempt -1.
+    // A failed query carries the single sentinel attempt -1, and its
+    // cause (exception class and message) lands in `errors`, which the
+    // detail artifact records next to the query's seconds.
+    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+    def failed(name: String, e: Throwable): Unit =
+      errors(name) = s"${e.getClass.getName}: ${e.getMessage}"
     val firstPass: scala.collection.mutable.LinkedHashMap[String, Seq[Double]] =
       scala.collection.mutable.LinkedHashMap(selected.map { case (name, fn) =>
         name -> {
@@ -177,7 +182,7 @@ object Bench {
             val first = medianOf3(fn)
             val ceiling = ceilings.getOrElse(name, defaultCeiling)
             if (first > ceiling) Seq(first, medianOf3(fn)) else Seq(first)
-          } catch { case _: Throwable => Seq(-1.0) }
+          } catch { case e: Throwable => failed(name, e); Seq(-1.0) }
           storageAudit(name)
           attempts
         }
@@ -203,7 +208,7 @@ object Bench {
           spark.catalog.clearCache()
           fn(spark, sfDir).count() // re-warm: caches were cleared since
           medianOf3(fn)
-        } catch { case _: Throwable => -1.0 }
+        } catch { case e: Throwable => failed(n, e); -1.0 }
         if (post >= 0) firstPass(n) = firstPass(n) :+ post
         storageAudit(n)
       }
@@ -225,7 +230,8 @@ object Bench {
     val qs = results.map { case (n, v, attempts) =>
       val extra = if (attempts.length > 1)
         s""","attempts":${attempts.map(f).mkString("[", ",", "]")}""" else ""
-      s""""$n":{"sec":${f(v)},"ceiling":${f(ceilings.getOrElse(n, defaultCeiling))}$extra}"""
+      val error = errors.get(n).fold("")(e => s""","error":${Verify.jsonString(e)}""")
+      s""""$n":{"sec":${f(v)},"ceiling":${f(ceilings.getOrElse(n, defaultCeiling))}$extra$error}"""
     }.mkString("{", ",", "}")
     // failed queries carry the -1 sentinel; they must not SHRINK the total
     val total = official.values.filter(_ >= 0).sum

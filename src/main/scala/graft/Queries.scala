@@ -8360,7 +8360,10 @@ object Queries {
     // d / Stuart tau-c from ONE cell-tally concordance join (beside
     // row 287's tau-b) — quantity band vs price band.
     "q_ordinal_assoc" -> QueryDef(
-      (s, d) => operators.Stats.ordinalAssociation(ds(s, d, "lineitem").toDF,
+      // least() skips NULL arguments, so a NULL input would land in
+      // the top band instead of being dropped as the oracle drops it
+      (s, d) => operators.Stats.ordinalAssociation(ds(s, d, "lineitem").toDF
+        .filter("l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL"),
         least(lit(9L), expr("cast(round(l_quantity) as bigint) div 5")),
         least(lit(9L), expr("cast(round(l_extendedprice) as bigint) div 10000"))),
       Some("""WITH v AS (SELECT least(9, round(l_quantity)::BIGINT // 5) AS x,
@@ -8397,7 +8400,10 @@ object Queries {
     // ordinal agreement rail beside 281/337 — disagreement form, so
     // numerator and denominator stay pure integers.
     "q_weighted_kappa" -> QueryDef(
-      (s, d) => operators.Stats.weightedKappa(ds(s, d, "lineitem").toDF,
+      // least() skips NULL arguments, so a NULL input would land in
+      // the top band instead of being dropped as the oracle drops it
+      (s, d) => operators.Stats.weightedKappa(ds(s, d, "lineitem").toDF
+        .filter("l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL"),
         least(lit(4L), expr("cast(round(l_quantity) as bigint) div 10")),
         least(lit(4L), expr("cast(round(l_extendedprice) as bigint) div 20000"))),
       Some("""WITH v AS (SELECT least(4, round(l_quantity)::BIGINT // 10) AS a,

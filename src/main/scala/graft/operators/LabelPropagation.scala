@@ -72,6 +72,11 @@ object LabelPropagation {
     */
   private def communitiesOnUnd(und: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "label propagation needs at least one round")
+    // fill the persisted adjacency before the sweeps are planned: a
+    // first sweep planned over the still-empty cache ran one extra
+    // shuffle in some runs and not others (stage-timing dependent); a
+    // no-op pass fills the cache and adds no exchange
+    und.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())
     // initial labels distinct on "b", not "a": und is symmetrized (both
     // endpoints appear on both sides) so the value set is identical,
     // but und is hash(b)-partitioned — the alias-aware planner drops

@@ -281,12 +281,13 @@ object Subscribe {
     * subscribe path (reference: datastoredriver.go ProcessQuerySubscribe;
     * s3/mysql drivers emit update streams). The file source replays
     * existing files (catch-up) and tails new arrivals; schema comes
-    * from the batch footer, with the same TIMESTAMP(NANOS) repair as
-    * [[graft.Tables.load]].
+    * from the batch loader's schema catalog
+    * ([[graft.Tables.readParquet]]), with the same TIMESTAMP(NANOS)
+    * repair as [[graft.Tables.load]].
     */
   def subscribeTable(spark: SparkSession, dir: String, table: String): DataFrame = {
     val path = s"$dir/$table.parquet"
-    val raw = spark.read.parquet(path)
+    val schema = graft.Tables.readParquet(spark, path).schema
     // single-FILE tables (the bundled testdata layout) need the glob so
     // sibling tables in `dir` don't leak into the stream; a Spark-written
     // DIRECTORY table of the same name holds part-*.parquet leaves the
@@ -299,8 +300,8 @@ object Subscribe {
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     val stream =
       if (fs.getFileStatus(hPath).isDirectory)
-        spark.readStream.schema(raw.schema).parquet(path)
-      else spark.readStream.schema(raw.schema)
+        spark.readStream.schema(schema).parquet(path)
+      else spark.readStream.schema(schema)
         .option("pathGlobFilter", s"$table.parquet")
         .parquet(dir)
     graft.Tables.repairNanosTs(stream, table)

@@ -339,4 +339,20 @@ class FuzzPinSpec extends SparkSpecBase {
       .as[(Long, Long, Long)].collect().head
     assert(out === ((1L, 0L, 1L)), s"NULL value must ingest as 0: $out")
   }
+
+  test("ordinal band queries drop NULL quantity or price rows instead of banding them") {
+    // seed-1 q_ordinal_assoc / q_weighted_kappa: least(9, NULL) is 9 in
+    // Spark, so a NULL l_quantity counted in the top band where the
+    // oracle's WHERE drops the row
+    val dir = java.nio.file.Files.createTempDirectory("graft-fuzz-pin").toString
+    Tables.load(spark, sf(), "lineitem")
+      .withColumn("l_quantity",
+        when(col("l_orderkey") % 7 === 0, lit(null)).otherwise(col("l_quantity")))
+      .write.parquet(s"$dir/lineitem.parquet")
+    val present = Tables.load(spark, dir, "lineitem")
+      .filter("l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL").count()
+    assert(present < Tables.load(spark, dir, "lineitem").count())
+    for (q <- Seq("q_ordinal_assoc", "q_weighted_kappa"))
+      assert(SparkEntry.queries(q)(spark, dir).select("n").head().getLong(0) === present, q)
+  }
 }
