@@ -2580,9 +2580,11 @@ object Queries {
     // §2.2/149 — PageRank (5 power-iteration steps, damping 0.85,
     // dangling-mass redistribution) over the customer→supplier
     // purchase graph. Per step: one src-partitioned edge join, one
-    // combinable dst sum, two one-row broadcasts — textbook Pregel
-    // shape in DataFrame terms. All suppliers are dangling in this
-    // graph, so the redistribution path is genuinely exercised.
+    // combinable sum of rank rows and contributions per node, N and
+    // the dangling mass as scalars observed by the checkpoint jobs —
+    // textbook Pregel shape in DataFrame terms. All suppliers are
+    // dangling in this graph, so the redistribution path is genuinely
+    // exercised.
     "q_pagerank" -> QueryDef(
       (s, d) => {
         val edges = ds(s, d, "orders").toDF.select("o_orderkey", "o_custkey")

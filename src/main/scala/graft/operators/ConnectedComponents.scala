@@ -120,9 +120,11 @@ object ConnectedComponents {
     * a per-round change-probe join: min-propagation only ever lowers a
     * label, so Σlabel (exact DECIMAL(38,0) — no long overflow for
     * hash-sized ids, no float drift) strictly decreases while any
-    * label moves and is constant exactly at the fixpoint. The probe
-    * becomes one scan of the round's checkpointed node-sized frame —
-    * measured ~4x cheaper per round than the join probe at sf0.1.
+    * label moves and is constant exactly at the fixpoint. The sum is
+    * observed while the round's node-sized frame is checkpointed
+    * ([[Rounds.checkpoint]]), so the probe costs no job of its own (the
+    * former separate scan was itself measured ~4x cheaper per round
+    * than a join probe at sf0.1).
     *
     * (A double pointer-jump per round was measured and REVERTED: on
     * the sf0.1 long-chain co-purchase graph it cut rounds only 17→15
@@ -148,22 +150,19 @@ object ConnectedComponents {
       // its input twice), blowing up analysis long before execution
       // does. On a multi-executor cluster prefer a reliable checkpoint
       // dir if executor loss during the computation must be survivable.
-      val next = jump(hopped).localCheckpoint(true)
+      // The label sum is observed by the checkpoint job itself, and the
+      // previous round's checkpoint — read by nothing once this one is
+      // materialized — is freed, so checkpoint storage stays at ~1
+      // round on long-diameter graphs instead of growing until driver GC
+      val (next, probe) = Rounds.checkpoint(jump(hopped), Option(labels).toSeq,
+        sum(col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
       hopped.unpersist(blocking = false)
       // empty membership sums to NULL — normalize so the empty graph
       // converges on its second (equal) sum instead of NPE-ing
-      val labelSum = Option(next
-        .agg(sum(col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .head.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
+      val labelSum = Option(probe.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
       converged = prevSum.exists(p => p.compareTo(labelSum) == 0)
       prevSum = Some(labelSum)
-      // next is eagerly checkpointed and self-contained; the previous
-      // round's checkpoint blocks are dead weight from here — release
-      // them now instead of waiting for driver GC, so checkpoint
-      // storage stays bounded at ~2 rounds on long-diameter graphs
-      val prev = labels
       labels = next
-      if (prev != null) prev.unpersist(blocking = false)
       i += 1
     }
     if (labels == null) // maxIterations == 0: identity assignment

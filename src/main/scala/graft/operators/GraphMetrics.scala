@@ -30,7 +30,8 @@ object GraphMetrics {
     * applied to an alternating iteration): every half-step shuffles
     * only the node-sized score table, never the edges. Per-round
     * lineage is truncated with eager localCheckpoints (the
-    * [[PageRank]] plan-hygiene lesson). Output one row per node:
+    * [[PageRank]] plan-hygiene lesson) that also observe each
+    * half-step's max ([[Rounds.checkpoint]]). Output one row per node:
     * (node_id, hub_micro, auth_micro) — zeros for nodes on one side
     * only.
     */
@@ -49,40 +50,43 @@ object GraphMetrics {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val eByDst = e.repartition(col("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // node set checkpointed eagerly: the final assembly must not
-    // re-derive it after the edge cache is released
-    val nodes = eBySrc.select(col("src").as("id"))
-      .union(eByDst.select(col("dst").as("id")))
-      .distinct()
-      .localCheckpoint(true)
     // score·10⁶ div max in DECIMAL(38,0) — exact at any degree (the
     // int64 multiply would wrap silently once score·10⁶ > 2⁶³); the
     // quotient is ≤ 10⁶ so the long narrowing is exact
-    def normalize(score: Column, mx: Column): Column =
+    def normalize(score: Column, mx: Any): Column =
       graft.functions.TimeFunctions.truncDiv(
         score.cast("decimal(38,0)") * lit(1000000L).cast("decimal(38,0)"),
-        mx.cast("decimal(38,0)"))
+        lit(mx).cast("decimal(38,0)"))
+    // each half-step checkpoints its RAW integer scores and observes
+    // their max in the same job; the normalized scores are a projection
+    // over that checkpoint with the max as a literal (a DECIMAL literal
+    // is passed to generated code by reference, so rounds share one
+    // compiled kernel), which takes the one-row max broadcast, and its
+    // jobs, out of every half-step
     var hub = eBySrc.select(col("src").as("id")).distinct()
       .select(col("id"), lit(1000000L).as("h"))
-      .localCheckpoint(true)
     var auth: DataFrame = null
+    var rawHub: Seq[DataFrame] = Nil // the previous half-steps' checkpoints
+    var rawAuth: Seq[DataFrame] = Nil
     for (_ <- 0 until iters) {
-      val rawAuth = eBySrc.join(hub.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id")).agg(sum("h").as("a"))
-      val amax = rawAuth.agg(max("a").as("amax"))
-      auth = rawAuth.crossJoin(broadcast(amax))
-        .select(col("id"), normalize(col("a"), col("amax")).as("a"))
-        .localCheckpoint(true)
-      val rawHub = eByDst.join(auth.withColumnRenamed("id", "dst"), "dst")
-        .groupBy(col("src").as("id")).agg(sum("a").as("h"))
-      val hmax = rawHub.agg(max("h").as("hmax"))
-      hub = rawHub.crossJoin(broadcast(hmax))
-        .select(col("id"), normalize(col("h"), col("hmax")).as("h"))
-        .localCheckpoint(true)
+      val (ra, amax) = Rounds.checkpoint(
+        eBySrc.join(hub.withColumnRenamed("id", "src"), "src")
+          .groupBy(col("dst").as("id")).agg(sum("h").as("a")),
+        rawAuth, max("a"))
+      rawAuth = Seq(ra)
+      auth = ra.select(col("id"), normalize(col("a"), amax.get(0)).as("a"))
+      val (rh, hmax) = Rounds.checkpoint(
+        eByDst.join(auth.withColumnRenamed("id", "dst"), "dst")
+          .groupBy(col("src").as("id")).agg(sum("a").as("h")),
+        rawHub, max("h"))
+      rawHub = Seq(rh)
+      hub = rh.select(col("id"), normalize(col("h"), hmax.get(0)).as("h"))
     }
-    val out = nodes
-      .join(hub.select(col("id"), col("h").as("hub_micro")), Seq("id"), "left")
-      .join(auth.select(col("id"), col("a").as("auth_micro")), Seq("id"), "left")
+    // every source node has a hub row and every destination node an
+    // authority row after the first round, so the node set is their
+    // full outer join — zeros for nodes on one side only
+    val out = hub.select(col("id"), col("h").as("hub_micro"))
+      .join(auth.select(col("id"), col("a").as("auth_micro")), Seq("id"), "full_outer")
       .na.fill(0L, Seq("hub_micro", "auth_micro"))
       .select(col("id").as("node_id"), col("hub_micro"), col("auth_micro"))
     eBySrc.unpersist(blocking = false)

@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   * the join key. Lineage is truncated per round with
   * `localCheckpoint` (the PageRank lesson: an iterated plan otherwise
   * deepens and re-optimizes a growing tree). The fixpoint test is a
-  * count comparison — one combinable aggregate, no driver-side data.
+  * count comparison — the count is observed by the round's checkpoint
+  * job ([[Rounds.checkpoint]]), no driver-side data.
   */
 object Hierarchy {
 
@@ -35,27 +36,25 @@ object Hierarchy {
     */
   def ancestorClosure(edges: DataFrame, childCol: String, parentCol: String,
                       maxRounds: Int = 20): DataFrame = {
-    var closure = edges
+    var (closure, size0) = Rounds.checkpoint(edges
       .select(col(childCol).as("node"), col(parentCol).as("anc"))
       .filter(col("anc").isNotNull && col("anc") =!= col("node"))
-      .distinct()
-      .localCheckpoint(true)
-    var size = closure.count()
+      .distinct(), Nil, count(lit(1)))
+    var size = size0.getLong(0)
     var round = 0
     var grew = true
     while (grew) {
       require(round < maxRounds,
         s"hierarchy deeper than 2^$maxRounds or cyclic: closure still growing at $size rows")
-      val doubled = closure.unionByName(
-          closure.as("a").join(closure.as("b"), col("a.anc") === col("b.node"))
-            .select(col("a.node").as("node"), col("b.anc").as("anc")))
-        .distinct()
-        .localCheckpoint(true)
-      val n = doubled.count()
-      grew = n != size
-      closure.unpersist()
+      val (doubled, n) = Rounds.checkpoint(
+        closure.unionByName(
+            closure.as("a").join(closure.as("b"), col("a.anc") === col("b.node"))
+              .select(col("a.node").as("node"), col("b.anc").as("anc")))
+          .distinct(),
+        Seq(closure), count(lit(1)))
+      grew = n.getLong(0) != size
       closure = doubled
-      size = n
+      size = n.getLong(0)
       round += 1
     }
     closure

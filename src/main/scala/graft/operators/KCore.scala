@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   * if an unbounded variant is ever needed. Each round's edge frame is
   * eagerly localCheckpoint-ed: 4 rounds of two joins each would
   * otherwise stack into one exponential-planning lineage (the
-  * PageRank lesson), and the previous round's blocks are released as
-  * soon as the next is materialized.
+  * PageRank lesson), and the previous round's checkpoint blocks are
+  * freed as soon as the next is materialized ([[Rounds.checkpoint]]).
   *
   * Output: (node_id, core_degree) for nodes surviving `rounds` peels,
   * with their degree inside the surviving subgraph.
@@ -41,12 +41,9 @@ object KCore {
       val deg = und.select(col("a").as("id")).union(und.select(col("b").as("id")))
         .groupBy("id").agg(count(lit(1)).as("dg"))
       val keep = deg.filter(col("dg") >= k).select("id")
-      val prev = und
-      und = und
+      und = Rounds.checkpoint(und
         .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
-        .localCheckpoint(true)
-      prev.unpersist(blocking = false)
+        .join(keep.select(col("id").as("b")), Seq("b"), "left_semi"), Seq(und))._1
       i += 1
     }
     val out = und.select(col("a").as("id")).union(und.select(col("b").as("id")))

@@ -84,6 +84,7 @@ object LabelPropagation {
     // the edge-sized projection every call)
     var labels = und.select(col("b").as("id")).distinct()
       .withColumn("label", col("id"))
+    var swept: Seq[DataFrame] = Nil // the previous sweep's checkpoint
     for (_ <- 0 until rounds) {
       // localCheckpoint per sweep — the PageRank/KCore lineage
       // discipline: each round's plan would otherwise embed the whole
@@ -91,14 +92,14 @@ object LabelPropagation {
       // larger graph's natural round count pays a growing
       // compile/optimize tax on every sweep. Truncating keeps each
       // round's plan one join + two aggregates regardless of rounds.
-      labels = und
+      labels = Rounds.checkpoint(und
         .join(labels.select(col("id").as("b"), col("label")), "b")
         .groupBy(col("a"), col("label"))
         .agg(count(lit(1)).as("cnt"))
         .groupBy(col("a").as("id"))
         .agg(max_by(col("label"), col("cnt") * 100000000L - col("label"))
-          .as("label"))
-        .localCheckpoint(true)
+          .as("label")), swept)._1
+      swept = Seq(labels)
     }
     val out = labels.select(col("id").as("node_id"), col("label").as("community"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -11,20 +11,25 @@ import org.apache.spark.storage.StorageLevel
   *
   * Textbook-complete: teleport (1−d)/N plus DANGLING-MASS
   * redistribution — nodes without out-edges contribute their rank
-  * /N to every node each step, via a one-row aggregate broadcast
-  * (never a driver action), so total rank stays 1 and the result
+  * /N to every node each step, so total rank stays 1 and the result
   * matches the power-iteration definition, not the lossy
-  * drop-the-dangling shortcut.
+  * drop-the-dangling shortcut. N is counted once, by the job that
+  * fills the node table; each superstep's dangling mass is observed
+  * by the job that checkpoints its ranks ([[Rounds.checkpoint]]) and
+  * enters the next superstep as a literal, so neither scalar costs a
+  * job or a broadcast of its own.
   *
-  * Scale shape per superstep: one shuffle-join of edges against the
-  * rank frontier on `src` (edges are pre-partitioned on src once and
-  * persisted, so every superstep reuses that partitioning), one
-  * combinable sum on `dst`, and two one-row broadcasts (N, dangling
-  * mass). State between supersteps is one (node, rank) row per node.
-  * Summation order is engine-nondeterministic but the drift is
-  * ~1e-16/term against a 1e-6 comparison tolerance — iteration count
-  * is fixed, not convergence-tested, so both engines run the same
-  * arithmetic.
+  * Scale shape per superstep: one join of edges against the rank
+  * frame on `src` (edges are pre-partitioned on src once and
+  * persisted, so every superstep reuses that partitioning) and ONE
+  * combinable sum per node over the rank rows and the contributions
+  * together — no second join brings the sums back to the node table.
+  * State between supersteps is one (node, deg, rank) row per node,
+  * and a superstep costs 3 Spark jobs under AQE (the join's exchange
+  * or broadcast, the sum's exchange, the checkpoint). Summation order
+  * is engine-nondeterministic but the drift is ~1e-16/term against a
+  * 1e-6 comparison tolerance — iteration count is fixed, not
+  * convergence-tested, so both engines run the same arithmetic.
   */
 object PageRank {
 
@@ -37,51 +42,56 @@ object PageRank {
     // Iterative-plan hygiene: every superstep TRUNCATES lineage with
     // an eager localCheckpoint of the node-sized rank frame. Each
     // superstep's logical plan references the previous rank frame
-    // twice (dangling mass + contributions), so without truncation the
-    // ANALYZED plan doubles per step and Catalyst optimization time —
-    // driver-side, unaffected by caching — grows exponentially
-    // (measured at sf0.01: supersteps 1.0s → 1.1 → 2.2 → 5.3 → 26.6s
-    // under persist+count; flat ~0.5s/step checkpointed). The
-    // checkpoint is node-sized state on executors — the standard
-    // Pregel-on-DataFrames pattern; on a cluster an executor loss
-    // costs the job a retry from the last checkpoint, the price of
-    // bounded planning.
+    // twice (contributions + the next rank frame), so without
+    // truncation the ANALYZED plan doubles per step and Catalyst
+    // optimization time — driver-side, unaffected by caching — grows
+    // exponentially (measured at sf0.01: supersteps 1.0s → 1.1 → 2.2
+    // → 5.3 → 26.6s under persist+count; flat ~0.5s/step
+    // checkpointed). The checkpoint is node-sized state on executors —
+    // the standard Pregel-on-DataFrames pattern; on a cluster an
+    // executor loss costs the job a retry from the last checkpoint,
+    // the price of bounded planning.
     val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .distinct()
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // (id, deg): one frame carries the node set AND its out-degree
-    // (null = dangling), so the per-superstep dangling probe and the
-    // contribution join read one cache instead of joining two
-    val info = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .join(e.groupBy(col("src").as("id"))
-        .agg(count(lit(1)).cast("double").as("deg")), Seq("id"), "left")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nn = info.agg(count(lit(1)).cast("double").as("n"))
-    var pr = info.crossJoin(broadcast(nn))
-      .select(col("id"), col("deg"), (lit(1.0) / col("n")).as("pr"))
-      .localCheckpoint(true)
+    // (null = dangling); the job that checkpoints it also fills the
+    // edge cache and counts N and the dangling nodes
+    val (nodes, sizes) = Rounds.checkpoint(
+      e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct()
+        .join(e.groupBy(col("src").as("id"))
+          .agg(count(lit(1)).cast("double").as("deg")), Seq("id"), "left"),
+      Nil, count(lit(1)), count(when(col("deg").isNull, 1)))
+    val n = sizes.getLong(0).toDouble
+    var pr = nodes.withColumn("pr", lit(1.0 / n))
+    // rank mass sitting on dangling nodes (no out-edges)
+    var dm = sizes.getLong(1) * (1.0 / n)
     for (_ <- 0 until iters) {
-      // rank mass sitting on dangling nodes (no out-edges): one row,
-      // aggregated straight off the checkpointed rank frame
-      val dangling = pr.filter(col("deg").isNull)
-        .agg(coalesce(sum("pr"), lit(0.0)).as("dm"))
+      // each node meets its incoming contributions in ONE aggregation
+      // on id: the node's own row carries its degree and a zero
+      // contribution, each edge row carries pr(src)/deg(src) toward dst.
+      // A NULL endpoint is a node of its own (the node set is a UNION)
+      // that, like any equi-join key, receives no contributions.
       val contribs = e.join(pr.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("cid"))
-        .agg(sum(col("pr") / col("deg")).as("c"))
-      pr = info.crossJoin(broadcast(nn)).crossJoin(broadcast(dangling))
-        .join(contribs, col("id") === col("cid"), "left")
+        .filter(col("dst").isNotNull)
+        .select(col("dst").as("id"), lit(null).cast("double").as("deg"),
+          (col("pr") / col("deg")).as("c"))
+      val next = pr.select(col("id"), col("deg"), lit(0.0).as("c"))
+        .unionByName(contribs)
+        .groupBy("id").agg(max("deg").as("deg"), sum("c").as("c"))
         .select(col("id"), col("deg"),
-          ((lit(1.0) - damping) / col("n") +
-            lit(damping) * (coalesce(col("c"), lit(0.0)) + col("dm") / col("n")))
+          (lit((1.0 - damping) / n) + lit(damping) * (col("c") + lit(dm / n)))
             .as("pr"))
-        .localCheckpoint(true)
+      val (ranks, mass) = Rounds.checkpoint(next, Seq(pr),
+        coalesce(sum(when(col("deg").isNull, col("pr"))), lit(0.0)))
+      pr = ranks
+      dm = mass.getDouble(0)
     }
     val out = pr.select(col("id").as("node_id"), col("pr"))
     e.unpersist(blocking = false)
-    info.unpersist(blocking = false)
     out
   }
 }

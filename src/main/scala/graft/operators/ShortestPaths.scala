@@ -24,9 +24,10 @@ import org.apache.spark.storage.StorageLevel
   * between hops is one (node, dist) row per settled node. Dedup,
   * symmetrize, and min are all map-side combinable; nothing is
   * collected to the driver. A hop whose frontier is empty terminates
-  * the loop early (one cheap count over the hop's
-  * already-checkpointed merge — the same convergence probe
-  * [[ConnectedComponents.propagateToFixpoint]] uses).
+  * the loop early: the frontier size is observed by the job that
+  * checkpoints the hop's merge ([[Rounds.checkpoint]] — the same
+  * convergence probe [[ConnectedComponents.propagateToFixpoint]]
+  * uses), so the probe costs no job of its own.
   *
   * Semantics (replayable by a recursive-CTE oracle): `dist(v)` = the
   * minimum number of edges on any path from any source to `v`, capped
@@ -119,14 +120,15 @@ object ShortestPaths {
     // equilibrium — each intra-round hop adds a distinct exchange, a
     // merge branch exchange, and superlinear Catalyst optimize time
     // on the chained-join round plan, which together exceed the 2
-    // fixed jobs (checkpoint + probe) a skipped round saves, even on
-    // near-empty tail frontiers. Stride stays 3 at every frontier
-    // size.
+    // fixed jobs (checkpoint + probe) a skipped round then saved, even
+    // on near-empty tail frontiers. Stride stays 3 at every frontier
+    // size. (The probe has since moved into the checkpoint job, so a
+    // skipped round now saves 1 fixed job, which only widens the gap.)
     val stride = 3
-    var settled = src0.localCheckpoint(true)
+    var (settled, size0) = Rounds.checkpoint(src0, Nil, count(lit(1)))
     var frontier = settled
     var h = 1
-    var done = maxHops == 0 || frontier.count() == 0
+    var done = maxHops == 0 || size0.getLong(0) == 0
     while (!done) {
       val s = math.min(stride, maxHops - h + 1)
       var layerSrc: DataFrame = frontier
@@ -137,15 +139,15 @@ object ShortestPaths {
         acc = acc.unionByName(cand)
         if (k < s - 1) layerSrc = cand.select("node_id").distinct()
       }
-      val merged = acc
-        .groupBy("node_id").agg(min("dist").as("dist"))
-        .localCheckpoint(true)
       val deep = h + s - 1
+      val (merged, size) = Rounds.checkpoint(
+        acc.groupBy("node_id").agg(min("dist").as("dist")),
+        Seq(settled), count(when(col("dist") === deep, 1)))
       frontier = merged.filter(col("dist") === deep)
       // merged can hold NEW shallower-layer nodes even when the deep
       // layer is empty — it is always the new settled state
       settled = merged
-      if (frontier.count() == 0) done = true
+      if (size.getLong(0) == 0) done = true
       else {
         h = deep + 1
         done = h > maxHops
@@ -175,10 +177,10 @@ object ShortestPaths {
     // fixed stride 3 — the adaptive tail stride was measured and
     // rejected here too ([[bfsHopsOnAdj]]'s r15 note)
     val stride = 3
-    var settled = src0.localCheckpoint(true)
+    var (settled, size0) = Rounds.checkpoint(src0, Nil, count(lit(1)))
     var frontier = settled
     var h = 1
-    var done = maxHops == 0 || frontier.count() == 0
+    var done = maxHops == 0 || size0.getLong(0) == 0
     while (!done) {
       val s = math.min(stride, maxHops - h + 1)
       var layerSrc: DataFrame = frontier
@@ -195,14 +197,14 @@ object ShortestPaths {
         if (k < s - 1) layerSrc = cand.select("seed", "node_id")
           .repartition(col("node_id")).distinct()
       }
-      val merged = acc
-        .repartition(col("node_id"))
-        .groupBy("seed", "node_id").agg(min("dist").as("dist"))
-        .localCheckpoint(true)
       val deep = h + s - 1
+      val (merged, size) = Rounds.checkpoint(
+        acc.repartition(col("node_id"))
+          .groupBy("seed", "node_id").agg(min("dist").as("dist")),
+        Seq(settled), count(when(col("dist") === deep, 1)))
       frontier = merged.filter(col("dist") === deep)
       settled = merged
-      if (frontier.count() == 0) done = true
+      if (size.getLong(0) == 0) done = true
       else {
         h = deep + 1
         done = h > maxHops
@@ -244,14 +246,13 @@ object ShortestPaths {
       .groupBy("src", "dst").agg(min("w").as("w"))
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = sources.select(sources.columns.head)
+    var (dist, size0) = Rounds.checkpoint(sources.select(sources.columns.head)
       .distinct()
       .select(col(sources.columns.head).cast("long").as("node_id"),
-        lit(0L).as("dist"))
-      .localCheckpoint(true)
+        lit(0L).as("dist")), Nil, count(lit(1)))
     var frontier = dist
     var h = 0
-    var done = maxHops == 0 || frontier.count() == 0
+    var done = maxHops == 0 || size0.getLong(0) == 0
     while (!done) {
       val cand = frontier.join(adj, frontier("node_id") === adj("src"))
         .select(col("dst").as("node_id"), (col("dist") + col("w")).as("dist"))
@@ -261,20 +262,19 @@ object ShortestPaths {
       // aggregation carry (new dist, old dist) side by side, so the
       // former frontier join + its second eager checkpoint (two extra
       // jobs per round — the wall-clock term of a bounded relaxation,
-      // guide §1.3) collapse into a filter over the round's checkpoint
-      val merged = dist.select(col("node_id"), col("dist"),
-          col("dist").as("__old"))
-        .unionByName(cand.withColumn("__old",
-          lit(null).cast("long")))
-        .groupBy("node_id").agg(min("dist").as("dist"),
-          min("__old").as("__old"))
-        .localCheckpoint(true)
-      frontier = merged
-        .filter(col("__old").isNull || col("dist") < col("__old"))
-        .select("node_id", "dist")
+      // guide §1.3) collapse into a filter over the round's checkpoint,
+      // whose size the checkpoint job observes
+      val improved = col("__old").isNull || col("dist") < col("__old")
+      val (merged, size) = Rounds.checkpoint(
+        dist.select(col("node_id"), col("dist"), col("dist").as("__old"))
+          .unionByName(cand.withColumn("__old", lit(null).cast("long")))
+          .groupBy("node_id").agg(min("dist").as("dist"),
+            min("__old").as("__old")),
+        Seq(dist), count(when(improved, 1)))
+      frontier = merged.filter(improved).select("node_id", "dist")
       dist = merged.select("node_id", "dist")
       h += 1
-      done = h >= maxHops || frontier.count() == 0
+      done = h >= maxHops || size.getLong(0) == 0
     }
     adj.unpersist(blocking = false)
     dist
@@ -324,12 +324,14 @@ object ShortestPaths {
         .collect().head
       val farId = far.getLong(0)
       val ecc1 = far.getInt(1).toLong // bfsHops dist is IntegerType
+      Rounds.release(sweep1)
       val sweep2 = bfsHopsOnAdj(adj, Seq(farId).toDF("id"), maxHops)
-      sweep2.agg(max(col("dist")).cast("long").as("pseudo_diameter"),
-          count(lit(1)).as("n_reached"))
-        .select(lit(start).as("start_node"), lit(farId).as("far_node"),
-          lit(ecc1).as("ecc_start"), col("pseudo_diameter"), col("n_reached"))
-        .localCheckpoint(true)
+      Rounds.checkpoint(
+        sweep2.agg(max(col("dist")).cast("long").as("pseudo_diameter"),
+            count(lit(1)).as("n_reached"))
+          .select(lit(start).as("start_node"), lit(farId).as("far_node"),
+            lit(ecc1).as("ecc_start"), col("pseudo_diameter"), col("n_reached")),
+        Seq(sweep2))._1
     } finally adj.unpersist(blocking = false)
   }
 

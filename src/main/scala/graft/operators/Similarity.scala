@@ -717,7 +717,7 @@ object Similarity {
     var cent = seeds.localCheckpoint(true)
     var asg = assign(cent)
     for (_ <- 0 until iters) {
-      cent = update(cent, asg).localCheckpoint(true)
+      cent = Rounds.checkpoint(update(cent, asg), Seq(cent))._1
       asg = assign(cent)
     }
     asg.select(col("vid").as(idCol), col("cid").as("cluster_id"), col("dist_q"))

@@ -18,4 +18,11 @@ object CoreBridge {
     */
   def shuffleDepId(info: org.apache.spark.scheduler.StageInfo): Option[Int] =
     info.shuffleDepId
+
+  /** Drop an RDD's blocks without [[org.apache.spark.rdd.RDD.unpersist]]'s
+    * per-call warning that a locally checkpointed RDD cannot be
+    * recomputed — the point of freeing a round nothing reads any more.
+    */
+  def unpersistRDD(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

@@ -34,8 +34,12 @@ class ConstructionShuffleSpec extends SparkSpecBase {
     * sf0.001 (measured value at pin time in the comment).
     */
   private val EXPECTED: Map[String, Int] = Map(
-    "q_pagerank" -> 19,    // 5 power-iteration rounds over the reused co-partitioned edges
-    "q_components" -> 12,  // hash-min sweeps to fixpoint + final assembly
+    "q_pagerank" -> 8,     // 5 power-iteration rounds over the reused
+                           // edges; each round's contributions and rank
+                           // rows meet in one aggregation, N and the
+                           // dangling mass are observed (19 → 8)
+    "q_components" -> 9,   // hash-min sweeps to fixpoint + final assembly;
+                           // the label-sum probe rides the checkpoint (12 → 9)
     "q_communities" -> 8,  // 3 label-propagation rounds + the one-time
                            // repartition-on-join-key of the persisted
                            // edge set (r14); r15: initial labels
@@ -44,19 +48,25 @@ class ConstructionShuffleSpec extends SparkSpecBase {
     "q_kcore" -> 10,       // peeling rounds to fixpoint at sf0.001
     "dedup_cluster" -> 8,  // minhash bands + pointer-chasing rounds
     "sim_kmeans" -> 10,    // seeding + 2 Lloyd rounds (assign/update)
-    "q_diameter" -> 56,    // two bfsHopsOnAdj sweeps over ONE shared
+    "q_diameter" -> 44,    // two bfsHopsOnAdj sweeps over ONE shared
                            // adjacency, stride-3 rounds (3 expand joins +
                            // one fused min-merge per round); ecc-dependent
                            // — r13's 3-shuffle hops measured 93, r14's
-                           // fused stride-3 rounds 56
-    "q_hits" -> 19,        // 2 co-partitioned edge copies reused across
+                           // fused stride-3 rounds 56; frontier sizes
+                           // observed by the checkpoint job, 44
+    "q_hits" -> 11,        // 2 co-partitioned edge copies reused across
                            // 2x2 half-steps; per-step shuffles = score
-                           // table only (r14, measured 19)
-    "q_bfs" -> 12,         // one stride-3 bfsHops sweep (r14)
-    "q_sssp" -> 19,        // Bellman-Ford frontier deltas; the improved
+                           // table only (r14, measured 19); each max is
+                           // observed, not broadcast, and the node set
+                           // is the hub/authority outer join (11)
+    "q_bfs" -> 9,          // one stride-3 bfsHops sweep (r14: 12); the
+                           // frontier-size probe rides the checkpoint
+    "q_sssp" -> 15,        // Bellman-Ford frontier deltas; the improved
                            // set now falls out of the min-merge itself
                            // (r14 opt: 27 → 19 — the per-round frontier
-                           // join + second checkpoint are gone)
+                           // join + second checkpoint are gone); the
+                           // frontier-size probe rides the checkpoint
+                           // (19 → 15)
     "q_modularity" -> 12,  // r15: ONE symmetrized+repartitioned edge
                            // build shared by the LPA sweeps AND the
                            // degree prep (degree = exchange-free groupBy
@@ -65,10 +75,11 @@ class ConstructionShuffleSpec extends SparkSpecBase {
                            // r14 shape measured 15 (re-distinct inside
                            // communities + a second symmetrize/shuffle
                            // for degrees); sf0.1 A/B 8.1 → 6.0 s
-    "q_harmonic" -> 13     // ONE labeled multi-source sweep for all 3
+    "q_harmonic" -> 10     // ONE labeled multi-source sweep for all 3
                            // seeds over the shared persisted adjacency
                            // (r14 opt: serial rounds paid once instead
-                           // of once per seed; measured 13 at sf0.001)
+                           // of once per seed; measured 13 at sf0.001);
+                           // frontier sizes observed (13 → 10)
   )
 
   private def countShuffleStages(body: => Unit): Int = {

@@ -52,4 +52,29 @@ class GraphOpsSpec extends SparkSpecBase {
     val m1 = bfs(Seq((1L, 2L)), Seq(99L), maxHops = 3)
     assert(m1 === Map(99L -> 0))
   }
+
+  /** Spark jobs of a warm build + collect at sf0.001, SparkListener
+    * counted — ceilings pinned at the measured values. Each superstep's
+    * scalar probe (frontier size, label sum, max score, dangling mass)
+    * rides its checkpoint job ([[graft.operators.Rounds.checkpoint]]);
+    * a probe that falls back to its own `count()` or one-row `agg` adds
+    * one or two jobs per round and breaks the ceiling.
+    */
+  private val JOB_CEILINGS: Map[String, Int] = Map(
+    "q_pagerank" -> 25,   // 5 rounds × 3 jobs + node table + edge build
+    "q_hits" -> 25,       // 2 × 2 half-steps, each max observed
+    "q_bfs" -> 27,        // stride-3 rounds, frontier size observed
+    "q_sssp" -> 29,       // Bellman-Ford rounds, improved-set size observed
+    "q_components" -> 35) // fixpoint rounds, label sum observed
+
+  test("iterative graph queries keep their pinned Spark job counts at sf0.001") {
+    val got = JOB_CEILINGS.keys.toSeq.sorted.map { q =>
+      val qd = Queries.asMap(q)
+      qd.build(spark, sf()).collect() // warm: schema catalog, codegen cache
+      q -> jobsDuring(qd.build(spark, sf()).collect())
+    }
+    val bad = got.filter { case (q, n) => n > JOB_CEILINGS(q) }
+    assert(bad.isEmpty, s"over the job ceiling: ${bad.mkString(", ")} " +
+      s"(all: ${got.mkString(", ")})")
+  }
 }

@@ -3,7 +3,6 @@ package graft
 import graft.qpu._
 import java.nio.file.{Files, Path, StandardCopyOption}
 import java.util.concurrent.{Callable, CyclicBarrier, Executors, TimeUnit}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{BinaryType, StringType, StructType}
 
 /** The schema catalog behind [[Tables.load]]: a table's parquet schema
@@ -12,20 +11,6 @@ import org.apache.spark.sql.types.{BinaryType, StringType, StructType}
   */
 class TablesCatalogSpec extends SparkSpecBase {
   import spark.implicits._
-
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    org.apache.spark.graftbridge.CoreBridge.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.graftbridge.CoreBridge.drainListenerBus(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
-  }
 
   private def freshDir(): Path = Files.createTempDirectory("graft-tables-catalog")
 
