@@ -64,6 +64,7 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -173,9 +174,15 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     def failed(name: String, e: Throwable): Unit =
       errors(name) = s"${e.getClass.getName}: ${e.getMessage}"
+    // per query: Janino compiles during its first-pass block (warmup and
+    // timed runs). Queries run one at a time, so the delta is exact.
+    val compiles = scala.collection.mutable.LinkedHashMap[String, Long]()
+    def compileCount: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val firstPass: scala.collection.mutable.LinkedHashMap[String, Seq[Double]] =
       scala.collection.mutable.LinkedHashMap(selected.map { case (name, fn) =>
         name -> {
+          val compiles0 = compileCount
           val attempts = try {
             spark.catalog.clearCache()
             fn(spark, sfDir).count() // warmup
@@ -183,6 +190,7 @@ object Bench {
             val ceiling = ceilings.getOrElse(name, defaultCeiling)
             if (first > ceiling) Seq(first, medianOf3(fn)) else Seq(first)
           } catch { case e: Throwable => failed(name, e); Seq(-1.0) }
+          compiles(name) = compileCount - compiles0
           storageAudit(name)
           attempts
         }
@@ -231,7 +239,7 @@ object Bench {
       val extra = if (attempts.length > 1)
         s""","attempts":${attempts.map(f).mkString("[", ",", "]")}""" else ""
       val error = errors.get(n).fold("")(e => s""","error":${Verify.jsonString(e)}""")
-      s""""$n":{"sec":${f(v)},"ceiling":${f(ceilings.getOrElse(n, defaultCeiling))}$extra$error}"""
+      s""""$n":{"sec":${f(v)},"ceiling":${f(ceilings.getOrElse(n, defaultCeiling))},"compiles":${compiles(n)}$extra$error}"""
     }.mkString("{", ",", "}")
     // failed queries carry the -1 sentinel; they must not SHRINK the total
     val total = official.values.filter(_ >= 0).sum

@@ -13,7 +13,12 @@ import org.apache.spark.sql.SparkSession
   *    coalescing from a high initial value.
   *  - nanosAsLong: the only way Spark reads parquet TIMESTAMP(NANOS)
   *    columns (see Tables.load for the repair back to timestamps).
-  *  - GraftExtensions: registers the native expressions under SQL names.
+  *  - GraftExtensions: registers the native expressions under SQL names
+  *    and the BindLiterals physical rule, which binds a request's
+  *    primitive literals as codegen parameters (one compiled class per
+  *    query shape, not one per key). Only a session built with this
+  *    conf gets the rule; `GraftExtensions.register` cannot add it to a
+  *    session that is already running.
   */
 object GraftSession {
   def builder(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession.Builder =

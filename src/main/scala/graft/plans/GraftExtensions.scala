@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Size}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 
 /** Optimizer rule: `sorted_intersect_count(x, x)` is the element count
   * of x — the merge loop over two identical arrays matches every
@@ -26,8 +27,9 @@ object SelfIntersectFold extends Rule[LogicalPlan] {
 /** SparkSessionExtensions entry point: registers ALL of graft's native
   * kernels under SQL names (so `spark.sql("... cosine_sim(a, b) ...")`
   * works from pure SQL — including over the Thrift server / Spark
-  * Connect, where no Scala Column API is reachable) and graft's
-  * optimizer rules. Enable with
+  * Connect, where no Scala Column API is reachable), graft's
+  * optimizer rules and [[BindLiterals]], the physical rule that binds
+  * a request's primitive literals as codegen parameters. Enable with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -47,6 +49,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder))
     }
     ext.injectOptimizerRule(_ => SelfIntersectFold)
+    // the columnar hook is the one extension point that runs on the
+    // physical plan after EnsureRequirements and before codegen stages
+    // are collapsed; only its pre-transition half is used
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = BindLiterals
+    })
   }
 }
 
@@ -107,8 +115,11 @@ object GraftExtensions {
           intLit("hyperplane_buckets")(c(2)), intLit("hyperplane_buckets")(c(3)))),
   )
 
-  /** Same registrations applied to an already-running session (keeps
-    * the two enablement paths equivalent).
+  /** The SQL functions, table functions and optimizer rule applied to
+    * an already-running session. A running session cannot gain a
+    * physical preparation rule, so literal binding ([[BindLiterals]])
+    * exists only in sessions built with the extension conf
+    * (`GraftSession.builder`).
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     builders.foreach { case (name, builder) =>

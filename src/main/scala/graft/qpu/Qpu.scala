@@ -18,6 +18,12 @@ import org.apache.spark.sql.functions._
   * Scale notes (100 TB): every transform here stays inside
   * whole-stage codegen; nothing collects to the driver. See each
   * subclass's scaladoc for its shuffle/pushdown behavior.
+  *
+  * Per-request cost: a request's literal values (an index key, a
+  * range's bounds, a filter's EQ value) are bound as codegen
+  * parameters by [[graft.plans.BindLiterals]], so each query shape
+  * compiles one class and a new key reuses it. This holds in sessions
+  * built with the `GraftExtensions` conf (`graft.GraftSession`).
   */
 trait Qpu {
   def toDF: DataFrame

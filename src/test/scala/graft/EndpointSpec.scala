@@ -84,11 +84,13 @@ class EndpointSpec extends SparkSpecBase with BeforeAndAfterAll {
     try {
       // SelfIntersectFold rewrites sorted_intersect_count(x, x) → size(x);
       // EXPLAIN through the endpoint proves the injected rule runs there.
-      // A COLUMN argument keeps constant folding out of the picture (a
-      // literal arg would collapse to a literal with or without our rule)
+      // An argument whose length is unknown at planning time keeps
+      // constant folding out of the picture: the extension conf runs
+      // the rule inside the operator-optimization batch, where
+      // size(array(x, x)) folds on to the literal 2
       val rs = conn.createStatement().executeQuery(
         "EXPLAIN SELECT sorted_intersect_count(a, a) FROM " +
-        "(SELECT array(doc_id, doc_id) AS a FROM documents)")
+        "(SELECT array_distinct(array(doc_id, doc_id)) AS a FROM documents)")
       val plan = Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).mkString("\n")
       // the output attribute keeps its auto-alias "sorted_intersect_count(a, a)",
       // so assert on the rewritten projection EXPRESSION, not name absence

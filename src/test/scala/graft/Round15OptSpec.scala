@@ -19,16 +19,6 @@ import org.apache.spark.sql.functions._
   */
 class Round15OptSpec extends SparkSpecBase {
 
-  private def withConf[A](key: String, value: String)(body: => A): A = {
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private def assertSameRows(a: DataFrame, b: DataFrame, label: String): Unit = {
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
       s"$label diverged:\nwindow path:\n${a.collect().mkString("\n")}\n" +

@@ -11,6 +11,17 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
+  /** Run `body` with one session conf set, restoring the previous value. */
+  def withConf[A](key: String, value: String)(body: => A): A = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   /** Spark jobs started while `body` runs (SparkListener, bus drained
     * on both sides so no earlier job leaks in and no late event out).
     */
@@ -37,6 +48,7 @@ object SparkSpecBase {
     .config("spark.sql.shuffle.partitions", 4)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
     .config("spark.ui.enabled", "false")
     // static conf consumed by EndpointSpec's in-process Thrift server:
     // JDBC connections share THIS session (its temp views + injected
