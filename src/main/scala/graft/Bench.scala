@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.lang.management.ManagementFactory
 import scala.jdk.CollectionConverters._
@@ -37,8 +36,7 @@ import scala.jdk.CollectionConverters._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = GraftSession.cores
     val osBean = ManagementFactory.getOperatingSystemMXBean
     // Bounded spin-wait for an idle-enough host; returns (loadavg when
     // released, seconds waited). Threshold cpus/8 (floor 1.0): above it
@@ -59,14 +57,7 @@ object Bench {
     val jvmFlags = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
       .filter(a => a.contains("CodeCache") || a.contains("TieredCompilation") || a.startsWith("-Xmx"))
       .mkString(" ")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     GraftLogging.quietBoundedWindowWarnings()
     GraftLogging.quietCheckpointUnpersistWarnings()
@@ -76,11 +67,11 @@ object Bench {
     // rounds' records now live on boxes measuring ~1.4x apart on
     // identical queries; cross-round and sf0.1-vs-sf1 comparisons
     // (tools/sf1_analysis.py) divide per-query ratios by the calib
-    // ratio instead of hand-adjudicating isolated TimeQ reruns.
+    // ratio instead of hand-adjudicating isolated single-query reruns.
     val calibSec = {
       def run(): Double = {
         val t0 = System.nanoTime()
-        spark.range(0L, 64000000L, 1L, cpus.toInt)
+        spark.range(0L, 64000000L, 1L, cpus)
           .selectExpr("xxhash64(id) AS h")
           .selectExpr("pmod(h, 4096) AS b", "h")
           .groupBy("b").agg(Map("h" -> "sum"))
@@ -105,21 +96,10 @@ object Bench {
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
       } else Map.empty
     }
-    // Steady-state timing: one untimed warmup executes the query end to
-    // end (JIT + codegen + file-footer caches), then median of three
-    // timed runs. Dataset caches are dropped before every run: operators
-    // that persist internally produce plan-identical caches across
-    // invocations, and without the clear the timed runs would read the
-    // warmup's cache instead of executing the operator.
-    def medianOf3(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val times = (1 to 3).map { _ =>
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      times(1)
-    }
+    // Steady-state timing, shared with `graft.Measure time`: a warmup,
+    // then the median of three timed runs with caches cleared before
+    // each (Measure.steadyState / Measure.timedRuns).
+    def steadyMedian(fn: Measure.Query): Double = Measure.steadyState(spark, sfDir, fn)(1)
     // Storage-memory audit (r12, structural): a finished query's
     // lingering blocks are (a) catalog caches, (b) pin-registry
     // persists, (c) eager localCheckpoint RDDs created inside operator
@@ -142,12 +122,6 @@ object Bench {
     def storageBlocks() = spark.sparkContext.getRDDStorageInfo
     var storageHwm = 0L
     val storageLeaks = scala.collection.mutable.LinkedHashMap[String, Long]()
-    def releaseAll(): Unit = {
-      graft.operators.Dedup.releasePins()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
     def gcDrain(name: String): Unit = {
       val t0 = System.nanoTime()
       var left = storageBlocks()
@@ -159,7 +133,7 @@ object Bench {
     def storageAudit(name: String): Unit = {
       val pre = storageBlocks()
       storageHwm = math.max(storageHwm, pre.map(_.memSize).sum)
-      if (pre.nonEmpty) releaseAll()
+      if (pre.nonEmpty) Measure.releaseAll(spark)
     }
     // SPARK_GRAFT_BENCH_ONLY=q_a,q_b restricts the run — for
     // adjudicating one query's number without the other 99 in the JVM
@@ -184,11 +158,10 @@ object Bench {
         name -> {
           val compiles0 = compileCount
           val attempts = try {
-            spark.catalog.clearCache()
-            fn(spark, sfDir).count() // warmup
-            val first = medianOf3(fn)
+            val first = steadyMedian(fn)
             val ceiling = ceilings.getOrElse(name, defaultCeiling)
-            if (first > ceiling) Seq(first, medianOf3(fn)) else Seq(first)
+            if (first > ceiling) Seq(first, Measure.timedRuns(spark, sfDir, fn)(1))
+            else Seq(first)
           } catch { case e: Throwable => failed(name, e); Seq(-1.0) }
           compiles(name) = compileCount - compiles0
           storageAudit(name)
@@ -212,11 +185,8 @@ object Bench {
       loadGate(sys.env.getOrElse("SPARK_GRAFT_BENCH_GATE_SEC", "300").toInt)
       stillOver.foreach { n =>
         val fn = SparkEntry.queries(n)
-        val post = try {
-          spark.catalog.clearCache()
-          fn(spark, sfDir).count() // re-warm: caches were cleared since
-          medianOf3(fn)
-        } catch { case e: Throwable => failed(n, e); -1.0 }
+        // re-warm: caches were cleared since
+        val post = try steadyMedian(fn) catch { case e: Throwable => failed(n, e); -1.0 }
         if (post >= 0) firstPass(n) = firstPass(n) :+ post
         storageAudit(n)
       }
@@ -225,7 +195,7 @@ object Bench {
     // per query; whatever survives the sweep + a forced drain here
     // leaked (a block whose RDD vanished from the registry without
     // freeing its storage)
-    releaseAll()
+    Measure.releaseAll(spark)
     gcDrain("suite_end")
     val results: Seq[(String, Double, Seq[Double])] =
       firstPass.toSeq.map { case (n, a) => (n, best(a), a) }

@@ -19,9 +19,16 @@ import org.apache.spark.sql.SparkSession
   *    query shape, not one per key). Only a session built with this
   *    conf gets the rule; `GraftExtensions.register` cannot add it to a
   *    session that is already running.
+  *
+  * Every session in the repository is built here: the mains through
+  * [[local]], the test session through [[builder]].
   */
 object GraftSession {
-  def builder(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession.Builder =
+  /** Local cores for the mains: `SPARK_GRAFT_CPUS`, else all of them. */
+  def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def builder(cores: Int = GraftSession.cores): SparkSession.Builder =
     SparkSession.builder()
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.shuffle.partitions", cores)
@@ -29,7 +36,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  def local(cores: Int = GraftSession.cores): SparkSession = {
     val s = builder(cores).master(s"local[$cores]")
       .config("spark.ui.enabled", "false").getOrCreate()
     plans.GraftExtensions.register(s) // cover pre-existing sessions too

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Build a replica-scaled dataset for out-of-band scale benching:
@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   * Content perturbation — the part naive replication gets wrong:
   * copying documents verbatim multiplies every doc's duplicate
   * multiplicity by `factor`, which inflates pair-emitting dedup work
-  * quadratically (the r4 ScaleProbe lesson) and measures output
-  * writing, not operators. Replica i > 0 suffixes every token with
+  * quadratically (the r4 scale-probe lesson, SURVEY §5) and measures
+  * output writing, not operators. Replica i > 0 suffixes every token with
   * `·i` (distinct content, same length/statistics — duplicate GROUPS
   * replicate instead of growing) and re-derives n_chars; embeddings
   * keep their vectors but move to per-replica label buckets so
@@ -33,15 +33,7 @@ object SfScale {
     val src = args(0)
     val dst = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     def replicate(name: String)(transform: (DataFrame, Int) => DataFrame): Unit = {

@@ -670,8 +670,9 @@ object Analytics {
     * output over the same total order (NtileSpec pins equality), so
     * the dispatch is a plan choice, never a result choice.
     *
-    * The constant is MEASURED (r14, `ScaleProbe N ntile` — both paths
-    * timed on seeded 32-core data with a checksum equality probe):
+    * The constant is MEASURED (r14 ntile scale probe, recorded in
+    * SURVEY §5 — both paths timed on seeded 32-core data with a
+    * checksum equality probe):
     * window/distributed seconds were 2.6/3.9 at 1M, 2.1/1.7 at 2M,
     * 4.4/1.8 at 4M, 8.8/4.9 at 7M, 35.5/7.6 at 30M — the single sort
     * task grows linearly while the distributed rank stays near-flat,
@@ -702,8 +703,8 @@ object Analytics {
     // join; an un-materialized plan would recompute the range shuffle
     // independently per branch, and partition ASSIGNMENT is not stable
     // across recomputes (AQE may coalesce each branch differently and
-    // the range-bound sampling reruns) — the r14 ntile ScaleProbe
-    // caught exactly that as a checksum mismatch at 7M rows. The eager
+    // the range-bound sampling reruns) — the r14 ntile scale probe
+    // (SURVEY §5) caught exactly that as a checksum mismatch at 7M rows. The eager
     // localCheckpoint pins one materialized assignment for every
     // consumer.
     val parted = df.repartitionByRange(order: _*)

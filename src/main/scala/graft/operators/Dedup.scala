@@ -708,8 +708,8 @@ object Dedup {
     * prefix shingles.
     *
     * The previous form of this operator was a demo-capped cartesian
-    * (`doc_id < 100`); this one drops the cap — ScaleProbe shows the
-    * sub-quadratic growth.
+    * (`doc_id < 100`); this one drops the cap — the scale probe
+    * recorded in SURVEY §5 shows the sub-quadratic growth.
     */
   def editDistancePairs(df: DataFrame, idCol: String, textCol: String,
                         maxDist: Int, prefixLen: Int = 40,
@@ -1052,8 +1052,8 @@ object Dedup {
     * Size `maxDf` as a corpus FRACTION, not a constant: on templated
     * corpora a phrase's document frequency grows with the corpus, so a
     * fixed threshold that works at one scale gates every true shared
-    * fingerprint at 10× (ScaleProbe holds the oracled query's ~13%
-    * fraction for exactly this reason). At 100 TB a sensible default
+    * fingerprint at 10× (the SURVEY §5 scale probe held the oracled
+    * query's ~13% fraction for exactly this reason). At 100 TB a sensible default
     * is maxDf ≈ the largest duplicate-cluster size you still care to
     * pair up — everything above it is boilerplate by definition.
     */

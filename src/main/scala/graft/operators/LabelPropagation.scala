@@ -55,14 +55,10 @@ object LabelPropagation {
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
     val sym = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
       .distinct()
-    // conf escape hatch exists ONLY so ScaleProbe's `lpa` mode can
-    // measure both arms of the r14 one-time-repartition decision on
-    // the real operator (VERDICT what's-wrong #5); results never
-    // depend on it
-    if (edges.sparkSession.conf
-        .get("spark.graft.lpa.copartition", "true").toBoolean)
-      sym.repartition(col("b"))
-    else sym
+    // both arms of this decision were measured on the real operator
+    // (about 30% fewer shuffled bytes, wall win from 4.8M edges up;
+    // plans/r15/lpa_copartition_probe.md)
+    sym.repartition(col("b"))
   }
 
   /** [[communities]] over a pre-built (already persisted) symmetrized

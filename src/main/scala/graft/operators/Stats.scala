@@ -112,7 +112,7 @@ object Stats {
     * the [[Analytics.distributedNtile]] construction: range
     * repartition on the value (checkpointed so partition assignment
     * is stable across the offset and join branches — the r14 ntile
-    * ScaleProbe lesson), per-partition inclusive cumsum, plus
+    * scale-probe lesson, SURVEY §5), per-partition inclusive cumsum, plus
     * broadcast per-partition offsets whose own cumulative window runs
     * over ≤ spark.sql.shuffle.partitions rows. Both paths cumulate
     * the SAME total order on `vCol`, so the dispatch is a plan

@@ -191,10 +191,11 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   // The three round-4 heavies: their task-metric volumes are exactly
-  // reproducible (AdjudicateQ measured identical byte signatures across
-  // interleaved runs), so the ceilings are measured-at-sf0.001 + ~30%
-  // headroom — a reintroduced exchange, window, or second winnow pass
-  // lands far above them.
+  // reproducible (the interleaved-load adjudication recorded in SURVEY
+  // §8, round 5, measured identical byte signatures across runs; the
+  // protocol is `graft.Measure adjudicate`), so the ceilings are
+  // measured-at-sf0.001 + ~30% headroom — a reintroduced exchange,
+  // window, or second winnow pass lands far above them.
 
   test("q_substring_clusters: winnow runs once, shuffles stay membership-sized") {
     spark.catalog.clearCache()

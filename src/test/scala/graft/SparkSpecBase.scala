@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (small parallelism — unit tests,
-  * not benchmarks).
+/** Shared local SparkSession for specs: the shipped session config
+  * ([[GraftSession.builder]]) at a fixed small parallelism — unit tests,
+  * not benchmarks, and the job/stage pins were measured at 4 cores.
   */
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
@@ -42,13 +43,9 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = SparkSession.builder()
+  lazy val session: SparkSession = GraftSession.builder(4)
     .master("local[4]")
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
     .config("spark.ui.enabled", "false")
     // static conf consumed by EndpointSpec's in-process Thrift server:
     // JDBC connections share THIS session (its temp views + injected
