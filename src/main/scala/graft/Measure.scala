@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
+import scala.collection.mutable
+import scala.util.matching.Regex
 
 /** Single-query measurement on the session every main uses
   * ([[GraftSession.local]]: GraftExtensions loaded, `SPARK_GRAFT_CPUS`
@@ -84,7 +86,30 @@ object Measure {
     "q_winsorized", "q_url_canonical", "q_modularity", "q_ndcg",
     "dedup_lsh_tuning", "q_rendezvous", "q_feature_hash", "q_autocorr")
 
-  /** A formatted plan made readable. Iterative operators (label
+  /** Plan tokens that change from run to run with the same code, each
+    * with its stand-in: object hash codes, lambda class names,
+    * `plan_id`s, RDD ids, `.scala:` line numbers and AQE statistics.
+    */
+  private val volatileTokens: Seq[(Regex, String)] = Seq(
+    """\$\$Lambda(\$\d+)?/0x[0-9a-f]+""".r -> Regex.quoteReplacement("$$Lambda"),
+    """(?<=\w)@[0-9a-f]{1,8}\b""".r -> "@_",
+    """plan_id=\d+""".r -> "plan_id=_",
+    """RDD\[\d+\]""".r -> "RDD[_]",
+    """\.scala:\d+""".r -> ".scala:_",
+    """(sizeInBytes|rowCount)=[^,)]+""".r -> "$1=_")
+
+  /** [[volatileTokens]] masked, and expression ids renumbered by first
+    * appearance so references within the plan still match: two runs of
+    * one plan render the same text.
+    */
+  private def stablePlan(plan: String): String = {
+    val masked = volatileTokens.foldLeft(plan) { case (p, (re, to)) => re.replaceAllIn(p, to) }
+    val ids = mutable.Map.empty[String, Int]
+    """#(\d+)""".r.replaceAllIn(masked, m => "#" + ids.getOrElseUpdate(m.group(1), ids.size + 1))
+  }
+
+  /** A formatted plan made stable ([[stablePlan]]) and readable.
+    * Iterative operators (label
     * propagation) print their cached subtree per pointer-jump round —
     * thousands of repeating lines that drown the readable plans — so
     * the head of the tree (the part worth auditing) is kept and the
@@ -94,8 +119,9 @@ object Measure {
     * raw NUL inside coalesce(...); one would make git/grep treat the
     * whole artifact as binary).
     */
-  private[graft] def renderPlan(plan: String): String = {
+  private[graft] def renderPlan(raw: String): String = {
     val maxLines = 400
+    val plan = stablePlan(raw)
     val lines = plan.linesIterator.toSeq
     val cause =
       if (plan.contains("InMemoryTableScan") || plan.contains("InMemoryRelation"))

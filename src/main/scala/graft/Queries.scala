@@ -4,7 +4,7 @@ import graft.api.ProteusQL
 import graft.functions.TextFunctions
 import graft.operators.{AsOf, Classifier, Decontaminate, Dedup, Multimodal, Pack, Quantize, RangeJoin, Retrieval, Sampling, Sessionize, Similarity, SkewJoin, Sketches, TfIdf}
 import graft.qpu._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The operator catalog: one named query per SURVEY.md §2 row, each
@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object Queries {
 
-  final case class QueryDef(build: (SparkSession, String) => DataFrame,
-                            oracle: Option[String])
+  final case class QueryDef(build: (SparkSession, String) => DataFrame, oracle: String)
 
   private def ds(s: SparkSession, dir: String, t: String) = DatastoreQpu(s, dir, t)
 
@@ -25,8 +24,104 @@ object Queries {
   private val winnowK = 5
   private val winnowW = 8
 
-  // ---- shared oracle-SQL builders: each replayed CTE family lives in
-  // ONE place so the oracles cannot drift apart ----
+  // ---- shared builders: each query input that several queries read
+  // lives in ONE place — a Spark builder, and beside it the SQL its
+  // oracles replay. The SQL is written out, never derived from the
+  // Spark side, so the oracles stay an independent reference ----
+
+  /** The part co-purchase graph before projection: `lineitem` (the
+    * rows `keep` admits) self-joined on `l_orderkey` as `x` and `y`,
+    * each unordered part pair once per shared order.
+    */
+  private def coPurchasePairs(s: SparkSession, d: String, keep: Option[Column]): DataFrame = {
+    val lineitem = ds(s, d, "lineitem").toDF
+    val li = keep.fold(lineitem)(k => lineitem.filter(k)).select("l_orderkey", "l_partkey")
+    li.as("x").join(li.as("y"),
+      col("x.l_orderkey") === col("y.l_orderkey") && col("x.l_partkey") < col("y.l_partkey"))
+  }
+
+  /** [[coPurchasePairs]] as a `(src, dst)` edge list. */
+  private def coPurchaseEdges(s: SparkSession, d: String, keep: Option[Column] = None): DataFrame =
+    coPurchasePairs(s, d, keep).select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
+
+  /** The co-purchase graph's oracle side: one SELECT over the
+    * `lineitem` self-join (`x`, `y`; rows filtered by the `keep`
+    * predicate), by default its distinct part pairs `(a, b)`.
+    */
+  private def coPurchaseSql(keep: Option[String] = None,
+                            select: String = "DISTINCT x.l_partkey AS a, y.l_partkey AS b"): String = {
+    val li = keep.fold("lineitem")(k => s"(SELECT l_orderkey, l_partkey FROM lineitem WHERE $k)")
+    s"""SELECT $select
+       |  FROM $li x JOIN $li y
+       |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey""".stripMargin
+  }
+
+  /** The co-purchase triangles by degree-ordered orientation, as CTEs
+    * over an edge CTE `e0(a, b)`: degrees `deg(id, dg)`, oriented edges
+    * `o(u, v, kv)`, wedges `w(u, x, y)` and the closed wedges
+    * `tri(u, x, y)` — each triangle once, at its minimum-order vertex.
+    */
+  private val orientedTrianglesSql: String =
+    """deg AS (SELECT id, count(*)::BIGINT AS dg FROM
+      |  (SELECT a AS id FROM e0 UNION ALL SELECT b FROM e0) GROUP BY 1),
+      |o AS (SELECT
+      |    CASE WHEN da.dg*100000000 + a < db.dg*100000000 + b THEN a ELSE b END AS u,
+      |    CASE WHEN da.dg*100000000 + a < db.dg*100000000 + b THEN b ELSE a END AS v,
+      |    greatest(da.dg*100000000 + a, db.dg*100000000 + b) AS kv
+      |  FROM e0 JOIN deg da ON a = da.id JOIN deg db ON b = db.id),
+      |w AS (SELECT e1.u AS u, e1.v AS x, e2.v AS y FROM o e1
+      |  JOIN o e2 ON e1.u = e2.u AND e1.kv < e2.kv),
+      |tri AS (SELECT w.u, w.x, w.y FROM w JOIN o ON w.x = o.u AND w.y = o.v)""".stripMargin
+
+  /** The embeddings whose `notNull` columns are present and whose
+    * vector is all finite.
+    */
+  private def finiteEmbeddings(s: SparkSession, d: String, notNull: String*): DataFrame =
+    ds(s, d, "embeddings").toDF.filter((notNull.map(col(_).isNotNull) :+
+      graft.functions.VectorFunctions.allFinite(col("embedding"))).reduce(_ && _))
+
+  /** The finite-embedding WHERE predicate of the oracles: `notNull`
+    * and `embedding` present, every element finite — of the
+    * `[1:dims]` prefix, which must then exist, when `dims` is given.
+    */
+  private def finiteEmbeddingSql(notNull: Seq[String] = Nil, dims: Option[Int] = None): String = {
+    val present = (notNull :+ "embedding").map(c => s"$c IS NOT NULL").mkString(" AND ")
+    val (long, prefix) = dims.fold(("", ""))(n => (s" AND len(embedding) >= $n", s"[1:$n]"))
+    s"""$present$long
+       |    AND len(list_filter(embedding$prefix, x -> x IS NULL OR NOT isfinite(x))) = 0""".stripMargin
+  }
+
+  /** The labelled retrieval-eval replay as CTEs: finite embeddings
+    * `reb`, labelled queries `q` (vec_id < 20), every query's cosine to
+    * each other vector `sc`, and its rank by (cosine desc, id) in `r`.
+    */
+  private val rankedNeighborsSql: String =
+    s"""reb AS (SELECT vec_id, embedding, label FROM embeddings
+       |  WHERE ${finiteEmbeddingSql(Seq("vec_id"))}),
+       |q AS (SELECT vec_id AS qid, embedding AS qv, label AS ql
+       |  FROM reb WHERE vec_id < 20 AND label IS NOT NULL),
+       |sc AS (SELECT qid, ql, e.vec_id AS nid, e.label AS nl,
+       |    list_cosine_similarity(qv::DOUBLE[], e.embedding::DOUBLE[]) AS c
+       |  FROM q JOIN reb e ON e.vec_id <> qid),
+       |r AS (SELECT qid, ql, nl,
+       |    row_number() OVER (PARTITION BY qid ORDER BY c DESC, nid) AS rank
+       |  FROM sc WHERE c IS NOT NULL)""".stripMargin
+
+  /** The 30-minute sessionization of `events` as one SELECT: every
+    * event column plus `ep` (epoch seconds) and `session_id` (the
+    * user's running count of session starts — a first event, or one
+    * more than 1800 s after the previous), over the events whose
+    * `user_id`, `ts` and `notNull` columns are present.
+    */
+  private def sessionsSql(notNull: String*): String = {
+    val present = ("user_id" +: "ts" +: notNull).map(c => s"$c IS NOT NULL").mkString(" AND ")
+    s"""SELECT *, CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_id
+       |  FROM (SELECT *, floor(epoch(ts))::BIGINT AS ep,
+       |    CASE WHEN lag(floor(epoch(ts))::BIGINT) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
+       |      OR floor(epoch(ts))::BIGINT - lag(floor(epoch(ts))::BIGINT)
+       |         OVER (PARTITION BY user_id ORDER BY ts) > 1800
+       |    THEN 1 ELSE 0 END AS brk FROM events WHERE $present) x""".stripMargin
+  }
 
   /** One PageRank power-iteration step as CTEs: dangling mass, edge
     * contributions, next rank table — unrolled per iteration so the
@@ -40,9 +135,9 @@ object Queries {
        |p${k + 1} AS (SELECT n.id, (1 - 0.85) / nn.n + 0.85 * (coalesce(c.c, 0) + d.dm / nn.n) AS pr
        |  FROM nodes n CROSS JOIN nn CROSS JOIN dang$k d LEFT JOIN c$k c ON n.id = c.id)""".stripMargin
 
-  /** The row-36 langid heuristic as a SQL CASE — shared by the
-    * text_langid / q_cohens_kappa oracles so the replayed classifier
-    * cannot drift from itself.
+  /** The row-36 langid heuristic as a SQL CASE over `text` — the one
+    * copy the text_langid, text_lang_confusion, q_cohens_kappa and
+    * q_confusion oracles replay.
     */
   private val langIdCaseSql: String =
     """CASE
@@ -59,11 +154,29 @@ object Queries {
       |         t -> t IN ('the','and','of','to','a','in','is','it'))) THEN 'es'
       |  ELSE 'unknown' END""".stripMargin
 
-  /** Kirsch–Mitzenmacher minhash select list `m0..m{n-1}` over `hs`. */
-  private def mhSigSql(numHashes: Int): String =
-    (0 until numHashes).map(i =>
+  /** Oracle minhash signatures as two CTEs: `hp` (both md5 halves of
+    * every token in `toks` of relation `from`), then `sigs` — `doc_id`,
+    * the `carry` columns and the Kirsch–Mitzenmacher hashes
+    * `m0..m{numHashes-1}`.
+    */
+  private def minhashSigsSql(from: String, numHashes: Int = 8, carry: Seq[String] = Nil): String = {
+    val c = carry.map(_ + ", ").mkString
+    val mh = (0 until numHashes).map(i =>
       s"list_min(list_transform(hs, h -> (h[1] + $i * h[2]) % ${1L << 56})) AS m$i")
       .mkString(", ")
+    s"""hp AS (SELECT doc_id, ${c}list_transform(toks, w ->
+       |  [('0x' || substring(md5(w), 1, 14))::bigint,
+       |   ('0x' || substring(md5(w), 15, 14))::bigint]) AS hs FROM $from),
+       |sigs AS (SELECT doc_id, $c$mh FROM hp)""".stripMargin
+  }
+
+  /** The LSH candidate condition over `sigs a` and `sigs b`: some band
+    * of `rows` consecutive minhashes agrees.
+    */
+  private def bandEqSql(bands: Int, rows: Int): String =
+    (0 until bands).map(b =>
+      (0 until rows).map(r => s"a.m${b * rows + r} = b.m${b * rows + r}").mkString("(", " AND ", ")"))
+      .mkString(" OR ")
 
   /** The hop+jump label-propagation rounds over a `mem(id, keyCols)`
     * membership CTE with `l0` seeded — produces `l{rounds}`.
@@ -77,6 +190,23 @@ object Queries {
          |l${k + 1} AS (SELECT a.id AS id, b.label AS label
          |  FROM p$k a JOIN p$k b ON a.label = b.id)""".stripMargin
     }.mkString(",\n")
+
+  /** The 2-band minhash near-dup clustering replayed as CTEs through
+    * `cl(doc_id, cluster_id)`: band buckets of 4 hashes, 3 hop+jump
+    * label-propagation rounds, NULL-text documents their own cluster.
+    */
+  private val minhashClustersSql: String = {
+    def band(b: Int) = (0 until 4).map(r => s"m${b * 4 + r}::varchar").mkString(" || '_' || ")
+    s"""toks AS (SELECT doc_id,
+       |  list_distinct(regexp_split_to_array(trim(text), '\\s+')) AS toks FROM documents),
+       |${minhashSigsSql("toks")},
+       |mem AS (SELECT doc_id AS id, 0 AS band, ${band(0)} AS sig FROM sigs
+       |  UNION ALL SELECT doc_id AS id, 1 AS band, ${band(1)} AS sig FROM sigs),
+       |l0 AS (SELECT DISTINCT id, id AS label FROM mem),
+       |${labelPropIters("band, sig")},
+       |cl AS (SELECT id AS doc_id, label AS cluster_id FROM l3
+       |  UNION ALL SELECT doc_id, doc_id FROM documents WHERE text IS NULL)""".stripMargin
+  }
 
   /** The sim_ann_pq replay through the `adc` CTE (seeded codebook, two
     * scaled-integer-exact Lloyd's training rounds, codes, fixed-order
@@ -127,13 +257,11 @@ object Queries {
     val dsum = (0 until 16).map(j => s"s$j.dists[x.c$j + 1]").mkString(" + ")
     s"""c0 AS (SELECT vec_id, embedding,
        |    ('0x' || substring(md5(vec_id::varchar), 1, 14))::bigint AS h FROM embeddings
-       |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL AND len(embedding) >= 64
-       |    AND len(list_filter(embedding[1:64], x -> x IS NULL OR NOT isfinite(x))) = 0),
+       |  WHERE ${finiteEmbeddingSql(Seq("vec_id"), Some(64))}),
        |don AS (SELECT row_number() OVER (ORDER BY h) - 1 AS cell, embedding::DOUBLE[] AS cv
        |  FROM c0 ORDER BY h LIMIT 256),
        |emb AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-       |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL AND len(embedding) >= 64
-       |    AND len(list_filter(embedding[1:64], x -> x IS NULL OR NOT isfinite(x))) = 0),
+       |  WHERE ${finiteEmbeddingSql(Seq("vec_id"), Some(64))}),
        |cb0 AS (SELECT r.j AS j,
        |    list(list_transform(generate_series(1, 4), t -> d.cv[r.j*4 + t])
        |         ORDER BY d.cell) AS cents
@@ -155,43 +283,43 @@ object Queries {
     // §2.1/1 — datastore scan with projection pushdown
     "q_scan_projection" -> QueryDef(
       (s, d) => DatastoreQpu(s, d, "orders", Seq("o_orderkey", "o_totalprice")).toDF,
-      Some("SELECT o_orderkey, o_totalprice FROM orders")),
+      "SELECT o_orderkey, o_totalprice FROM orders"),
 
     // §2.1/2 — filter EQ
     "q_filter_eq" -> QueryDef(
       (s, d) => FilterQpu(ds(s, d, "orders"), Seq(Eq("o_orderstatus", "F"))).toDF
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"),
-      Some("SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderpriority " +
-        "FROM orders WHERE o_orderstatus = 'F'")),
+      "SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderpriority " +
+        "FROM orders WHERE o_orderstatus = 'F'"),
 
     // §2.1/3 — filter RANGE [lb, ub)
     "q_filter_range" -> QueryDef(
       (s, d) => FilterQpu(ds(s, d, "lineitem"), Seq(Range("l_quantity", 30.0, 40.0))).toDF
         .select("l_orderkey", "l_linenumber", "l_quantity"),
-      Some("SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem " +
-        "WHERE l_quantity >= 30.0 AND l_quantity < 40.0")),
+      "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem " +
+        "WHERE l_quantity >= 30.0 AND l_quantity < 40.0"),
 
     // §2.1/4 — filter ISNOTNULL (testdata has no nulls; the predicate
     // still exercises the pushdown path)
     "q_filter_null" -> QueryDef(
       (s, d) => FilterQpu(ds(s, d, "events"), Seq(IsNotNull("props"))).toDF
         .groupBy("event_type").agg(count(lit(1)).as("cnt")),
-      Some("SELECT event_type, count(*) AS cnt FROM events " +
-        "WHERE props IS NOT NULL GROUP BY event_type")),
+      "SELECT event_type, count(*) AS cnt FROM events " +
+        "WHERE props IS NOT NULL GROUP BY event_type"),
 
     // §2.1/5 — index point lookup
     "q_index_point" -> QueryDef(
       (s, d) => IndexQpu(ds(s, d, "lineitem"), "l_partkey").point(1L)
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity"),
-      Some("SELECT l_orderkey, l_linenumber, l_partkey, l_quantity FROM lineitem " +
-        "WHERE l_partkey = 1")),
+      "SELECT l_orderkey, l_linenumber, l_partkey, l_quantity FROM lineitem " +
+        "WHERE l_partkey = 1"),
 
     // §2.1/6 — index range scan, ordered by the indexed attribute
     "q_index_range" -> QueryDef(
       (s, d) => IndexQpu(ds(s, d, "orders"), "o_totalprice").range(1000.0, 20000.0)
         .select("o_orderkey", "o_totalprice"),
-      Some("SELECT o_orderkey, o_totalprice FROM orders " +
-        "WHERE o_totalprice >= 1000.0 AND o_totalprice < 20000.0 ORDER BY o_totalprice")),
+      "SELECT o_orderkey, o_totalprice FROM orders " +
+        "WHERE o_totalprice >= 1000.0 AND o_totalprice < 20000.0 ORDER BY o_totalprice"),
 
     // §2.1/7 — top-k by derived attribute (lobsters vote_sum shape)
     "q_topk" -> QueryDef(
@@ -200,21 +328,21 @@ object Queries {
           .groupBy("o_custkey").agg(count(lit(1)).as("order_cnt"))
         IndexQpu(DataFrameQpu(counts), "order_cnt").topK(10, tiebreak = Seq("o_custkey"))
       },
-      Some("SELECT o_custkey, count(*) AS order_cnt FROM orders GROUP BY o_custkey " +
-        "ORDER BY order_cnt DESC, o_custkey LIMIT 10")),
+      "SELECT o_custkey, count(*) AS order_cnt FROM orders GROUP BY o_custkey " +
+        "ORDER BY order_cnt DESC, o_custkey LIMIT 10"),
 
     // §2.1/8 — incremental group-by sum (sum.go parity: id, <attr>_sum)
     "q_sum_groupby" -> QueryDef(
       (s, d) => SumQpu(ds(s, d, "events"), "value", "user_id").toDF,
-      Some("SELECT user_id, sum(value) AS value_sum FROM events GROUP BY user_id")),
+      "SELECT user_id, sum(value) AS value_sum FROM events GROUP BY user_id"),
 
     // §2.1/9 — 2-table materialized equi-join (dimension broadcast)
     "q_join_2way" -> QueryDef(
       (s, d) => JoinQpu(ds(s, d, "orders"), ds(s, d, "customer"),
         "o_custkey", "c_custkey", broadcastRight = true).toDF
         .select("o_orderkey", "o_custkey", "o_totalprice", "c_name", "c_nationkey"),
-      Some("SELECT o_orderkey, o_custkey, o_totalprice, c_name, c_nationkey " +
-        "FROM orders JOIN customer ON o_custkey = c_custkey")),
+      "SELECT o_orderkey, o_custkey, o_totalprice, c_name, c_nationkey " +
+        "FROM orders JOIN customer ON o_custkey = c_custkey"),
 
     // §2.1/10 — composed graph: sum → join → index topk (flagship)
     "q_graph_flagship" -> QueryDef(
@@ -226,10 +354,10 @@ object Queries {
         IndexQpu(joined, "order_cnt").topK(20, tiebreak = Seq("custkey"))
           .select("custkey", "c_name", "order_cnt", "total_spent")
       },
-      Some("SELECT custkey, c_name, order_cnt, total_spent FROM " +
+      "SELECT custkey, c_name, order_cnt, total_spent FROM " +
         "(SELECT o_custkey AS custkey, count(*) AS order_cnt, sum(o_totalprice) AS total_spent " +
         "FROM orders GROUP BY o_custkey) j JOIN customer ON custkey = c_custkey " +
-        "ORDER BY order_cnt DESC, custkey LIMIT 20")),
+        "ORDER BY order_cnt DESC, custkey LIMIT 20"),
 
     // §2.1/11 — router scatter-gather: the same predicate fanned over
     // per-type children, results concatenated
@@ -245,9 +373,9 @@ object Queries {
       // outside the routing table is unrouted, not implicitly scanned
       // (fuzz r12 — the old oracle assumed the child list covers the
       // data's whole type domain)
-      Some("SELECT event_id, user_id, event_type, value FROM events " +
+      "SELECT event_id, user_id, event_type, value FROM events " +
         "WHERE value >= 100.0 AND value < 1000000.0 AND event_type IN (" +
-        eventTypes.map(t => s"'$t'").mkString(", ") + ")")),
+        eventTypes.map(t => s"'$t'").mkString(", ") + ")"),
 
     // §2.1/12 — cache QPU: cached plan must serve identical results
     "q_cache" -> QueryDef(
@@ -257,21 +385,21 @@ object Queries {
         CacheQpu(DataFrameQpu(
           IndexQpu(DataFrameQpu(counts), "order_cnt").topK(10, tiebreak = Seq("o_custkey")))).toDF
       },
-      Some("SELECT o_custkey, count(*) AS order_cnt FROM orders GROUP BY o_custkey " +
-        "ORDER BY order_cnt DESC, o_custkey LIMIT 10")),
+      "SELECT o_custkey, count(*) AS order_cnt FROM orders GROUP BY o_custkey " +
+        "ORDER BY order_cnt DESC, o_custkey LIMIT 10"),
 
     // §2.1/13 — SQL surface (parser subset and beyond)
     "q_sql_select" -> QueryDef(
       (s, d) => ProteusQL.sql(s, d,
         "SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderstatus = 'O' " +
           "ORDER BY o_totalprice DESC, o_orderkey LIMIT 5"),
-      Some("SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderstatus = 'O' " +
-        "ORDER BY o_totalprice DESC, o_orderkey LIMIT 5")),
+      "SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderstatus = 'O' " +
+        "ORDER BY o_totalprice DESC, o_orderkey LIMIT 5"),
 
     // §2.1/14 — point lookup by primary key (ClientQuery)
     "q_point_lookup" -> QueryDef(
       (s, d) => ProteusQL.snapshot(s, d, "customer", predicates = Seq(Eq("c_custkey", 1L))),
-      Some("SELECT * FROM customer WHERE c_custkey = 1")),
+      "SELECT * FROM customer WHERE c_custkey = 1"),
 
     // §2.1/15 — snapshot-as-of (SnapshotTimePredicate): latest event per
     // user at time T
@@ -281,11 +409,11 @@ object Queries {
         "ts", lit("2024-01-15 00:00:00").cast("timestamp"),
         key = Seq("user_id"), tiebreak = Seq("event_id"))
         .select("user_id", "event_id", "event_type", "value"),
-      Some("SELECT user_id, event_id, event_type, value FROM (" +
+      "SELECT user_id, event_id, event_type, value FROM (" +
         "SELECT user_id, event_id, event_type, value, " +
         "row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn " +
         "FROM events WHERE ts <= TIMESTAMP '2024-01-15 00:00:00' " +
-        "AND user_id IS NOT NULL AND event_id IS NOT NULL) t WHERE rn = 1")),
+        "AND user_id IS NOT NULL AND event_id IS NOT NULL) t WHERE rn = 1"),
 
     // §2.1/47 — versioned index read (reference: inMemIndex keeps
     // vector-clock versioned postings): index lookup over the as-of-T
@@ -299,12 +427,12 @@ object Queries {
         IndexQpu(DataFrameQpu(snap), "value").range(100.0, 200.0)
           .select("user_id", "event_id", "value")
       },
-      Some("""SELECT user_id, event_id, value FROM (
+      """SELECT user_id, event_id, value FROM (
         |  SELECT user_id, event_id, value,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
         |  FROM events WHERE ts <= TIMESTAMP '2024-01-15 00:00:00'
         |    AND user_id IS NOT NULL AND event_id IS NOT NULL) t
-        |WHERE rn = 1 AND value >= 100.0 AND value < 200.0 ORDER BY value""".stripMargin)),
+        |WHERE rn = 1 AND value >= 100.0 AND value < 200.0 ORDER BY value""".stripMargin),
 
     // §2.1/71 — config-driven graph assembly (reference: qpuGraph.go +
     // configs/*.toml): the flagship sum→join→topk DAG deployed from the
@@ -312,10 +440,10 @@ object Queries {
     // programmatic q_graph_flagship oracle exactly
     "q_graph_config" -> QueryDef(
       (s, d) => GraphConfig.fromResource(s, "/graft/flagship.json", d).toDF,
-      Some("SELECT custkey, c_name, order_cnt, total_spent FROM " +
+      "SELECT custkey, c_name, order_cnt, total_spent FROM " +
         "(SELECT o_custkey AS custkey, count(*) AS order_cnt, sum(o_totalprice) AS total_spent " +
         "FROM orders GROUP BY o_custkey) j JOIN customer ON custkey = c_custkey " +
-        "ORDER BY order_cnt DESC, custkey LIMIT 20")),
+        "ORDER BY order_cnt DESC, custkey LIMIT 20"),
 
     // §2.1/72 — version-diff read (reference: inMemIndex versioned
     // postings): created/updated keys between the as-of-T1 and as-of-T2
@@ -326,7 +454,7 @@ object Queries {
         lit("2024-01-10 00:00:00").cast("timestamp"),
         lit("2024-01-15 00:00:00").cast("timestamp"),
         key = Seq("user_id"), tiebreak = Seq("event_id")),
-      Some("""WITH s1 AS (SELECT user_id, ts, event_id FROM (
+      """WITH s1 AS (SELECT user_id, ts, event_id FROM (
         |  SELECT user_id, ts, event_id, row_number() OVER (
         |    PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
         |FROM events WHERE ts <= TIMESTAMP '2024-01-10 00:00:00'
@@ -343,7 +471,7 @@ object Queries {
         |  END AS change
         |FROM s1 FULL OUTER JOIN s2 ON s1.user_id = s2.user_id
         |WHERE NOT (s1.user_id IS NOT NULL AND s2.user_id IS NOT NULL
-        |  AND s1.ts = s2.ts AND s1.event_id = s2.event_id)""".stripMargin)),
+        |  AND s1.ts = s2.ts AND s1.event_id = s2.event_id)""".stripMargin),
 
     // §2.2/74 — as-of join (temporal attribution): each purchase event
     // joined to the same user's latest click at or before it;
@@ -362,7 +490,7 @@ object Queries {
           .select(col("purchase_id"), col("user_id"), col("click_id"),
             (graft.functions.TimeFunctions.epochSec(col("ts")) - graft.functions.TimeFunctions.epochSec(col("click_ts"))).as("gap_sec"))
       },
-      Some("""WITH p AS (SELECT event_id AS purchase_id, user_id, ts
+      """WITH p AS (SELECT event_id AS purchase_id, user_id, ts
         |  FROM events WHERE event_type = 'purchase'
         |    AND user_id IS NOT NULL AND ts IS NOT NULL AND event_id IS NOT NULL),
         |c AS (SELECT event_id AS click_id, user_id, ts FROM events
@@ -373,7 +501,7 @@ object Queries {
         |    row_number() OVER (PARTITION BY p.purchase_id
         |      ORDER BY c.ts DESC, c.click_id DESC) AS rn
         |  FROM p LEFT JOIN c ON c.user_id = p.user_id AND c.ts <= p.ts)
-        |SELECT purchase_id, user_id, click_id, gap_sec FROM j WHERE rn = 1""".stripMargin)),
+        |SELECT purchase_id, user_id, click_id, gap_sec FROM j WHERE rn = 1""".stripMargin),
 
     // §2.2/78 — range (interval) join: every event equi-joined to its
     // containing session interval through fixed-width time buckets —
@@ -389,19 +517,13 @@ object Queries {
           .select(col("event_id"), col("p.user_id").as("user_id"),
             col("session_id"), col("n_events"))
       },
-      Some("""WITH s AS (SELECT user_id, session_id, count(*) AS n_events,
-        |  min(ep) AS session_start, max(ep) AS session_end FROM (
-        |  SELECT user_id, ep, CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_id
-        |  FROM (SELECT user_id, ts, floor(epoch(ts))::BIGINT AS ep,
-        |    CASE WHEN lag(floor(epoch(ts))::BIGINT) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |      OR floor(epoch(ts))::BIGINT - lag(floor(epoch(ts))::BIGINT)
-        |         OVER (PARTITION BY user_id ORDER BY ts) > 1800
-        |    THEN 1 ELSE 0 END AS brk FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL) x) y
-        |GROUP BY user_id, session_id),
+      s"""WITH s AS (SELECT user_id, session_id, count(*) AS n_events,
+        |  min(ep) AS session_start, max(ep) AS session_end
+        |  FROM (${sessionsSql()}) y GROUP BY user_id, session_id),
         |e AS (SELECT event_id, user_id, floor(epoch(ts))::BIGINT AS ep FROM events)
         |SELECT e.event_id, e.user_id, s.session_id, s.n_events
         |FROM e JOIN s ON e.user_id = s.user_id
-        |  AND e.ep BETWEEN s.session_start AND s.session_end""".stripMargin)),
+        |  AND e.ep BETWEEN s.session_start AND s.session_end""".stripMargin),
 
     // §2.2/79 — value-based window frame (RANGE): trailing-hour sum of
     // event values per user; equal timestamps share a frame, so the
@@ -416,9 +538,9 @@ object Queries {
           .select(col("event_id"), col("user_id"), col("ep"),
             sum("value").over(w).as("hour_sum"))
       },
-      Some("SELECT event_id, user_id, floor(epoch(ts))::BIGINT AS ep, " +
+      "SELECT event_id, user_id, floor(epoch(ts))::BIGINT AS ep, " +
         "sum(value) OVER (PARTITION BY user_id ORDER BY floor(epoch(ts))::BIGINT " +
-        "RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) AS hour_sum FROM events")),
+        "RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) AS hour_sum FROM events"),
 
     // ------------- §2.3 LLM-data-pipeline operators -------------
 
@@ -429,7 +551,7 @@ object Queries {
       (s, d) => ds(s, d, "documents").toDF.select(col("doc_id"),
         TextFunctions.scrubPii(col("text")).as("scrubbed"),
         TextFunctions.piiCount(col("text")).as("n_pii")),
-      Some {
+      {
         import TextFunctions.{piiEmailRe, piiIpRe, piiPhoneRe}
         s"""SELECT doc_id,
            |  regexp_replace(regexp_replace(regexp_replace(text,
@@ -455,7 +577,7 @@ object Queries {
           .withColumn("__toks", TextFunctions.tokens(col("text")))
           .select((col("doc_id") +: sig): _*)
       },
-      Some("""SELECT doc_id, len(toks)::INT AS n_tokens,
+      """SELECT doc_id, len(toks)::INT AS n_tokens,
         |  coalesce(list_max(list_transform(list_distinct(toks),
         |    w -> len(list_filter(toks, t -> t = w)))), 0)::INT AS top_token_cnt,
         |  (len(bigrams) - len(list_distinct(bigrams)))::INT AS dup_bigram_cnt
@@ -464,7 +586,7 @@ object Queries {
         |    generate_series(1, len(toks) - 1), i -> toks[i] || ' ' || toks[i + 1])
         |  ELSE []::VARCHAR[] END AS bigrams
         |  FROM (SELECT doc_id,
-        |    regexp_split_to_array(trim(text), '\s+') AS toks FROM documents) a) b""".stripMargin)),
+        |    regexp_split_to_array(trim(text), '\s+') AS toks FROM documents) a) b""".stripMargin),
 
     // §2.3/114 — leakage-free cluster-aware split: test membership by
     // the near-dup CLUSTER id's hash, so near-duplicates never
@@ -476,28 +598,10 @@ object Queries {
       // DedupSpec pins 3 rounds == fixpoint on these corpora
       (s, d) => Sampling.clusterAwareSplit(ds(s, d, "documents").toDF,
         "doc_id", "text", testPct = 20, toFixpoint = false),
-      Some {
-        val mh = mhSigSql(8)
-        def band(b: Int) = (0 until 4).map(r => s"m${b * 4 + r}::varchar").mkString(" || '_' || ")
-        val iters = labelPropIters("band, sig")
-        s"""WITH toks AS (SELECT doc_id,
-           |  list_distinct(regexp_split_to_array(trim(text), '\\s+')) AS toks FROM documents),
-           |hp AS (SELECT doc_id, list_transform(toks, w ->
-           |  [('0x' || substring(md5(w), 1, 14))::bigint,
-           |   ('0x' || substring(md5(w), 15, 14))::bigint]) AS hs FROM toks),
-           |sigs AS (SELECT doc_id, $mh FROM hp),
-           |mem AS (SELECT doc_id AS id, 0 AS band, ${band(0)} AS sig FROM sigs
-           |  UNION ALL SELECT doc_id AS id, 1 AS band, ${band(1)} AS sig FROM sigs),
-           |l0 AS (SELECT DISTINCT id, id AS label FROM mem),
-           |$iters
-           |SELECT id AS doc_id, label AS cluster_id,
-           |  ('0x' || substring(md5(label::varchar), 1, 14))::bigint % 100 < 20 AS is_test
-           |FROM l3
-           |UNION ALL
-           |SELECT doc_id, doc_id,
-           |  ('0x' || substring(md5(doc_id::varchar), 1, 14))::bigint % 100 < 20
-           |FROM documents WHERE text IS NULL""".stripMargin
-      }),
+      s"""WITH $minhashClustersSql
+        |SELECT doc_id, cluster_id,
+        |  ('0x' || substring(md5(cluster_id::varchar), 1, 14))::bigint % 100 < 20 AS is_test
+        |FROM cl""".stripMargin),
 
     // §2.3/77 — stratified deterministic sampling (domain mixing):
     // per-source keep rates on the stable id hash, map-side only
@@ -505,10 +609,10 @@ object Queries {
       (s, d) => Sampling.stratifiedHashSample(ds(s, d, "documents").toDF,
         "doc_id", "source", Map("src0" -> 50, "src1" -> 20, "src2" -> 80),
         defaultPct = 10).select("doc_id", "source", "lang"),
-      Some("""SELECT doc_id, source, lang FROM documents
+      """SELECT doc_id, source, lang FROM documents
         |WHERE ('0x' || substring(md5(doc_id::varchar), 1, 14))::bigint % 100 <
         |  CASE source WHEN 'src0' THEN 50 WHEN 'src1' THEN 20
-        |    WHEN 'src2' THEN 80 ELSE 10 END""".stripMargin)),
+        |    WHEN 'src2' THEN 80 ELSE 10 END""".stripMargin),
 
     // §2.3/128 — exact-k deterministic uniform sample: the 137 docs
     // with the smallest seeded id hashes, via the window-free bucketed
@@ -516,12 +620,12 @@ object Queries {
     "q_exact_sample" -> QueryDef(
       (s, d) => Sampling.exactKSample(ds(s, d, "documents").toDF,
         "doc_id", k = 137, seed = 7),
-      Some("""WITH h AS (SELECT doc_id,
+      """WITH h AS (SELECT doc_id,
         |    ('0x' || substring(md5('7:' || doc_id::varchar), 1, 14))::bigint AS hh
         |  FROM documents WHERE doc_id IS NOT NULL)
         |SELECT doc_id FROM (
         |  SELECT doc_id, row_number() OVER (ORDER BY hh, doc_id) AS rn FROM h) t
-        |WHERE rn <= 137""".stripMargin)),
+        |WHERE rn <= 137""".stripMargin),
 
     // §2.3/104 — per-group cap (domain balancing): at most 10 docs per
     // source, lowest 52-bit id hashes win; bottom-k aggregator, not a
@@ -529,11 +633,11 @@ object Queries {
     "q_domain_cap" -> QueryDef(
       (s, d) => Sampling.perGroupCap(ds(s, d, "documents").toDF,
         "source", "doc_id", cap = 10),
-      Some("""SELECT source, doc_id, rank::INT AS rank FROM (
+      """SELECT source, doc_id, rank::INT AS rank FROM (
         |  SELECT source, doc_id, row_number() OVER (PARTITION BY source
         |    ORDER BY ('0x' || substring(md5(doc_id::varchar), 1, 13))::bigint, doc_id)
         |    AS rank
-        |  FROM documents WHERE doc_id IS NOT NULL) t WHERE rank <= 10""".stripMargin)),
+        |  FROM documents WHERE doc_id IS NOT NULL) t WHERE rank <= 10""".stripMargin),
 
     // §2.3/118 — temperature-scaled mixture sampling (alpha = 0.5
     // square-root scaling, the mBERT/XLM-R multilingual mixing
@@ -544,7 +648,7 @@ object Queries {
     "q_domain_mix" -> QueryDef(
       (s, d) => Sampling.temperatureMix(ds(s, d, "documents").toDF,
         "doc_id", "lang", num = 40, den = 100).select("doc_id", "lang"),
-      Some("""WITH counts AS (
+      """WITH counts AS (
         |  SELECT lang AS g, count(*)::BIGINT AS n FROM documents GROUP BY lang),
         |w AS (SELECT g, n, floor(sqrt(n::DOUBLE) * 1048576)::BIGINT AS w FROM counts),
         |tot AS (SELECT sum(w)::BIGINT AS tw, sum(n)::BIGINT AS tn FROM w),
@@ -554,7 +658,7 @@ object Queries {
         |SELECT d.doc_id, d.lang FROM documents d
         |JOIN p ON d.lang IS NOT DISTINCT FROM p.g
         |WHERE ('0x' || substring(md5(d.doc_id::varchar), 1, 13))::bigint::DOUBLE
-        |  < p.p * 4503599627370496.0""".stripMargin)),
+        |  < p.p * 4503599627370496.0""".stripMargin),
 
     // §2.3/119 — token-budget corpus selection: best documents by
     // stopword-ratio score until 12k whitespace tokens are filled;
@@ -572,7 +676,7 @@ object Queries {
         Sampling.tokenBudgetSelect(scored, "doc_id", "score", "toks",
           budget = 12000L)
       },
-      Some("""WITH t AS (SELECT doc_id,
+      """WITH t AS (SELECT doc_id,
         |    len(regexp_split_to_array(trim(text), '\s+'))::BIGINT AS n_tokens,
         |    (len(list_filter(regexp_split_to_array(trim(text), '\s+'),
         |       x -> x IN ('the','and','of','to','a','in','is','it')))::DOUBLE
@@ -581,7 +685,7 @@ object Queries {
         |r AS (SELECT doc_id, n_tokens,
         |    sum(n_tokens) OVER (ORDER BY score DESC, doc_id
         |      ROWS UNBOUNDED PRECEDING) AS cum FROM t)
-        |SELECT doc_id, n_tokens FROM r WHERE cum <= 12000""".stripMargin)),
+        |SELECT doc_id, n_tokens FROM r WHERE cum <= 12000""".stripMargin),
 
     // §2.3/121 — deterministic epoch shuffle: seeded-hash permutation
     // materialized as (shard, position); the training-order operator.
@@ -589,12 +693,12 @@ object Queries {
     "q_epoch_shuffle" -> QueryDef(
       (s, d) => Sampling.epochShuffle(ds(s, d, "documents").toDF,
         "doc_id", seed = 7, numShards = 8),
-      Some("""WITH h AS (SELECT doc_id,
+      """WITH h AS (SELECT doc_id,
         |    ('0x' || substring(md5('7:' || doc_id::varchar), 1, 14))::bigint AS h
         |  FROM documents)
         |SELECT doc_id, (h % 8)::INT AS shard,
         |  row_number() OVER (PARTITION BY h % 8 ORDER BY h, doc_id)::INT AS position
-        |FROM h""".stripMargin)),
+        |FROM h""".stripMargin),
 
     // §2.3/122 — sliding-window token chunking (RAG / long-doc prep):
     // 30-token windows every 15 tokens — overlapping halves so no
@@ -602,7 +706,7 @@ object Queries {
     "q_chunk_windows" -> QueryDef(
       (s, d) => Pack.slidingWindows(ds(s, d, "documents").toDF,
         "doc_id", "text", windowTokens = 30, strideTokens = 15),
-      Some("""WITH tok AS (SELECT doc_id,
+      """WITH tok AS (SELECT doc_id,
         |    regexp_split_to_array(trim(text), '\s+') AS toks
         |  FROM documents WHERE text IS NOT NULL),
         |w AS (SELECT doc_id, unnest(list_transform(generate_series(0, (len(toks)-1)//15),
@@ -611,7 +715,7 @@ object Queries {
         |          'c': array_to_string(list_slice(toks, i*15+1, i*15+30), ' ')})) AS u
         |  FROM tok)
         |SELECT doc_id, u.w::INT AS window_no, u.n::INT AS n_tokens, u.c AS chunk FROM w"""
-        .stripMargin)),
+        .stripMargin),
 
     // §2.3/123 — per-group quantile cut: the best 30% of every
     // language by stopword-ratio score. The oracle is the SEMANTIC
@@ -626,7 +730,7 @@ object Queries {
         Sampling.quantileCut(scored, "doc_id", "score", "lang",
           num = 30, den = 100)
       },
-      Some("""WITH t AS (SELECT doc_id, lang,
+      """WITH t AS (SELECT doc_id, lang,
         |    (len(list_filter(regexp_split_to_array(trim(text), '\s+'),
         |       x -> x IN ('the','and','of','to','a','in','is','it')))::DOUBLE
         |     / len(regexp_split_to_array(trim(text), '\s+'))::DOUBLE) AS s
@@ -635,7 +739,7 @@ object Queries {
         |r AS (SELECT t.doc_id, t.lang,
         |    row_number() OVER (PARTITION BY t.lang ORDER BY s DESC, doc_id) AS rk,
         |    c.n FROM t JOIN c ON t.lang IS NOT DISTINCT FROM c.lang)
-        |SELECT doc_id, lang FROM r WHERE rk <= (n * 30) // 100""".stripMargin)),
+        |SELECT doc_id, lang FROM r WHERE rk <= (n * 30) // 100""".stripMargin),
 
     // §2.3/124 — repetition-based upsampling mix: tail languages
     // repeated toward the head count (capped 4×), tagged rep_no —
@@ -643,13 +747,13 @@ object Queries {
     "q_upsample_mix" -> QueryDef(
       (s, d) => Sampling.upsampleMix(ds(s, d, "documents").toDF,
         "doc_id", "lang", maxRepeat = 4),
-      Some("""WITH c AS (SELECT lang AS g, count(*)::BIGINT AS n
+      """WITH c AS (SELECT lang AS g, count(*)::BIGINT AS n
         |  FROM documents GROUP BY lang),
         |m AS (SELECT max(n) AS mx FROM c),
         |r AS (SELECT g, least(4, (mx + n - 1) // n) AS rep FROM c CROSS JOIN m)
         |SELECT d.doc_id, d.lang, unnest(generate_series(0, r.rep - 1))::INT AS rep_no
         |FROM documents d JOIN r ON d.lang IS NOT DISTINCT FROM r.g"""
-        .stripMargin)),
+        .stripMargin),
 
     // §2.3/126 — delivery integrity manifest: per-shard (n_rows,
     // xor_hash) under shardedWrite's shard rule; XOR-combined row
@@ -657,14 +761,14 @@ object Queries {
     "q_shard_manifest" -> QueryDef(
       (s, d) => graft.operators.Compact.shardManifest(
         ds(s, d, "documents").toDF, "doc_id", "text", numShards = 16),
-      Some("""WITH r AS (SELECT
+      """WITH r AS (SELECT
         |    ('0x' || substring(md5(coalesce(doc_id::varchar, chr(0) || 'graft-null-id')), 1, 14))::bigint % 16 AS shard,
         |    ('0x' || substring(md5(
         |       coalesce(doc_id::varchar, chr(0) || 'graft-null-id') || ':' ||
         |       coalesce(length(text), -1)::varchar || ':' || coalesce(text, '')), 1, 14))::bigint AS h
         |  FROM documents)
         |SELECT shard::INT AS shard, count(*) AS n_rows, bit_xor(h) AS xor_hash
-        |FROM r GROUP BY shard""".stripMargin)),
+        |FROM r GROUP BY shard""".stripMargin),
 
     // §2.3/127 — hard-negative mining: each query vector's 10 most
     // similar corpus vectors with a DIFFERENT label — broadcast
@@ -672,15 +776,12 @@ object Queries {
     // shape with the label exclusion in the join)
     "sim_hard_negatives" -> QueryDef(
       (s, d) => {
-        val emb = ds(s, d, "embeddings").toDF
-          .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
-            graft.functions.VectorFunctions.allFinite(col("embedding")))
+        val emb = finiteEmbeddings(s, d, "vec_id", "embedding")
         Similarity.hardNegatives(emb, emb.filter(col("vec_id") < 5),
           "vec_id", "embedding", "label", k = 10)
       },
-      Some("""WITH e AS MATERIALIZED (SELECT vec_id, embedding, label FROM embeddings
-        |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-        |    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0),
+      s"""WITH e AS MATERIALIZED (SELECT vec_id, embedding, label FROM embeddings
+        |  WHERE ${finiteEmbeddingSql(Seq("vec_id"))}),
         |q AS (SELECT vec_id AS qid, embedding AS qv, label AS ql
         |  FROM e WHERE vec_id < 5 AND label IS NOT NULL),
         |s AS (SELECT qid, vec_id AS nid,
@@ -688,19 +789,19 @@ object Queries {
         |  FROM q JOIN e ON label IS NOT NULL AND label <> ql)
         |SELECT qid AS query_id, nid AS neighbor_id, rank FROM (
         |  SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY c DESC, nid)::INT AS rank
-        |  FROM s WHERE c IS NOT NULL) t WHERE rank <= 10""".stripMargin)),
+        |  FROM s WHERE c IS NOT NULL) t WHERE rank <= 10""".stripMargin),
 
     // §2.3/28 — exact dedup by content hash
     "dedup_exact" -> QueryDef(
       (s, d) => Dedup.exact(ds(s, d, "documents").toDF, "doc_id", "text"),
-      Some("SELECT md5(text) AS content_hash, min(doc_id) AS canonical_id, " +
-        "count(*) AS dup_cnt FROM documents GROUP BY 1")),
+      "SELECT md5(text) AS content_hash, min(doc_id) AS canonical_id, " +
+        "count(*) AS dup_cnt FROM documents GROUP BY 1"),
 
     // §2.3/29 — normalized-fingerprint dedup
     "dedup_fingerprint" -> QueryDef(
       (s, d) => Dedup.fingerprint(ds(s, d, "documents").toDF, "doc_id", "text"),
-      Some("SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint, " +
-        "min(doc_id) AS canonical_id, count(*) AS dup_cnt FROM documents GROUP BY 1")),
+      "SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint, " +
+        "min(doc_id) AS canonical_id, count(*) AS dup_cnt FROM documents GROUP BY 1"),
 
     // §2.3/99 — chunk-level exact dedup + document reconstruction
     // (line dedup over 20-token chunks): chunks seen earlier in
@@ -710,7 +811,7 @@ object Queries {
     "dedup_chunks" -> QueryDef(
       (s, d) => Dedup.chunkDedup(ds(s, d, "documents").toDF,
         "doc_id", "text", chunkTokens = 20),
-      Some("""WITH tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
+      """WITH tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
         |  FROM documents WHERE text IS NOT NULL AND doc_id IS NOT NULL),
         |chunks AS (SELECT doc_id,
         |    unnest(list_transform(generate_series(0, (len(toks)-1)//20),
@@ -725,7 +826,7 @@ object Queries {
         |  count(*) FILTER (is_first) AS n_kept,
         |  coalesce(string_agg(chunk, ' ' ORDER BY chunk_idx) FILTER (WHERE is_first), '')
         |    AS dedup_text
-        |FROM kept GROUP BY doc_id""".stripMargin)),
+        |FROM kept GROUP BY doc_id""".stripMargin),
 
     // §2.3/105+106 — incremental ingestion dedup: the docs with
     // doc_id % 5 = 0 are the "new batch", the rest the reference
@@ -741,32 +842,24 @@ object Queries {
           docs.filter(col("doc_id") % 5 =!= 0),
           "doc_id", "text", bands = 2, rowsPerBand = 4, num = 9, den = 10)
       },
-      Some {
-        val mh = mhSigSql(8)
-        val b0 = (0 until 4).map(r => s"a.m$r = b.m$r").mkString(" AND ")
-        val b1 = (4 until 8).map(r => s"a.m$r = b.m$r").mkString(" AND ")
-        s"""WITH t AS (SELECT doc_id,
-           |    list_distinct(regexp_split_to_array(trim(text), '\\s+')) AS toks FROM documents),
-           |hp AS (SELECT doc_id, list_transform(toks, w ->
-           |  [('0x' || substring(md5(w), 1, 14))::bigint,
-           |   ('0x' || substring(md5(w), 15, 14))::bigint]) AS hs FROM t),
-           |sigs AS (SELECT doc_id, $mh FROM hp),
-           |cand AS (SELECT a.doc_id AS na, b.doc_id AS nb
-           |  FROM sigs a JOIN sigs b ON a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
-           |   AND (($b0) OR ($b1))),
-           |near AS (SELECT DISTINCT na AS doc_id FROM cand
-           |  JOIN t ta ON na = ta.doc_id JOIN t tb ON nb = tb.doc_id
-           |  WHERE len(list_intersect(ta.toks, tb.toks)) * 10 >=
-           |        len(list_distinct(ta.toks || tb.toks)) * 9),
-           |ex AS (SELECT DISTINCT n.doc_id FROM documents n JOIN documents r
-           |  ON n.doc_id % 5 = 0 AND r.doc_id % 5 <> 0 AND md5(n.text) = md5(r.text))
-           |SELECT d.doc_id,
-           |  d.doc_id IN (SELECT doc_id FROM ex) AS exact_dup,
-           |  d.doc_id IN (SELECT doc_id FROM near) AS near_dup,
-           |  NOT (d.doc_id IN (SELECT doc_id FROM ex)
-           |    OR d.doc_id IN (SELECT doc_id FROM near)) AS is_kept
-           |FROM documents d WHERE d.doc_id % 5 = 0""".stripMargin
-      }),
+      s"""WITH t AS (SELECT doc_id,
+        |    list_distinct(regexp_split_to_array(trim(text), '\\s+')) AS toks FROM documents),
+        |${minhashSigsSql("t")},
+        |cand AS (SELECT a.doc_id AS na, b.doc_id AS nb
+        |  FROM sigs a JOIN sigs b ON a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
+        |   AND (${bandEqSql(2, 4)})),
+        |near AS (SELECT DISTINCT na AS doc_id FROM cand
+        |  JOIN t ta ON na = ta.doc_id JOIN t tb ON nb = tb.doc_id
+        |  WHERE len(list_intersect(ta.toks, tb.toks)) * 10 >=
+        |        len(list_distinct(ta.toks || tb.toks)) * 9),
+        |ex AS (SELECT DISTINCT n.doc_id FROM documents n JOIN documents r
+        |  ON n.doc_id % 5 = 0 AND r.doc_id % 5 <> 0 AND md5(n.text) = md5(r.text))
+        |SELECT d.doc_id,
+        |  d.doc_id IN (SELECT doc_id FROM ex) AS exact_dup,
+        |  d.doc_id IN (SELECT doc_id FROM near) AS near_dup,
+        |  NOT (d.doc_id IN (SELECT doc_id FROM ex)
+        |    OR d.doc_id IN (SELECT doc_id FROM near)) AS is_kept
+        |FROM documents d WHERE d.doc_id % 5 = 0""".stripMargin),
 
     // §2.3/110 — composed corpus-prep v2: quality gate → chunk-level
     // dedup (drop fully-boilerplate docs) → per-source cap 15. The
@@ -784,7 +877,7 @@ object Queries {
           survivors.join(docs.select("doc_id", "source"), "doc_id"),
           "source", "doc_id", cap = 15)
       },
-      Some("""WITH q AS (SELECT doc_id, text, source FROM documents WHERE
+      """WITH q AS (SELECT doc_id, text, source FROM documents WHERE
         |  len(regexp_split_to_array(trim(text), '\s+')) >= 5 AND
         |  len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) * 5 <= n_chars AND
         |  len(regexp_extract_all(text, '[0-9]')) * 4 <= n_chars),
@@ -802,58 +895,50 @@ object Queries {
         |  SELECT source, doc_id, row_number() OVER (PARTITION BY source
         |    ORDER BY ('0x' || substring(md5(doc_id::varchar), 1, 13))::bigint, doc_id)
         |    AS rank
-        |  FROM sv) t WHERE rank <= 15""".stripMargin)),
+        |  FROM sv) t WHERE rank <= 15""".stripMargin),
 
     // §2.3/30 — word-set Jaccard >= 0.8 near-dup pairs within source buckets
     "dedup_jaccard" -> QueryDef(
       (s, d) => Dedup.jaccardPairs(ds(s, d, "documents").toDF,
         "doc_id", "text", "source", num = 4, den = 5),
-      Some("""WITH t AS (SELECT doc_id, source,
+      """WITH t AS (SELECT doc_id, source,
         |  list_distinct(regexp_split_to_array(trim(text), '\s+')) AS toks FROM documents)
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |  len(list_intersect(a.toks, b.toks))::INT AS inter_size,
         |  len(list_distinct(a.toks || b.toks))::INT AS union_size
         |FROM t a JOIN t b ON a.source = b.source AND a.doc_id < b.doc_id
         |WHERE len(list_intersect(a.toks, b.toks)) * 5 >=
-        |      len(list_distinct(a.toks || b.toks)) * 4""".stripMargin)),
+        |      len(list_distinct(a.toks || b.toks)) * 4""".stripMargin),
 
     // §2.3/111 — directional containment pairs (quote/subset
     // detection): |sub ∩ super| / |sub| >= 19/20 within source buckets
     "dedup_containment" -> QueryDef(
       (s, d) => Dedup.containmentPairs(ds(s, d, "documents").toDF,
         "doc_id", "text", "source", num = 19, den = 20),
-      Some("""WITH t AS (SELECT doc_id, source,
+      """WITH t AS (SELECT doc_id, source,
         |  list_distinct(regexp_split_to_array(trim(text), '\s+')) AS toks FROM documents)
         |SELECT a.doc_id AS doc_sub, b.doc_id AS doc_super,
         |  len(list_intersect(a.toks, b.toks))::INT AS inter_size,
         |  len(a.toks)::INT AS sub_size
         |FROM t a JOIN t b ON a.source = b.source AND a.doc_id <> b.doc_id
-        |WHERE len(list_intersect(a.toks, b.toks)) * 20 >= len(a.toks) * 19""".stripMargin)),
+        |WHERE len(list_intersect(a.toks, b.toks)) * 20 >= len(a.toks) * 19""".stripMargin),
 
     // §2.3/31 — MinHash (8 hashes) + LSH (2 bands x 4 rows) + exact
     // Jaccard >= 0.9 confirmation
     "dedup_minhash" -> QueryDef(
       (s, d) => Dedup.minhashDedup(ds(s, d, "documents").toDF,
         "doc_id", "text", bands = 2, rowsPerBand = 4, num = 9, den = 10),
-      Some {
-        val mh = mhSigSql(8)
-        s"""WITH t AS (SELECT doc_id,
-           |  list_distinct(regexp_split_to_array(trim(text), '\\s+')) AS toks FROM documents),
-           |hp AS (SELECT doc_id, list_transform(toks, w ->
-           |  [('0x' || substring(md5(w), 1, 14))::bigint,
-           |   ('0x' || substring(md5(w), 15, 14))::bigint]) AS hs FROM t),
-           |sigs AS (SELECT doc_id, $mh FROM hp),
-           |cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-           |  FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id AND (
-           |    (a.m0 = b.m0 AND a.m1 = b.m1 AND a.m2 = b.m2 AND a.m3 = b.m3) OR
-           |    (a.m4 = b.m4 AND a.m5 = b.m5 AND a.m6 = b.m6 AND a.m7 = b.m7)))
-           |SELECT doc_a, doc_b,
-           |  len(list_intersect(ta.toks, tb.toks))::INT AS inter_size,
-           |  len(list_distinct(ta.toks || tb.toks))::INT AS union_size
-           |FROM cand JOIN t ta ON doc_a = ta.doc_id JOIN t tb ON doc_b = tb.doc_id
-           |WHERE len(list_intersect(ta.toks, tb.toks)) * 10 >=
-           |      len(list_distinct(ta.toks || tb.toks)) * 9""".stripMargin
-      }),
+      s"""WITH t AS (SELECT doc_id,
+        |  list_distinct(regexp_split_to_array(trim(text), '\\s+')) AS toks FROM documents),
+        |${minhashSigsSql("t")},
+        |cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+        |  FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id AND (${bandEqSql(2, 4)}))
+        |SELECT doc_a, doc_b,
+        |  len(list_intersect(ta.toks, tb.toks))::INT AS inter_size,
+        |  len(list_distinct(ta.toks || tb.toks))::INT AS union_size
+        |FROM cand JOIN t ta ON doc_a = ta.doc_id JOIN t tb ON doc_b = tb.doc_id
+        |WHERE len(list_intersect(ta.toks, tb.toks)) * 10 >=
+        |      len(list_distinct(ta.toks || tb.toks)) * 9""".stripMargin),
 
     // §2.3/61 — MinHash near-dup clustering: O(n) cluster assignment via
     // min-label propagation with per-round pointer jumping (reach
@@ -863,24 +948,8 @@ object Queries {
     "dedup_cluster" -> QueryDef(
       (s, d) => Dedup.minhashClusters(ds(s, d, "documents").toDF,
         "doc_id", "text", bands = 2, rowsPerBand = 4, iterations = 3),
-      Some {
-        val mh = mhSigSql(8)
-        def band(b: Int) = (0 until 4).map(r => s"m${b * 4 + r}::varchar").mkString(" || '_' || ")
-        val iters = labelPropIters("band, sig")
-        s"""WITH toks AS (SELECT doc_id,
-           |  list_distinct(regexp_split_to_array(trim(text), '\\s+')) AS toks FROM documents),
-           |hp AS (SELECT doc_id, list_transform(toks, w ->
-           |  [('0x' || substring(md5(w), 1, 14))::bigint,
-           |   ('0x' || substring(md5(w), 15, 14))::bigint]) AS hs FROM toks),
-           |sigs AS (SELECT doc_id, $mh FROM hp),
-           |mem AS (SELECT doc_id AS id, 0 AS band, ${band(0)} AS sig FROM sigs
-           |  UNION ALL SELECT doc_id AS id, 1 AS band, ${band(1)} AS sig FROM sigs),
-           |l0 AS (SELECT DISTINCT id, id AS label FROM mem),
-           |$iters
-           |SELECT id AS doc_id, label AS cluster_id FROM l3
-           |UNION ALL
-           |SELECT doc_id, doc_id FROM documents WHERE text IS NULL""".stripMargin
-      }),
+      s"""WITH $minhashClustersSql
+        |SELECT doc_id, cluster_id FROM cl""".stripMargin),
 
     // §2.3/206 — canonical selection: near-dup clusters (row 61's
     // chain) reduced to a deduplicated corpus — per cluster keep the
@@ -894,32 +963,16 @@ object Queries {
     "dedup_canonical" -> QueryDef(
       (s, d) => Dedup.keepCanonical(ds(s, d, "documents").toDF,
         "doc_id", "text", "n_chars", bands = 2, rowsPerBand = 4, iterations = 3),
-      Some {
-        val mh = mhSigSql(8)
-        def band(b: Int) = (0 until 4).map(r => s"m${b * 4 + r}::varchar").mkString(" || '_' || ")
-        val iters = labelPropIters("band, sig")
-        s"""WITH toks AS (SELECT doc_id,
-           |  list_distinct(regexp_split_to_array(trim(text), '\\s+')) AS toks FROM documents),
-           |hp AS (SELECT doc_id, list_transform(toks, w ->
-           |  [('0x' || substring(md5(w), 1, 14))::bigint,
-           |   ('0x' || substring(md5(w), 15, 14))::bigint]) AS hs FROM toks),
-           |sigs AS (SELECT doc_id, $mh FROM hp),
-           |mem AS (SELECT doc_id AS id, 0 AS band, ${band(0)} AS sig FROM sigs
-           |  UNION ALL SELECT doc_id AS id, 1 AS band, ${band(1)} AS sig FROM sigs),
-           |l0 AS (SELECT DISTINCT id, id AS label FROM mem),
-           |$iters,
-           |cl AS (SELECT id AS doc_id, label AS cluster_id FROM l3
-           |  UNION ALL SELECT doc_id, doc_id FROM documents WHERE text IS NULL),
-           |sized AS (SELECT cl.doc_id, cl.cluster_id, d.n_chars
-           |  FROM cl JOIN documents d USING (doc_id)),
-           |mx AS (SELECT cluster_id, max(n_chars) AS mc FROM sized GROUP BY 1),
-           |canon AS (SELECT s.cluster_id, min(s.doc_id) AS canonical_id
-           |  FROM sized s JOIN mx USING (cluster_id)
-           |  WHERE s.n_chars IS NOT DISTINCT FROM mx.mc GROUP BY 1)
-           |SELECT s.doc_id, s.cluster_id, c.canonical_id,
-           |  s.doc_id = c.canonical_id AS keep
-           |FROM sized s JOIN canon c USING (cluster_id)""".stripMargin
-      }),
+      s"""WITH $minhashClustersSql,
+        |sized AS (SELECT cl.doc_id, cl.cluster_id, d.n_chars
+        |  FROM cl JOIN documents d USING (doc_id)),
+        |mx AS (SELECT cluster_id, max(n_chars) AS mc FROM sized GROUP BY 1),
+        |canon AS (SELECT s.cluster_id, min(s.doc_id) AS canonical_id
+        |  FROM sized s JOIN mx USING (cluster_id)
+        |  WHERE s.n_chars IS NOT DISTINCT FROM mx.mc GROUP BY 1)
+        |SELECT s.doc_id, s.cluster_id, c.canonical_id,
+        |  s.doc_id = c.canonical_id AS keep
+        |FROM sized s JOIN canon c USING (cluster_id)""".stripMargin),
 
     // §2.3/32 — SimHash near-dup pairs (hamming <= 3, exact via 4-chunk
     // pigeonhole banding). The oracle replays the full pipeline: 56-bit
@@ -929,7 +982,7 @@ object Queries {
     "dedup_simhash" -> QueryDef(
       (s, d) => Dedup.simhashPairs(ds(s, d, "documents").toDF,
         "doc_id", "text", maxHamming = 3),
-      Some {
+      {
         val bits = (0 until 56).map(b =>
           s"CASE WHEN 2 * len(list_filter(hs, h -> ((h >> $b) & 1) = 1)) > len(hs) " +
             s"THEN (1::BIGINT << $b) ELSE 0 END").mkString(" + ")
@@ -951,34 +1004,30 @@ object Queries {
 
     // §2.3/33 — embedding-cosine near-dup pairs within label buckets
     "dedup_embed" -> QueryDef(
-      (s, d) => Similarity.nearDupPairs(ds(s, d, "embeddings").toDF
-          .filter(graft.functions.VectorFunctions.allFinite(col("embedding"))),
+      (s, d) => Similarity.nearDupPairs(finiteEmbeddings(s, d),
         "vec_id", "embedding", "label", threshold = 0.3),
-      Some("WITH e AS (SELECT vec_id, label, embedding FROM embeddings " +
-        "WHERE len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0) " +
+      "WITH e AS (SELECT vec_id, label, embedding FROM embeddings " +
+        s"WHERE ${finiteEmbeddingSql()}) " +
         "SELECT a.vec_id AS vec_a, b.vec_id AS vec_b " +
         "FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id " +
-        "WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) > 0.3")),
+        "WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) > 0.3"),
 
     // §2.3/34 — brute-force cosine top-k ANN (query set: vec_id < 5)
     "sim_ann_topk" -> QueryDef(
       (s, d) => {
-        val emb = ds(s, d, "embeddings").toDF
-          .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
-            graft.functions.VectorFunctions.allFinite(col("embedding")))
+        val emb = finiteEmbeddings(s, d, "vec_id", "embedding")
         Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 5),
           "vec_id", "embedding", k = 10)
       },
-      Some("""WITH e AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings
-        |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-        |    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0),
+      s"""WITH e AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings
+        |  WHERE ${finiteEmbeddingSql(Seq("vec_id"))}),
         |q AS (SELECT vec_id AS qid, embedding AS qv FROM e WHERE vec_id < 5),
         |s AS (SELECT qid, vec_id AS nid,
         |  list_cosine_similarity(qv::DOUBLE[], embedding::DOUBLE[]) AS c
         |  FROM q JOIN e ON vec_id <> qid)
         |SELECT qid AS query_id, nid AS neighbor_id, rank FROM (
         |  SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY c DESC, nid)::INT AS rank
-        |  FROM s WHERE c IS NOT NULL) t WHERE rank <= 10""".stripMargin)),
+        |  FROM s WHERE c IS NOT NULL) t WHERE rank <= 10""".stripMargin),
 
     // §2.3/35 — LSH-bucketed ANN (scale path); recall vs brute force is
     // asserted in SimilaritySpec. FULL oracle: the md5-derived ±1 sign
@@ -988,21 +1037,18 @@ object Queries {
     // accumulate dots in index order, so buckets match bit-for-bit.
     "sim_ann_lsh" -> QueryDef(
       (s, d) => {
-        val emb = ds(s, d, "embeddings").toDF
-          .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
-            graft.functions.VectorFunctions.allFinite(col("embedding")))
+        val emb = finiteEmbeddings(s, d, "vec_id", "embedding")
         Similarity.lshTopK(emb, emb.filter(col("vec_id") < 5),
           "vec_id", "embedding", k = 10, dim = 64, planes = 4)
       },
-      Some("""WITH signs AS (
+      s"""WITH signs AS (
         |  SELECT tp, j,
         |    CASE WHEN (('0x' || substring(md5(tp || ':' || j), 1, 2))::int % 2) = 0
         |         THEN -1.0 ELSE 1.0 END AS s
         |  FROM range(16) AS t1(tp), range(64) AS t2(j)),
         |svec AS (SELECT tp, list(s ORDER BY j) AS sv FROM signs GROUP BY tp),
         |emb AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-        |    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0),
+        |  WHERE ${finiteEmbeddingSql(Seq("vec_id"))}),
         |buckets AS (
         |  SELECT e.vec_id, (sv.tp // 4)::BIGINT AS tbl,
         |    sum(CASE WHEN list_inner_product(e.v, sv.sv) > 0
@@ -1018,7 +1064,7 @@ object Queries {
         |  FROM cand JOIN emb eq ON eq.vec_id = qid JOIN emb ec ON ec.vec_id = nid)
         |SELECT qid AS query_id, nid AS neighbor_id, rank FROM (
         |  SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY c DESC, nid)::INT AS rank
-        |  FROM s WHERE c IS NOT NULL) t WHERE rank <= 10""".stripMargin)),
+        |  FROM s WHERE c IS NOT NULL) t WHERE rank <= 10""".stripMargin),
 
     // §2.3/55 — IVF coarse-quantizer ANN (scale path #2); recall vs
     // brute force asserted in SimilaritySpec. The oracle replays the
@@ -1027,9 +1073,7 @@ object Queries {
     // (score, cell) structs), nprobe cell probing, cosine top-k
     "sim_ann_ivf" -> QueryDef(
       (s, d) => {
-        val emb = ds(s, d, "embeddings").toDF
-          .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
-            graft.functions.VectorFunctions.allFinite(col("embedding")))
+        val emb = finiteEmbeddings(s, d, "vec_id", "embedding")
         Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 5),
           "vec_id", "embedding", k = 10, cells = 16, nprobe = 2)
       },
@@ -1037,9 +1081,8 @@ object Queries {
       // filter through the window into the inlined CTE, reordering it
       // past the embedding IS NOT NULL guard and tripping
       // list_cosine_similarity's NULL-element error (fuzz r12)
-      Some("""WITH eb AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings
-        |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-        |    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0),
+      s"""WITH eb AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings
+        |  WHERE ${finiteEmbeddingSql(Seq("vec_id"))}),
         |c0 AS (SELECT vec_id, embedding,
         |    ('0x' || substring(md5(vec_id::varchar), 1, 14))::bigint AS h FROM eb),
         |cent AS (SELECT row_number() OVER (ORDER BY h) - 1 AS cell, embedding AS cv
@@ -1061,7 +1104,7 @@ object Queries {
         |  JOIN eb ne ON ne.vec_id = neighbor_id)
         |SELECT query_id, neighbor_id, rank FROM (SELECT query_id, neighbor_id,
         |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id)::INT AS rank
-        |  FROM scored) x WHERE rank <= 10""".stripMargin)),
+        |  FROM scored) x WHERE rank <= 10""".stripMargin),
 
     // §2.3/102 — product-quantization ANN: 16 subspaces × 16 cells
     // (4 dims each — random md5-seeded codebooks need the finer grain;
@@ -1071,29 +1114,25 @@ object Queries {
     // integer ranks only
     "sim_ann_pq" -> QueryDef(
       (s, d) => {
-        val emb = ds(s, d, "embeddings").toDF
-          .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
-            graft.functions.VectorFunctions.allFinite(col("embedding")))
+        val emb = finiteEmbeddings(s, d, "vec_id", "embedding")
         Similarity.pqTopK(emb, emb.filter(col("vec_id") < 5),
           "vec_id", "embedding", k = 10, subspaces = 16, subDim = 4, cells = 256)
       },
-      Some(s"WITH $pqAdcSql\n" +
+      s"WITH $pqAdcSql\n" +
         """SELECT query_id, neighbor_id, rank FROM (SELECT query_id, neighbor_id,
           |    row_number() OVER (PARTITION BY query_id ORDER BY d ASC, neighbor_id ASC)::INT AS rank
-          |  FROM adc) z WHERE rank <= 10""".stripMargin)),
+          |  FROM adc) z WHERE rank <= 10""".stripMargin),
 
     // §2.3/113 — two-stage retrieval: PQ/ADC shortlist of 50 → exact
     // cosine re-rank to top 10; oracle extends the sim_ann_pq replay
     // with the exact-cosine re-rank over the shortlist
     "sim_ann_rerank" -> QueryDef(
       (s, d) => {
-        val emb = ds(s, d, "embeddings").toDF
-          .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
-            graft.functions.VectorFunctions.allFinite(col("embedding")))
+        val emb = finiteEmbeddings(s, d, "vec_id", "embedding")
         Similarity.pqRerankTopK(emb, emb.filter(col("vec_id") < 5),
           "vec_id", "embedding", k = 10, shortlist = 50)
       },
-      Some(s"WITH $pqAdcSql,\n" +
+      s"WITH $pqAdcSql,\n" +
         """short AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
            |    row_number() OVER (PARTITION BY query_id ORDER BY d ASC, neighbor_id ASC) AS rank
            |  FROM adc) z WHERE rank <= 50),
@@ -1104,7 +1143,7 @@ object Queries {
            |SELECT query_id, neighbor_id, rank FROM (SELECT query_id, neighbor_id,
            |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC)::INT
            |      AS rank
-           |  FROM rr) z WHERE rank <= 10""".stripMargin)),
+           |  FROM rr) z WHERE rank <= 10""".stripMargin),
 
     // §2.3/62 — embedding near-dup clustering over LSH buckets (O(n)
     // output). FULL oracle (graduated from rows-only in round 4): the
@@ -1117,7 +1156,7 @@ object Queries {
       (s, d) => Similarity.nearDupClusters(ds(s, d, "embeddings").toDF
           .filter(col("vec_id").isNotNull),
         "vec_id", "embedding", dim = 64, planes = 8, tables = 2),
-      Some {
+      {
         val iters = labelPropIters("t, b")
         s"""WITH signs AS (
            |  SELECT tp, j,
@@ -1126,9 +1165,7 @@ object Queries {
            |  FROM range(16) AS t1(tp), range(64) AS t2(j)),
            |svec AS (SELECT tp, list(s ORDER BY j) AS sv FROM signs GROUP BY tp),
            |emb AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-           |  WHERE vec_id IS NOT NULL
-           |    AND embedding IS NOT NULL AND len(embedding) >= 64
-           |    AND len(list_filter(embedding[1:64], x -> x IS NULL OR NOT isfinite(x))) = 0),
+           |  WHERE ${finiteEmbeddingSql(Seq("vec_id"), Some(64))}),
            |mem AS (
            |  SELECT e.vec_id AS id, (sv.tp // 8)::BIGINT AS t,
            |    sum(CASE WHEN list_inner_product(e.v, sv.sv) > 0
@@ -1151,7 +1188,7 @@ object Queries {
       (s, d) => Similarity.semanticDedup(ds(s, d, "embeddings").toDF,
         "vec_id", "embedding", dim = 64, planes = 8, tables = 2,
         threshold = 0.25, iterations = 3),
-      Some {
+      {
         val iters = labelPropIters("t, b")
         s"""WITH signs AS (
            |  SELECT tp, j,
@@ -1160,8 +1197,7 @@ object Queries {
            |  FROM range(16) AS t1(tp), range(64) AS t2(j)),
            |svec AS (SELECT tp, list(s ORDER BY j) AS sv FROM signs GROUP BY tp),
            |emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-           |  WHERE embedding IS NOT NULL AND len(embedding) >= 64
-           |    AND len(list_filter(embedding[1:64], x -> x IS NULL OR NOT isfinite(x))) = 0),
+           |  WHERE ${finiteEmbeddingSql(Nil, Some(64))}),
            |mem AS (
            |  SELECT e.vec_id AS id, (sv.tp // 8)::BIGINT AS t,
            |    sum(CASE WHEN list_inner_product(e.v, sv.sv) > 0
@@ -1186,36 +1222,22 @@ object Queries {
     // SQL (deterministic IEEE double chain: widen → *127/s → +0.5 →
     // floor → clamp; no ties-dependent rounding mode)
     "sim_quantize" -> QueryDef(
-      (s, d) => Quantize.scalarQuantize(ds(s, d, "embeddings").toDF
-          .filter(col("embedding").isNotNull && graft.functions.VectorFunctions.allFinite(col("embedding"))),
+      (s, d) => Quantize.scalarQuantize(finiteEmbeddings(s, d, "embedding"),
         "vec_id", "embedding"),
-      Some("""SELECT vec_id, (i - 1)::INT AS dim,
+      s"""SELECT vec_id, (i - 1)::INT AS dim,
         |  CASE WHEN s = 0 THEN 0
         |    ELSE greatest(-127.0, least(127.0, floor(v[i] * 127.0 / s + 0.5)))::INT
         |  END AS code
         |FROM (SELECT vec_id, embedding::DOUBLE[] AS v,
         |    list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) AS s
-        |  FROM embeddings WHERE embedding IS NOT NULL
-        |    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0) t,
-        |  generate_series(1, 64) AS g(i)""".stripMargin)),
+        |  FROM embeddings WHERE ${finiteEmbeddingSql()}) t,
+        |  generate_series(1, 64) AS g(i)""".stripMargin),
 
     // §2.3/36 — language ID heuristic
     "text_langid" -> QueryDef(
       (s, d) => ds(s, d, "documents").toDF
         .select(col("doc_id"), TextFunctions.langId(col("text")).as("lang_pred")),
-      Some("""SELECT doc_id, CASE
-        |  WHEN len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) > 0 THEN 'zh'
-        |  WHEN len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |         t -> t IN ('the','and','of','to','a','in','is','it'))) >=
-        |       len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |         t -> t IN ('el','la','de','los','que','y')))
-        |   AND len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |         t -> t IN ('the','and','of','to','a','in','is','it'))) > 0 THEN 'en'
-        |  WHEN len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |         t -> t IN ('el','la','de','los','que','y'))) >
-        |       len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |         t -> t IN ('the','and','of','to','a','in','is','it'))) THEN 'es'
-        |  ELSE 'unknown' END AS lang_pred FROM documents""".stripMargin)),
+      s"SELECT doc_id, $langIdCaseSql AS lang_pred FROM documents"),
 
     // §2.3/37 — quality scoring (integer signals + gate)
     "text_quality" -> QueryDef(
@@ -1224,7 +1246,7 @@ object Queries {
           .map { case (n, c) => c.as(n) }
         ds(s, d, "documents").toDF.select((col("doc_id") +: sig): _*)
       },
-      Some("""SELECT doc_id,
+      """SELECT doc_id,
         |  len(regexp_split_to_array(trim(text), '\s+'))::INT AS n_tokens,
         |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))::INT AS n_bpe_tokens,
         |  len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))::INT AS n_punct,
@@ -1234,23 +1256,23 @@ object Queries {
         |  (len(regexp_split_to_array(trim(text), '\s+')) >= 5 AND
         |   len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) * 5 <= n_chars AND
         |   len(regexp_extract_all(text, '[0-9]')) * 4 <= n_chars) AS is_quality
-        |FROM documents""".stripMargin)),
+        |FROM documents""".stripMargin),
 
     // §2.3/38 — token counting (whitespace + BPE-ish regex)
     "text_tokens" -> QueryDef(
       (s, d) => ds(s, d, "documents").toDF.select(col("doc_id"),
         TextFunctions.tokenCount(col("text")).as("n_tokens"),
         TextFunctions.bpeTokenCount(col("text")).as("n_bpe_tokens")),
-      Some("SELECT doc_id, len(regexp_split_to_array(trim(text), '\\s+'))::INT AS n_tokens, " +
+      "SELECT doc_id, len(regexp_split_to_array(trim(text), '\\s+'))::INT AS n_tokens, " +
         "len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))::INT AS n_bpe_tokens " +
-        "FROM documents")),
+        "FROM documents"),
 
     // §2.3/39 — document fingerprinting
     "text_fingerprint" -> QueryDef(
       (s, d) => ds(s, d, "documents").toDF.select(col("doc_id"),
         TextFunctions.fingerprint(col("text")).as("fingerprint")),
-      Some("SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) " +
-        "AS fingerprint FROM documents")),
+      "SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) " +
+        "AS fingerprint FROM documents"),
 
     // §2.3/40 — multimodal decode, ORACLED: image rows carry REAL
     // encoded files (PNG/JPEG via javax.imageio, hand-built BMP),
@@ -1273,7 +1295,7 @@ object Queries {
         Multimodal.attachMediaPayload(ds(s, d, "documents").toDF
           .filter(col("doc_id").isNotNull && col("doc_id") >= 0),
           "doc_id", "text")).toDF(),
-      Some("""WITH m AS (SELECT doc_id,
+      """WITH m AS (SELECT doc_id,
         |    CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
         |    CASE WHEN doc_id % 3 = 0 THEN
         |           CASE doc_id % 9 WHEN 0 THEN 'png' WHEN 3 THEN 'jpg' ELSE 'bmp' END
@@ -1297,7 +1319,7 @@ object Queries {
         |       WHEN m.kind = 'image' THEN (img.s_r / 48.0 + img.s_g / 48.0 + img.s_b / 48.0) / 765.0
         |       WHEN m.kind = 'audio' THEN (1 + m.doc_id % 2) / 8.0
         |       ELSE ((6 + (m.doc_id % 5) * 2) * 1000 // 25) / 90000.0 END AS f3
-        |FROM m LEFT JOIN img ON m.doc_id = img.doc_id""".stripMargin)),
+        |FROM m LEFT JOIN img ON m.doc_id = img.doc_id""".stripMargin),
 
     // §2.3/81 — winnowing fingerprints (rolling-hash document
     // fingerprinting): windowed minima over positional 5-gram hashes,
@@ -1305,7 +1327,7 @@ object Queries {
     "text_winnow" -> QueryDef(
       (s, d) => Dedup.winnowFingerprints(ds(s, d, "documents").toDF,
         "doc_id", "text", k = winnowK, window = winnowW),
-      Some {
+      {
         val (k, w) = (winnowK, winnowW)
         s"""SELECT doc_id, unnest(list_distinct(
            |  CASE WHEN len(hs) >= $w THEN list_transform(
@@ -1331,7 +1353,7 @@ object Queries {
       (s, d) => Dedup.sharedSubstringPairsRelative(ds(s, d, "documents").toDF,
         "doc_id", "text", k = winnowK, window = winnowW,
         minShared = 8, dfNum = 1, dfDen = 8),
-      Some {
+      {
         val (k, w) = (winnowK, winnowW)
         s"""WITH f AS (SELECT doc_id, unnest(list_distinct(
            |  CASE WHEN len(hs) >= $w THEN list_transform(
@@ -1360,7 +1382,7 @@ object Queries {
     "q_substring_clusters" -> QueryDef(
       (s, d) => Dedup.substringClusters(ds(s, d, "documents").toDF,
         "doc_id", "text", k = winnowK, window = winnowW),
-      Some {
+      {
         val (k, w) = (winnowK, winnowW)
         val iters = labelPropIters("fp")
         s"""WITH f AS (SELECT doc_id, unnest(list_distinct(
@@ -1393,41 +1415,32 @@ object Queries {
     "dedup_shingle" -> QueryDef(
       (s, d) => Dedup.shinglePairs(ds(s, d, "documents").toDF,
         "doc_id", "text", Seq("source", "lang"), k = 5, num = 7, den = 10),
-      Some {
-        val mh = mhSigSql(8)
-        val bandsCond = (0 until 4).map(b =>
-          s"(a.m${2 * b} = b.m${2 * b} AND a.m${2 * b + 1} = b.m${2 * b + 1})")
-          .mkString(" OR ")
-        s"""WITH t AS (SELECT doc_id, source, lang,
-           |  list_distinct(list_transform(generate_series(1, greatest(length(text) - 4, 0)),
-           |    i -> substring(text, i, 5))) AS toks FROM documents),
-           |tn AS (SELECT * FROM t WHERE len(toks) > 0),
-           |hp AS (SELECT doc_id, source, lang, list_transform(toks, w ->
-           |  [('0x' || substring(md5(w), 1, 14))::bigint,
-           |   ('0x' || substring(md5(w), 15, 14))::bigint]) AS hs FROM tn),
-           |sigs AS (SELECT doc_id, source, lang, $mh FROM hp),
-           |cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-           |  FROM sigs a JOIN sigs b ON a.source = b.source AND a.lang = b.lang
-           |    AND a.doc_id < b.doc_id AND ($bandsCond))
-           |SELECT doc_a, doc_b,
-           |  len(list_intersect(ta.toks, tb.toks))::INT AS inter_size,
-           |  len(list_distinct(ta.toks || tb.toks))::INT AS union_size
-           |FROM cand JOIN tn ta ON doc_a = ta.doc_id JOIN tn tb ON doc_b = tb.doc_id
-           |WHERE len(list_intersect(ta.toks, tb.toks)) * 10 >=
-           |      len(list_distinct(ta.toks || tb.toks)) * 7""".stripMargin
-      }),
+      s"""WITH t AS (SELECT doc_id, source, lang,
+        |  list_distinct(list_transform(generate_series(1, greatest(length(text) - 4, 0)),
+        |    i -> substring(text, i, 5))) AS toks FROM documents),
+        |tn AS (SELECT * FROM t WHERE len(toks) > 0),
+        |${minhashSigsSql("tn", 8, Seq("source", "lang"))},
+        |cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+        |  FROM sigs a JOIN sigs b ON a.source = b.source AND a.lang = b.lang
+        |    AND a.doc_id < b.doc_id AND (${bandEqSql(4, 2)}))
+        |SELECT doc_a, doc_b,
+        |  len(list_intersect(ta.toks, tb.toks))::INT AS inter_size,
+        |  len(list_distinct(ta.toks || tb.toks))::INT AS union_size
+        |FROM cand JOIN tn ta ON doc_a = ta.doc_id JOIN tn tb ON doc_b = tb.doc_id
+        |WHERE len(list_intersect(ta.toks, tb.toks)) * 10 >=
+        |      len(list_distinct(ta.toks || tb.toks)) * 7""".stripMargin),
 
     // §2.3/45 — TF-IDF weighting over the corpus
     "text_tfidf" -> QueryDef(
       (s, d) => TfIdf.tfidf(ds(s, d, "documents").toDF, "doc_id", "text"),
-      Some("""WITH tok AS (SELECT doc_id,
+      """WITH tok AS (SELECT doc_id,
         |  unnest(regexp_split_to_array(trim(text), '\s+')) AS token FROM documents),
         |tf AS (SELECT doc_id, token, count(*) AS tf_cnt FROM tok GROUP BY 1, 2),
         |dfreq AS (SELECT token, count(DISTINCT doc_id) AS df_cnt FROM tok GROUP BY 1),
         |n AS (SELECT count(*) AS n_docs FROM documents)
         |SELECT doc_id, token, tf_cnt, df_cnt,
         |  tf_cnt * ln(n_docs / df_cnt) AS tfidf
-        |FROM tf JOIN dfreq USING (token) CROSS JOIN n""".stripMargin)),
+        |FROM tf JOIN dfreq USING (token) CROSS JOIN n""".stripMargin),
 
     // §2.3/133 — Okapi BM25 sparse retrieval: top-10 docs per keyword
     // query (queries = the first-3-token prefix of docs 0..4). Per-term
@@ -1444,7 +1457,7 @@ object Queries {
             array_join(slice(TextFunctions.tokens(col("text")), 1, 3), " ").as("qtext"))
         Retrieval.bm25TopK(docs, "doc_id", "text", q, k = 10)
       },
-      Some {
+      {
         val k1 = 1.2; val b = 0.75; val k1p1 = k1 + 1.0; val omb = 1.0 - b
         s"""WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks FROM documents),
            |tok AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS token FROM t),
@@ -1473,7 +1486,7 @@ object Queries {
     "text_inverted_index" -> QueryDef(
       (s, d) => Retrieval.invertedIndex(ds(s, d, "documents").toDF,
         "doc_id", "text", numBlocks = 8),
-      Some("""WITH tok AS (SELECT doc_id,
+      """WITH tok AS (SELECT doc_id,
         |  unnest(regexp_split_to_array(trim(text), '\s+')) AS token FROM documents
         |  WHERE doc_id IS NOT NULL),
         |tf AS (SELECT doc_id, token, count(*) AS tf_cnt FROM tok GROUP BY 1, 2),
@@ -1481,7 +1494,7 @@ object Queries {
         |  ('0x' || substring(md5(doc_id::varchar), 1, 14))::bigint % 8 AS block FROM tf)
         |SELECT token, block, count(*) AS df_block, sum(tf_cnt)::BIGINT AS cf_block,
         |  string_agg(doc_id || ':' || tf_cnt, ' ' ORDER BY doc_id) AS postings
-        |FROM tb GROUP BY 1, 2""".stripMargin)),
+        |FROM tb GROUP BY 1, 2""".stripMargin),
 
     // §2.3/135 — hybrid retrieval: BM25 (k=20) and dense cosine (k=20)
     // rankings fused by reciprocal-rank fusion 1/(60+rank); doc_id and
@@ -1491,9 +1504,7 @@ object Queries {
     "sim_hybrid_rrf" -> QueryDef(
       (s, d) => {
         val docs = ds(s, d, "documents").toDF
-        val emb = ds(s, d, "embeddings").toDF
-          .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
-            graft.functions.VectorFunctions.allFinite(col("embedding")))
+        val emb = finiteEmbeddings(s, d, "vec_id", "embedding")
         val q = docs.filter(col("doc_id") < 5)
           .select(col("doc_id").as("query_id"),
             array_join(slice(TextFunctions.tokens(col("text")), 1, 3), " ").as("qtext"))
@@ -1504,7 +1515,7 @@ object Queries {
           .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
         Retrieval.rrfFuse(sparse, dense, k = 10)
       },
-      Some {
+      {
         val k1 = 1.2; val b = 0.75; val k1p1 = k1 + 1.0; val omb = 1.0 - b
         s"""WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks FROM documents),
            |tok AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS token FROM t),
@@ -1524,8 +1535,7 @@ object Queries {
            |    row_number() OVER (PARTITION BY query_id ORDER BY sc DESC, doc_id) AS rank
            |  FROM s QUALIFY rank <= 20),
            |de AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings
-           |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-           |    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0),
+           |  WHERE ${finiteEmbeddingSql(Seq("vec_id"))}),
            |dq AS (SELECT vec_id AS qid, embedding AS qv FROM de WHERE vec_id < 5),
            |ds AS (SELECT qid, vec_id AS nid,
            |    list_cosine_similarity(qv::DOUBLE[], embedding::DOUBLE[]) AS cos
@@ -1557,7 +1567,7 @@ object Queries {
       (s, d) => Classifier.linearScore(ds(s, d, "documents").toDF, "doc_id", "text",
         Classifier.syntheticWeights(s, 262144), numBuckets = 262144,
         logitScale = 524288.0).drop("prob"),
-      Some("""WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
+      """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
         |f AS (
         |  SELECT doc_id, ('0x' || substring(md5(u), 1, 14))::bigint % 262144 AS bucket
         |  FROM (SELECT doc_id, unnest(toks) AS u FROM t)
@@ -1569,7 +1579,7 @@ object Queries {
         |    sum((bucket * 2654435761) % 1048576 - 524288)::BIGINT AS sum_w
         |  FROM f GROUP BY 1)
         |SELECT doc_id, n_feats, sum_w, sum_w > 0 AS label
-        |FROM s""".stripMargin)),
+        |FROM s""".stripMargin),
 
     // §2.3/137 — DSIR importance weighting (hashed-bigram importance
     // ratios, target = lang('en') estimated from the corpus itself);
@@ -1577,7 +1587,7 @@ object Queries {
     "text_dsir" -> QueryDef(
       (s, d) => Classifier.dsirWeights(ds(s, d, "documents").toDF, "doc_id", "text",
         col("lang") === "en", numBuckets = 65536),
-      Some("""WITH t AS (SELECT doc_id, lang = 'en' AS is_target,
+      """WITH t AS (SELECT doc_id, lang = 'en' AS is_target,
         |    regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
         |f AS (SELECT doc_id, is_target,
         |    ('0x' || substring(md5(w1 || ' ' || w2), 1, 14))::bigint % 65536 AS bucket
@@ -1595,7 +1605,7 @@ object Queries {
         |SELECT doc_id, n_feats, sum_lr,
         |  sum_lr / (1048576.0 * n_feats) AS avg_logratio,
         |  sum_lr > 0 AS is_targetlike
-        |FROM s""".stripMargin)),
+        |FROM s""".stripMargin),
 
     // §2.3/88 — the composed corpus-prep pipeline, end to end in ONE
     // declarative plan: quality gate → exact dedup (keep canonical) →
@@ -1611,33 +1621,33 @@ object Queries {
         Sampling.hashBucketSample(docs.join(canonical, "doc_id"), "doc_id", 0, 50)
           .select("doc_id", "lang", "source")
       },
-      Some("""WITH q AS (SELECT doc_id, text FROM documents WHERE
+      """WITH q AS (SELECT doc_id, text FROM documents WHERE
         |  len(regexp_split_to_array(trim(text), '\s+')) >= 5 AND
         |  len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) * 5 <= n_chars AND
         |  len(regexp_extract_all(text, '[0-9]')) * 4 <= n_chars),
         |d AS (SELECT min(doc_id) AS doc_id FROM q GROUP BY md5(text))
         |SELECT doc_id, lang, source FROM documents JOIN d USING (doc_id)
-        |WHERE ('0x' || substring(md5(doc_id::varchar), 1, 14))::bigint % 100 < 50""".stripMargin)),
+        |WHERE ('0x' || substring(md5(doc_id::varchar), 1, 14))::bigint % 100 < 50""".stripMargin),
 
     // §2.3/87 — unigram surprisal (perplexity-style quality filter):
     // avg(-ln p(token)) under the corpus's own unigram distribution
     "text_surprisal" -> QueryDef(
       (s, d) => TfIdf.unigramSurprisal(ds(s, d, "documents").toDF, "doc_id", "text"),
-      Some("""WITH tok AS (SELECT doc_id,
+      """WITH tok AS (SELECT doc_id,
         |  unnest(regexp_split_to_array(trim(text), '\s+')) AS token FROM documents),
         |freq AS (SELECT token, count(*) AS cnt FROM tok GROUP BY 1),
         |n AS (SELECT count(*) AS total FROM tok)
         |SELECT doc_id, count(*) AS n_tokens,
         |  avg(-ln(cnt / total)) AS avg_surprisal
         |FROM tok JOIN freq USING (token) CROSS JOIN n
-        |GROUP BY doc_id""".stripMargin)),
+        |GROUP BY doc_id""".stripMargin),
 
     // §2.3/101 — bigram LM surprisal (add-one smoothed conditional
     // model trained on the corpus itself; the KenLM-style perplexity
     // quality gate one rung above text_surprisal's unigram model)
     "text_bigram_lm" -> QueryDef(
       (s, d) => TfIdf.bigramSurprisal(ds(s, d, "documents").toDF, "doc_id", "text"),
-      Some("""WITH tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
+      """WITH tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
         |  FROM documents),
         |v AS (SELECT count(DISTINCT t) AS vsz
         |  FROM (SELECT unnest(toks) AS t FROM tok)),
@@ -1650,20 +1660,20 @@ object Queries {
         |  sum(floor(-ln((c12 + 1.0) / (c1 + vsz)) * 1048576)::BIGINT)::DOUBLE
         |    / (count(*)::DOUBLE * 1048576.0) AS avg_nll
         |FROM occ JOIN c12 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v
-        |GROUP BY doc_id""".stripMargin)),
+        |GROUP BY doc_id""".stripMargin),
 
     // §2.3/108 — vocabulary induction: top-50 tokens by count with
     // cumulative coverage (count desc, token asc — total order)
     "text_vocab" -> QueryDef(
       (s, d) => TfIdf.vocabTopN(ds(s, d, "documents").toDF, "text", topN = 50),
-      Some("""WITH tok AS (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS token
+      """WITH tok AS (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS token
         |  FROM documents),
         |cnt AS (SELECT token, count(*) AS cnt FROM tok GROUP BY 1),
         |top AS (SELECT token, cnt,
         |    row_number() OVER (ORDER BY cnt DESC, token)::INT AS rank FROM cnt),
         |lim AS (SELECT * FROM top WHERE rank <= 50)
         |SELECT rank, token, cnt,
-        |  (sum(cnt) OVER (ORDER BY rank))::BIGINT AS cum_cnt FROM lim""".stripMargin)),
+        |  (sum(cnt) OVER (ORDER BY rank))::BIGINT AS cum_cnt FROM lim""".stripMargin),
 
     // §2.3/112 — mergeable sampled-median sketch: bottom-64-hash
     // uniform sample per source, exact integer median arithmetic over
@@ -1671,7 +1681,7 @@ object Queries {
     "q_sampled_median" -> QueryDef(
       (s, d) => Sketches.sampledMedian(ds(s, d, "documents").toDF,
         "source", "doc_id", "n_chars", k = 64),
-      Some("""WITH h AS (SELECT source, n_chars,
+      """WITH h AS (SELECT source, n_chars,
         |    ('0x' || substring(md5(doc_id::varchar), 1, 13))::bigint AS hv
         |  FROM documents WHERE n_chars IS NOT NULL AND doc_id IS NOT NULL),
         |r AS (SELECT source, n_chars,
@@ -1679,24 +1689,24 @@ object Queries {
         |s AS (SELECT source, list(n_chars ORDER BY n_chars) AS vals
         |  FROM r WHERE rn <= 64 GROUP BY source)
         |SELECT source, len(vals)::INT AS n_sample,
-        |  vals[(len(vals)+1)//2] + vals[(len(vals)+2)//2] AS med2 FROM s""".stripMargin)),
+        |  vals[(len(vals)+1)//2] + vals[(len(vals)+2)//2] AS med2 FROM s""".stripMargin),
 
     // §2.3/109 — per-source equi-width histogram of n_chars (10 global
     // bins, integer-exact bucket arithmetic)
     "q_histogram" -> QueryDef(
       (s, d) => Sketches.histogram(ds(s, d, "documents").toDF,
         "source", "n_chars", bins = 10),
-      Some("""WITH mm AS (SELECT min(n_chars) AS lo, max(n_chars) AS hi FROM documents)
+      """WITH mm AS (SELECT min(n_chars) AS lo, max(n_chars) AS hi FROM documents)
         |SELECT source, least(9, ((n_chars - lo) * 10) // (hi - lo + 1)) AS bin,
         |  count(*) AS cnt
         |FROM documents CROSS JOIN mm WHERE n_chars IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin)),
+        |GROUP BY 1, 2""".stripMargin),
 
     // §2.3/116 — trigram LM surprisal (top of the n-gram ladder:
     // rows 87 unigram → 101 bigram → trigram context)
     "text_trigram_lm" -> QueryDef(
       (s, d) => TfIdf.trigramSurprisal(ds(s, d, "documents").toDF, "doc_id", "text"),
-      Some("""WITH tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
+      """WITH tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
         |  FROM documents),
         |v AS (SELECT count(DISTINCT t) AS vsz
         |  FROM (SELECT unnest(toks) AS t FROM tok)),
@@ -1710,7 +1720,7 @@ object Queries {
         |  sum(floor(-ln((c123 + 1.0) / (ctx + vsz)) * 1048576)::BIGINT)::DOUBLE
         |    / (count(*)::DOUBLE * 1048576.0) AS avg_nll
         |FROM occ JOIN c123 USING (w1, w2, w3) JOIN c12 USING (w1, w2) CROSS JOIN v
-        |GROUP BY doc_id""".stripMargin)),
+        |GROUP BY doc_id""".stripMargin),
 
     // §2.3/46 — approximate distinct (HLL++), ORACLED: HLL register
     // values are engine-private (DuckDB's HLL ≠ Spark's), so the row
@@ -1749,7 +1759,7 @@ object Queries {
               greatest(lit(8.0), lit(0.15) * col("__exact"))).as("hll_ok"),
             Sketches.kmvEstimate("__mins", k).as("approx_users_kmv"))
       },
-      Some("""WITH h AS (SELECT DISTINCT event_type,
+      """WITH h AS (SELECT DISTINCT event_type,
         |    ('0x' || substring(md5(user_id::VARCHAR), 1, 14))::bigint AS hv
         |  FROM events WHERE user_id IS NOT NULL),
         |r AS (SELECT event_type, hv,
@@ -1759,7 +1769,7 @@ object Queries {
         |SELECT event_type, TRUE AS hll_ok,
         |  CASE WHEN cnt < 128 THEN cnt
         |    ELSE (127 * (1::BIGINT << 56)) // hk END AS approx_users_kmv
-        |FROM k""".stripMargin)),
+        |FROM k""".stripMargin),
 
     // §2.3/90 — KMV (bottom-k) distinct-count sketch: unlike HLL++
     // (q_approx_users, engine-private registers → rows-only), every
@@ -1769,7 +1779,7 @@ object Queries {
     "q_kmv_distinct" -> QueryDef(
       (s, d) => Sketches.kmvDistinct(ds(s, d, "events").toDF,
         Seq("event_type"), "user_id", k = 64),
-      Some("""WITH h AS (SELECT DISTINCT event_type,
+      """WITH h AS (SELECT DISTINCT event_type,
         |    ('0x' || substring(md5(user_id::VARCHAR), 1, 14))::bigint AS hv
         |  FROM events WHERE user_id IS NOT NULL),
         |r AS (SELECT event_type, hv,
@@ -1778,7 +1788,7 @@ object Queries {
         |  FROM r WHERE rn <= 64 GROUP BY event_type)
         |SELECT event_type, CASE WHEN cnt < 64 THEN cnt
         |  ELSE (63 * (1::BIGINT << 56)) // hk END AS est_distinct
-        |FROM k""".stripMargin)),
+        |FROM k""".stripMargin),
 
     // §2.3/91 — train/test n-gram decontamination: training docs
     // sharing any word 3-gram with the held-out set (doc_id % 50 = 0
@@ -1792,7 +1802,7 @@ object Queries {
           docs.filter(col("doc_id") % 50 === 0),
           "doc_id", "text", n = 3)
       },
-      Some {
+      {
         val grams = """CASE WHEN len(toks) >= 3 THEN list_distinct(
           |      list_transform(generate_series(1, len(toks) - 2),
           |        i -> array_to_string(list_slice(toks, i, i + 2), ' ')))
@@ -1821,7 +1831,7 @@ object Queries {
           docs.filter(col("doc_id") % 50 === 0),
           "doc_id", "text", n = 3, words = 256)
       },
-      Some {
+      {
         val grams = """CASE WHEN len(toks) >= 3 THEN list_distinct(
           |      list_transform(generate_series(1, len(toks) - 2),
           |        i -> array_to_string(list_slice(toks, i, i + 2), ' ')))
@@ -1844,7 +1854,7 @@ object Queries {
     "q_pack_batches" -> QueryDef(
       (s, d) => Pack.packByTokenBudget(ds(s, d, "documents").toDF,
         "doc_id", "text", "source", budget = 4096),
-      Some("""SELECT doc_id, source, n_tokens,
+      """SELECT doc_id, source, n_tokens,
         |  (COALESCE(sum(n_tokens) OVER (PARTITION BY source
         |     ORDER BY n_tokens DESC, doc_id
         |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT
@@ -1852,15 +1862,15 @@ object Queries {
         |FROM (SELECT doc_id, source,
         |    COALESCE(len(regexp_split_to_array(trim(text), '\s+')), 0)::INT AS n_tokens
         |  FROM documents
-        |  WHERE doc_id IS NOT NULL AND source IS NOT NULL) t""".stripMargin)),
+        |  WHERE doc_id IS NOT NULL AND source IS NOT NULL) t""".stripMargin),
 
     // §2.3/68 — deterministic hash sampling (the stable train/test
     // split): 10% bucket of documents by md5-derived id hash
     "q_hash_sample" -> QueryDef(
       (s, d) => Sampling.hashBucketSample(ds(s, d, "documents").toDF,
         "doc_id", lo = 0, hi = 10).select("doc_id", "lang", "source"),
-      Some("SELECT doc_id, lang, source FROM documents WHERE " +
-        "('0x' || substring(md5(doc_id::varchar), 1, 14))::bigint % 100 < 10")),
+      "SELECT doc_id, lang, source FROM documents WHERE " +
+        "('0x' || substring(md5(doc_id::varchar), 1, 14))::bigint % 100 < 10"),
 
     // §2.3/69 — group-wise top-n (quality filtering: keep the 3 longest
     // docs per source), ranked by the map-side-combinable TopKAgg
@@ -1871,11 +1881,11 @@ object Queries {
           col("n_chars").cast("double")).as("top"))
         .select(col("source"), posexplode(col("top")).as(Seq("pos", "t")))
         .select(col("source"), col("t._1").as("doc_id"), (col("pos") + 1).as("rank")),
-      Some("""SELECT source, doc_id, rank::INT AS rank FROM (
+      """SELECT source, doc_id, rank::INT AS rank FROM (
         |  SELECT source, doc_id, row_number() OVER (
         |    PARTITION BY source ORDER BY n_chars DESC, doc_id) AS rank
         |  FROM documents WHERE doc_id IS NOT NULL AND n_chars IS NOT NULL) t
-        |WHERE rank <= 3""".stripMargin)),
+        |WHERE rank <= 3""".stripMargin),
 
     // §2.3/70 — column profiling (data-quality stats per column) in ONE
     // scan: all columns' stats in a single aggregation, unpivoted with
@@ -1895,11 +1905,11 @@ object Queries {
           .selectExpr(s"stack(${cols.size}, $stackArgs) AS " +
             "(col_name, n_null, n_distinct, min_val, max_val)")
       },
-      Some(Seq("o_orderkey", "o_custkey", "o_totalprice").map { c =>
+      Seq("o_orderkey", "o_custkey", "o_totalprice").map { c =>
         s"SELECT '$c' AS col_name, count(*) - count($c) AS n_null, " +
           s"count(DISTINCT $c) AS n_distinct, min($c)::double AS min_val, " +
           s"max($c)::double AS max_val FROM orders"
-      }.mkString(" UNION ALL "))),
+      }.mkString(" UNION ALL ")),
 
     // ------------- §2.2 OLAP depth -------------
 
@@ -1915,13 +1925,13 @@ object Queries {
           avg("l_extendedprice").as("avg_price"),
           avg("l_discount").as("avg_disc"),
           count(lit(1)).as("count_order")),
-      Some("""SELECT l_returnflag, l_linestatus,
+      """SELECT l_returnflag, l_linestatus,
         |  sum(l_quantity) AS sum_qty, sum(l_extendedprice) AS sum_base_price,
         |  sum(l_extendedprice * (1 - l_discount)) AS sum_disc_price,
         |  sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)) AS sum_charge,
         |  avg(l_quantity) AS avg_qty, avg(l_extendedprice) AS avg_price,
         |  avg(l_discount) AS avg_disc, count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin)),
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin),
 
     // §2.2/21 — Q3 shape: 3-way join + agg + topk (dimension broadcast)
     "q3_shipping" -> QueryDef(
@@ -1936,11 +1946,11 @@ object Queries {
           .orderBy(col("revenue").desc, col("l_orderkey"))
           .limit(10)
       },
-      Some("""SELECT l_orderkey, sum(l_extendedprice * (1 - l_discount)) AS revenue
+      """SELECT l_orderkey, sum(l_extendedprice * (1 - l_discount)) AS revenue
         |FROM customer JOIN orders ON c_custkey = o_custkey
         |JOIN lineitem ON o_orderkey = l_orderkey
         |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY l_orderkey ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin)),
+        |GROUP BY l_orderkey ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin),
 
     // §2.2/22 — Q5 shape: 6-way join, dimensions broadcast.
     // Round-2's 0.83s->2.01s bench delta was adjudicated with
@@ -1966,13 +1976,13 @@ object Queries {
           .groupBy("n_name")
           .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
       },
-      Some("""SELECT n_name, sum(l_extendedprice * (1 - l_discount)) AS revenue
+      """SELECT n_name, sum(l_extendedprice * (1 - l_discount)) AS revenue
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
         |JOIN supplier ON l_suppkey = s_suppkey
         |JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
         |JOIN nation ON s_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA' GROUP BY n_name""".stripMargin)),
+        |WHERE r_name = 'ASIA' GROUP BY n_name""".stripMargin),
 
     // §2.2/138 — Q17 shape: correlated scalar subquery (avg quantity
     // per part), written decorrelated — the per-part aggregate joins
@@ -1993,13 +2003,13 @@ object Queries {
           .filter(col("l_quantity") < lit(0.2) * col("avg_qty"))
           .agg((sum("l_extendedprice") / lit(7.0)).as("avg_yearly"))
       },
-      Some("""WITH a AS (SELECT l_partkey AS pk, avg(l_quantity) AS avg_qty
+      """WITH a AS (SELECT l_partkey AS pk, avg(l_quantity) AS avg_qty
         |  FROM lineitem GROUP BY 1)
         |SELECT sum(l_extendedprice) / 7.0 AS avg_yearly
         |FROM lineitem
         |JOIN part ON l_partkey = p_partkey AND p_brand = 'Brand#7'
         |JOIN a ON l_partkey = pk
-        |WHERE l_quantity < 0.2 * avg_qty""".stripMargin)),
+        |WHERE l_quantity < 0.2 * avg_qty""".stripMargin),
 
     // §2.2/139 — time-series resample + forward fill: each user's
     // irregular events onto a daily grid from first to last active
@@ -2011,7 +2021,7 @@ object Queries {
     "q_resample_ffill" -> QueryDef(
       (s, d) => operators.TimeSeries.resampleDailyFfill(
         ds(s, d, "events").toDF, "user_id", "ts", "event_id", "value"),
-      Some("""WITH daily AS (SELECT user_id AS entity_id, ts::DATE AS day, value AS day_value
+      """WITH daily AS (SELECT user_id AS entity_id, ts::DATE AS day, value AS day_value
         |  FROM events
         |  QUALIFY row_number() OVER (PARTITION BY user_id, ts::DATE
         |    ORDER BY ts DESC, event_id DESC) = 1),
@@ -2025,7 +2035,7 @@ object Queries {
         |    ORDER BY g.day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_ffill,
         |  d.day_value IS NULL AS is_gap
         |FROM grid g LEFT JOIN daily d
-        |  ON g.entity_id = d.entity_id AND g.day = d.day""".stripMargin)),
+        |  ON g.entity_id = d.entity_id AND g.day = d.day""".stripMargin),
 
     // §2.2/23 — window functions: running spend per customer
     "q_window_running" -> QueryDef(
@@ -2040,58 +2050,58 @@ object Queries {
           .select(col("o_orderkey"), col("o_custkey"),
             sum("o_totalprice").over(w).as("running_spend"))
       },
-      Some("SELECT o_orderkey, o_custkey, sum(o_totalprice) OVER " +
+      "SELECT o_orderkey, o_custkey, sum(o_totalprice) OVER " +
         "(PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS running_spend " +
-        "FROM orders WHERE o_orderdate IS NOT NULL AND o_orderkey IS NOT NULL")),
+        "FROM orders WHERE o_orderdate IS NOT NULL AND o_orderkey IS NOT NULL"),
 
     // §2.2/24 — distinct aggregation
     "q_distinct" -> QueryDef(
       (s, d) => ds(s, d, "lineitem").toDF.groupBy("l_returnflag")
         .agg(countDistinct("l_partkey").as("distinct_parts")),
-      Some("SELECT l_returnflag, count(DISTINCT l_partkey) AS distinct_parts " +
-        "FROM lineitem GROUP BY l_returnflag")),
+      "SELECT l_returnflag, count(DISTINCT l_partkey) AS distinct_parts " +
+        "FROM lineitem GROUP BY l_returnflag"),
 
     // §2.2/25 — JSON extraction from events.props
     "q_json_extract" -> QueryDef(
       (s, d) => ds(s, d, "events").toDF
         .select(get_json_object(col("props"), "$.k").cast("long").as("k_val"))
         .groupBy("k_val").agg(count(lit(1)).as("cnt")),
-      Some("SELECT json_extract_string(props, '$.k')::BIGINT AS k_val, count(*) AS cnt " +
-        "FROM events GROUP BY 1")),
+      "SELECT json_extract_string(props, '$.k')::BIGINT AS k_val, count(*) AS cnt " +
+        "FROM events GROUP BY 1"),
 
     // §2.2/26 — event-time tumbling window (hourly)
     "q_events_window" -> QueryDef(
       (s, d) => ds(s, d, "events").toDF
         .groupBy((graft.functions.TimeFunctions.floorDiv(graft.functions.TimeFunctions.epochSec(col("ts")), 3600L) * 3600).as("win_start"))
         .agg(count(lit(1)).as("n_events"), sum("value").as("value_sum")),
-      Some("SELECT (floor(epoch(ts) / 3600))::BIGINT * 3600 AS win_start, " +
-        "count(*) AS n_events, sum(value) AS value_sum FROM events GROUP BY 1")),
+      "SELECT (floor(epoch(ts) / 3600))::BIGINT * 3600 AS win_start, " +
+        "count(*) AS n_events, sum(value) AS value_sum FROM events GROUP BY 1"),
 
     // §2.2/41 — salted join under skew: result must equal the plain join
     "q_skew_salted" -> QueryDef(
       (s, d) => SkewJoin.saltedJoin(ds(s, d, "orders").toDF, ds(s, d, "customer").toDF,
         "o_custkey", "c_custkey", saltFactor = 8)
         .select("o_orderkey", "o_custkey", "c_name"),
-      Some("SELECT o_orderkey, o_custkey, c_name FROM orders " +
-        "JOIN customer ON o_custkey = c_custkey")),
+      "SELECT o_orderkey, o_custkey, c_name FROM orders " +
+        "JOIN customer ON o_custkey = c_custkey"),
 
     // §2.2/51 — pivot / crosstab: users x event types
     "q_pivot" -> QueryDef(
       (s, d) => ds(s, d, "events").toDF.groupBy("user_id")
         .pivot("event_type", eventTypes).agg(count(lit(1)))
         .na.fill(0, eventTypes),
-      Some("SELECT user_id, " + eventTypes.map(t =>
+      "SELECT user_id, " + eventTypes.map(t =>
         s"count(*) FILTER (event_type = '$t') AS $t").mkString(", ") +
-        " FROM events GROUP BY user_id")),
+        " FROM events GROUP BY user_id"),
 
     // §2.2/52 — rollup with subtotal rows
     "q_rollup" -> QueryDef(
       (s, d) => ds(s, d, "orders").toDF
         .rollup("o_orderstatus", "o_orderpriority")
         .agg(count(lit(1)).as("cnt"), sum("o_totalprice").as("total")),
-      Some("SELECT o_orderstatus, o_orderpriority, count(*) AS cnt, " +
+      "SELECT o_orderstatus, o_orderpriority, count(*) AS cnt, " +
         "sum(o_totalprice) AS total FROM orders " +
-        "GROUP BY ROLLUP (o_orderstatus, o_orderpriority)")),
+        "GROUP BY ROLLUP (o_orderstatus, o_orderpriority)"),
 
     // §2.2/156 — explicit GROUPING SETS (the general form rollup/cube
     // specialize): two unrelated dimension pairs plus the grand total
@@ -2107,12 +2117,12 @@ object Queries {
           col("l_returnflag"), col("l_linestatus"), col("l_linenumber"))
         .agg(grouping_id().as("gid"), count(lit(1)).as("cnt"),
           sum("l_quantity").as("sum_qty")),
-      Some("""SELECT l_returnflag, l_linestatus, l_linenumber,
+      """SELECT l_returnflag, l_linestatus, l_linenumber,
         |  GROUPING(l_returnflag, l_linestatus, l_linenumber) AS gid,
         |  count(*) AS cnt, sum(l_quantity) AS sum_qty
         |FROM lineitem
         |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_linenumber), ())"""
-        .stripMargin)),
+        .stripMargin),
 
     // §2.2/157 — exact moment-sum profiling: per group the
     // correlation/covariance building blocks (n, Σx, Σy, Σxy, Σx²,
@@ -2135,13 +2145,13 @@ object Queries {
       // Every oracle-side integer sum carries an outer ::BIGINT: DuckDB
       // sum(BIGINT) widens to HUGEINT and the driver's hash is
       // type-sensitive even when the values are identical.
-      Some("""SELECT l_returnflag, count(*) AS n,
+      """SELECT l_returnflag, count(*) AS n,
         |  sum(l_quantity::BIGINT)::BIGINT AS sum_x,
         |  sum(round(l_discount * 100)::BIGINT)::BIGINT AS sum_y,
         |  sum(l_quantity::BIGINT * round(l_discount * 100)::BIGINT)::BIGINT AS sum_xy,
         |  sum(l_quantity::BIGINT * l_quantity::BIGINT)::BIGINT AS sum_x2,
         |  sum(round(l_discount * 100)::BIGINT * round(l_discount * 100)::BIGINT)::BIGINT AS sum_y2
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin)),
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
 
     // §2.2/161 — Merkle-bucket snapshot reconciliation: drifted-orders
     // diff (rows dropped at key%97, totalprice bumped at key%101 — a
@@ -2157,7 +2167,7 @@ object Queries {
               .otherwise(col("o_totalprice")))
         operators.Reconcile.tableDiff(a, b, "o_orderkey")
       },
-      Some("""WITH b AS (SELECT o_orderkey, o_custkey, o_orderstatus,
+      """WITH b AS (SELECT o_orderkey, o_custkey, o_orderstatus,
         |    o_totalprice + CASE WHEN o_orderkey % 101 = 0 THEN 1 ELSE 0 END AS o_totalprice,
         |    o_orderdate, o_orderpriority
         |  FROM orders WHERE o_orderkey % 97 <> 0)
@@ -2165,7 +2175,7 @@ object Queries {
         |  (SELECT * FROM b EXCEPT ALL SELECT * FROM orders)
         |UNION ALL
         |SELECT 'removed' AS side, o_orderkey AS key FROM
-        |  (SELECT * FROM orders EXCEPT ALL SELECT * FROM b)""".stripMargin)),
+        |  (SELECT * FROM orders EXCEPT ALL SELECT * FROM b)""".stripMargin),
 
     // §2.2/166 — interval-overlap temporal join: per-user view
     // sessions [ts, ts+600] overlapping click bursts [ts, ts+300],
@@ -2186,7 +2196,7 @@ object Queries {
             "v_start", "v_end", "c_start", "c_end", bucketWidth = 600)
           .select(col("view_id"), col("click_id"), col("v_user").as("user_id"))
       },
-      Some("""WITH e AS (SELECT event_id, user_id, event_type,
+      """WITH e AS (SELECT event_id, user_id, event_type,
         |    floor(epoch(ts))::BIGINT AS ep FROM events),
         |v AS (SELECT event_id AS view_id, user_id, ep AS s, ep + 600 AS e
         |  FROM e WHERE event_type = 'view'),
@@ -2194,7 +2204,7 @@ object Queries {
         |  FROM e WHERE event_type = 'click')
         |SELECT v.view_id, c.click_id, v.user_id
         |FROM v JOIN c ON v.user_id = c.user_id AND v.s <= c.e AND c.s <= v.e"""
-        .stripMargin)),
+        .stripMargin),
 
     // §2.2/165 — per-group CDF via percent_rank (partitioned window,
     // total order by (n_chars, doc_id) so ranks are deterministic;
@@ -2212,9 +2222,9 @@ object Queries {
           .select(col("doc_id"), col("source"), col("n_chars"),
             percent_rank().over(w).as("pr"))
       },
-      Some("""SELECT doc_id, source, n_chars,
+      """SELECT doc_id, source, n_chars,
         |  percent_rank() OVER (PARTITION BY source ORDER BY n_chars, doc_id) AS pr
-        |FROM documents WHERE n_chars IS NOT NULL AND doc_id IS NOT NULL""".stripMargin)),
+        |FROM documents WHERE n_chars IS NOT NULL AND doc_id IS NOT NULL""".stripMargin),
 
     // §2.2/163 — 2-D skyline / Pareto-maximal vectors (Börzsönyi et
     // al. 2001): undominated (quantity, price-cents) points, by per-x
@@ -2227,44 +2237,44 @@ object Queries {
           .select(col("l_quantity"),
             round(col("l_extendedprice") * 100).as("cents")),
         "l_quantity", "cents"),
-      Some("""WITH p AS (SELECT l_quantity::BIGINT AS q,
+      """WITH p AS (SELECT l_quantity::BIGINT AS q,
         |    max(round(l_extendedprice * 100)::BIGINT) AS c
         |  FROM lineitem GROUP BY 1),
         |s AS (SELECT q, c, max(c) OVER (ORDER BY q DESC
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS sm FROM p)
         |SELECT q AS l_quantity, c AS cents FROM s
-        |WHERE sm IS NULL OR c > sm""".stripMargin)),
+        |WHERE sm IS NULL OR c > sm""".stripMargin),
 
     // §2.2/53 — anti join: customers with no orders
     "q_anti_join" -> QueryDef(
       (s, d) => ds(s, d, "customer").toDF.join(ds(s, d, "orders").toDF,
         col("c_custkey") === col("o_custkey"), "left_anti")
         .select("c_custkey", "c_name"),
-      Some("SELECT c_custkey, c_name FROM customer " +
-        "WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)")),
+      "SELECT c_custkey, c_name FROM customer " +
+        "WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)"),
 
     // §2.2/54 — interpolated percentiles per group
     "q_percentile" -> QueryDef(
       (s, d) => ds(s, d, "events").toDF.groupBy("event_type")
         .agg(expr("percentile(value, 0.5)").as("p50"),
           expr("percentile(value, 0.95)").as("p95")),
-      Some("SELECT event_type, quantile_cont(value, 0.5) AS p50, " +
-        "quantile_cont(value, 0.95) AS p95 FROM events GROUP BY event_type")),
+      "SELECT event_type, quantile_cont(value, 0.5) AS p50, " +
+        "quantile_cont(value, 0.95) AS p95 FROM events GROUP BY event_type"),
 
     // §2.2/57 — cube (all grouping-set combinations)
     "q_cube" -> QueryDef(
       (s, d) => ds(s, d, "events").toDF.cube("event_type", "user_id")
         .agg(count(lit(1)).as("cnt")),
-      Some("SELECT event_type, user_id, count(*) AS cnt FROM events " +
-        "GROUP BY CUBE (event_type, user_id)")),
+      "SELECT event_type, user_id, count(*) AS cnt FROM events " +
+        "GROUP BY CUBE (event_type, user_id)"),
 
     // §2.2/58 — semi join: customers that do have orders
     "q_semi_join" -> QueryDef(
       (s, d) => ds(s, d, "customer").toDF.join(ds(s, d, "orders").toDF,
         col("c_custkey") === col("o_custkey"), "left_semi")
         .select("c_custkey", "c_name"),
-      Some("SELECT c_custkey, c_name FROM customer " +
-        "WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)")),
+      "SELECT c_custkey, c_name FROM customer " +
+        "WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)"),
 
     // §2.3/59 — fuzzy matching by edit distance over the WHOLE corpus:
     // MinHash-LSH candidate generation on char-5-shingles of the
@@ -2277,26 +2287,16 @@ object Queries {
       (s, d) => Dedup.editDistancePairs(ds(s, d, "documents").toDF,
         "doc_id", "text", maxDist = 8, prefixLen = 40,
         shingleK = 5, bands = 4, rowsPerBand = 4),
-      Some {
-        val mh = mhSigSql(16)
-        val bandEq = (0 until 4).map(b =>
-          (0 until 4).map(r => s"a.m${4 * b + r} = b.m${4 * b + r}")
-            .mkString("(", " AND ", ")"))
-          .mkString(" OR ")
-        s"""WITH t AS (SELECT doc_id, substring(text, 1, 40) AS prefix FROM documents),
-           |tok AS (SELECT doc_id, prefix,
-           |  list_distinct(list_transform(generate_series(1, greatest(length(prefix) - 4, 0)),
-           |    i -> substring(prefix, i, 5))) AS toks FROM t),
-           |hp AS (SELECT doc_id, prefix, list_transform(toks, w ->
-           |  [('0x' || substring(md5(w), 1, 14))::bigint,
-           |   ('0x' || substring(md5(w), 15, 14))::bigint]) AS hs FROM tok),
-           |sigs AS (SELECT doc_id, prefix, $mh FROM hp),
-           |cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           |    a.prefix AS pa, b.prefix AS pb
-           |  FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id AND ($bandEq))
-           |SELECT DISTINCT doc_a, doc_b, levenshtein(pa, pb)::INT AS dist
-           |FROM cand WHERE levenshtein(pa, pb) <= 8""".stripMargin
-      }),
+      s"""WITH t AS (SELECT doc_id, substring(text, 1, 40) AS prefix FROM documents),
+        |tok AS (SELECT doc_id, prefix,
+        |  list_distinct(list_transform(generate_series(1, greatest(length(prefix) - 4, 0)),
+        |    i -> substring(prefix, i, 5))) AS toks FROM t),
+        |${minhashSigsSql("tok", 16, Seq("prefix"))},
+        |cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |    a.prefix AS pa, b.prefix AS pb
+        |  FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id AND (${bandEqSql(4, 4)}))
+        |SELECT DISTINCT doc_a, doc_b, levenshtein(pa, pb)::INT AS dist
+        |FROM cand WHERE levenshtein(pa, pb) <= 8""".stripMargin),
 
     // §2.3/100 — cross-table fuzzy join (record linkage): link the
     // even-doc_id collection to the odd-doc_id collection by text
@@ -2310,28 +2310,17 @@ object Queries {
           docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
           maxDist = 8, prefixLen = 40, shingleK = 5, bands = 4, rowsPerBand = 4)
       },
-      Some {
-        val mh = mhSigSql(16)
-        val bandEq = (0 until 4).map(b =>
-          (0 until 4).map(r => s"a.m${4 * b + r} = b.m${4 * b + r}")
-            .mkString("(", " AND ", ")"))
-          .mkString(" OR ")
-        s"""WITH t AS (SELECT doc_id, substring(text, 1, 40) AS prefix FROM documents),
-           |tok AS (SELECT doc_id, prefix,
-           |  list_distinct(list_transform(generate_series(1, greatest(length(prefix) - 4, 0)),
-           |    i -> substring(prefix, i, 5))) AS toks FROM t),
-           |hp AS (SELECT doc_id, prefix, list_transform(toks, w ->
-           |  [('0x' || substring(md5(w), 1, 14))::bigint,
-           |   ('0x' || substring(md5(w), 15, 14))::bigint]) AS hs FROM tok
-           |  WHERE len(toks) > 0),
-           |sigs AS (SELECT doc_id, prefix, $mh FROM hp),
-           |cand AS (SELECT a.doc_id AS left_id, b.doc_id AS right_id,
-           |    a.prefix AS pa, b.prefix AS pb
-           |  FROM sigs a JOIN sigs b
-           |  ON a.doc_id % 2 = 0 AND b.doc_id % 2 = 1 AND ($bandEq))
-           |SELECT DISTINCT left_id, right_id, levenshtein(pa, pb)::INT AS dist
-           |FROM cand WHERE levenshtein(pa, pb) <= 8""".stripMargin
-      }),
+      s"""WITH t AS (SELECT doc_id, substring(text, 1, 40) AS prefix FROM documents),
+        |tok AS (SELECT doc_id, prefix,
+        |  list_distinct(list_transform(generate_series(1, greatest(length(prefix) - 4, 0)),
+        |    i -> substring(prefix, i, 5))) AS toks FROM t),
+        |${minhashSigsSql("tok", 16, Seq("prefix"))},
+        |cand AS (SELECT a.doc_id AS left_id, b.doc_id AS right_id,
+        |    a.prefix AS pa, b.prefix AS pb
+        |  FROM sigs a JOIN sigs b
+        |  ON a.doc_id % 2 = 0 AND b.doc_id % 2 = 1 AND (${bandEqSql(4, 4)}))
+        |SELECT DISTINCT left_id, right_id, levenshtein(pa, pb)::INT AS dist
+        |FROM cand WHERE levenshtein(pa, pb) <= 8""".stripMargin),
 
     // §2.2/60 — calendar extraction and grouping
     "q_date_parts" -> QueryDef(
@@ -2340,16 +2329,16 @@ object Queries {
           month(col("o_orderdate")).as("mo"),
           dayofweek(col("o_orderdate")).as("dow"))
         .agg(count(lit(1)).as("cnt"), sum("o_totalprice").as("total")),
-      Some("SELECT year(o_orderdate)::INT AS yr, month(o_orderdate)::INT AS mo, " +
+      "SELECT year(o_orderdate)::INT AS yr, month(o_orderdate)::INT AS mo, " +
         "(dayofweek(o_orderdate) + 1)::INT AS dow, count(*) AS cnt, " +
-        "sum(o_totalprice) AS total FROM orders GROUP BY 1, 2, 3")),
+        "sum(o_totalprice) AS total FROM orders GROUP BY 1, 2, 3"),
 
     // §2.2/64 — ordered string aggregation
     "q_string_agg" -> QueryDef(
       (s, d) => ds(s, d, "nation").toDF.groupBy("n_regionkey")
         .agg(concat_ws(",", sort_array(collect_list("n_name"))).as("nations")),
-      Some("SELECT n_regionkey, string_agg(n_name, ',' ORDER BY n_name) AS nations " +
-        "FROM nation GROUP BY n_regionkey")),
+      "SELECT n_regionkey, string_agg(n_name, ',' ORDER BY n_name) AS nations " +
+        "FROM nation GROUP BY n_regionkey"),
 
     // §2.2/65 — set operations (EXCEPT/INTERSECT)
     "q_setops" -> QueryDef(
@@ -2359,8 +2348,8 @@ object Queries {
           .filter(col("o_totalprice") > 300000.0).select(col("o_custkey").as("custkey"))
         buyers.except(bigSpenders) // Dataset.except == SQL EXCEPT (distinct)
       },
-      Some("SELECT o_custkey AS custkey FROM orders EXCEPT " +
-        "SELECT o_custkey FROM orders WHERE o_totalprice > 300000.0")),
+      "SELECT o_custkey AS custkey FROM orders EXCEPT " +
+        "SELECT o_custkey FROM orders WHERE o_totalprice > 300000.0"),
 
     // §2.2/66 — moving average over a bounded rows frame
     "q_moving_avg" -> QueryDef(
@@ -2376,24 +2365,18 @@ object Queries {
           .select(col("o_orderkey"), col("o_custkey"),
             avg("o_totalprice").over(w).as("avg_last4"))
       },
-      Some("SELECT o_orderkey, o_custkey, avg(o_totalprice) OVER (" +
+      "SELECT o_orderkey, o_custkey, avg(o_totalprice) OVER (" +
         "PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey " +
         "ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS avg_last4 FROM orders " +
-        "WHERE o_orderdate IS NOT NULL AND o_orderkey IS NOT NULL")),
+        "WHERE o_orderdate IS NOT NULL AND o_orderkey IS NOT NULL"),
 
     // §2.2/27 — sessionization (30-minute gap)
     "q_sessionize" -> QueryDef(
       (s, d) => Sessionize.sessions(ds(s, d, "events").toDF, "user_id", "ts", 1800),
-      Some("""SELECT user_id, session_id, count(*) AS n_events,
+      s"""SELECT user_id, session_id, count(*) AS n_events,
         |  min(ep) AS session_start, max(ep) AS session_end,
-        |  max(ep) - min(ep) AS duration_sec FROM (
-        |  SELECT user_id, ep, CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_id
-        |  FROM (SELECT user_id, ts, floor(epoch(ts))::BIGINT AS ep,
-        |    CASE WHEN lag(floor(epoch(ts))::BIGINT) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |      OR floor(epoch(ts))::BIGINT - lag(floor(epoch(ts))::BIGINT)
-        |         OVER (PARTITION BY user_id ORDER BY ts) > 1800
-        |    THEN 1 ELSE 0 END AS brk FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL) x) y
-        |GROUP BY user_id, session_id""".stripMargin)),
+        |  max(ep) - min(ep) AS duration_sec
+        |FROM (${sessionsSql()}) y GROUP BY user_id, session_id""".stripMargin),
 
     // §2.2/141 — ordered funnel conversion within sessions: per
     // session the FIRST occurrence of each step, counted when the
@@ -2404,13 +2387,7 @@ object Queries {
     "q_funnel" -> QueryDef(
       (s, d) => operators.Analytics.sessionFunnel(ds(s, d, "events").toDF,
         "user_id", "ts", "event_type", Seq("view", "click", "purchase"), 1800),
-      Some("""WITH sess AS (SELECT user_id, ep, event_type,
-        |    CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_id
-        |  FROM (SELECT user_id, ts, event_type, floor(epoch(ts))::BIGINT AS ep,
-        |    CASE WHEN lag(floor(epoch(ts))::BIGINT) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |      OR floor(epoch(ts))::BIGINT - lag(floor(epoch(ts))::BIGINT)
-        |         OVER (PARTITION BY user_id ORDER BY ts) > 1800
-        |    THEN 1 ELSE 0 END AS brk FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL) x),
+      s"""WITH sess AS (${sessionsSql()}),
         |m AS (SELECT user_id, session_id,
         |    min(CASE WHEN event_type = 'view' THEN ep END) AS t0,
         |    min(CASE WHEN event_type = 'click' THEN ep END) AS t1,
@@ -2423,7 +2400,7 @@ object Queries {
         |  FROM m)
         |SELECT 0::BIGINT AS step_no, 'view' AS step, n0 AS n_sessions, n0 / n0 AS conv_pct FROM c
         |UNION ALL SELECT 1, 'click', n1, n1 / n0 FROM c
-        |UNION ALL SELECT 2, 'purchase', n2, n2 / n0 FROM c""".stripMargin)),
+        |UNION ALL SELECT 2, 'purchase', n2, n2 / n0 FROM c""".stripMargin),
 
     // §2.2/142 — weekly cohort retention: users cohorted by the
     // epoch-week of their first event; distinct-active counts per
@@ -2433,7 +2410,7 @@ object Queries {
     "q_cohort_retention" -> QueryDef(
       (s, d) => operators.Analytics.cohortRetention(ds(s, d, "events").toDF,
         "user_id", "ts"),
-      Some("""WITH w AS (SELECT user_id AS u,
+      """WITH w AS (SELECT user_id AS u,
         |    floor(floor(epoch(ts))::BIGINT / 604800)::BIGINT AS wk FROM events),
         |c AS (SELECT u, min(wk) AS cohort_week FROM w GROUP BY 1),
         |a AS (SELECT cohort_week, wk - cohort_week AS week_offset,
@@ -2441,7 +2418,7 @@ object Queries {
         |  FROM w JOIN c USING (u) GROUP BY 1, 2),
         |s AS (SELECT cohort_week, count(*) AS cohort_size FROM c GROUP BY 1)
         |SELECT cohort_week, week_offset, n_users, n_users / cohort_size AS ret_pct
-        |FROM a JOIN s USING (cohort_week)""".stripMargin)),
+        |FROM a JOIN s USING (cohort_week)""".stripMargin),
 
     // §2.2/143 — TPC-H Q18 shape: large-volume orders (HAVING-filtered
     // fact aggregate joined back to orders + customer, top-k). The
@@ -2465,13 +2442,13 @@ object Queries {
           .orderBy(col("o_totalprice").desc, col("o_orderkey"))
           .limit(100)
       },
-      Some("""SELECT c_name, o_custkey, o_orderkey,
+      """SELECT c_name, o_custkey, o_orderkey,
         |  floor(epoch(o_orderdate))::BIGINT AS o_date, o_totalprice, sum_qty
         |FROM orders
         |JOIN (SELECT l_orderkey, sum(l_quantity) AS sum_qty FROM lineitem
         |      GROUP BY 1 HAVING sum(l_quantity) > 230) ON o_orderkey = l_orderkey
         |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin)),
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin),
 
     // §2.2/144 — next-event Markov transitions within sessions: pair
     // counts + P(to|from). Window is per-(user, session) event order
@@ -2480,14 +2457,7 @@ object Queries {
     "q_markov" -> QueryDef(
       (s, d) => operators.Analytics.transitionMatrix(ds(s, d, "events").toDF,
         "user_id", "ts", "event_type", 1800),
-      Some("""WITH sess AS (SELECT user_id, ts, event_id, event_type,
-        |    CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_id
-        |  FROM (SELECT user_id, ts, event_id, event_type,
-        |    CASE WHEN lag(floor(epoch(ts))::BIGINT) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |      OR floor(epoch(ts))::BIGINT - lag(floor(epoch(ts))::BIGINT)
-        |         OVER (PARTITION BY user_id ORDER BY ts) > 1800
-        |    THEN 1 ELSE 0 END AS brk FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |      AND event_id IS NOT NULL) x),
+      s"""WITH sess AS (${sessionsSql("event_id")}),
         |p AS (SELECT event_type AS from_type,
         |    lead(event_type) OVER (PARTITION BY user_id, session_id ORDER BY ts, event_id) AS to_type
         |  FROM sess),
@@ -2495,7 +2465,7 @@ object Queries {
         |  WHERE to_type IS NOT NULL GROUP BY 1, 2),
         |t AS (SELECT from_type, sum(n) AS tot FROM c GROUP BY 1)
         |SELECT from_type, to_type, n, n / tot AS p
-        |FROM c JOIN t USING (from_type)""".stripMargin)),
+        |FROM c JOIN t USING (from_type)""".stripMargin),
 
     // §2.2/145 — SCD-2 dimension history from change events: orders as
     // the per-customer change stream of o_orderpriority. One shuffle
@@ -2504,7 +2474,7 @@ object Queries {
     "q_scd2" -> QueryDef(
       (s, d) => operators.Scd2.history(ds(s, d, "orders").toDF,
         "o_custkey", "o_orderdate", "o_orderkey", Seq("o_orderpriority")),
-      Some("""WITH e AS (SELECT o_custkey, o_orderkey, o_orderpriority,
+      """WITH e AS (SELECT o_custkey, o_orderkey, o_orderpriority,
         |    floor(epoch(o_orderdate))::BIGINT AS ep FROM orders
         |  WHERE o_orderdate IS NOT NULL AND o_orderkey IS NOT NULL
         |    AND o_orderpriority IS NOT NULL),
@@ -2515,7 +2485,7 @@ object Queries {
         |  lead(ep) OVER (PARTITION BY o_custkey ORDER BY ep, o_orderkey) AS valid_to,
         |  lead(ep) OVER (PARTITION BY o_custkey ORDER BY ep, o_orderkey) IS NULL AS is_current,
         |  row_number() OVER (PARTITION BY o_custkey ORDER BY ep, o_orderkey)::BIGINT AS version
-        |FROM k""".stripMargin)),
+        |FROM k""".stripMargin),
 
     // §2.3/146 — robust per-source outlier counts on median/MAD from
     // the bottom-k hash sample; the 1.4826 consistency scaling applied
@@ -2524,7 +2494,7 @@ object Queries {
     "q_mad_outliers" -> QueryDef(
       (s, d) => Sketches.madOutliers(ds(s, d, "documents").toDF,
         "source", "doc_id", "n_chars", k = 64),
-      Some("""WITH h AS (SELECT source, doc_id, n_chars,
+      """WITH h AS (SELECT source, doc_id, n_chars,
         |    ('0x' || substring(md5(doc_id::varchar), 1, 13))::bigint AS hv
         |  FROM documents WHERE n_chars IS NOT NULL),
         |r1 AS (SELECT source, n_chars,
@@ -2544,7 +2514,7 @@ object Queries {
         |SELECT d.source, count(*) AS n_rows, min(d.med2) AS med2,
         |  min(m2.madd2) AS madd2,
         |  sum(CASE WHEN d.dev * 20000 > 44478 * m2.madd2 THEN 1 ELSE 0 END)::BIGINT AS n_outliers
-        |FROM d JOIN m2 USING (source) GROUP BY 1""".stripMargin)),
+        |FROM d JOIN m2 USING (source) GROUP BY 1""".stripMargin),
 
     // §2.3/147 — JL random projection 64 -> 16 with the md5-derived ±1
     // sign matrix (a plan literal — map-side arithmetic only); both
@@ -2553,14 +2523,13 @@ object Queries {
     "sim_randproj" -> QueryDef(
       (s, d) => operators.Similarity.randomProjection(
         ds(s, d, "embeddings").toDF, "vec_id", "embedding", 64, 16),
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        |  WHERE embedding IS NOT NULL AND len(embedding) >= 64
-        |    AND len(list_filter(embedding[1:64], x -> x IS NULL OR NOT isfinite(x))) = 0)
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+        |  WHERE ${finiteEmbeddingSql(Nil, Some(64))})
         |SELECT vec_id, r.j AS j,
         |  list_sum(list_transform(generate_series(1, 64), i -> v[i] *
         |    (CASE WHEN ('0x' || substring(md5((i-1)::varchar || ':' || r.j::varchar), 1, 1))::int % 2 = 0
         |     THEN 1.0 ELSE -1.0 END))) AS proj
-        |FROM e CROSS JOIN range(16) AS r(j)""".stripMargin)),
+        |FROM e CROSS JOIN range(16) AS r(j)""".stripMargin),
 
     // §2.3/148 — Efraimidis–Spirakis weighted sampling without
     // replacement: top-200 documents by ln(u)/w with u the exact
@@ -2571,11 +2540,11 @@ object Queries {
     "q_weighted_sample" -> QueryDef(
       (s, d) => Sampling.weightedSample(ds(s, d, "documents").toDF,
         "doc_id", "n_chars", k = 200),
-      Some("""SELECT doc_id, n_chars AS weight,
+      """SELECT doc_id, n_chars AS weight,
         |  (('0x' || substring(md5(doc_id::varchar), 1, 13))::bigint + 1) / 4503599627370496.0 AS u
         |FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0
         |ORDER BY ln((('0x' || substring(md5(doc_id::varchar), 1, 13))::bigint + 1) / 4503599627370496.0) / n_chars DESC, doc_id
-        |LIMIT 200""".stripMargin)),
+        |LIMIT 200""".stripMargin),
 
     // §2.2/149 — PageRank (5 power-iteration steps, damping 0.85,
     // dangling-mass redistribution) over the customer→supplier
@@ -2593,42 +2562,24 @@ object Queries {
           .select(col("o_custkey").as("src"), (col("l_suppkey") + 10000000L).as("dst"))
         operators.PageRank.run(edges, "src", "dst", iters = 5)
       },
-      Some(s"""WITH ed AS (SELECT DISTINCT o_custkey AS src, l_suppkey + 10000000 AS dst
+      s"""WITH ed AS (SELECT DISTINCT o_custkey AS src, l_suppkey + 10000000 AS dst
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
         |nodes AS (SELECT src AS id FROM ed UNION SELECT dst FROM ed),
         |nn AS (SELECT count(*)::DOUBLE AS n FROM nodes),
         |deg AS (SELECT src, count(*)::DOUBLE AS deg FROM ed GROUP BY 1),
         |p0 AS (SELECT id, 1.0 / nn.n AS pr FROM nodes CROSS JOIN nn),
         |${(0 until 5).map(pageRankIterSql).mkString(",\n")}
-        |SELECT id AS node_id, pr FROM p5""".stripMargin)),
+        |SELECT id AS node_id, pr FROM p5""".stripMargin),
 
     // §2.2/150 — triangle count of the part co-purchase graph by
     // degree-ordered orientation: wedge set bounded by arboricity
     // (out-degree O(√E) after orientation), each triangle counted
     // once at its minimum-order vertex. Exact integer output.
     "q_triangles" -> QueryDef(
-      (s, d) => {
-        val li = ds(s, d, "lineitem").toDF.select("l_orderkey", "l_partkey")
-        val e = li.as("x").join(li.as("y"),
-            col("x.l_orderkey") === col("y.l_orderkey") &&
-              col("x.l_partkey") < col("y.l_partkey"))
-          .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-        operators.Triangles.triangleCount(e, "src", "dst")
-      },
-      Some("""WITH e0 AS (SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM lineitem x JOIN lineitem y
-        |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
-        |deg AS (SELECT id, count(*) AS dg FROM
-        |  (SELECT a AS id FROM e0 UNION ALL SELECT b FROM e0) GROUP BY 1),
-        |o AS (SELECT
-        |    CASE WHEN da.dg*100000000 + a < db.dg*100000000 + b THEN a ELSE b END AS u,
-        |    CASE WHEN da.dg*100000000 + a < db.dg*100000000 + b THEN b ELSE a END AS v,
-        |    greatest(da.dg*100000000 + a, db.dg*100000000 + b) AS kv
-        |  FROM e0 JOIN deg da ON a = da.id JOIN deg db ON b = db.id),
-        |w AS (SELECT e1.v AS x, e2.v AS y FROM o e1
-        |  JOIN o e2 ON e1.u = e2.u AND e1.kv < e2.kv)
-        |SELECT count(*) AS n_triangles
-        |FROM w JOIN o ON w.x = o.u AND w.y = o.v""".stripMargin)),
+      (s, d) => operators.Triangles.triangleCount(coPurchaseEdges(s, d), "src", "dst"),
+      s"""WITH e0 AS (${coPurchaseSql()}),
+        |$orientedTrianglesSql
+        |SELECT count(*) AS n_triangles FROM tri""".stripMargin),
 
     // §2.2/151 — connected components of a general edge list: the
     // NATION-LOCAL supply graph (customer↔supplier edges where both
@@ -2653,7 +2604,7 @@ object Queries {
           .select(col("o_custkey").as("src"), (col("l_suppkey") + 10000000L).as("dst"))
         operators.ConnectedComponents.componentsFromEdges(e, "src", "dst")
       },
-      Some("""WITH RECURSIVE e AS (SELECT DISTINCT o_custkey AS a, l_suppkey + 10000000 AS b
+      """WITH RECURSIVE e AS (SELECT DISTINCT o_custkey AS a, l_suppkey + 10000000 AS b
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
         |  JOIN customer ON o_custkey = c_custkey
         |  JOIN supplier ON l_suppkey = s_suppkey
@@ -2661,7 +2612,7 @@ object Queries {
         |u AS (SELECT a AS s, b AS t FROM e UNION SELECT b, a FROM e),
         |r(n, c) AS (SELECT s, s FROM u
         |  UNION SELECT u.t, r.c FROM r JOIN u ON u.s = r.n WHERE r.c < u.t)
-        |SELECT n AS node_id, min(c) AS component FROM r GROUP BY n""".stripMargin)),
+        |SELECT n AS node_id, min(c) AS component FROM r GROUP BY n""".stripMargin),
 
     // §2.2/152 — multi-source BFS hop distance on the same graph
     // (sources = node ids ≡ 0 mod 100), frontier-delta iteration with
@@ -2669,27 +2620,18 @@ object Queries {
     // CTE replays the identical distance function.
     "q_bfs" -> QueryDef(
       (s, d) => {
-        val li = ds(s, d, "lineitem").toDF
-          .filter(col("l_quantity") >= 45)
-          .select("l_orderkey", "l_partkey")
-        val e = li.as("x").join(li.as("y"),
-            col("x.l_orderkey") === col("y.l_orderkey") &&
-              col("x.l_partkey") < col("y.l_partkey"))
-          .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
+        val e = coPurchaseEdges(s, d, Some(col("l_quantity") >= 45))
         val nodes = e.select(col("src").as("id"))
           .union(e.select(col("dst").as("id"))).distinct()
         operators.ShortestPaths.bfsHops(e, "src", "dst",
           nodes.filter(col("id") % 100 === 0), maxHops = 4)
       },
-      Some("""WITH RECURSIVE e AS (SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM lineitem x JOIN lineitem y
-        |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
-        |  WHERE x.l_quantity >= 45 AND y.l_quantity >= 45),
+      s"""WITH RECURSIVE e AS (${coPurchaseSql(Some("l_quantity >= 45"))}),
         |u AS (SELECT a AS s, b AS t FROM e UNION SELECT b, a FROM e),
         |src AS (SELECT DISTINCT s FROM u WHERE s % 100 = 0),
         |r(n, d) AS (SELECT s, 0 FROM src
         |  UNION SELECT u.t, r.d + 1 FROM r JOIN u ON u.s = r.n WHERE r.d < 4)
-        |SELECT n AS node_id, min(d) AS dist FROM r GROUP BY n""".stripMargin)),
+        |SELECT n AS node_id, min(d) AS dist FROM r GROUP BY n""".stripMargin),
 
     // §2.3/155 — perceptual-hash image near-dup: REAL per-partition
     // decode (PNG via javax.imageio, BMP via the hand parser) → 42-bit
@@ -2709,7 +2651,7 @@ object Queries {
           .select(col("doc_id").as("id"), col("dhash").as("hash"))
         Dedup.hammingPairs(hashes, bits = 42, maxHamming = 2)
       },
-      Some("""WITH img AS (SELECT doc_id FROM documents
+      """WITH img AS (SELECT doc_id FROM documents
         |    WHERE doc_id % 3 = 0 AND doc_id % 9 IN (0, 6)),
         |px AS (SELECT doc_id, x, y,
         |    ((((doc_id*31 + x*7 + y*13) % 256) + 256) % 256
@@ -2725,7 +2667,7 @@ object Queries {
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |  bit_count(xor(a.hash, b.hash))::INTEGER AS hamming
         |FROM h a JOIN h b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.hash, b.hash)) <= 2""".stripMargin)),
+        |WHERE bit_count(xor(a.hash, b.hash)) <= 2""".stripMargin),
 
     // §2.3/162 — sampled-median rollup: per-(source, ingest-shard)
     // bottom-k samples merged to per-source medians without rescanning
@@ -2735,7 +2677,7 @@ object Queries {
     "q_median_rollup" -> QueryDef(
       (s, d) => Sketches.sampledMedianReaggregate(ds(s, d, "documents").toDF,
         "source", pmod(col("doc_id"), lit(16)), "doc_id", "n_chars", k = 64),
-      Some("""WITH h AS (SELECT source, ((doc_id % 16) + 16) % 16 AS shard, n_chars,
+      """WITH h AS (SELECT source, ((doc_id % 16) + 16) % 16 AS shard, n_chars,
         |    ('0x' || substring(md5(doc_id::varchar), 1, 13))::bigint AS hv
         |  FROM documents WHERE n_chars IS NOT NULL AND source IS NOT NULL
         |    AND doc_id IS NOT NULL),
@@ -2750,7 +2692,7 @@ object Queries {
         |  FROM r2 WHERE rn <= 64 GROUP BY source)
         |SELECT s.source, nb.n_buckets, len(vals)::INT AS n_sample,
         |  vals[(len(vals)+1)//2] + vals[(len(vals)+2)//2] AS med2
-        |FROM s JOIN nb ON s.source = nb.source""".stripMargin)),
+        |FROM s JOIN nb ON s.source = nb.source""".stripMargin),
 
     // §2.3/160 — per-label embedding centroids in EXACT fixed point:
     // the pooling primitive beneath IVF training / SemDeDup / k-means,
@@ -2759,9 +2701,7 @@ object Queries {
     // the per-dimension sums are order-independent BIGINTs both
     // engines reproduce bit-for-bit where a float mean never is.
     "q_embed_centroids" -> QueryDef(
-      (s, d) => ds(s, d, "embeddings").toDF
-        .filter(col("embedding").isNotNull && col("label").isNotNull &&
-          graft.functions.VectorFunctions.allFinite(col("embedding")))
+      (s, d) => finiteEmbeddings(s, d, "embedding", "label")
         .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
         .groupBy("label", "pos")
         .agg(count(lit(1)).as("n"),
@@ -2769,13 +2709,12 @@ object Queries {
       // Zipped unnest covers every dimension the data actually has (no
       // hard-coded dim cap); pos::INT matches posexplode's INT and the
       // outer ::BIGINT undoes DuckDB's sum()->HUGEINT widening.
-      Some("""WITH e AS (SELECT label,
+      s"""WITH e AS (SELECT label,
         |    unnest(range(len(embedding)))::INT AS pos, unnest(embedding) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL AND label IS NOT NULL
-        |    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0)
+        |  FROM embeddings WHERE ${finiteEmbeddingSql(Seq("label"))})
         |SELECT label, pos, count(*) AS n,
         |  sum(round(v::DOUBLE * 1048576)::BIGINT)::BIGINT AS sum_q
-        |FROM e GROUP BY label, pos""".stripMargin)),
+        |FROM e GROUP BY label, pos""".stripMargin),
 
     // §2.3/153 — KMV sketch reaggregation: per-day sketches merged to
     // a per-type rollup without rescanning the fact table — the
@@ -2786,7 +2725,7 @@ object Queries {
     "q_kmv_reagg" -> QueryDef(
       (s, d) => Sketches.kmvReaggregate(ds(s, d, "events").toDF,
         Seq("event_type"), to_date(col("ts")), "user_id", k = 64),
-      Some("""WITH h AS (SELECT DISTINCT event_type, date_trunc('day', ts) AS dday,
+      """WITH h AS (SELECT DISTINCT event_type, date_trunc('day', ts) AS dday,
         |    ('0x' || substring(md5(user_id::VARCHAR), 1, 14))::bigint AS hv
         |  FROM events WHERE user_id IS NOT NULL AND event_type IS NOT NULL
         |    AND ts IS NOT NULL),
@@ -2801,7 +2740,7 @@ object Queries {
         |SELECT k2.event_type, nb.n_buckets,
         |  CASE WHEN cnt < 64 THEN cnt
         |    ELSE (63 * (1::BIGINT << 56)) // hk END AS est_distinct
-        |FROM k2 JOIN nb ON k2.event_type = nb.event_type""".stripMargin)),
+        |FROM k2 JOIN nb ON k2.event_type = nb.event_type""".stripMargin),
 
     // §2.3/154 — the published Gopher/MassiveText quality rule battery
     // (Rae et al. 2021 App. A.1.1); every threshold a cross-multiplied
@@ -2812,7 +2751,7 @@ object Queries {
           .map { case (n, c) => c.as(n) }
         ds(s, d, "documents").toDF.select((col("doc_id") +: sig): _*)
       },
-      Some("""WITH g AS (SELECT doc_id,
+      """WITH g AS (SELECT doc_id,
         |    regexp_split_to_array(trim(text), '\s+') AS toks,
         |    str_split(text, chr(10)) AS lines,
         |    len(regexp_extract_all(text, '#|\.\.\.')) AS n_symbols
@@ -2843,7 +2782,7 @@ object Queries {
         |    AND (10 * n_ell < 3 * n_lines)
         |    AND (5 * n_alpha_words >= 4 * n_words)
         |    AND (n_stop_hits >= 2)) AS gopher_pass
-        |FROM m""".stripMargin)),
+        |FROM m""".stripMargin),
 
     // §2.2/167 — market-basket association rules: support / confidence
     // / lift over order baskets. Pair generation is co-partitioned on
@@ -2852,7 +2791,7 @@ object Queries {
     "q_basket_rules" -> QueryDef(
       (s, d) => operators.Association.basketRules(
         ds(s, d, "lineitem").toDF, "l_orderkey", "l_partkey", minSupport = 3),
-      Some("""WITH items AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem
+      """WITH items AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem
         |  WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL),
         |pairs AS (SELECT a.item AS item_a, b.item AS item_b, count(*)::BIGINT AS pair_count
         |  FROM items a JOIN items b ON a.basket = b.basket AND a.item < b.item
@@ -2864,7 +2803,7 @@ object Queries {
         |  pair_count::DOUBLE / cb.cnt AS conf_b_to_a,
         |  pair_count::DOUBLE * tot.n_baskets / (ca.cnt * cb.cnt) AS lift
         |FROM pairs JOIN cnt ca ON item_a = ca.item
-        |JOIN cnt cb ON item_b = cb.item CROSS JOIN tot""".stripMargin)),
+        |JOIN cnt cb ON item_b = cb.item CROSS JOIN tot""".stripMargin),
 
     // §2.2/168 — per-node local clustering coefficient over the
     // thinned (quantity >= 35) co-purchase graph: triangle corners
@@ -2873,33 +2812,15 @@ object Queries {
     // exact integers. The oracle replays the orientation round for
     // round, like q_triangles.
     "q_clustering_coeff" -> QueryDef(
-      (s, d) => {
-        val li = ds(s, d, "lineitem").toDF
-          .filter(col("l_quantity") >= 35).select("l_orderkey", "l_partkey")
-        val e = li.as("x").join(li.as("y"),
-            col("x.l_orderkey") === col("y.l_orderkey") &&
-              col("x.l_partkey") < col("y.l_partkey"))
-          .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-        operators.Triangles.nodeClusteringCoefficient(e, "src", "dst")
-      },
-      Some("""WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= 35),
-        |e0 AS (SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM li x JOIN li y ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
-        |deg AS (SELECT id, count(*)::BIGINT AS dg FROM
-        |  (SELECT a AS id FROM e0 UNION ALL SELECT b FROM e0) GROUP BY 1),
-        |o AS (SELECT
-        |    CASE WHEN da.dg*100000000 + a < db.dg*100000000 + b THEN a ELSE b END AS u,
-        |    CASE WHEN da.dg*100000000 + a < db.dg*100000000 + b THEN b ELSE a END AS v,
-        |    greatest(da.dg*100000000 + a, db.dg*100000000 + b) AS kv
-        |  FROM e0 JOIN deg da ON a = da.id JOIN deg db ON b = db.id),
-        |w AS (SELECT e1.u AS u, e1.v AS x, e2.v AS y FROM o e1
-        |  JOIN o e2 ON e1.u = e2.u AND e1.kv < e2.kv),
-        |t AS (SELECT w.u, w.x, w.y FROM w JOIN o ON o.u = w.x AND o.v = w.y),
+      (s, d) => operators.Triangles.nodeClusteringCoefficient(
+        coPurchaseEdges(s, d, Some(col("l_quantity") >= 35)), "src", "dst"),
+      s"""WITH e0 AS (${coPurchaseSql(Some("l_quantity >= 35"))}),
+        |$orientedTrianglesSql,
         |pn AS (SELECT node_id, count(*)::BIGINT AS n_tri FROM
-        |  (SELECT unnest([u, x, y]) AS node_id FROM t) GROUP BY 1)
+        |  (SELECT unnest([u, x, y]) AS node_id FROM tri) GROUP BY 1)
         |SELECT d.id AS node_id, d.dg AS degree, COALESCE(pn.n_tri, 0)::BIGINT AS n_tri,
         |  2.0 * COALESCE(pn.n_tri, 0) / (d.dg * (d.dg - 1)) AS coeff
-        |FROM deg d LEFT JOIN pn ON d.id = pn.node_id WHERE d.dg >= 2""".stripMargin)),
+        |FROM deg d LEFT JOIN pn ON d.id = pn.node_id WHERE d.dg >= 2""".stripMargin),
 
     // §2.2/169 — k-core decomposition (k=4) by 4 fixed peel rounds
     // over the same thinned graph (fixpoint reached by round 3 at
@@ -2907,18 +2828,9 @@ object Queries {
     // round-for-round replay). MATERIALIZED CTEs keep the oracle
     // linear — the inlined chain was measured exponential in DuckDB.
     "q_kcore" -> QueryDef(
-      (s, d) => {
-        val li = ds(s, d, "lineitem").toDF
-          .filter(col("l_quantity") >= 35).select("l_orderkey", "l_partkey")
-        val e = li.as("x").join(li.as("y"),
-            col("x.l_orderkey") === col("y.l_orderkey") &&
-              col("x.l_partkey") < col("y.l_partkey"))
-          .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-        operators.KCore.kCore(e, "src", "dst", k = 4, rounds = 4)
-      },
-      Some("""WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= 35),
-        |e0 AS MATERIALIZED (SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM li x JOIN li y ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
+      (s, d) => operators.KCore.kCore(
+        coPurchaseEdges(s, d, Some(col("l_quantity") >= 35)), "src", "dst", k = 4, rounds = 4),
+      s"""WITH e0 AS MATERIALIZED (${coPurchaseSql(Some("l_quantity >= 35"))}),
         |d1 AS MATERIALIZED (SELECT id FROM (SELECT a AS id FROM e0 UNION ALL SELECT b FROM e0)
         |  GROUP BY 1 HAVING count(*) >= 4),
         |e1 AS MATERIALIZED (SELECT a, b FROM e0
@@ -2936,7 +2848,7 @@ object Queries {
         |e4 AS MATERIALIZED (SELECT a, b FROM e3
         |  WHERE a IN (SELECT id FROM d4) AND b IN (SELECT id FROM d4))
         |SELECT id AS node_id, count(*)::BIGINT AS core_degree FROM
-        |  (SELECT a AS id FROM e4 UNION ALL SELECT b FROM e4) GROUP BY 1""".stripMargin)),
+        |  (SELECT a AS id FROM e4 UNION ALL SELECT b FROM e4) GROUP BY 1""".stripMargin),
 
     // §2.2/170 — TPC-H Q21-shape: suppliers who alone were late on
     // multi-supplier 'F' orders (late := shipped > 60 days after
@@ -2965,7 +2877,7 @@ object Queries {
           .orderBy(col("numwait").desc, col("suppkey"))
           .limit(10)
       },
-      Some("""WITH late AS (SELECT DISTINCT l1.l_orderkey, l1.l_suppkey
+      """WITH late AS (SELECT DISTINCT l1.l_orderkey, l1.l_suppkey
         |  FROM lineitem l1 JOIN orders o
         |    ON o.o_orderkey = l1.l_orderkey AND o.o_orderstatus = 'F'
         |  WHERE l1.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
@@ -2974,7 +2886,7 @@ object Queries {
         |    WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
         |  AND NOT EXISTS (SELECT 1 FROM late l3
         |    WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey)
-        |GROUP BY 1 ORDER BY numwait DESC, suppkey LIMIT 10""".stripMargin)),
+        |GROUP BY 1 ORDER BY numwait DESC, suppkey LIMIT 10""".stripMargin),
 
     // §2.2/171 — TPC-H Q2-shape: per-part minimum-cost supplier via a
     // correlated scalar min against an aggregated subquery (the q17
@@ -2995,13 +2907,13 @@ object Queries {
           .select(col("p_partkey"), col("p_brand"),
             col("l_suppkey").as("suppkey"), col("cost_cents"))
       },
-      Some("""WITH costs AS (SELECT l_partkey, l_suppkey,
+      """WITH costs AS (SELECT l_partkey, l_suppkey,
         |    sum(round(l_extendedprice * 100)::BIGINT)::BIGINT AS cost_cents
         |  FROM lineitem GROUP BY 1, 2),
         |mins AS (SELECT l_partkey, min(cost_cents) AS min_cost FROM costs GROUP BY 1)
         |SELECT p.p_partkey, p.p_brand, c.l_suppkey AS suppkey, c.cost_cents
         |FROM costs c JOIN mins m ON c.l_partkey = m.l_partkey AND c.cost_cents = m.min_cost
-        |JOIN part p ON p.p_partkey = c.l_partkey WHERE p.p_size < 6""".stripMargin)),
+        |JOIN part p ON p.p_partkey = c.l_partkey WHERE p.p_size < 6""".stripMargin),
 
     // §2.3/172 — positional phrase search: the corpus's top-3 bigrams
     // as quoted-phrase queries answered by POSITIONAL posting
@@ -3010,7 +2922,7 @@ object Queries {
     "text_phrase" -> QueryDef(
       (s, d) => operators.Retrieval.phraseSearch(
         ds(s, d, "documents").toDF, "doc_id", "text", nPhrases = 3),
-      Some("""WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
+      """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
         |bg AS (SELECT w1, w2, count(*)::BIGINT AS cnt FROM (
         |    SELECT unnest(toks[1:len(toks)-1]) AS w1, unnest(toks[2:len(toks)]) AS w2 FROM t)
         |  GROUP BY 1, 2),
@@ -3019,7 +2931,7 @@ object Queries {
         |SELECT p.w1, p.w2, p1.doc_id, count(*)::BIGINT AS n_occ
         |FROM top p JOIN pos p1 ON p1.token = p.w1
         |JOIN pos p2 ON p2.doc_id = p1.doc_id AND p2.pos = p1.pos + 1 AND p2.token = p.w2
-        |GROUP BY 1, 2, 3""".stripMargin)),
+        |GROUP BY 1, 2, 3""".stripMargin),
 
     // §2.2/173 — hour-of-week seasonal-baseline anomaly tally: events
     // vs 5x their (dow, hr) bucket mean, all arithmetic exact integer
@@ -3029,13 +2941,13 @@ object Queries {
     "q_seasonal_anomaly" -> QueryDef(
       (s, d) => operators.TimeSeries.seasonalAnomalies(
         ds(s, d, "events").toDF, "ts", "value", factor = 5),
-      Some("""WITH e AS (SELECT (dayofweek(ts) + 1)::INT AS dow, hour(ts)::INT AS hr,
+      """WITH e AS (SELECT (dayofweek(ts) + 1)::INT AS dow, hour(ts)::INT AS hr,
         |    round(value * 100)::BIGINT AS cents FROM events WHERE value IS NOT NULL),
         |b AS (SELECT dow, hr, count(*)::BIGINT AS n_events, sum(cents)::BIGINT AS sum_cents
         |  FROM e GROUP BY 1, 2)
         |SELECT b.dow, b.hr, b.n_events, b.sum_cents,
         |  sum(CASE WHEN e.cents * b.n_events > 5 * b.sum_cents THEN 1 ELSE 0 END)::BIGINT AS n_anomalies
-        |FROM e JOIN b USING (dow, hr) GROUP BY 1, 2, 3, 4""".stripMargin)),
+        |FROM e JOIN b USING (dow, hr) GROUP BY 1, 2, 3, 4""".stripMargin),
 
     // §2.2/174 — item-item collaborative similarity ("customers also
     // bought"): per-item top-5 neighbors by co-occurrence cosine in
@@ -3045,7 +2957,7 @@ object Queries {
     "q_item_sim" -> QueryDef(
       (s, d) => operators.Association.itemSimilarity(
         ds(s, d, "lineitem").toDF, "l_orderkey", "l_partkey", minCooc = 3, topK = 5),
-      Some("""WITH items AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem
+      """WITH items AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem
         |  WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL),
         |pairs AS (SELECT a.item AS item_a, b.item AS item_b, count(*)::BIGINT AS cooc
         |  FROM items a JOIN items b ON a.basket = b.basket AND a.item < b.item
@@ -3059,7 +2971,7 @@ object Queries {
         |SELECT item, neighbor, cooc, count_item, count_neighbor, score_q, rank FROM (
         |  SELECT *, (row_number() OVER (PARTITION BY item
         |    ORDER BY score_q DESC, cooc DESC, neighbor))::INT AS rank FROM scored) t
-        |WHERE rank <= 5""".stripMargin)),
+        |WHERE rank <= 5""".stripMargin),
 
     // §2.2/175 — daily OHLC bars per event series: open/close by
     // min_by/max_by over a zero-padded (epoch_micros, event_id) STRING
@@ -3069,7 +2981,7 @@ object Queries {
     "q_ohlc" -> QueryDef(
       (s, d) => operators.TimeSeries.dailyOhlc(
         ds(s, d, "events").toDF, "event_type", "ts", "value"),
-      Some("""WITH e AS (SELECT event_type AS series,
+      """WITH e AS (SELECT event_type AS series,
         |    datediff('day', DATE '2024-01-01', ts::DATE)::INT AS day_no,
         |    round(value * 100)::BIGINT AS cents,
         |    printf('%020d|%010d', epoch_us(ts), event_id) AS ord
@@ -3077,7 +2989,7 @@ object Queries {
         |SELECT series, day_no, count(*)::BIGINT AS n_events,
         |  arg_min(cents, ord) AS open_cents, max(cents) AS high_cents,
         |  min(cents) AS low_cents, arg_max(cents, ord) AS close_cents
-        |FROM e GROUP BY 1, 2""".stripMargin)),
+        |FROM e GROUP BY 1, 2""".stripMargin),
 
     // §2.2/176 — per-group Shannon entropy (micro-nats, integer-scaled
     // by the text_surprisal floor(ln*2^20) pattern): lang-distribution
@@ -3086,13 +2998,13 @@ object Queries {
     "q_entropy" -> QueryDef(
       (s, d) => operators.Analytics.groupEntropy(
         ds(s, d, "documents").toDF, "source", "lang"),
-      Some("""WITH pv AS (SELECT source AS grp, lang AS v, count(*)::BIGINT AS n_v
+      """WITH pv AS (SELECT source AS grp, lang AS v, count(*)::BIGINT AS n_v
         |  FROM documents WHERE source IS NOT NULL AND lang IS NOT NULL GROUP BY 1, 2),
         |pg AS (SELECT grp, sum(n_v)::BIGINT AS n_rows, count(*)::BIGINT AS n_values FROM pv GROUP BY 1)
         |SELECT pv.grp AS source, min(pg.n_rows)::BIGINT AS n_rows, min(pg.n_values)::BIGINT AS n_values,
         |  (sum(pv.n_v * floor(ln(pg.n_rows::DOUBLE / pv.n_v) * 1048576)::BIGINT)::BIGINT
         |    // min(pg.n_rows))::BIGINT AS h_q
-        |FROM pv JOIN pg USING (grp) GROUP BY 1""".stripMargin)),
+        |FROM pv JOIN pg USING (grp) GROUP BY 1""".stripMargin),
 
     // §2.2/177 — first-touch attribution: gap-sessionized events,
     // session revenue (exact purchase cents) credited to the session's
@@ -3101,12 +3013,7 @@ object Queries {
     "q_attribution" -> QueryDef(
       (s, d) => operators.Analytics.firstTouchAttribution(
         ds(s, d, "events").toDF, "user_id", "ts", "event_type", "value"),
-      Some("""WITH s AS (SELECT user_id, event_type, value, event_id, ts,
-        |    CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_id
-        |  FROM (SELECT *, CASE WHEN lag(floor(epoch(ts))::BIGINT) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |      OR floor(epoch(ts))::BIGINT - lag(floor(epoch(ts))::BIGINT)
-        |        OVER (PARTITION BY user_id ORDER BY ts) > 1800
-        |    THEN 1 ELSE 0 END AS brk FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND event_id IS NOT NULL) x),
+      s"""WITH s AS (${sessionsSql("event_id")}),
         |sess AS (SELECT user_id, session_id,
         |    arg_min(event_type, printf('%020d|%010d', epoch_us(ts), event_id)) AS first_channel,
         |    sum(CASE WHEN event_type = 'purchase' AND value IS NOT NULL
@@ -3115,7 +3022,7 @@ object Queries {
         |SELECT first_channel, count(*)::BIGINT AS n_sessions,
         |  sum(CASE WHEN rev_cents > 0 THEN 1 ELSE 0 END)::BIGINT AS n_converted,
         |  sum(rev_cents)::BIGINT AS revenue_cents
-        |FROM sess GROUP BY 1""".stripMargin)),
+        |FROM sess GROUP BY 1""".stripMargin),
 
     // §2.2/178 — sketch-estimated join cardinality: |A ∩ B| from two
     // KMV sketches (bottom-k of the union, ρ/k scaling, all integer
@@ -3126,7 +3033,7 @@ object Queries {
       (s, d) => operators.Sketches.kmvJoinCardinality(
         ds(s, d, "orders").toDF, "o_custkey",
         ds(s, d, "customer").toDF.filter(col("c_acctbal") > 1000), "c_custkey"),
-      Some("""WITH ha AS (SELECT DISTINCT ('0x' || substring(md5(o_custkey::VARCHAR), 1, 14))::bigint AS hv
+      """WITH ha AS (SELECT DISTINCT ('0x' || substring(md5(o_custkey::VARCHAR), 1, 14))::bigint AS hv
         |  FROM orders WHERE o_custkey IS NOT NULL),
         |hb AS (SELECT DISTINCT ('0x' || substring(md5(c_custkey::VARCHAR), 1, 14))::bigint AS hv
         |  FROM customer WHERE c_custkey IS NOT NULL AND c_acctbal > 1000),
@@ -3147,7 +3054,7 @@ object Queries {
         |  ex.exact_intersect, na.n_a, nb.n_b,
         |  abs((CASE WHEN len(un) < 128 THEN rho ELSE rho * (9151314442816847872 // un[128]) // 128 END)
         |    - ex.exact_intersect) <= 0.35 * ex.exact_intersect + 8 AS ok
-        |FROM r, ex, na, nb""".stripMargin)),
+        |FROM r, ex, na, nb""".stripMargin),
 
     // §2.2/179 — TPC-H Q4 shape (order priority checking): orders with
     // at least one late lineitem, counted per priority — the canonical
@@ -3163,11 +3070,11 @@ object Queries {
             "left_semi")
           .groupBy("o_orderpriority").agg(count(lit(1)).as("n_orders"))
       },
-      Some("""SELECT o.o_orderpriority, count(*)::BIGINT AS n_orders
+      """SELECT o.o_orderpriority, count(*)::BIGINT AS n_orders
         |FROM orders o
         |WHERE EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey
         |  AND l.l_shipdate > o.o_orderdate + INTERVAL 30 DAY)
-        |GROUP BY 1""".stripMargin)),
+        |GROUP BY 1""".stripMargin),
 
     // §2.2/180 — TPC-H Q19 shape: disjunctive bracket predicates
     // (OR-of-ANDs over brand/size/quantity) with the part dimension
@@ -3189,12 +3096,12 @@ object Queries {
             coalesce(sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
               .cast("long")), lit(0L)).as("revenue_cents"))
       },
-      Some("""SELECT count(*)::BIGINT AS n_items,
+      """SELECT count(*)::BIGINT AS n_items,
         |  coalesce(sum(round(l_extendedprice * (1 - l_discount) * 100)::BIGINT), 0)::BIGINT AS revenue_cents
         |FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
         |WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 10 AND l.l_quantity BETWEEN 1 AND 20)
         |   OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 11 AND 25 AND l.l_quantity BETWEEN 10 AND 35)
-        |   OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 26 AND 50 AND l.l_quantity BETWEEN 25 AND 50)""".stripMargin)),
+        |   OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 26 AND 50 AND l.l_quantity BETWEEN 25 AND 50)""".stripMargin),
 
     // §2.2/181 — TPC-H Q22 shape: above-average-balance customers with
     // no recent orders, per nation. The global mean is never a float:
@@ -3216,7 +3123,7 @@ object Queries {
           .groupBy(col("c_nationkey").as("nationkey"))
           .agg(count(lit(1)).as("n_cust"), sum("bal_cents").as("total_bal_cents"))
       },
-      Some("""WITH bal AS (SELECT c_custkey, c_nationkey,
+      """WITH bal AS (SELECT c_custkey, c_nationkey,
         |    round(c_acctbal * 100)::BIGINT AS bal_cents FROM customer WHERE c_acctbal > 0),
         |tot AS (SELECT count(*)::BIGINT AS n, sum(bal_cents)::BIGINT AS s FROM bal)
         |SELECT b.c_nationkey AS nationkey, count(*)::BIGINT AS n_cust,
@@ -3225,7 +3132,7 @@ object Queries {
         |WHERE b.bal_cents * tot.n > tot.s
         |  AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = b.c_custkey
         |    AND o.o_orderdate >= TIMESTAMP '1999-01-01 00:00:00')
-        |GROUP BY 1""".stripMargin)),
+        |GROUP BY 1""".stripMargin),
 
     // §2.3/182 — Misra–Gries heavy hitters over the corpus token
     // stream: the mergeable k=48 summary reduces every partition to
@@ -3251,10 +3158,10 @@ object Queries {
           .agg(count(lit(1)).as("cnt"), min("n_tokens").as("n_tokens"))
           .filter(col("cnt") * 33 > col("n_tokens"))
       },
-      Some("""WITH tok AS (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS token FROM documents),
+      """WITH tok AS (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS token FROM documents),
         |tot AS (SELECT count(*)::BIGINT AS n FROM tok)
         |SELECT token, count(*)::BIGINT AS cnt, tot.n AS n_tokens
-        |FROM tok, tot GROUP BY 1, 3 HAVING count(*) * 33 > tot.n""".stripMargin)),
+        |FROM tok, tot GROUP BY 1, 3 HAVING count(*) * 33 > tot.n""".stripMargin),
 
     // §2.3/159 — BPE tokenizer ENCODE (Sennrich et al. 2016): replay a
     // fixed tokenizer merge list (the artifact a trained tokenizer
@@ -3280,7 +3187,7 @@ object Queries {
           .select(col("doc_id"),
             concat_ws(" ", col("bpe_tokens")).as("bpe_text"), col("n_bpe"))
       },
-      Some("""WITH RECURSIVE merges(rank, l, r) AS (
+      """WITH RECURSIVE merges(rank, l, r) AS (
         |  VALUES (1,'t','a'),(2,'ta','b'),(3,'l','e</w>'),(4,'tab','le</w>'),
         |    (5,'s','c'),(6,'sc','a'),(7,'sca','n</w>'),(8,'r','o'),(9,'ro','w</w>'),
         |    (10,'t','h'),(11,'th','e</w>')),
@@ -3310,7 +3217,7 @@ object Queries {
         |  GROUP BY i.doc_id)
         |SELECT d.doc_id, coalesce(a.bpe_text, '') AS bpe_text,
         |  coalesce(a.n_bpe, 0)::INT AS n_bpe
-        |FROM docs d LEFT JOIN agg a USING (doc_id)""".stripMargin)),
+        |FROM docs d LEFT JOIN agg a USING (doc_id)""".stripMargin),
 
     // §2.3/186 — MMR diversified re-ranking: greedy
     // relevance-minus-max-similarity selection over each query's
@@ -3320,13 +3227,12 @@ object Queries {
     // oracle's unrolled CTE ladder.
     "sim_mmr_rerank" -> QueryDef(
       (s, d) => {
-        val emb = ds(s, d, "embeddings").toDF
-          .filter(col("embedding").isNotNull && graft.functions.VectorFunctions.allFinite(col("embedding")))
+        val emb = finiteEmbeddings(s, d, "embedding")
         Similarity.mmrRerank(emb, emb.filter(col("vec_id") < 5),
           "vec_id", "embedding", shortlist = 20, k = 5)
       },
-      Some("""        |WITH meb AS (SELECT vec_id, embedding FROM embeddings
-        |  WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0),
+      s"""        |WITH meb AS (SELECT vec_id, embedding FROM embeddings
+        |  WHERE ${finiteEmbeddingSql()}),
         |q AS (SELECT vec_id AS qid,
         |    list_transform(embedding, v -> round(v::DOUBLE * 1048576)::BIGINT) AS qv
         |  FROM meb WHERE vec_id < 5),
@@ -3367,7 +3273,7 @@ object Queries {
         |final AS (SELECT qid, unnest(picks) AS item_id,
         |    unnest(range(1, len(picks) + 1))::INT AS mmr_rank FROM s5)
         |SELECT f.qid AS query_id, f.mmr_rank, f.item_id, r.rel
-        |FROM final f JOIN rels r ON r.qid = f.qid AND r.id = f.item_id""".stripMargin)),
+        |FROM final f JOIN rels r ON r.qid = f.qid AND r.id = f.item_id""".stripMargin),
 
     // §2.2/187 — top navigation paths: sessionized first-3 event-type
     // sequences counted by frequency — the free-form complement of the
@@ -3376,18 +3282,13 @@ object Queries {
     "q_top_paths" -> QueryDef(
       (s, d) => operators.Analytics.topPaths(
         ds(s, d, "events").toDF, "user_id", "ts", "event_type"),
-      Some("""WITH s AS (SELECT user_id, event_type, event_id, ts,
-        |    CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_id
-        |  FROM (SELECT *, CASE WHEN lag(floor(epoch(ts))::BIGINT) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |      OR floor(epoch(ts))::BIGINT - lag(floor(epoch(ts))::BIGINT)
-        |        OVER (PARTITION BY user_id ORDER BY ts) > 1800
-        |    THEN 1 ELSE 0 END AS brk FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND event_id IS NOT NULL AND event_type IS NOT NULL) x),
+      s"""WITH s AS (${sessionsSql("event_id", "event_type")}),
         |paths AS (SELECT user_id, session_id,
         |    array_to_string(list_slice(list(event_type
         |      ORDER BY printf('%020d|%010d', epoch_us(ts), event_id)), 1, 3), '>') AS path
         |  FROM s GROUP BY 1, 2)
         |SELECT path, count(*)::BIGINT AS n_sessions FROM paths GROUP BY 1
-        |ORDER BY n_sessions DESC, path LIMIT 10""".stripMargin)),
+        |ORDER BY n_sessions DESC, path LIMIT 10""".stripMargin),
 
     // §2.2/188 — TPC-H Q12 shape: shipping-delay bands x order
     // priority (the CASE-sum dual count); delay in whole days from the
@@ -3407,11 +3308,11 @@ object Queries {
             sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 0L)
               .otherwise(1L)).as("low_line_count"))
       },
-      Some("""SELECT CASE WHEN d < 30 THEN 'fast' WHEN d < 60 THEN 'mid' ELSE 'slow' END AS band,
+      """SELECT CASE WHEN d < 30 THEN 'fast' WHEN d < 60 THEN 'mid' ELSE 'slow' END AS band,
         |  sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END)::BIGINT AS high_line_count,
         |  sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 0 ELSE 1 END)::BIGINT AS low_line_count
         |FROM (SELECT o_orderpriority, datediff('day', o_orderdate, l_shipdate) AS d
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey) t GROUP BY 1""".stripMargin)),
+        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey) t GROUP BY 1""".stripMargin),
 
     // §2.2/189 — per-nation Gini coefficient of customer revenue:
     // rank-formula numerator in exact integer cents (group-partitioned
@@ -3428,7 +3329,7 @@ object Queries {
           .select(col("c_nationkey").as("nationkey"), col("n_units").as("n_cust"),
             col("sum_value").as("sum_cents"), col("gini_num"), col("gini"))
       },
-      Some("""WITH cr AS (SELECT c.c_nationkey AS nationkey, c.c_custkey,
+      """WITH cr AS (SELECT c.c_nationkey AS nationkey, c.c_custkey,
         |    sum(round(o.o_totalprice * 100)::BIGINT)::BIGINT AS rev
         |  FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
         |  WHERE c.c_nationkey IS NOT NULL AND o.o_totalprice IS NOT NULL
@@ -3439,7 +3340,7 @@ object Queries {
         |SELECT nationkey, max(n)::BIGINT AS n_cust, sum(rev)::BIGINT AS sum_cents,
         |  sum((2 * i - n - 1) * rev)::BIGINT AS gini_num,
         |  sum((2 * i - n - 1) * rev)::DOUBLE / (max(n) * sum(rev)) AS gini
-        |FROM rk GROUP BY 1""".stripMargin)),
+        |FROM rk GROUP BY 1""".stripMargin),
 
     // §2.2/202 — TPC-H Q6 shape (forecasting revenue change): the
     // pure-scan aggregate — one year, a discount band, small
@@ -3455,11 +3356,11 @@ object Queries {
         .agg(sum(round(col("l_extendedprice") * col("l_discount") * 10000)
           .cast("long")).as("revenue_c4"),
           count(lit(1)).as("n_lines")),
-      Some("""SELECT sum(round(l_extendedprice * l_discount * 10000)::BIGINT)::BIGINT AS revenue_c4,
+      """SELECT sum(round(l_extendedprice * l_discount * 10000)::BIGINT)::BIGINT AS revenue_c4,
         |  count(*)::BIGINT AS n_lines
         |FROM lineitem
         |WHERE year(l_shipdate) = 1996
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin)),
+        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin),
 
     // §2.2/203 — TPC-H Q11 shape (important stock): parts whose
     // observed stock value (Σ qty·round(retail·10) from lineitem — no
@@ -3483,11 +3384,11 @@ object Queries {
           .filter(col("value_cents") * 2000 > col("__total"))
           .select("l_partkey", "value_cents")
       },
-      Some("""WITH v AS (SELECT l_partkey,
+      """WITH v AS (SELECT l_partkey,
         |    sum(l_quantity::BIGINT * round(p_retailprice * 10)::BIGINT)::BIGINT AS value_cents
         |  FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY 1)
         |SELECT l_partkey, value_cents FROM v
-        |WHERE value_cents * 2000 > (SELECT sum(value_cents) FROM v)""".stripMargin)),
+        |WHERE value_cents * 2000 > (SELECT sum(value_cents) FROM v)""".stripMargin),
 
     // §2.2/204 — TPC-H Q20 shape (excess quantity): suppliers who
     // shipped MORE than half their all-time quantity of some widget
@@ -3515,14 +3416,14 @@ object Queries {
           .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
           .select("s_suppkey", "s_name")
       },
-      Some("""WITH sp AS (SELECT l_suppkey, l_partkey,
+      """WITH sp AS (SELECT l_suppkey, l_partkey,
         |    sum(CASE WHEN year(l_shipdate) = 1996 THEN l_quantity::BIGINT ELSE 0 END)::BIGINT AS q_year,
         |    sum(l_quantity::BIGINT)::BIGINT AS q_all
         |  FROM lineitem JOIN part ON l_partkey = p_partkey
         |  WHERE p_name LIKE '%widget%' GROUP BY 1, 2)
         |SELECT DISTINCT s_suppkey, s_name
         |FROM sp JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE q_year * 2 > q_all AND q_all >= 60""".stripMargin)),
+        |WHERE q_year * 2 > q_all AND q_all >= 60""".stripMargin),
 
     // §2.3/205 — cross-source overlap matrix: bottom-k Jaccard
     // estimates between every source pair's word-3-gram sets — "which
@@ -3534,7 +3435,7 @@ object Queries {
     "q_source_overlap" -> QueryDef(
       (s, d) => operators.Sketches.sourceOverlap(
         ds(s, d, "documents").toDF, "source", "text", n = 3, k = 128),
-      Some {
+      {
         val grams = """CASE WHEN len(toks) >= 3 THEN list_distinct(
           |      list_transform(generate_series(1, len(toks) - 2),
           |        i -> array_to_string(list_slice(toks, i, i + 2), ' ')))
@@ -3563,12 +3464,7 @@ object Queries {
     "q_bounce_rate" -> QueryDef(
       (s, d) => operators.Analytics.bounceRate(
         ds(s, d, "events").toDF, "user_id", "ts", "event_type"),
-      Some("""WITH s AS (SELECT user_id, event_type, event_id, ts,
-        |    CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_id
-        |  FROM (SELECT *, CASE WHEN lag(floor(epoch(ts))::BIGINT) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |      OR floor(epoch(ts))::BIGINT - lag(floor(epoch(ts))::BIGINT)
-        |        OVER (PARTITION BY user_id ORDER BY ts) > 1800
-        |    THEN 1 ELSE 0 END AS brk FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND event_id IS NOT NULL) x),
+      s"""WITH s AS (${sessionsSql("event_id")}),
         |per AS (SELECT user_id, session_id,
         |    arg_min(event_type, printf('%020d|%010d', epoch_us(ts), event_id)) AS entry_type,
         |    count(*)::BIGINT AS n_events
@@ -3576,7 +3472,7 @@ object Queries {
         |SELECT entry_type, count(*)::BIGINT AS n_sessions,
         |  sum(CASE WHEN n_events = 1 THEN 1 ELSE 0 END)::BIGINT AS n_bounces,
         |  sum(CASE WHEN n_events = 1 THEN 1 ELSE 0 END)::DOUBLE / count(*) AS bounce_pct
-        |FROM per GROUP BY 1""".stripMargin)),
+        |FROM per GROUP BY 1""".stripMargin),
 
     // §2.2/208 — conversion latency: seconds from a session's first
     // 'view' to its first STRICTLY LATER 'purchase' — count,
@@ -3585,12 +3481,7 @@ object Queries {
     "q_funnel_latency" -> QueryDef(
       (s, d) => operators.Analytics.funnelLatency(
         ds(s, d, "events").toDF, "user_id", "ts", "event_type", "view", "purchase"),
-      Some("""WITH s AS (SELECT user_id, event_type, ts, floor(epoch(ts))::BIGINT AS ep,
-        |    CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_id
-        |  FROM (SELECT *, CASE WHEN lag(floor(epoch(ts))::BIGINT) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |      OR floor(epoch(ts))::BIGINT - lag(floor(epoch(ts))::BIGINT)
-        |        OVER (PARTITION BY user_id ORDER BY ts) > 1800
-        |    THEN 1 ELSE 0 END AS brk FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL) x),
+      s"""WITH s AS (${sessionsSql()}),
         |m AS (SELECT user_id, session_id,
         |    min(CASE WHEN event_type = 'view' THEN ep END) AS t0,
         |    min(CASE WHEN event_type = 'purchase' THEN ep END) AS t2
@@ -3599,7 +3490,7 @@ object Queries {
         |SELECT count(*)::BIGINT AS n_converted,
         |  quantile_cont(latency_sec, 0.5) AS p50_sec,
         |  quantile_cont(latency_sec, 0.9) AS p90_sec,
-        |  max(latency_sec)::BIGINT AS max_sec FROM c""".stripMargin)),
+        |  max(latency_sec)::BIGINT AS max_sec FROM c""".stripMargin),
 
     // §2.2/193 — TPC-H Q7 shape (volume shipping): revenue flowing
     // between a nation PAIR in both directions by ship year — the
@@ -3626,7 +3517,7 @@ object Queries {
             col("c_nationkey").as("cust_nation"), col("l_year"))
           .agg(sum("cents").as("revenue_cents"))
       },
-      Some("""SELECT s_nationkey AS supp_nation, c_nationkey AS cust_nation,
+      """SELECT s_nationkey AS supp_nation, c_nationkey AS cust_nation,
         |  year(l_shipdate)::INT AS l_year,
         |  sum(round(l_extendedprice * (1 - l_discount) * 100)::BIGINT)::BIGINT AS revenue_cents
         |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
@@ -3634,7 +3525,7 @@ object Queries {
         |  JOIN customer ON o_custkey = c_custkey
         |WHERE (s_nationkey = 1 AND c_nationkey = 2)
         |   OR (s_nationkey = 2 AND c_nationkey = 1)
-        |GROUP BY 1, 2, 3""".stripMargin)),
+        |GROUP BY 1, 2, 3""".stripMargin),
 
     // §2.2/194 — TPC-H Q8 shape (national market share): one supplier
     // nation's share of revenue delivered to one region's customers
@@ -3663,7 +3554,7 @@ object Queries {
           .withColumn("mkt_share",
             col("nation_cents").cast("double") / col("total_cents"))
       },
-      Some("""SELECT year(o_orderdate)::INT AS o_year,
+      """SELECT year(o_orderdate)::INT AS o_year,
         |  sum(CASE WHEN s_nationkey = 3
         |    THEN round(l_extendedprice * (1 - l_discount) * 100)::BIGINT ELSE 0 END)::BIGINT AS nation_cents,
         |  sum(round(l_extendedprice * (1 - l_discount) * 100)::BIGINT)::BIGINT AS total_cents,
@@ -3675,7 +3566,7 @@ object Queries {
         |  JOIN customer ON o_custkey = c_custkey
         |  JOIN nation ON c_nationkey = n_nationkey
         |WHERE n_regionkey = 1
-        |GROUP BY 1""".stripMargin)),
+        |GROUP BY 1""".stripMargin),
 
     // §2.2/195 — TPC-H Q9 shape (product-type profit): profit by
     // supplier nation × order year over a part-name LIKE filter;
@@ -3701,14 +3592,14 @@ object Queries {
           .agg(sum(col("rev_cents") - col("qty") * col("cost_cents"))
             .as("profit_cents"))
       },
-      Some("""SELECT s_nationkey AS nation, year(o_orderdate)::INT AS o_year,
+      """SELECT s_nationkey AS nation, year(o_orderdate)::INT AS o_year,
         |  sum(round(l_extendedprice * (1 - l_discount) * 100)::BIGINT
         |      - l_quantity::BIGINT * round(p_retailprice * 10)::BIGINT)::BIGINT AS profit_cents
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |  JOIN supplier ON l_suppkey = s_suppkey
         |  JOIN orders ON l_orderkey = o_orderkey
         |WHERE p_name LIKE '%widget%'
-        |GROUP BY 1, 2""".stripMargin)),
+        |GROUP BY 1, 2""".stripMargin),
 
     // §2.2/196 — TPC-H Q10 shape (returned-item reporting): top 20
     // customers by revenue on RETURNED lineitems in one order-year —
@@ -3732,13 +3623,13 @@ object Queries {
           .orderBy(col("revenue_cents").desc, col("c_custkey"))
           .limit(20)
       },
-      Some("""SELECT c_custkey, c_name, c_nationkey,
+      """SELECT c_custkey, c_name, c_nationkey,
         |  sum(round(l_extendedprice * (1 - l_discount) * 100)::BIGINT)::BIGINT AS revenue_cents
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |  JOIN customer ON o_custkey = c_custkey
         |WHERE l_returnflag = 'R' AND year(o_orderdate) = 1997
         |GROUP BY 1, 2, 3
-        |ORDER BY revenue_cents DESC, c_custkey LIMIT 20""".stripMargin)),
+        |ORDER BY revenue_cents DESC, c_custkey LIMIT 20""".stripMargin),
 
     // §2.2/197 — TPC-H Q13 shape (customer order distribution): LEFT
     // join so zero-order customers COUNT — the outer-join double
@@ -3756,11 +3647,11 @@ object Queries {
           .groupBy("c_count")
           .agg(count(lit(1)).as("custdist"))
       },
-      Some("""WITH co AS (SELECT c_custkey, count(o_orderkey)::BIGINT AS c_count
+      """WITH co AS (SELECT c_custkey, count(o_orderkey)::BIGINT AS c_count
         |  FROM customer LEFT JOIN orders
         |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
         |  GROUP BY 1)
-        |SELECT c_count, count(*)::BIGINT AS custdist FROM co GROUP BY 1""".stripMargin)),
+        |SELECT c_count, count(*)::BIGINT AS custdist FROM co GROUP BY 1""".stripMargin),
 
     // §2.2/198 — TPC-H Q15 shape (top supplier): revenue per supplier
     // over one ship-year, return the supplier(s) achieving the MAX —
@@ -3781,12 +3672,12 @@ object Queries {
           .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
           .select(col("s_suppkey"), col("s_name"), col("total_cents"))
       },
-      Some("""WITH rev AS (SELECT l_suppkey,
+      """WITH rev AS (SELECT l_suppkey,
         |    sum(round(l_extendedprice * (1 - l_discount) * 100)::BIGINT)::BIGINT AS total_cents
         |  FROM lineitem WHERE year(l_shipdate) = 1996 GROUP BY 1)
         |SELECT s_suppkey, s_name, total_cents
         |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_cents = (SELECT max(total_cents) FROM rev)""".stripMargin)),
+        |WHERE total_cents = (SELECT max(total_cents) FROM rev)""".stripMargin),
 
     // §2.2/199 — TPC-H Q16 shape (supplier cardinality): distinct
     // suppliers able to supply each (brand, type, size) bucket,
@@ -3806,12 +3697,12 @@ object Queries {
           .groupBy("p_brand", "p_type", "p_size")
           .agg(count_distinct(col("l_suppkey")).as("supplier_cnt"))
       },
-      Some("""SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey)::BIGINT AS supplier_cnt
+      """SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey)::BIGINT AS supplier_cnt
         |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) ps
         |  JOIN part ON l_partkey = p_partkey
         |WHERE p_brand <> 'Brand#2'
         |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY 1, 2, 3""".stripMargin)),
+        |GROUP BY 1, 2, 3""".stripMargin),
 
     // §2.3/200 — corpus drift monitor: per-source KL divergence of the
     // source's token distribution from the whole corpus's, in integer
@@ -3821,7 +3712,7 @@ object Queries {
     "text_kl_drift" -> QueryDef(
       (s, d) => operators.Analytics.klDrift(
         ds(s, d, "documents").toDF, "source", "text"),
-      Some("""WITH tok AS (SELECT source AS grp, unnest(regexp_split_to_array(trim(text), '\s+')) AS w
+      """WITH tok AS (SELECT source AS grp, unnest(regexp_split_to_array(trim(text), '\s+')) AS w
         |  FROM documents WHERE source IS NOT NULL),
         |gt AS (SELECT grp, w, count(*)::BIGINT AS c_gw FROM tok WHERE length(w) > 0 GROUP BY 1, 2),
         |pt AS (SELECT w, sum(c_gw)::BIGINT AS c_w FROM gt GROUP BY 1),
@@ -3832,7 +3723,7 @@ object Queries {
         |  (sum(gt.c_gw * floor(ln((gt.c_gw * tot.t)::DOUBLE / (tg.t_g * pt.c_w)::DOUBLE) * 1048576)::BIGINT)::BIGINT
         |    // min(tg.t_g))::BIGINT AS kl_q
         |FROM gt JOIN pt USING (w) JOIN tg USING (grp) CROSS JOIN tot
-        |GROUP BY 1""".stripMargin)),
+        |GROUP BY 1""".stripMargin),
 
     // §2.2/191 — batch incremental view maintenance: a per-customer
     // revenue state built from the "yesterday" snapshot absorbs a CDC
@@ -3861,13 +3752,13 @@ object Queries {
             Seq("o_custkey"), "cents")
           .select(col("o_custkey"), col("sum_cents"), col("n_rows"))
       },
-      Some("""SELECT o_custkey,
+      """SELECT o_custkey,
         |  sum(coalesce(round(o_totalprice * 100)::BIGINT, 0))::BIGINT AS sum_cents,
         |  count(*)::BIGINT AS n_rows
         |FROM orders
         |WHERE (o_orderkey % 10 = 0 OR o_orderkey % 7 <> 0)
         |  AND o_custkey IS NOT NULL
-        |GROUP BY 1""".stripMargin)),
+        |GROUP BY 1""".stripMargin),
 
     // §2.2/219 — GENERAL two-sided join IVM: a materialized
     // MANY-TO-MANY join (customers ⋈ suppliers on nation — every
@@ -3901,12 +3792,12 @@ object Queries {
             "__op", "c_custkey", "s_suppkey", "nationkey")
           .select(col("nationkey"), col("c_custkey"), col("s_suppkey"))
       },
-      Some("""WITH r AS (SELECT c_custkey, c_nationkey AS nationkey FROM customer
+      """WITH r AS (SELECT c_custkey, c_nationkey AS nationkey FROM customer
         |  WHERE c_custkey % 5 = 1 AND ((c_custkey % 4 <> 0 AND c_custkey % 9 <> 0)
         |     OR (c_custkey % 4 = 0 AND c_custkey % 10 <> 0))),
         |s AS (SELECT s_suppkey, s_nationkey AS nationkey FROM supplier
         |  WHERE (s_suppkey % 3 <> 0 AND s_suppkey % 7 <> 0) OR s_suppkey % 3 = 0)
-        |SELECT nationkey, c_custkey, s_suppkey FROM r JOIN s USING (nationkey)""".stripMargin)),
+        |SELECT nationkey, c_custkey, s_suppkey FROM r JOIN s USING (nationkey)""".stripMargin),
 
     // §2.2/190 — TPC-H Q14 shape: monthly promo revenue share — the
     // dimension-attribute CASE-sum ratio; revenue in exact cents, the
@@ -3926,13 +3817,13 @@ object Queries {
           .withColumn("promo_share",
             lit(100.0) * col("promo_cents") / col("total_cents"))
       },
-      Some("""WITH m AS (SELECT year(l_shipdate)::INT AS yr, month(l_shipdate)::INT AS mo,
+      """WITH m AS (SELECT year(l_shipdate)::INT AS yr, month(l_shipdate)::INT AS mo,
         |    sum(CASE WHEN p_type = 'PROMO'
         |      THEN round(l_extendedprice * (1 - l_discount) * 100)::BIGINT ELSE 0 END)::BIGINT AS promo_cents,
         |    sum(round(l_extendedprice * (1 - l_discount) * 100)::BIGINT)::BIGINT AS total_cents
         |  FROM lineitem JOIN part ON p_partkey = l_partkey GROUP BY 1, 2)
         |SELECT yr, mo, promo_cents, total_cents,
-        |  100.0 * promo_cents / total_cents AS promo_share FROM m""".stripMargin)),
+        |  100.0 * promo_cents / total_cents AS promo_share FROM m""".stripMargin),
 
     // §2.2/209 — consecutive-day activity streaks (gaps-and-islands):
     // per user the runs of consecutive active days via the
@@ -3942,14 +3833,14 @@ object Queries {
     "q_streaks" -> QueryDef(
       (s, d) => operators.Analytics.activeDayStreaks(
         ds(s, d, "events").toDF, "user_id", "ts"),
-      Some("""WITH d AS (SELECT DISTINCT user_id, floor(epoch(ts) / 86400)::BIGINT AS day
+      """WITH d AS (SELECT DISTINCT user_id, floor(epoch(ts) / 86400)::BIGINT AS day
         |  FROM events WHERE user_id IS NOT NULL),
         |i AS (SELECT user_id, day,
         |    day - row_number() OVER (PARTITION BY user_id ORDER BY day) AS island FROM d),
         |r AS (SELECT user_id, island, count(*)::BIGINT AS len FROM i GROUP BY 1, 2)
         |SELECT user_id, count(*)::BIGINT AS n_streaks, sum(len)::BIGINT AS n_active_days,
         |  max(len)::BIGINT AS longest_streak
-        |FROM r GROUP BY 1""".stripMargin)),
+        |FROM r GROUP BY 1""".stripMargin),
 
     // §2.2/210 — CUSUM changepoint curve per event-type series: the
     // cumulative deviation from the series mean scaled to the exact
@@ -3959,7 +3850,7 @@ object Queries {
     "q_cusum" -> QueryDef(
       (s, d) => operators.TimeSeries.cusumChangepoint(
         ds(s, d, "events").toDF, "event_type", "ts"),
-      Some("""WITH d AS (SELECT event_type AS series, floor(epoch(ts) / 86400)::BIGINT AS day,
+      """WITH d AS (SELECT event_type AS series, floor(epoch(ts) / 86400)::BIGINT AS day,
         |    count(*)::BIGINT AS n_events FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL GROUP BY 1, 2),
         |c AS (SELECT series, day, n_events,
         |    row_number() OVER (PARTITION BY series ORDER BY day)::BIGINT AS t,
@@ -3971,7 +3862,7 @@ object Queries {
         |s AS (SELECT series, day, t, n_events, m * prefix - t * tot AS s_num FROM c)
         |SELECT series, day, t, n_events, s_num,
         |  (row_number() OVER (PARTITION BY series ORDER BY abs(s_num) DESC, day) = 1) AS is_change
-        |FROM s""".stripMargin)),
+        |FROM s""".stripMargin),
 
     // §2.2/211 — per-nation ABC (Pareto) revenue classification of
     // customers: cumulative-share classes decided by cross-multiplied
@@ -3986,7 +3877,7 @@ object Queries {
           ord.join(broadcast(cust), col("o_custkey") === col("c_custkey")),
           "c_nationkey", "c_custkey", "cents")
       },
-      Some("""WITH per AS (SELECT c_nationkey, c_custkey,
+      """WITH per AS (SELECT c_nationkey, c_custkey,
         |    sum(round(o_totalprice * 100)::BIGINT)::BIGINT AS v
         |  FROM orders JOIN customer ON o_custkey = c_custkey
         |  WHERE c_nationkey IS NOT NULL AND o_totalprice IS NOT NULL
@@ -3999,7 +3890,7 @@ object Queries {
         |SELECT c_nationkey, c_custkey, v AS value, cum AS cum_value,
         |  CASE WHEN cum * 100 <= tot * 80 THEN 'A'
         |       WHEN cum * 100 <= tot * 95 THEN 'B' ELSE 'C' END AS abc_class
-        |FROM c""".stripMargin)),
+        |FROM c""".stripMargin),
 
     // §2.2/212 — time-bounded funnel (windowFunnel): q_funnel's
     // strictly-increasing first-occurrence chain with every completed
@@ -4010,13 +3901,7 @@ object Queries {
       (s, d) => operators.Analytics.windowFunnel(ds(s, d, "events").toDF,
         "user_id", "ts", "event_type", Seq("view", "click", "purchase"),
         windowSeconds = 900, gapSeconds = 1800),
-      Some("""WITH sess AS (SELECT user_id, ep, event_type,
-        |    CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_id
-        |  FROM (SELECT user_id, ts, event_type, floor(epoch(ts))::BIGINT AS ep,
-        |    CASE WHEN lag(floor(epoch(ts))::BIGINT) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |      OR floor(epoch(ts))::BIGINT - lag(floor(epoch(ts))::BIGINT)
-        |         OVER (PARTITION BY user_id ORDER BY ts) > 1800
-        |    THEN 1 ELSE 0 END AS brk FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL) x),
+      s"""WITH sess AS (${sessionsSql()}),
         |m AS (SELECT user_id, session_id,
         |    min(CASE WHEN event_type = 'view' THEN ep END) AS t0,
         |    min(CASE WHEN event_type = 'click' THEN ep END) AS t1,
@@ -4031,31 +3916,23 @@ object Queries {
         |  FROM m)
         |SELECT 0::BIGINT AS step_no, 'view' AS step, n0 AS n_sessions, n0 / n0 AS conv_pct FROM c
         |UNION ALL SELECT 1, 'click', n1, n1 / n0 FROM c
-        |UNION ALL SELECT 2, 'purchase', n2, n2 / n0 FROM c""".stripMargin)),
+        |UNION ALL SELECT 2, 'purchase', n2, n2 / n0 FROM c""".stripMargin),
 
     // §2.2/213 — label-propagation communities on the part co-purchase
     // graph: 3 deterministic synchronous sweeps, per-node argmax over
     // neighbor-label counts via the packed cnt·10^8 − label key
     // (highest count, then lowest label) — replayed round-for-round.
     "q_communities" -> QueryDef(
-      (s, d) => {
-        val li = ds(s, d, "lineitem").toDF.select("l_orderkey", "l_partkey")
-        val e = li.as("x").join(li.as("y"),
-            col("x.l_orderkey") === col("y.l_orderkey") &&
-              col("x.l_partkey") < col("y.l_partkey"))
-          .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-        operators.LabelPropagation.communities(e, "src", "dst", rounds = 3)
-      },
-      Some {
+      (s, d) => operators.LabelPropagation.communities(
+        coPurchaseEdges(s, d), "src", "dst", rounds = 3),
+      {
         val rounds = (0 until 3).map { r =>
           s"""r$r AS (SELECT u.a, l.label, count(*)::BIGINT AS cnt
              |  FROM u JOIN l$r l ON u.b = l.id GROUP BY 1, 2),
              |l${r + 1} AS (SELECT a AS id,
              |  arg_max(label, cnt * 100000000 - label) AS label FROM r$r GROUP BY 1)""".stripMargin
         }.mkString(",\n")
-        s"""WITH e0 AS (SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-           |  FROM lineitem x JOIN lineitem y
-           |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
+        s"""WITH e0 AS (${coPurchaseSql()}),
            |u AS (SELECT a, b FROM e0 UNION SELECT b, a FROM e0),
            |l0 AS (SELECT DISTINCT a AS id, a AS label FROM u),
            |$rounds
@@ -4069,7 +3946,7 @@ object Queries {
     "text_keywords" -> QueryDef(
       (s, d) => operators.TfIdf.keywords(
         ds(s, d, "documents").toDF, "doc_id", "text", topK = 3),
-      Some("""WITH tok AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS token
+      """WITH tok AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS token
         |  FROM documents),
         |t AS (SELECT doc_id, token FROM tok WHERE length(token) > 0),
         |tf AS (SELECT doc_id, token, count(*)::BIGINT AS tf_cnt FROM t GROUP BY 1, 2),
@@ -4081,7 +3958,7 @@ object Queries {
         |r AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score_q DESC, token)::BIGINT AS kw_rank
         |  FROM sc)
         |SELECT doc_id, token, tf_cnt, df_cnt, score_q, kw_rank
-        |FROM r WHERE kw_rank <= 3""".stripMargin)),
+        |FROM r WHERE kw_rank <= 3""".stripMargin),
 
     // §2.2/215 — bigram PMI collocations: adjacent-pair mutual
     // information as two exact-long-product divisions multiplied in
@@ -4090,7 +3967,7 @@ object Queries {
     "text_pmi" -> QueryDef(
       (s, d) => operators.TfIdf.pmiCollocations(
         ds(s, d, "documents").toDF, "doc_id", "text", minCount = 5, topK = 20),
-      Some("""WITH tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
+      """WITH tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
         |  FROM documents WHERE text IS NOT NULL),
         |uni AS (SELECT unnest(toks) AS w FROM tok),
         |uc AS (SELECT w, count(*)::BIGINT AS c_w FROM uni WHERE length(w) > 0 GROUP BY 1),
@@ -4108,7 +3985,7 @@ object Queries {
         |  CROSS JOIN tu CROSS JOIN tb
         |  WHERE c_ab >= 5)
         |SELECT w1, w2, c_ab, c_a, c_b, pmi_q FROM s
-        |ORDER BY pmi_q DESC, w1, w2 LIMIT 20""".stripMargin)),
+        |ORDER BY pmi_q DESC, w1, w2 LIMIT 20""".stripMargin),
 
     // §2.2/216 — inclusion-dependency (FK) discovery across all 13
     // TPC-H key columns: containment of each column's KMV bottom-128
@@ -4139,7 +4016,7 @@ object Queries {
           ("nation.n_regionkey", nat, "n_regionkey"),
           ("region.r_regionkey", reg, "r_regionkey")), k = 128, tauPct = 95)
       },
-      Some {
+      {
         val branches = Seq(
           ("lineitem.l_orderkey", "lineitem", "l_orderkey"),
           ("lineitem.l_partkey", "lineitem", "l_partkey"),
@@ -4191,7 +4068,7 @@ object Queries {
           ord.join(broadcast(cust), col("o_custkey") === col("c_custkey")),
           "c_mktsegment", "cents", m = 100L)
       },
-      Some("""WITH f AS (SELECT c_mktsegment, round(o_totalprice * 100)::BIGINT AS cents
+      """WITH f AS (SELECT c_mktsegment, round(o_totalprice * 100)::BIGINT AS cents
         |  FROM orders JOIN customer ON o_custkey = c_custkey
         |  WHERE c_mktsegment IS NOT NULL AND o_totalprice IS NOT NULL),
         |per AS (SELECT c_mktsegment, count(*)::BIGINT AS n_rows,
@@ -4201,7 +4078,7 @@ object Queries {
         |  (sum_target * g_n + 100 * g_sum)::BIGINT AS enc_num,
         |  (g_n * (n_rows + 100))::BIGINT AS enc_den,
         |  (sum_target * g_n + 100 * g_sum)::DOUBLE / (g_n * (n_rows + 100)) AS enc
-        |FROM per CROSS JOIN g""".stripMargin)),
+        |FROM per CROSS JOIN g""".stripMargin),
 
     // §2.2/218 — exact two-sample KS drift per source vs the corpus on
     // document length: D as the integer deviation
@@ -4211,7 +4088,7 @@ object Queries {
     "q_ks_drift" -> QueryDef(
       (s, d) => operators.Analytics.ksDrift(
         ds(s, d, "documents").toDF, "source", "n_chars"),
-      Some("""WITH v AS (SELECT source AS grp, n_chars::BIGINT AS v FROM documents
+      """WITH v AS (SELECT source AS grp, n_chars::BIGINT AS v FROM documents
         |  WHERE source IS NOT NULL AND n_chars IS NOT NULL),
         |sc AS (SELECT grp, v, count(*)::BIGINT AS n_sv FROM v GROUP BY 1, 2),
         |g AS (SELECT grp, count(*)::BIGINT AS n_s FROM v GROUP BY 1),
@@ -4229,7 +4106,7 @@ object Queries {
         |r AS (SELECT *, row_number() OVER (PARTITION BY grp ORDER BY dev DESC, v) AS rk FROM dvt)
         |SELECT grp AS source, n_s AS n_group, n_g AS n_total, dev AS d_num,
         |  v AS at_value, dev::DOUBLE / (n_g * n_s) AS d
-        |FROM r WHERE rk = 1""".stripMargin)),
+        |FROM r WHERE rk = 1""".stripMargin),
 
     // §2.2/220 — link prediction: per node the top-5 predicted new
     // links over the (partkey % 5 = 0 subgraph's) co-purchase graph —
@@ -4240,20 +4117,10 @@ object Queries {
     // integer RA, the NOT EXISTS novelty filter, and the total
     // tie-break.
     "q_link_predict" -> QueryDef(
-      (s, d) => {
-        val li = ds(s, d, "lineitem").toDF
-          .filter(col("l_partkey") % 5 === 0)
-          .select("l_orderkey", "l_partkey")
-        val e = li.as("x").join(li.as("y"),
-            col("x.l_orderkey") === col("y.l_orderkey") &&
-              col("x.l_partkey") < col("y.l_partkey"))
-          .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-        operators.LinkPrediction.predictLinks(e, "src", "dst",
-          maxDegree = 64, minCommon = 2, topK = 5)
-      },
-      Some("""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem WHERE l_partkey % 5 = 0),
-        |e0 AS (SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b FROM li x JOIN li y
-        |  ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
+      (s, d) => operators.LinkPrediction.predictLinks(
+        coPurchaseEdges(s, d, Some(col("l_partkey") % 5 === 0)), "src", "dst",
+        maxDegree = 64, minCommon = 2, topK = 5),
+      s"""WITH e0 AS (${coPurchaseSql(Some("l_partkey % 5 = 0"))}),
         |u AS (SELECT a, b FROM e0 UNION SELECT b, a FROM e0),
         |deg AS (SELECT a AS z, count(*)::BIGINT AS d FROM u GROUP BY 1),
         |ctr AS (SELECT u.a AS z, u.b AS n, deg.d FROM u JOIN deg ON deg.z = u.a
@@ -4269,7 +4136,7 @@ object Queries {
         |SELECT node_id, candidate_id, cn AS common_neighbors, ra_q, rank FROM (
         |  SELECT *, row_number() OVER (PARTITION BY node_id
         |    ORDER BY cn DESC, ra_q DESC, candidate_id)::INT AS rank FROM dir) t
-        |WHERE rank <= 5""".stripMargin)),
+        |WHERE rank <= 5""".stripMargin),
 
     // §2.2/221 — malformed-record quarantine / dead-letter routing:
     // events.props parsed against a strict one-field schema, parsed k
@@ -4286,11 +4153,11 @@ object Queries {
           org.apache.spark.sql.types.StructField("k",
             org.apache.spark.sql.types.LongType))),
         Seq("k_out_of_range" -> col("k").between(0, 90))),
-      Some("""WITH p AS (SELECT json_extract_string(props, '$.k')::BIGINT AS k FROM events),
+      """WITH p AS (SELECT json_extract_string(props, '$.k')::BIGINT AS k FROM events),
         |c AS (SELECT CASE WHEN k IS NULL THEN 'parse_error'
         |  WHEN NOT (k BETWEEN 0 AND 90) THEN 'k_out_of_range'
         |  ELSE 'ok' END AS status FROM p)
-        |SELECT status, count(*)::BIGINT AS n FROM c GROUP BY 1""".stripMargin)),
+        |SELECT status, count(*)::BIGINT AS n FROM c GROUP BY 1""".stripMargin),
 
     // §2.2/222 — dedup yield report: the cluster-size histogram +
     // per-size droppable-document count — "what would dedup buy us"
@@ -4301,27 +4168,11 @@ object Queries {
     "dedup_yield" -> QueryDef(
       (s, d) => Dedup.yieldReport(ds(s, d, "documents").toDF,
         "doc_id", "text", bands = 2, rowsPerBand = 4, iterations = 3),
-      Some {
-        val mh = mhSigSql(8)
-        def band(b: Int) = (0 until 4).map(r => s"m${b * 4 + r}::varchar").mkString(" || '_' || ")
-        val iters = labelPropIters("band, sig")
-        s"""WITH toks AS (SELECT doc_id,
-           |  list_distinct(regexp_split_to_array(trim(text), '\\s+')) AS toks FROM documents),
-           |hp AS (SELECT doc_id, list_transform(toks, w ->
-           |  [('0x' || substring(md5(w), 1, 14))::bigint,
-           |   ('0x' || substring(md5(w), 15, 14))::bigint]) AS hs FROM toks),
-           |sigs AS (SELECT doc_id, $mh FROM hp),
-           |mem AS (SELECT doc_id AS id, 0 AS band, ${band(0)} AS sig FROM sigs
-           |  UNION ALL SELECT doc_id AS id, 1 AS band, ${band(1)} AS sig FROM sigs),
-           |l0 AS (SELECT DISTINCT id, id AS label FROM mem),
-           |$iters,
-           |cl AS (SELECT id AS doc_id, label AS cluster_id FROM l3
-           |  UNION ALL SELECT doc_id, doc_id FROM documents WHERE text IS NULL),
-           |sz AS (SELECT cluster_id, count(*)::BIGINT AS cluster_size FROM cl GROUP BY 1)
-           |SELECT cluster_size, count(*)::BIGINT AS n_clusters,
-           |  (sum(cluster_size) - count(*))::BIGINT AS docs_droppable
-           |FROM sz GROUP BY 1""".stripMargin
-      }),
+      s"""WITH $minhashClustersSql,
+        |sz AS (SELECT cluster_id, count(*)::BIGINT AS cluster_size FROM cl GROUP BY 1)
+        |SELECT cluster_size, count(*)::BIGINT AS n_clusters,
+        |  (sum(cluster_size) - count(*))::BIGINT AS docs_droppable
+        |FROM sz GROUP BY 1""".stripMargin),
 
     // §2.2/223 — recursive hierarchy rollup (BOM explosion): subtree
     // count + cents-sum for every node of the parent-pointer forest
@@ -4348,7 +4199,7 @@ object Queries {
       // arithmetic (r13 fuzz, sf0.01 seed): the operator chains edges,
       // so a missing intermediate part breaks the ancestor chain — an
       // arithmetic oracle silently bridged the gap and over-counted
-      Some("""WITH RECURSIVE e AS (SELECT p_partkey AS child,
+      """WITH RECURSIVE e AS (SELECT p_partkey AS child,
         |    p_partkey // 10 AS parent FROM part WHERE p_partkey // 10 >= 1),
         |anc(node, a) AS (
         |  SELECT child, parent FROM e
@@ -4358,7 +4209,7 @@ object Queries {
         |cws AS (SELECT node, a FROM anc UNION ALL SELECT node, node FROM m)
         |SELECT c.a AS p_partkey, count(*)::BIGINT AS subtree_n,
         |  sum(m.cents)::BIGINT AS subtree_sum
-        |FROM cws c JOIN m ON m.node = c.node GROUP BY 1""".stripMargin)),
+        |FROM cws c JOIN m ON m.node = c.node GROUP BY 1""".stripMargin),
 
     // §2.2/224 — functional-dependency discovery over orders: for
     // every ordered column pair A → B, do all A groups map to one B?
@@ -4371,7 +4222,7 @@ object Queries {
       (s, d) => operators.Discovery.functionalDependencies(
         ds(s, d, "orders").toDF,
         Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")),
-      Some {
+      {
         val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
         (for { a <- cols; b <- cols if b != a } yield
           s"""SELECT '$a' AS lhs, '$b' AS rhs, count(*)::BIGINT AS n_lhs,
@@ -4389,7 +4240,7 @@ object Queries {
     "q_chisq" -> QueryDef(
       (s, d) => operators.Stats.chiSquareCells(ds(s, d, "events").toDF,
         col("event_type"), col("user_id") % 4),
-      Some("""WITH c AS (SELECT event_type AS a, user_id % 4 AS b, count(*)::BIGINT AS o
+      """WITH c AS (SELECT event_type AS a, user_id % 4 AS b, count(*)::BIGINT AS o
         |  FROM events WHERE event_type IS NOT NULL AND user_id IS NOT NULL GROUP BY 1, 2),
         |rt AS (SELECT a, sum(o)::BIGINT AS rt FROM c GROUP BY 1),
         |ct AS (SELECT b, sum(o)::BIGINT AS ct FROM c GROUP BY 1),
@@ -4402,7 +4253,7 @@ object Queries {
         |  ((spine.o * n.n - spine.rt * spine.ct)::DOUBLE
         |    * (spine.o * n.n - spine.rt * spine.ct)::DOUBLE)
         |    / (n.n::DOUBLE * spine.rt::DOUBLE * spine.ct::DOUBLE) AS contrib
-        |FROM spine CROSS JOIN n""".stripMargin)),
+        |FROM spine CROSS JOIN n""".stripMargin),
 
     // §2.2/226 — exact ROC-AUC (Mann–Whitney U, tie-corrected): how
     // well does document length separate English docs? The U
@@ -4413,7 +4264,7 @@ object Queries {
     "q_auc" -> QueryDef(
       (s, d) => operators.Stats.rocAuc(ds(s, d, "documents").toDF,
         col("n_chars"), col("lang") === "en"),
-      Some("""WITH g AS (SELECT n_chars AS s,
+      """WITH g AS (SELECT n_chars AS s,
         |    sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)::BIGINT AS pos,
         |    sum(CASE WHEN lang = 'en' THEN 0 ELSE 1 END)::BIGINT AS neg
         |  FROM documents WHERE n_chars IS NOT NULL AND lang IS NOT NULL GROUP BY 1),
@@ -4422,7 +4273,7 @@ object Queries {
         |SELECT sum(pos)::BIGINT AS n_pos, sum(neg)::BIGINT AS n_neg,
         |  sum(pos * (2 * below + neg))::BIGINT AS u2,
         |  sum(pos * (2 * below + neg))::DOUBLE / (2 * sum(pos) * sum(neg))::DOUBLE AS auc
-        |FROM w""".stripMargin)),
+        |FROM w""".stripMargin),
 
     // §2.2/227 — peak session concurrency per epoch-day: the +1/−1
     // interval sweep over row 27's sessions, partitioned by day
@@ -4433,20 +4284,14 @@ object Queries {
     "q_peak_concurrency" -> QueryDef(
       (s, d) => operators.Analytics.peakConcurrency(ds(s, d, "events").toDF,
         "user_id", "ts", 1800),
-      Some("""WITH y AS (SELECT user_id, ep,
-        |    CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_id
-        |  FROM (SELECT user_id, ts, floor(epoch(ts))::BIGINT AS ep,
-        |    CASE WHEN lag(floor(epoch(ts))::BIGINT) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |      OR floor(epoch(ts))::BIGINT - lag(floor(epoch(ts))::BIGINT)
-        |         OVER (PARTITION BY user_id ORDER BY ts) > 1800
-        |    THEN 1 ELSE 0 END AS brk FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL) x),
+      s"""WITH y AS (${sessionsSql()}),
         |sess AS (SELECT min(ep) AS t0, max(ep) + 1 AS t1 FROM y GROUP BY user_id, session_id),
         |spans AS (SELECT t0, t1, unnest(generate_series(t0 // 86400, (t1 - 1) // 86400)) AS day FROM sess),
         |clip AS (SELECT day, greatest(t0, day * 86400) AS lo, least(t1, (day + 1) * 86400) AS hi FROM spans),
         |deltas AS (SELECT day, lo AS t, 1 AS d FROM clip UNION ALL SELECT day, hi, -1 FROM clip),
         |run AS (SELECT day, sum(d) OVER (PARTITION BY day ORDER BY t, d) AS run FROM deltas)
         |SELECT day, (count(*) // 2)::BIGINT AS n_sessions, max(run)::BIGINT AS peak_concurrent
-        |FROM run GROUP BY day""".stripMargin)),
+        |FROM run GROUP BY day""".stripMargin),
 
     // §2.2/228 — zero-clamped running balance per supplier: the
     // inventory recursion S_t = max(0, S_{t-1} + delta) via the
@@ -4466,7 +4311,7 @@ object Queries {
         operators.TimeSeries.clampedBalance(mv, "l_suppkey", "delta",
           Seq("ep", "l_orderkey", "l_linenumber"))
       },
-      Some("""WITH mv AS (SELECT l_suppkey AS sk,
+      """WITH mv AS (SELECT l_suppkey AS sk,
         |    (CASE WHEN l_returnflag = 'R' THEN -1 ELSE 1 END * round(l_quantity)::BIGINT) AS delta,
         |    floor(epoch(l_shipdate))::BIGINT AS ep, l_orderkey AS ok, l_linenumber AS ln
         |  FROM lineitem WHERE l_shipdate IS NOT NULL AND l_orderkey IS NOT NULL
@@ -4481,7 +4326,7 @@ object Queries {
         |  max(p - fl)::BIGINT AS peak_balance,
         |  (sum(delta) - least(0, min(p)))::BIGINT AS final_balance,
         |  (-least(0, min(p)))::BIGINT AS lost_units
-        |FROM w2 GROUP BY sk""".stripMargin)),
+        |FROM w2 GROUP BY sk""".stripMargin),
 
     // §2.2/229 — exact Pearson correlation matrix over four scaled
     // lineitem measures in ONE fact scan: every Σx/Σx²/Σxy is an
@@ -4494,7 +4339,7 @@ object Queries {
         "price_dd" -> round(col("l_extendedprice") / 10),
         "disc_c" -> round(col("l_discount") * 100),
         "tax_c" -> round(col("l_tax") * 100))),
-      Some {
+      {
         val cols = Seq("qty", "price_dd", "disc_c", "tax_c")
         val pairs = cols.combinations(2).map { case Seq(a, b) =>
           s"""SELECT '$a' AS col_a, '$b' AS col_b, n,
@@ -4525,7 +4370,7 @@ object Queries {
     "q_benford" -> QueryDef(
       (s, d) => operators.Stats.benfordDigits(ds(s, d, "orders").toDF,
         col("o_totalprice")),
-      Some("""WITH d AS (SELECT substring(v::VARCHAR, 1, 1)::BIGINT AS digit,
+      """WITH d AS (SELECT substring(v::VARCHAR, 1, 1)::BIGINT AS digit,
         |    count(*)::BIGINT AS n_d
         |  FROM (SELECT floor(o_totalprice)::BIGINT AS v FROM orders) WHERE v >= 1 GROUP BY 1),
         |t AS (SELECT sum(n_d)::BIGINT AS n FROM d),
@@ -4539,7 +4384,7 @@ object Queries {
         |    WHEN 2 THEN 176091 WHEN 3 THEN 124939 WHEN 4 THEN 96910 WHEN 5 THEN 79181
         |    WHEN 6 THEN 66947 WHEN 7 THEN 57992 WHEN 8 THEN 51153
         |    WHEN 9 THEN 45757 END)::BIGINT AS dev_micro
-        |FROM spine LEFT JOIN d ON spine.digit = d.digit""".stripMargin)),
+        |FROM spine LEFT JOIN d ON spine.digit = d.digit""".stripMargin),
 
     // §2.2/231 — rolling distinct actives (DAU + trailing-7-day WAU)
     // per epoch-day: COUNT(DISTINCT) OVER a sliding range rewritten as
@@ -4550,7 +4395,7 @@ object Queries {
     "q_rolling_actives" -> QueryDef(
       (s, d) => operators.Analytics.rollingActives(ds(s, d, "events").toDF,
         "user_id", "ts", 7),
-      Some("""WITH ud AS (SELECT DISTINCT user_id AS u,
+      """WITH ud AS (SELECT DISTINCT user_id AS u,
         |    floor(epoch(ts))::BIGINT // 86400 AS day FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM ud),
@@ -4562,7 +4407,7 @@ object Queries {
         |SELECT s.day AS day, coalesce(dau.dau, 0)::BIGINT AS dau,
         |  coalesce(rolling.rolling_actives, 0)::BIGINT AS rolling_actives
         |FROM spine s LEFT JOIN dau ON s.day = dau.day
-        |LEFT JOIN rolling ON s.day = rolling.day""".stripMargin)),
+        |LEFT JOIN rolling ON s.day = rolling.day""".stripMargin),
 
     // §2.2/232 — golden-record construction (MDM survivorship): per
     // near-dup cluster the field-level majority merge — most frequent
@@ -4573,28 +4418,14 @@ object Queries {
     "q_golden_record" -> QueryDef(
       (s, d) => Dedup.goldenRecord(ds(s, d, "documents").toDF,
         "doc_id", "text", Seq("lang", "source"), bands = 2, rowsPerBand = 4),
-      Some {
-        val mh = mhSigSql(8)
-        def band(b: Int) = (0 until 4).map(r => s"m${b * 4 + r}::varchar").mkString(" || '_' || ")
-        val iters = labelPropIters("band, sig")
+      {
         def vote(f: String) =
           s"""c_$f AS (SELECT cluster_id, $f, count(*) AS c FROM mem2
              |  WHERE $f IS NOT NULL GROUP BY 1, 2),
              |m_$f AS (SELECT cluster_id, max(c) AS m FROM c_$f GROUP BY 1),
              |p_$f AS (SELECT c.cluster_id, min(c.$f) AS $f FROM c_$f c
              |  JOIN m_$f USING (cluster_id) WHERE c.c = m_$f.m GROUP BY 1)""".stripMargin
-        s"""WITH toks AS (SELECT doc_id,
-           |  list_distinct(regexp_split_to_array(trim(text), '\\s+')) AS toks FROM documents),
-           |hp AS (SELECT doc_id, list_transform(toks, w ->
-           |  [('0x' || substring(md5(w), 1, 14))::bigint,
-           |   ('0x' || substring(md5(w), 15, 14))::bigint]) AS hs FROM toks),
-           |sigs AS (SELECT doc_id, $mh FROM hp),
-           |mem AS (SELECT doc_id AS id, 0 AS band, ${band(0)} AS sig FROM sigs
-           |  UNION ALL SELECT doc_id AS id, 1 AS band, ${band(1)} AS sig FROM sigs),
-           |l0 AS (SELECT DISTINCT id, id AS label FROM mem),
-           |$iters,
-           |cl AS (SELECT id AS doc_id, label AS cluster_id FROM l3
-           |  UNION ALL SELECT doc_id, doc_id FROM documents WHERE text IS NULL),
+        s"""WITH $minhashClustersSql,
            |mem2 AS (SELECT cl.cluster_id, d.lang, d.source
            |  FROM cl JOIN documents d USING (doc_id)),
            |base AS (SELECT cluster_id, count(*)::BIGINT AS n_members FROM mem2 GROUP BY 1),
@@ -4613,12 +4444,7 @@ object Queries {
     // bound is the contract the bounded recursive CTE replays.
     "q_sssp" -> QueryDef(
       (s, d) => {
-        val li = ds(s, d, "lineitem").toDF
-          .filter(col("l_quantity") >= 45)
-          .select("l_orderkey", "l_partkey")
-        val e = li.as("x").join(li.as("y"),
-            col("x.l_orderkey") === col("y.l_orderkey") &&
-              col("x.l_partkey") < col("y.l_partkey"))
+        val e = coPurchasePairs(s, d, Some(col("l_quantity") >= 45))
           .groupBy(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
           .agg(count(lit(1)).as("cnt"))
           .select(col("src"), col("dst"), expr("1000000L div cnt").as("w"))
@@ -4627,17 +4453,14 @@ object Queries {
         operators.ShortestPaths.weightedHops(e, "src", "dst", "w",
           nodes.filter(col("id") % 100 === 0), maxHops = 4)
       },
-      Some("""WITH RECURSIVE e AS (SELECT x.l_partkey AS a, y.l_partkey AS b,
-        |    count(*)::BIGINT AS cnt
-        |  FROM lineitem x JOIN lineitem y
-        |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
-        |  WHERE x.l_quantity >= 45 AND y.l_quantity >= 45 GROUP BY 1, 2),
+      s"""WITH RECURSIVE e AS (${coPurchaseSql(Some("l_quantity >= 45"), "x.l_partkey AS a, y.l_partkey AS b, count(*)::BIGINT AS cnt")}
+        |  GROUP BY 1, 2),
         |u AS (SELECT a AS s, b AS t, 1000000 // cnt AS w FROM e
         |  UNION ALL SELECT b, a, 1000000 // cnt FROM e),
         |src AS (SELECT DISTINCT s FROM u WHERE s % 100 = 0),
         |r(n, d, h) AS (SELECT s, 0::BIGINT, 0 FROM src
         |  UNION SELECT u.t, r.d + u.w, r.h + 1 FROM r JOIN u ON u.s = r.n WHERE r.h < 4)
-        |SELECT n AS node_id, min(d)::BIGINT AS dist FROM r GROUP BY n""".stripMargin)),
+        |SELECT n AS node_id, min(d)::BIGINT AS dist FROM r GROUP BY n""".stripMargin),
 
     // §2.2/234 — proximity search (the NEAR operator): both terms of
     // each characteristic-term pair within 5 positions, per document —
@@ -4649,7 +4472,7 @@ object Queries {
       (s, d) => operators.Retrieval.proximitySearch(
         ds(s, d, "documents").toDF, "doc_id", "text",
         nTerms = 4, window = 5, maxDfFrac = 0.9),
-      Some("""WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
+      """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
         |pos AS (SELECT doc_id, unnest(range(len(toks)))::INT AS pos, unnest(toks) AS token FROM t),
         |tf AS (SELECT token, doc_id, count(*)::BIGINT AS tf FROM pos GROUP BY 1, 2),
         |stats AS (SELECT token, sum(tf)::BIGINT AS cnt, count(*)::BIGINT AS df FROM tf GROUP BY 1),
@@ -4661,7 +4484,7 @@ object Queries {
         |JOIN pos b ON b.doc_id = a.doc_id
         |JOIN terms tb ON b.token = tb.token
         |WHERE a.token < b.token AND abs(a.pos - b.pos) <= 5
-        |GROUP BY 1, 2, 3""".stripMargin)),
+        |GROUP BY 1, 2, 3""".stripMargin),
 
     // §2.2/235 — per-supplier winsorized + trimmed robust price stats:
     // discrete-percentile bounds (k-th smallest MEMBER, never an
@@ -4671,7 +4494,7 @@ object Queries {
     "q_winsorized" -> QueryDef(
       (s, d) => operators.Stats.winsorizedStats(ds(s, d, "lineitem").toDF,
         col("l_suppkey"), round(col("l_extendedprice") * 100), 5, 95, 100),
-      Some("""WITH v AS (SELECT l_suppkey AS g, round(l_extendedprice * 100)::BIGINT AS v
+      """WITH v AS (SELECT l_suppkey AS g, round(l_extendedprice * 100)::BIGINT AS v
         |  FROM lineitem WHERE l_suppkey IS NOT NULL AND l_extendedprice IS NOT NULL),
         |t AS (SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v) AS rnk,
         |    count(*) OVER (PARTITION BY g)::BIGINT AS n FROM v),
@@ -4687,7 +4510,7 @@ object Queries {
         |  (trim_sum + (klo - 1) * lo + (n - khi) * hi)::BIGINT AS wins_sum,
         |  trim_sum::DOUBLE / trim_n::DOUBLE AS trim_mean,
         |  (trim_sum + (klo - 1) * lo + (n - khi) * hi)::DOUBLE / n::DOUBLE AS wins_mean
-        |FROM a""".stripMargin)),
+        |FROM a""".stripMargin),
 
     // §2.2/236 — URL canonicalization + collapse: crawl-prep
     // normalization (case, www, default port, fragment, utm_* params,
@@ -4713,7 +4536,7 @@ object Queries {
             countDistinct(col("url")).as("n_raw_forms"),
             min("doc_id").as("first_doc"))
       },
-      Some("""WITH u AS (SELECT doc_id,
+      """WITH u AS (SELECT doc_id,
         |    'HTTPS://WWW.Example' || (doc_id % 5)::VARCHAR || '.com:443/Docs/' || source
         |      || '/Item' || (doc_id % 40)::VARCHAR ||
         |    CASE doc_id % 3 WHEN 0 THEN '/?b=2&a=1&utm_source=feed'
@@ -4736,7 +4559,7 @@ object Queries {
         |      AS canonical_url FROM s5)
         |SELECT canonical_url, count(*)::BIGINT AS n_urls,
         |  count(DISTINCT url)::BIGINT AS n_raw_forms, min(doc_id)::BIGINT AS first_doc
-        |FROM c GROUP BY canonical_url""".stripMargin)),
+        |FROM c GROUP BY canonical_url""".stripMargin),
 
     // §2.2/238 — per-supplier OLS fit (price-in-tens ~ quantity): the
     // corr-matrix discipline per group — exact int64 moment sums from
@@ -4745,7 +4568,7 @@ object Queries {
     "q_ols" -> QueryDef(
       (s, d) => operators.Stats.olsPerGroup(ds(s, d, "lineitem").toDF,
         col("l_suppkey"), round(col("l_quantity")), round(col("l_extendedprice") / 10)),
-      Some("""WITH v AS (SELECT l_suppkey AS g, round(l_quantity)::BIGINT AS x,
+      """WITH v AS (SELECT l_suppkey AS g, round(l_quantity)::BIGINT AS x,
         |    round(l_extendedprice / 10)::BIGINT AS y
         |  FROM lineitem WHERE l_suppkey IS NOT NULL AND l_quantity IS NOT NULL
         |    AND l_extendedprice IS NOT NULL),
@@ -4762,7 +4585,7 @@ object Queries {
         |  CASE WHEN vx > 0 THEN (sum_y::DOUBLE - slope * sum_x::DOUBLE) / n::DOUBLE END
         |    AS intercept,
         |  CASE WHEN vx > 0 AND vy > 0 THEN (cov / vx) * (cov / vy) END AS r2
-        |FROM s""".stripMargin)),
+        |FROM s""".stripMargin),
 
     // §2.2/239 — calibration / reliability table of an integer quality
     // score vs a boolean label: equal-width bins assigned by pure
@@ -4771,7 +4594,7 @@ object Queries {
     "q_calibration" -> QueryDef(
       (s, d) => operators.Stats.calibrationBins(ds(s, d, "documents").toDF,
         col("n_chars"), col("lang") === "en", nBins = 10),
-      Some("""WITH v AS (SELECT n_chars::BIGINT AS s, (lang = 'en') AS pos
+      """WITH v AS (SELECT n_chars::BIGINT AS s, (lang = 'en') AS pos
         |  FROM documents WHERE n_chars IS NOT NULL AND lang IS NOT NULL),
         |b AS (SELECT min(s) AS mn, max(s) AS mx FROM v),
         |binned AS (SELECT least(9, (s - mn) * 10 // (mx - mn + 1)) AS bin, s, pos
@@ -4788,31 +4611,23 @@ object Queries {
         |  coalesce(a.sum_score, 0)::BIGINT AS sum_score,
         |  CASE WHEN coalesce(a.n, 0) > 0 THEN a.n_pos::DOUBLE / a.n::DOUBLE END AS pos_rate,
         |  CASE WHEN coalesce(a.n, 0) > 0 THEN a.sum_score::DOUBLE / a.n::DOUBLE END AS mean_score
-        |FROM spine LEFT JOIN a ON spine.bin = a.bin""".stripMargin)),
+        |FROM spine LEFT JOIN a ON spine.bin = a.bin""".stripMargin),
 
     // §2.2/240 — Newman modularity of row 213's label-propagation
     // partition over the part co-purchase graph: per community the
     // exact int64 numerator 4m·L_c − D_c², global Q one IEEE division
     // of exact integers — "was the clustering better than chance".
     "q_modularity" -> QueryDef(
-      (s, d) => {
-        val li = ds(s, d, "lineitem").toDF.select("l_orderkey", "l_partkey")
-        val e = li.as("x").join(li.as("y"),
-            col("x.l_orderkey") === col("y.l_orderkey") &&
-              col("x.l_partkey") < col("y.l_partkey"))
-          .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-        operators.LabelPropagation.modularity(e, "src", "dst", rounds = 3)
-      },
-      Some {
+      (s, d) => operators.LabelPropagation.modularity(
+        coPurchaseEdges(s, d), "src", "dst", rounds = 3),
+      {
         val rounds = (0 until 3).map { r =>
           s"""r$r AS (SELECT u.a, l.label, count(*)::BIGINT AS cnt
              |  FROM u JOIN l$r l ON u.b = l.id GROUP BY 1, 2),
              |l${r + 1} AS (SELECT a AS id,
              |  arg_max(label, cnt * 100000000 - label) AS label FROM r$r GROUP BY 1)""".stripMargin
         }.mkString(",\n")
-        s"""WITH e0 AS (SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-           |  FROM lineitem x JOIN lineitem y
-           |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
+        s"""WITH e0 AS (${coPurchaseSql()}),
            |u AS (SELECT a, b FROM e0 UNION SELECT b, a FROM e0),
            |l0 AS (SELECT DISTINCT a AS id, a AS label FROM u),
            |$rounds,
@@ -4841,21 +4656,15 @@ object Queries {
     "dedup_minhash_accuracy" -> QueryDef(
       (s, d) => Dedup.minhashAccuracy(ds(s, d, "documents").toDF,
         "doc_id", "text", bands = 2, rowsPerBand = 4),
-      Some {
-        val mh = mhSigSql(8)
+      {
         val matchSum = (0 until 8).map(i =>
           s"CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END").mkString(" + ")
         s"""WITH t AS (SELECT doc_id,
            |  list_distinct(regexp_split_to_array(trim(text), '\\s+')) AS toks FROM documents),
-           |hp AS (SELECT doc_id, list_transform(toks, w ->
-           |  [('0x' || substring(md5(w), 1, 14))::bigint,
-           |   ('0x' || substring(md5(w), 15, 14))::bigint]) AS hs FROM t),
-           |sigs AS (SELECT doc_id, $mh FROM hp),
+           |${minhashSigsSql("t")},
            |cand AS (SELECT a.doc_id AS da, b.doc_id AS db,
            |    ($matchSum)::BIGINT AS n_match
-           |  FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id AND (
-           |    (a.m0 = b.m0 AND a.m1 = b.m1 AND a.m2 = b.m2 AND a.m3 = b.m3) OR
-           |    (a.m4 = b.m4 AND a.m5 = b.m5 AND a.m6 = b.m6 AND a.m7 = b.m7))),
+           |  FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id AND (${bandEqSql(2, 4)})),
            |j AS (SELECT n_match,
            |    len(list_intersect(ta.toks, tb.toks)) AS inter,
            |    len(list_distinct(ta.toks || tb.toks)) AS un
@@ -4875,7 +4684,7 @@ object Queries {
       (s, d) => Dedup.lshTuningCurve(ds(s, d, "documents").toDF,
         "doc_id", "text", "source", num = 1, den = 2,
         grid = Seq((1, 8), (2, 4), (4, 2), (8, 1))),
-      Some("""WITH t AS (SELECT doc_id, source,
+      """WITH t AS (SELECT doc_id, source,
         |  list_distinct(regexp_split_to_array(trim(text), '\s+')) AS toks FROM documents)
         |, p AS (SELECT len(list_intersect(a.toks, b.toks))::BIGINT AS inter,
         |    len(list_distinct(a.toks || b.toks))::BIGINT AS un
@@ -4891,7 +4700,7 @@ object Queries {
         |  n_pairs::DOUBLE *
         |    (1.0 - pow(1.0 - pow((j_bucket::DOUBLE + 0.5) / 10.0, rr::DOUBLE), bb::DOUBLE))
         |    AS exp_caught
-        |FROM h CROSS JOIN g""".stripMargin)),
+        |FROM h CROSS JOIN g""".stripMargin),
 
     // §2.2/243 — per-query nDCG@10 of label-match retrieval over the
     // oracled brute-force ranking: DCG gains are integer micro
@@ -4899,23 +4708,11 @@ object Queries {
     // min(k, true same-label count), ndcg one IEEE division.
     "q_ndcg" -> QueryDef(
       (s, d) => {
-        val emb = ds(s, d, "embeddings").toDF
-          .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
-            graft.functions.VectorFunctions.allFinite(col("embedding")))
+        val emb = finiteEmbeddings(s, d, "vec_id", "embedding")
         Similarity.ndcgAtK(emb, emb.filter(col("vec_id") < 20),
           "vec_id", "embedding", "label", k = 10)
       },
-      Some("""WITH reb AS (SELECT vec_id, embedding, label FROM embeddings
-        |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-        |    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0),
-        |q AS (SELECT vec_id AS qid, embedding AS qv, label AS ql
-        |  FROM reb WHERE vec_id < 20 AND label IS NOT NULL),
-        |sc AS (SELECT qid, ql, e.vec_id AS nid, e.label AS nl,
-        |    list_cosine_similarity(qv::DOUBLE[], e.embedding::DOUBLE[]) AS c
-        |  FROM q JOIN reb e ON e.vec_id <> qid),
-        |r AS (SELECT qid, ql, nl,
-        |    row_number() OVER (PARTITION BY qid ORDER BY c DESC, nid) AS rank
-        |  FROM sc WHERE c IS NOT NULL),
+      s"""WITH $rankedNeighborsSql,
         |g(rank, gain) AS (VALUES (1, 1000000), (2, 630929), (3, 500000),
         |  (4, 430676), (5, 386852), (6, 356207), (7, 333333), (8, 315464),
         |  (9, 301029), (10, 289064)),
@@ -4931,7 +4728,7 @@ object Queries {
         |  d.dcg_micro, ic.cum::BIGINT AS idcg_micro,
         |  CASE WHEN ic.cum > 0 THEN d.dcg_micro::DOUBLE / ic.cum::DOUBLE END AS ndcg
         |FROM dcg d LEFT JOIN nr ON d.qid = nr.qid
-        |JOIN ic ON ic.rr = least(10, coalesce(nr.n_rel, 0))""".stripMargin)),
+        |JOIN ic ON ic.rr = least(10, coalesce(nr.n_rel, 0))""".stripMargin),
 
     // §2.2/244 — CUPED variance-reduced A/B means: user-level purchase
     // cents split into pre (even epoch-days) covariate X and post (odd
@@ -4950,7 +4747,7 @@ object Queries {
           sum(when(col("day") % 2 === 1, col("cents")).otherwise(0L)).as("y"))
         operators.Stats.cupedMeans(units, pmod(col("user_id"), lit(2L)), col("x"), col("y"))
       },
-      Some("""WITH pe AS (SELECT user_id, floor(epoch(ts))::BIGINT // 86400 AS day,
+      """WITH pe AS (SELECT user_id, floor(epoch(ts))::BIGINT // 86400 AS day,
         |    round(value * 100)::BIGINT AS cents
         |  FROM events WHERE event_type = 'purchase' AND user_id IS NOT NULL
         |    AND value IS NOT NULL AND ts IS NOT NULL),
@@ -4972,7 +4769,7 @@ object Queries {
         |  sum_y::DOUBLE / n::DOUBLE AS raw_mean,
         |  sum_y::DOUBLE / n::DOUBLE -
         |    theta * (sum_x::DOUBLE / n::DOUBLE - sxp::DOUBLE / np::DOUBLE) AS adj_mean
-        |FROM t""".stripMargin)),
+        |FROM t""".stripMargin),
 
     // §2.2/245 — Welch's unequal-variance t over user-level purchase
     // cents, arms = user_id parity: one row of exact per-arm moments
@@ -4988,7 +4785,7 @@ object Queries {
         // pmod: negative (sign-flipped) ids must not invent arm -1
         operators.Stats.welchTTest(units, pmod(col("user_id"), lit(2L)), col("y"))
       },
-      Some("""WITH u AS (SELECT user_id, ((user_id % 2) + 2) % 2 AS arm,
+      """WITH u AS (SELECT user_id, ((user_id % 2) + 2) % 2 AS arm,
         |    sum(round(value * 100)::BIGINT)::BIGINT AS y
         |  FROM events WHERE event_type = 'purchase' AND user_id IS NOT NULL
         |    AND value IS NOT NULL GROUP BY user_id),
@@ -5017,7 +4814,7 @@ object Queries {
         |  CASE WHEN se2 > 0 THEN mean_diff / sqrt(se2) END AS t_stat,
         |  CASE WHEN se2 > 0 THEN se2 * se2 /
         |    (v1 * v1 / (n1::DOUBLE - 1.0) + v0 * v0 / (n0::DOUBLE - 1.0)) END AS welch_df
-        |FROM w2""".stripMargin)),
+        |FROM w2""".stripMargin),
 
     // §2.2/246 — rendezvous-sharding fleet-growth report (8 → 9
     // shards): HRW argmax over md5 weights, per old shard the keys
@@ -5025,7 +4822,7 @@ object Queries {
     "q_rendezvous" -> QueryDef(
       (s, d) => operators.Sharding.rendezvousMovement(
         ds(s, d, "documents").toDF, "doc_id", k = 8),
-      Some("""WITH w AS (SELECT doc_id, s,
+      """WITH w AS (SELECT doc_id, s,
         |    ('0x' || substring(md5(doc_id::VARCHAR || '#' || s::VARCHAR), 1, 14))::BIGINT AS wt
         |  FROM documents CROSS JOIN range(9) AS t(s) WHERE doc_id IS NOT NULL),
         |before AS (SELECT doc_id, arg_max(s, wt) AS sb FROM w WHERE s < 8 GROUP BY doc_id),
@@ -5036,7 +4833,7 @@ object Queries {
         |  FROM before JOIN after USING (doc_id) GROUP BY sb)
         |SELECT sb AS shard_before, n_keys, n_moved, n_to_new,
         |  n_moved::DOUBLE / n_keys::DOUBLE AS moved_frac
-        |FROM g""".stripMargin)),
+        |FROM g""".stripMargin),
 
     // §2.2/247 — per-series calendar-lag autocorrelation (lag 1 vs 7
     // seasonality detector) over per-supplier daily quantity series:
@@ -5052,7 +4849,7 @@ object Queries {
           .agg(sum(round(col("l_quantity")).cast("long")).as("qty"))
         operators.TimeSeries.autocorrelation(ser, "g", "day", "qty", Seq(1, 7))
       },
-      Some("""WITH ser AS (SELECT l_suppkey AS g,
+      """WITH ser AS (SELECT l_suppkey AS g,
         |    floor(epoch(l_shipdate))::BIGINT // 86400 AS d,
         |    sum(round(l_quantity)::BIGINT)::BIGINT AS v
         |  FROM lineitem WHERE l_suppkey IS NOT NULL AND l_shipdate IS NOT NULL
@@ -5071,7 +4868,7 @@ object Queries {
         |       / (sqrt(n_pairs::DOUBLE * sum_xx::DOUBLE - sum_x::DOUBLE * sum_x::DOUBLE)
         |        * sqrt(n_pairs::DOUBLE * sum_yy::DOUBLE - sum_y::DOUBLE * sum_y::DOUBLE))
         |  END AS acf
-        |FROM m""".stripMargin)),
+        |FROM m""".stripMargin),
 
     // §2.2/248 — Soundex phonetic blocking over part-name first words
     // (the vowel-separator variant, spelled out as
@@ -5089,7 +4886,7 @@ object Queries {
           .groupBy("skey")
           .agg(count(lit(1)).as("n_parts"), countDistinct(col("w")).as("n_words"))
       },
-      Some("""WITH w AS (SELECT regexp_split_to_array(trim(p_name), '\s+')[1] AS w
+      """WITH w AS (SELECT regexp_split_to_array(trim(p_name), '\s+')[1] AS w
         |  FROM part WHERE p_name IS NOT NULL),
         |c1 AS (SELECT w, regexp_replace(upper(w), '[^A-Z]', '', 'g') AS letters FROM w),
         |c2 AS (SELECT w, letters, translate(letters,
@@ -5104,7 +4901,7 @@ object Queries {
         |    THEN substring(letters, 1, 1) || rpad(substring(rest, 1, 3), 3, '0') END AS skey
         |  FROM c4)
         |SELECT skey, count(*)::BIGINT AS n_parts, count(DISTINCT w)::BIGINT AS n_words
-        |FROM k WHERE skey IS NOT NULL GROUP BY skey""".stripMargin)),
+        |FROM k WHERE skey IS NOT NULL GROUP BY skey""".stripMargin),
 
     // §2.2/249 — feature hashing (the hashing trick): tokens into 64
     // signed buckets off ONE md5 per token (bucket = h mod 64, sign =
@@ -5112,14 +4909,14 @@ object Queries {
     "q_feature_hash" -> QueryDef(
       (s, d) => operators.FeaturePrep.featureHash(
         ds(s, d, "documents").toDF, "doc_id", "text", dim = 64),
-      Some("""WITH toks AS (SELECT doc_id,
+      """WITH toks AS (SELECT doc_id,
         |    unnest(regexp_split_to_array(trim(text), '\s+')) AS token
         |  FROM documents WHERE doc_id IS NOT NULL AND text IS NOT NULL),
         |t2 AS (SELECT doc_id, ('0x' || substring(md5(token), 1, 14))::BIGINT AS h
         |  FROM toks WHERE length(token) > 0)
         |SELECT doc_id, h % 64 AS bucket,
         |  sum(CASE WHEN (h // 64) % 2 = 0 THEN 1 ELSE -1 END)::BIGINT AS feat
-        |FROM t2 GROUP BY doc_id, h % 64""".stripMargin)),
+        |FROM t2 GROUP BY doc_id, h % 64""".stripMargin),
 
     // §2.2/250 — difference-in-differences over user-period purchase
     // cents (arm = user parity, post = odd epoch-days): the
@@ -5137,7 +4934,7 @@ object Queries {
           .agg(sum(col("cents")).as("y"))
         operators.Stats.diffInDiff(units, pmod(col("user_id"), lit(2L)), col("post"), col("y"))
       },
-      Some("""WITH pe AS (SELECT user_id, floor(epoch(ts))::BIGINT // 86400 AS day,
+      """WITH pe AS (SELECT user_id, floor(epoch(ts))::BIGINT // 86400 AS day,
         |    round(value * 100)::BIGINT AS cents
         |  FROM events WHERE event_type = 'purchase' AND user_id IS NOT NULL
         |    AND value IS NOT NULL AND ts IS NOT NULL),
@@ -5167,7 +4964,7 @@ object Queries {
         |  (sum_t_post::DOUBLE / n_t_post::DOUBLE - sum_t_pre::DOUBLE / n_t_pre::DOUBLE)
         |   - (sum_c_post::DOUBLE / n_c_post::DOUBLE - sum_c_pre::DOUBLE / n_c_pre::DOUBLE)
         |   AS did
-        |FROM piv""".stripMargin)),
+        |FROM piv""".stripMargin),
 
     // §2.2/251 — trend/residual decomposition by centered 7-day moving
     // average: RANGE frame on the day VALUE (calendar gaps shrink the
@@ -5183,7 +4980,7 @@ object Queries {
           .agg(sum(round(col("l_quantity")).cast("long")).as("qty"))
         operators.TimeSeries.trendDecompose(ser, "g", "day", "qty", radius = 3)
       },
-      Some("""WITH ser AS (SELECT l_suppkey AS g,
+      """WITH ser AS (SELECT l_suppkey AS g,
         |    floor(epoch(l_shipdate))::BIGINT // 86400 AS d,
         |    sum(round(l_quantity)::BIGINT)::BIGINT AS v
         |  FROM lineitem WHERE l_suppkey IS NOT NULL AND l_shipdate IS NOT NULL
@@ -5195,7 +4992,7 @@ object Queries {
         |    RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING))
         |SELECT g, d, v, wn, wsum, (wsum * 1000000 // wn)::BIGINT AS trend_micro,
         |  (v * 1000000 - wsum * 1000000 // wn)::BIGINT AS dev_micro
-        |FROM w""".stripMargin)),
+        |FROM w""".stripMargin),
 
     // §2.2/252 — per-dimension embedding health profile: exact 2^20
     // fixed-point moments per dimension (float→double widening and the
@@ -5204,13 +5001,11 @@ object Queries {
     // surface before they degrade retrieval.
     "q_embed_dim_stats" -> QueryDef(
       (s, d) => operators.Quantize.dimStats(
-        ds(s, d, "embeddings").toDF
-          .filter(col("embedding").isNotNull && graft.functions.VectorFunctions.allFinite(col("embedding"))),
+        finiteEmbeddings(s, d, "embedding"),
         "vec_id", "embedding"),
-      Some("""WITH ex AS (SELECT unnest(generate_series(1, len(embedding))) - 1 AS dim,
+      s"""WITH ex AS (SELECT unnest(generate_series(1, len(embedding))) - 1 AS dim,
         |    round(unnest(embedding)::DOUBLE * 1048576)::BIGINT AS q
-        |  FROM embeddings WHERE embedding IS NOT NULL
-        |    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0),
+        |  FROM embeddings WHERE ${finiteEmbeddingSql()}),
         |m AS (SELECT dim::BIGINT AS dim, count(*)::BIGINT AS n,
         |    sum(q)::BIGINT AS sum_q, sum(q * q)::BIGINT AS sumsq_q,
         |    min(q)::BIGINT AS min_q, max(q)::BIGINT AS max_q
@@ -5219,7 +5014,7 @@ object Queries {
         |  sum_q::DOUBLE / n::DOUBLE AS mean_q,
         |  CASE WHEN n > 1 THEN (n::DOUBLE * sumsq_q::DOUBLE - sum_q::DOUBLE * sum_q::DOUBLE)
         |    / (n::DOUBLE * (n::DOUBLE - 1.0)) END AS var_q
-        |FROM m""".stripMargin)),
+        |FROM m""".stripMargin),
 
     // §2.2/254 — event-burst dedup (bot double-fire / retry-storm
     // cleanup): per (user, type) events chaining closer than 5s form
@@ -5233,7 +5028,7 @@ object Queries {
           .agg(sum("n_in_burst").as("n_events"), count(lit(1)).as("n_kept"))
           .withColumn("n_dropped", col("n_events") - col("n_kept"))
       },
-      Some("""WITH e AS (SELECT user_id, event_type, ts, floor(epoch(ts))::BIGINT AS ep
+      """WITH e AS (SELECT user_id, event_type, ts, floor(epoch(ts))::BIGINT AS ep
         |  FROM events WHERE user_id IS NOT NULL AND event_type IS NOT NULL
         |    AND ts IS NOT NULL),
         |brk AS (SELECT user_id, event_type, ts, ep,
@@ -5249,7 +5044,7 @@ object Queries {
         |SELECT event_type, sum(n_in_burst)::BIGINT AS n_events,
         |  count(*)::BIGINT AS n_kept,
         |  (sum(n_in_burst) - count(*))::BIGINT AS n_dropped
-        |FROM b GROUP BY event_type""".stripMargin)),
+        |FROM b GROUP BY event_type""".stripMargin),
 
     // §2.2/255 — k-anonymity audit (k=5) over (nation, balance-bucket)
     // quasi-identifiers: every combination with its size, the at-risk
@@ -5259,7 +5054,7 @@ object Queries {
         ds(s, d, "customer").toDF.select(col("c_nationkey"),
           round(col("c_acctbal") / 100).cast("long").as("bal_100")),
         Seq("c_nationkey", "bal_100"), k = 5),
-      Some("""WITH q AS (SELECT c_nationkey, round(c_acctbal / 100)::BIGINT AS bal_100
+      """WITH q AS (SELECT c_nationkey, round(c_acctbal / 100)::BIGINT AS bal_100
         |  FROM customer),
         |combos AS (SELECT c_nationkey, bal_100, count(*)::BIGINT AS n
         |  FROM q GROUP BY 1, 2),
@@ -5267,7 +5062,7 @@ object Queries {
         |t AS (SELECT sum(CASE WHEN at_risk THEN 1 ELSE 0 END)::BIGINT AS combos_at_risk,
         |    sum(CASE WHEN at_risk THEN n ELSE 0 END)::BIGINT AS records_at_risk FROM c2)
         |SELECT c_nationkey, bal_100, n, at_risk, combos_at_risk, records_at_risk
-        |FROM c2 CROSS JOIN t""".stripMargin)),
+        |FROM c2 CROSS JOIN t""".stripMargin),
 
     // §2.2/256 — weight-of-evidence + information value per source
     // against the lang='en' label: Laplace half-counts as exact
@@ -5277,7 +5072,7 @@ object Queries {
         ds(s, d, "documents").toDF
           .select(col("source"), (col("lang") === "en").as("is_en")),
         "source", "is_en"),
-      Some("""WITH b AS (SELECT source AS cat, (lang = 'en') AS pos FROM documents
+      """WITH b AS (SELECT source AS cat, (lang = 'en') AS pos FROM documents
         |  WHERE source IS NOT NULL AND lang IS NOT NULL),
         |c AS (SELECT cat, sum(CASE WHEN pos THEN 1 ELSE 0 END)::BIGINT AS n_pos,
         |    sum(CASE WHEN pos THEN 0 ELSE 1 END)::BIGINT AS n_neg FROM b GROUP BY cat),
@@ -5290,7 +5085,7 @@ object Queries {
         |SELECT cat, n_pos, n_neg, woe_num, woe_den, woe,
         |  (pos2::DOUBLE / (2.0 * p_tot::DOUBLE) - neg2::DOUBLE / (2.0 * n_tot::DOUBLE))
         |    * woe AS iv_contrib
-        |FROM z""".stripMargin)),
+        |FROM z""".stripMargin),
 
     // §2.2/257 — language-ID confusion matrix: row 36's heuristic
     // prediction crossed with the declared label, per-declared totals
@@ -5308,25 +5103,13 @@ object Queries {
           .withColumn("rate", col("n").cast("double") / col("n_declared").cast("double"))
           .select("lang", "lang_pred", "n", "n_declared", "rate")
       },
-      Some("""WITH p AS (SELECT lang, CASE
-        |  WHEN len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) > 0 THEN 'zh'
-        |  WHEN len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |         t -> t IN ('the','and','of','to','a','in','is','it'))) >=
-        |       len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |         t -> t IN ('el','la','de','los','que','y')))
-        |   AND len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |         t -> t IN ('the','and','of','to','a','in','is','it'))) > 0 THEN 'en'
-        |  WHEN len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |         t -> t IN ('el','la','de','los','que','y'))) >
-        |       len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |         t -> t IN ('the','and','of','to','a','in','is','it'))) THEN 'es'
-        |  ELSE 'unknown' END AS lang_pred
+      s"""WITH p AS (SELECT lang, $langIdCaseSql AS lang_pred
         |  FROM documents WHERE lang IS NOT NULL),
         |cells AS (SELECT lang, lang_pred, count(*)::BIGINT AS n FROM p GROUP BY 1, 2),
         |tot AS (SELECT lang, sum(n)::BIGINT AS n_declared FROM cells GROUP BY lang)
         |SELECT cells.lang AS lang, lang_pred, n, n_declared,
         |  n::DOUBLE / n_declared::DOUBLE AS rate
-        |FROM cells JOIN tot ON cells.lang = tot.lang""".stripMargin)),
+        |FROM cells JOIN tot ON cells.lang = tot.lang""".stripMargin),
 
     // §2.2/258 — measured LSH recall per Jaccard decile: ground-truth
     // within-source pairs (J >= 0.5) vs the 2x4 banding's candidate
@@ -5335,30 +5118,22 @@ object Queries {
       (s, d) => Dedup.lshRecall(ds(s, d, "documents").toDF,
         "doc_id", "text", "source", num = 1, den = 2,
         bands = 2, rowsPerBand = 4),
-      Some {
-        val mh = mhSigSql(8)
-        s"""WITH t AS (SELECT doc_id, source,
-           |  list_distinct(regexp_split_to_array(trim(text), '\\s+')) AS toks FROM documents),
-           |truth AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           |    least(9, len(list_intersect(a.toks, b.toks)) * 10 //
-           |      len(list_distinct(a.toks || b.toks)))::BIGINT AS j_bucket
-           |  FROM t a JOIN t b ON a.source = b.source AND a.doc_id < b.doc_id
-           |  WHERE len(list_intersect(a.toks, b.toks)) * 2 >=
-           |        len(list_distinct(a.toks || b.toks)) * 1),
-           |hp AS (SELECT doc_id, list_transform(toks, w ->
-           |  [('0x' || substring(md5(w), 1, 14))::bigint,
-           |   ('0x' || substring(md5(w), 15, 14))::bigint]) AS hs FROM t),
-           |sigs AS (SELECT doc_id, $mh FROM hp),
-           |cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, 1::BIGINT AS c
-           |  FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id AND (
-           |    (a.m0 = b.m0 AND a.m1 = b.m1 AND a.m2 = b.m2 AND a.m3 = b.m3) OR
-           |    (a.m4 = b.m4 AND a.m5 = b.m5 AND a.m6 = b.m6 AND a.m7 = b.m7)))
-           |SELECT j_bucket, count(*)::BIGINT AS n_truth,
-           |  sum(coalesce(c, 0))::BIGINT AS n_caught,
-           |  sum(coalesce(c, 0))::DOUBLE / count(*)::DOUBLE AS recall
-           |FROM truth LEFT JOIN cand USING (doc_a, doc_b)
-           |GROUP BY j_bucket""".stripMargin
-      }),
+      s"""WITH t AS (SELECT doc_id, source,
+        |  list_distinct(regexp_split_to_array(trim(text), '\\s+')) AS toks FROM documents),
+        |truth AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |    least(9, len(list_intersect(a.toks, b.toks)) * 10 //
+        |      len(list_distinct(a.toks || b.toks)))::BIGINT AS j_bucket
+        |  FROM t a JOIN t b ON a.source = b.source AND a.doc_id < b.doc_id
+        |  WHERE len(list_intersect(a.toks, b.toks)) * 2 >=
+        |        len(list_distinct(a.toks || b.toks)) * 1),
+        |${minhashSigsSql("t")},
+        |cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, 1::BIGINT AS c
+        |  FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id AND (${bandEqSql(2, 4)}))
+        |SELECT j_bucket, count(*)::BIGINT AS n_truth,
+        |  sum(coalesce(c, 0))::BIGINT AS n_caught,
+        |  sum(coalesce(c, 0))::DOUBLE / count(*)::DOUBLE AS recall
+        |FROM truth LEFT JOIN cand USING (doc_a, doc_b)
+        |GROUP BY j_bucket""".stripMargin),
 
     // §2.2/259 — HTML boilerplate strip + content-ratio report over
     // deterministically wrapped documents: tags become single spaces
@@ -5379,7 +5154,7 @@ object Queries {
           .withColumn("content_ratio",
             col("sum_text_chars").cast("double") / col("sum_html_chars").cast("double"))
       },
-      Some("""WITH h AS (SELECT source,
+      """WITH h AS (SELECT source,
         |    '<html><body><h1>' || source || '</h1><p>' || text ||
         |    '</p><div class="nav">home about contact</div></body></html>' AS html
         |  FROM documents WHERE text IS NOT NULL),
@@ -5392,7 +5167,7 @@ object Queries {
         |  FROM s2 GROUP BY source)
         |SELECT source, n_docs, sum_html_chars, sum_text_chars,
         |  sum_text_chars::DOUBLE / sum_html_chars::DOUBLE AS content_ratio
-        |FROM g""".stripMargin)),
+        |FROM g""".stripMargin),
 
     // §2.2/260 — mojibake / double-encoding detection: every 7th doc
     // deterministically corrupted (e -> 'Ã©', the classic UTF-8-as-
@@ -5410,7 +5185,7 @@ object Queries {
             sum(when(col("m") > 0, 1L).otherwise(0L)).as("n_flagged"),
             sum("m").as("sum_markers"))
       },
-      Some("""WITH c AS (SELECT source,
+      """WITH c AS (SELECT source,
         |    CASE WHEN doc_id % 7 = 0 THEN regexp_replace(text, 'e', 'Ã©', 'g')
         |      ELSE text END AS t
         |  FROM documents WHERE text IS NOT NULL),
@@ -5419,7 +5194,7 @@ object Queries {
         |SELECT source, count(*)::BIGINT AS n_docs,
         |  sum(CASE WHEN m > 0 THEN 1 ELSE 0 END)::BIGINT AS n_flagged,
         |  sum(m)::BIGINT AS sum_markers
-        |FROM m GROUP BY source""".stripMargin)),
+        |FROM m GROUP BY source""".stripMargin),
 
     // §2.2/261 — two-proportion z-test on user conversion (any
     // purchase) between parity arms: exact per-arm (n, conversions),
@@ -5437,7 +5212,7 @@ object Queries {
         // exactly-2-arms require caught it)
         operators.Stats.propZTest(u, pmod(col("user_id"), lit(2L)), col("converted"))
       },
-      Some("""WITH u AS (SELECT user_id, ((user_id % 2) + 2) % 2 AS arm,
+      """WITH u AS (SELECT user_id, ((user_id % 2) + 2) % 2 AS arm,
         |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) = 1 AS c
         |  FROM events WHERE user_id IS NOT NULL AND event_type IS NOT NULL
         |  GROUP BY user_id),
@@ -5459,7 +5234,7 @@ object Queries {
         |  CASE WHEN phat * (1.0 - phat) * (1.0 / n0::DOUBLE + 1.0 / n1::DOUBLE) > 0
         |    THEN (conv1::DOUBLE / n1::DOUBLE - conv0::DOUBLE / n0::DOUBLE)
         |       / sqrt(phat * (1.0 - phat) * (1.0 / n0::DOUBLE + 1.0 / n1::DOUBLE)) END AS z
-        |FROM w""".stripMargin)),
+        |FROM w""".stripMargin),
 
     // §2.2/262 — type-token ratio per source: exact token and distinct
     // -type counts, the lexical-diversity QA signal (template-heavy or
@@ -5471,13 +5246,13 @@ object Queries {
         .groupBy("source")
         .agg(count(lit(1)).as("n_tokens"), countDistinct(col("tok")).as("n_types"))
         .withColumn("ttr", col("n_types").cast("double") / col("n_tokens").cast("double")),
-      Some("""WITH t AS (SELECT source,
+      """WITH t AS (SELECT source,
         |    unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
         |  FROM documents WHERE text IS NOT NULL)
         |SELECT source, count(*)::BIGINT AS n_tokens,
         |  count(DISTINCT tok)::BIGINT AS n_types,
         |  count(DISTINCT tok)::DOUBLE / count(*)::DOUBLE AS ttr
-        |FROM t WHERE length(tok) > 0 GROUP BY source""".stripMargin)),
+        |FROM t WHERE length(tok) > 0 GROUP BY source""".stripMargin),
 
     // §2.2/263 — Spearman rank-correlation matrix (r12): Pearson over
     // tie-averaged DOUBLED ranks (integers), decimal128 sums, one
@@ -5488,7 +5263,7 @@ object Queries {
         "qty" -> round(col("l_quantity")),
         "disc_c" -> round(col("l_discount") * 100),
         "tax_c" -> round(col("l_tax") * 100))),
-      Some {
+      {
         val cols = Seq("qty", "disc_c", "tax_c")
         val rankCtes = cols.map { c =>
           s"""r_$c AS (SELECT $c AS vv,
@@ -5527,7 +5302,7 @@ object Queries {
           .filter(col("event_type").isNotNull && col("ts").isNotNull),
         col("event_type"),
         expr("(floor(unix_micros(CAST(ts AS TIMESTAMP)) / 1000000L) div 86400L) % 7")),
-      Some("""WITH base AS (SELECT event_type AS a,
+      """WITH base AS (SELECT event_type AS a,
         |    (floor(epoch(ts))::BIGINT // 86400) % 7 AS b FROM events
         |  WHERE event_type IS NOT NULL AND ts IS NOT NULL),
         |cells AS (SELECT a, b, count(*)::BIGINT AS o FROM base GROUP BY 1, 2),
@@ -5544,7 +5319,7 @@ object Queries {
         |  CASE WHEN least(count(DISTINCT a), count(DISTINCT b)) > 1
         |    THEN sqrt(sum(qq)::DOUBLE / 1048576.0
         |      / (min(n)::DOUBLE * (least(count(DISTINCT a), count(DISTINCT b)) - 1)::DOUBLE))
-        |  END AS cramers_v FROM q""".stripMargin)),
+        |  END AS cramers_v FROM q""".stripMargin),
 
     // §2.2/265 — per-source Jensen–Shannon divergence vs the corpus
     // (r12): the symmetric bounded companion to row 200's KL drift;
@@ -5555,7 +5330,7 @@ object Queries {
     "text_js_divergence" -> QueryDef(
       (s, d) => operators.Analytics.jsDivergence(
         ds(s, d, "documents").toDF, "source", "text"),
-      Some("""WITH tok AS (SELECT source AS grp,
+      """WITH tok AS (SELECT source AS grp,
         |    unnest(regexp_split_to_array(trim(text), '\s+')) AS w
         |  FROM documents WHERE source IS NOT NULL),
         |gt AS (SELECT grp, w, count(*)::BIGINT AS c_gw FROM tok WHERE length(w) > 0 GROUP BY 1, 2),
@@ -5574,7 +5349,7 @@ object Queries {
         |    (greatest(sum(qm) + (min(t) - sum(c_w)) * 726817, 0) // min(t))::BIGINT AS kl_qm_q
         |  FROM terms GROUP BY 1)
         |SELECT source, n_tokens, n_distinct, kl_pm_q, kl_qm_q,
-        |  ((kl_pm_q + kl_qm_q) // 2)::BIGINT AS js_q FROM agg""".stripMargin)),
+        |  ((kl_pm_q + kl_qm_q) // 2)::BIGINT AS js_q FROM agg""".stripMargin),
 
     // §2.2/266 — retrieval MRR / precision@k / recall@k (r12): the
     // rank-position companions to row 243's nDCG, same deterministic
@@ -5582,23 +5357,11 @@ object Queries {
     // exact, P@k / R@k single divisions of exact counts.
     "q_mrr" -> QueryDef(
       (s, d) => {
-        val emb = ds(s, d, "embeddings").toDF
-          .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
-            graft.functions.VectorFunctions.allFinite(col("embedding")))
+        val emb = finiteEmbeddings(s, d, "vec_id", "embedding")
         Similarity.retrievalEval(emb, emb.filter(col("vec_id") < 20),
           "vec_id", "embedding", "label", k = 10)
       },
-      Some("""WITH reb AS (SELECT vec_id, embedding, label FROM embeddings
-        |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-        |    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0),
-        |q AS (SELECT vec_id AS qid, embedding AS qv, label AS ql
-        |  FROM reb WHERE vec_id < 20 AND label IS NOT NULL),
-        |sc AS (SELECT qid, ql, e.vec_id AS nid, e.label AS nl,
-        |    list_cosine_similarity(qv::DOUBLE[], e.embedding::DOUBLE[]) AS c
-        |  FROM q JOIN reb e ON e.vec_id <> qid),
-        |r AS (SELECT qid, ql, nl,
-        |    row_number() OVER (PARTITION BY qid ORDER BY c DESC, nid) AS rank
-        |  FROM sc WHERE c IS NOT NULL),
+      s"""WITH $rankedNeighborsSql,
         |h AS (SELECT qid, max(ql) AS label,
         |    sum(CASE WHEN nl = ql THEN 1 ELSE 0 END)::BIGINT AS hits_at_k,
         |    min(CASE WHEN nl = ql THEN rank END)::BIGINT AS first_rel_rank
@@ -5610,7 +5373,7 @@ object Queries {
         |  h.hits_at_k, h.hits_at_k::DOUBLE / 10.0 AS precision_at_k,
         |  CASE WHEN coalesce(nr.n_rel, 0) > 0
         |    THEN h.hits_at_k::DOUBLE / nr.n_rel::DOUBLE END AS recall_at_k
-        |FROM h LEFT JOIN nr ON h.qid = nr.qid""".stripMargin)),
+        |FROM h LEFT JOIN nr ON h.qid = nr.qid""".stripMargin),
 
     // §2.2/267 — integer EWMA smoothing + anomaly flag per user series
     // (r12): α = 1/2 level filter folded in exact int64 milli-units
@@ -5619,7 +5382,7 @@ object Queries {
     "q_ewma" -> QueryDef(
       (s, d) => operators.TimeSeries.ewmaSmooth(
         ds(s, d, "events").toDF, "user_id", "ts", "value"),
-      Some("""WITH r0 AS (SELECT user_id, epoch_us(ts) AS tsu, event_id,
+      """WITH r0 AS (SELECT user_id, epoch_us(ts) AS tsu, event_id,
         |    round(abs(value) * 1000)::BIGINT AS x FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL),
         |l AS (SELECT user_id, list(x ORDER BY tsu, event_id) AS xs FROM r0 GROUP BY user_id)
@@ -5628,7 +5391,7 @@ object Queries {
         |  (xs[-1] - list_reduce(xs, (a, b) -> (a + b) // 2))::BIGINT AS dev_milli,
         |  abs(xs[-1] - list_reduce(xs, (a, b) -> (a + b) // 2))
         |    > list_reduce(xs, (a, b) -> (a + b) // 2) AS is_anomaly
-        |FROM l""".stripMargin)),
+        |FROM l""".stripMargin),
 
     // §2.2/268 — SAX symbolization per user series (r12, Lin et al.
     // 2003): equal-count PAA frames by integer split, frame means
@@ -5637,7 +5400,7 @@ object Queries {
     "q_sax" -> QueryDef(
       (s, d) => operators.TimeSeries.saxSymbols(
         ds(s, d, "events").toDF, "user_id", "ts", "value"),
-      Some("""WITH r0 AS (SELECT user_id AS k, epoch_us(ts) AS tsu, event_id,
+      """WITH r0 AS (SELECT user_id AS k, epoch_us(ts) AS tsu, event_id,
         |    round(value * 1000)::BIGINT AS x FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL),
         |idx AS (SELECT k, x,
@@ -5657,26 +5420,15 @@ object Queries {
         |    WHEN znum / sqrt(var_num::DOUBLE) < 0.0 THEN 'b'
         |    WHEN znum / sqrt(var_num::DOUBLE) < 0.6745 THEN 'c'
         |    ELSE 'd' END, '' ORDER BY frame) AS sax_word
-        |FROM z GROUP BY k""".stripMargin)),
+        |FROM z GROUP BY k""".stripMargin),
 
     // §2.2/269 — degree assortativity coefficient (r12, Newman 2002)
     // of the co-purchase graph: Pearson of endpoint degrees over the
     // symmetrized edge list, exact int64 sums, one double expression.
     "q_assortativity" -> QueryDef(
-      (s, d) => {
-        val li = ds(s, d, "lineitem").toDF
-          .filter(col("l_partkey") % 7 === 0)
-          .select("l_orderkey", "l_partkey")
-        val e = li.as("x").join(li.as("y"),
-            col("x.l_orderkey") === col("y.l_orderkey") &&
-              col("x.l_partkey") < col("y.l_partkey"))
-          .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-        operators.GraphMetrics.assortativity(e, "src", "dst")
-      },
-      Some("""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-        |  WHERE l_partkey % 7 = 0),
-        |e0 AS (SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b FROM li x JOIN li y
-        |  ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
+      (s, d) => operators.GraphMetrics.assortativity(
+        coPurchaseEdges(s, d, Some(col("l_partkey") % 7 === 0)), "src", "dst"),
+      s"""WITH e0 AS (${coPurchaseSql(Some("l_partkey % 7 = 0"))}),
         |u AS (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
         |deg AS (SELECT a AS z, count(*)::BIGINT AS d FROM u GROUP BY 1),
         |m AS (SELECT count(*)::BIGINT AS m_directed, sum(j.d * k.d)::BIGINT AS sum_jk,
@@ -5688,7 +5440,7 @@ object Queries {
         |  CASE WHEN m_directed * sum_j2 <> sum_j * sum_j
         |    THEN (m_directed::DOUBLE * sum_jk::DOUBLE - sum_j::DOUBLE * sum_j::DOUBLE)
         |      / (m_directed::DOUBLE * sum_j2::DOUBLE - sum_j::DOUBLE * sum_j::DOUBLE)
-        |  END AS assortativity FROM m CROSS JOIN nn""".stripMargin)),
+        |  END AS assortativity FROM m CROSS JOIN nn""".stripMargin),
 
     // §2.2/270 — Poisson-bootstrap CI for the mean order value (r12,
     // Chamandy et al. 2012): per-replicate Poisson(1) weights from a
@@ -5697,7 +5449,7 @@ object Queries {
     "q_bootstrap" -> QueryDef(
       (s, d) => operators.Stats.poissonBootstrap(ds(s, d, "orders").toDF,
         col("o_orderkey"), round(col("o_totalprice") * 100)),
-      Some("""WITH r0 AS (SELECT o_orderkey::VARCHAR AS id,
+      """WITH r0 AS (SELECT o_orderkey::VARCHAR AS id,
         |    round(o_totalprice * 100)::BIGINT AS x FROM orders
         |  WHERE o_orderkey IS NOT NULL AND o_totalprice IS NOT NULL),
         |e AS (SELECT id, x, unnest(generate_series(0, 31)) AS b FROM r0),
@@ -5713,7 +5465,7 @@ object Queries {
         |    THEN sum_cents::DOUBLE / n_eff::DOUBLE END AS mean_cents FROM reps)
         |SELECT replicate, n_eff, sum_cents, mean_cents,
         |  row_number() OVER (ORDER BY mean_cents ASC NULLS LAST, replicate)::BIGINT AS rank_asc
-        |FROM mm""".stripMargin)),
+        |FROM mm""".stripMargin),
 
     // §2.2/271 — Kaplan–Meier survival curve of user lifetime (r12):
     // right-censored product-limit estimator folded in integer
@@ -5722,7 +5474,7 @@ object Queries {
     "q_survival" -> QueryDef(
       (s, d) => operators.Analytics.kaplanMeier(
         ds(s, d, "events").toDF, "user_id", "ts"),
-      Some("""WITH pu AS (SELECT user_id AS u,
+      """WITH pu AS (SELECT user_id AS u,
         |    min(floor(epoch(ts))::BIGINT // 86400) AS fd,
         |    max(floor(epoch(ts))::BIGINT // 86400) AS ld FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL GROUP BY user_id),
@@ -5740,7 +5492,7 @@ object Queries {
         |SELECT rk.t AS t_days, rk.n_risk, rk.d AS d_churned, rk.c AS c_censored,
         |  list_reduce(list_prepend(1048576::BIGINT, es[1:list_position(ts, rk.t)]),
         |    (a, e) -> (a * (e % 2147483648)) // (e // 2147483648))::BIGINT AS s_micro
-        |FROM rk CROSS JOIN pk""".stripMargin)),
+        |FROM rk CROSS JOIN pk""".stripMargin),
 
     // §2.2/272 — candidate-key / unique-column-combination discovery
     // (r12): exact distinct counts for singles and pairs in ONE
@@ -5749,7 +5501,7 @@ object Queries {
     "q_key_discovery" -> QueryDef(
       (s, d) => operators.Discovery.keyDiscovery(ds(s, d, "customer").toDF,
         Seq("c_name", "c_nationkey", "c_mktsegment", "c_acctbal")),
-      Some {
+      {
         val cols = Seq("c_name", "c_nationkey", "c_mktsegment", "c_acctbal")
         val combos = cols.map(Seq(_)) ++ cols.combinations(2).toSeq
         def nm(cs: Seq[String]) = cs.mkString("+")
@@ -5783,7 +5535,7 @@ object Queries {
           col("c_mktsegment"), col("o_custkey"),
           round(col("o_totalprice") * 100))
       },
-      Some("""WITH rev AS (SELECT c.c_mktsegment AS mkt, o.o_custkey AS ent,
+      """WITH rev AS (SELECT c.c_mktsegment AS mkt, o.o_custkey AS ent,
         |    sum(round(o.o_totalprice * 100)::BIGINT)::BIGINT AS rev
         |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         |  WHERE c.c_mktsegment IS NOT NULL AND o.o_custkey IS NOT NULL
@@ -5794,7 +5546,7 @@ object Queries {
         |  min(tot.tot)::BIGINT AS tot_cents,
         |  sum((rev.rev * 10000 // tot.tot) * (rev.rev * 10000 // tot.tot))::BIGINT AS hhi_bp2,
         |  max(rev.rev * 10000 // tot.tot)::BIGINT AS top_share_bp
-        |FROM rev JOIN tot USING (mkt) GROUP BY 1""".stripMargin)),
+        |FROM rev JOIN tot USING (mkt) GROUP BY 1""".stripMargin),
 
     // §2.2/274 — tokenizer fertility per source (r12): BPE-ish
     // subtokens per whitespace word and bytes per subtoken — the
@@ -5811,7 +5563,7 @@ object Queries {
           col("n_subtokens").cast("double") / col("n_words").cast("double")))
         .withColumn("bytes_per_subtoken", when(col("n_subtokens") > 0,
           col("n_bytes").cast("double") / col("n_subtokens").cast("double"))),
-      Some("""SELECT source,
+      """SELECT source,
         |  sum(len(regexp_split_to_array(trim(text), '\s+')))::BIGINT AS n_words,
         |  sum(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')))::BIGINT AS n_subtokens,
         |  sum(strlen(text))::BIGINT AS n_bytes,
@@ -5822,7 +5574,7 @@ object Queries {
         |    THEN sum(strlen(text))::DOUBLE
         |      / sum(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')))::DOUBLE
         |  END AS bytes_per_subtoken
-        |FROM documents WHERE text IS NOT NULL GROUP BY source""".stripMargin)),
+        |FROM documents WHERE text IS NOT NULL GROUP BY source""".stripMargin),
 
     // §2.2/275 — lead-lag cross-correlation purchases → errors (r12):
     // daily exact counts zero-filled over the full day spine, Pearson
@@ -5830,7 +5582,7 @@ object Queries {
     "q_xcorr" -> QueryDef(
       (s, d) => operators.TimeSeries.crossCorrelation(
         ds(s, d, "events").toDF, "ts", "event_type", "purchase", "error", 7),
-      Some("""WITH dd AS (SELECT floor(epoch(ts))::BIGINT // 86400 AS d,
+      """WITH dd AS (SELECT floor(epoch(ts))::BIGINT // 86400 AS d,
         |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT AS x,
         |    sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)::BIGINT AS y
         |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL GROUP BY 1),
@@ -5849,7 +5601,7 @@ object Queries {
         |    THEN (n_days::DOUBLE * sum_xy::DOUBLE - sum_x::DOUBLE * sum_y::DOUBLE)
         |      / (sqrt(n_days::DOUBLE * sum_xx::DOUBLE - sum_x::DOUBLE * sum_x::DOUBLE)
         |       * sqrt(n_days::DOUBLE * sum_yy::DOUBLE - sum_y::DOUBLE * sum_y::DOUBLE))
-        |  END AS xcorr FROM m""".stripMargin)),
+        |  END AS xcorr FROM m""".stripMargin),
 
     // §2.2/276 — RFM segmentation (r12): recency/frequency/monetary
     // quintiles via ntile(5) with the customer key as total-order
@@ -5857,7 +5609,7 @@ object Queries {
     "q_rfm" -> QueryDef(
       (s, d) => operators.Analytics.rfmSegments(
         ds(s, d, "orders").toDF, "o_custkey", "o_orderdate", "o_totalprice"),
-      Some("""WITH pc AS (SELECT o_custkey AS cust,
+      """WITH pc AS (SELECT o_custkey AS cust,
         |    max(floor(epoch(o_orderdate))::BIGINT // 86400) AS ld,
         |    count(*)::BIGINT AS f, sum(round(o_totalprice * 100)::BIGINT)::BIGINT AS m
         |  FROM orders WHERE o_custkey IS NOT NULL AND o_orderdate IS NOT NULL
@@ -5870,7 +5622,7 @@ object Queries {
         |  FROM pc CROSS JOIN mx)
         |SELECT r_score, f_score, m_score, count(*)::BIGINT AS n_customers,
         |  sum(f)::BIGINT AS sum_orders, sum(m)::BIGINT AS sum_cents
-        |FROM sc GROUP BY 1, 2, 3""".stripMargin)),
+        |FROM sc GROUP BY 1, 2, 3""".stripMargin),
 
     // §2.2/277 — one-way ANOVA F (r12): between/within sum-of-squares
     // from exact integer moments; the per-group rational S²/n is
@@ -5879,7 +5631,7 @@ object Queries {
     "q_anova" -> QueryDef(
       (s, d) => operators.Stats.oneWayAnova(ds(s, d, "lineitem").toDF,
         col("l_returnflag"), round(col("l_quantity"))),
-      Some("""WITH g AS (SELECT l_returnflag AS g, count(*)::BIGINT AS n_g,
+      """WITH g AS (SELECT l_returnflag AS g, count(*)::BIGINT AS n_g,
         |    sum(round(l_quantity)::BIGINT)::BIGINT AS s_g,
         |    sum(round(l_quantity)::BIGINT * round(l_quantity)::BIGINT)::BIGINT AS q_g
         |  FROM lineitem WHERE l_returnflag IS NOT NULL AND l_quantity IS NOT NULL
@@ -5893,7 +5645,7 @@ object Queries {
         |  CASE WHEN k_groups > 1 AND n > k_groups AND q - tsum > 0
         |    THEN ((tsum - s * s // n)::DOUBLE / (k_groups - 1)::DOUBLE)
         |       / ((q - tsum)::DOUBLE / (n - k_groups)::DOUBLE) END AS f_stat
-        |FROM t""".stripMargin)),
+        |FROM t""".stripMargin),
 
     // §2.2/278 — Lorenz curve points (r12): the distribution behind
     // row 189's Gini scalar — deciled by value ascending with the
@@ -5901,7 +5653,7 @@ object Queries {
     "q_lorenz" -> QueryDef(
       (s, d) => operators.Analytics.lorenzCurve(ds(s, d, "orders").toDF,
         col("o_custkey"), round(col("o_totalprice") * 100)),
-      Some("""WITH rev AS (SELECT o_custkey AS ent,
+      """WITH rev AS (SELECT o_custkey AS ent,
         |    sum(round(o_totalprice * 100)::BIGINT)::BIGINT AS v FROM orders
         |  WHERE o_custkey IS NOT NULL AND o_totalprice IS NOT NULL
         |  GROUP BY 1 HAVING sum(round(o_totalprice * 100)::BIGINT) > 0),
@@ -5913,7 +5665,7 @@ object Queries {
         |t AS (SELECT sum(decile_cents)::BIGINT AS tot FROM bd)
         |SELECT decile, n_units, decile_cents, cum_cents,
         |  (cum_cents * 1000000 // tot)::BIGINT AS cum_share_micro
-        |FROM c CROSS JOIN t""".stripMargin)),
+        |FROM c CROSS JOIN t""".stripMargin),
 
     // §2.2/279 — Holt level+trend forecast (r12): double-exponential
     // smoothing with both states packed into ONE int64 accumulator
@@ -5921,7 +5673,7 @@ object Queries {
     "q_holt_forecast" -> QueryDef(
       (s, d) => operators.TimeSeries.holtForecast(
         ds(s, d, "events").toDF, "user_id", "ts", "value"),
-      Some("""WITH r0 AS (SELECT user_id, epoch_us(ts) AS tsu, event_id,
+      """WITH r0 AS (SELECT user_id, epoch_us(ts) AS tsu, event_id,
         |    round(abs(value) * 1000)::BIGINT + 1073741824 AS y FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL),
         |l AS (SELECT user_id, list(y ORDER BY tsu, event_id) AS ys FROM r0 GROUP BY user_id),
@@ -5937,7 +5689,7 @@ object Queries {
         |  (acc // 4294967296 - 1073741824 + (acc % 4294967296 - 2147483648))::BIGINT AS forecast_1,
         |  (acc // 4294967296 - 1073741824 + 2 * (acc % 4294967296 - 2147483648))::BIGINT AS forecast_2,
         |  (acc // 4294967296 - 1073741824 + 3 * (acc % 4294967296 - 2147483648))::BIGINT AS forecast_3
-        |FROM f""".stripMargin)),
+        |FROM f""".stripMargin),
 
     // §2.2/280 — A/B power analysis / required sample size (r12):
     // n = ceil((z_a + z_b)² · 2σ² / δ²) at 5% MDE, moments exact.
@@ -5950,7 +5702,7 @@ object Queries {
             round(col("value") * 100).cast("long")).otherwise(0L)).as("cents"))
         operators.Stats.powerSampleSize(units, col("cents"))
       },
-      Some("""WITH u AS (SELECT user_id,
+      """WITH u AS (SELECT user_id,
         |    sum(CASE WHEN event_type = 'purchase' AND value IS NOT NULL
         |      THEN round(value * 100)::BIGINT ELSE 0 END)::BIGINT AS v
         |  FROM events WHERE user_id IS NOT NULL GROUP BY 1),
@@ -5964,7 +5716,7 @@ object Queries {
         |  CASE WHEN mean_v > 0 AND var_v > 0
         |    THEN ceil((1.959964 + 0.841621) * (1.959964 + 0.841621) * 2.0
         |      * var_v / (mde_v * mde_v))::BIGINT END AS n_required
-        |FROM w2""".stripMargin)),
+        |FROM w2""".stripMargin),
 
     // §2.2/281 — Cohen's kappa (r12): chance-corrected agreement of
     // the declared language label vs the row-36 langid heuristic —
@@ -5975,7 +5727,7 @@ object Queries {
         operators.Stats.cohensKappa(p, col("lang"),
           TextFunctions.langId(col("text")))
       },
-      Some(s"""WITH p AS (SELECT lang AS r1, $langIdCaseSql AS r2 FROM documents),
+      s"""WITH p AS (SELECT lang AS r1, $langIdCaseSql AS r2 FROM documents),
         |f AS (SELECT r1, r2 FROM p WHERE r1 IS NOT NULL AND r2 IS NOT NULL),
         |a AS (SELECT count(*)::BIGINT AS n,
         |    sum(CASE WHEN r1 = r2 THEN 1 ELSE 0 END)::BIGINT AS agree FROM f),
@@ -5986,7 +5738,7 @@ object Queries {
         |SELECT n, agree, pe_q,
         |  CASE WHEN n * n <> pe_q THEN (agree * n - pe_q)::DOUBLE
         |    / (n * n - pe_q)::DOUBLE END AS kappa
-        |FROM a CROSS JOIN pe""".stripMargin)),
+        |FROM a CROSS JOIN pe""".stripMargin),
 
     // §2.2/282 — time-decayed popularity ranking (r12): per-event
     // score 10⁶ div 2^(age div halflife) — exact integer halving
@@ -5994,7 +5746,7 @@ object Queries {
     "q_decay_popularity" -> QueryDef(
       (s, d) => operators.Analytics.decayPopularity(
         ds(s, d, "lineitem").toDF, col("l_partkey"), "l_shipdate"),
-      Some("""WITH r0 AS (SELECT l_partkey AS item,
+      """WITH r0 AS (SELECT l_partkey AS item,
         |    floor(epoch(l_shipdate))::BIGINT // 86400 AS day FROM lineitem
         |  WHERE l_partkey IS NOT NULL AND l_shipdate IS NOT NULL),
         |mx AS (SELECT max(day) AS maxd FROM r0),
@@ -6003,7 +5755,7 @@ object Queries {
         |  FROM r0 CROSS JOIN mx GROUP BY 1),
         |rk AS (SELECT item, n_events, score_micro,
         |    row_number() OVER (ORDER BY score_micro DESC, item)::BIGINT AS rank FROM sc)
-        |SELECT item, n_events, score_micro, rank FROM rk WHERE rank <= 50""".stripMargin)),
+        |SELECT item, n_events, score_micro, rank FROM rk WHERE rank <= 50""".stripMargin),
 
     // §2.2/283 — exact 1-D earth mover's distance per event type vs
     // all events (r12): the integral companion to row 218's KS max —
@@ -6012,7 +5764,7 @@ object Queries {
       (s, d) => operators.Stats.emd1d(
         ds(s, d, "events").toDF.withColumn("v_dollars", round(col("value"))),
         "event_type", "v_dollars"),
-      Some("""WITH vals AS (SELECT event_type AS grp, round(value)::BIGINT AS v
+      """WITH vals AS (SELECT event_type AS grp, round(value)::BIGINT AS v
         |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL),
         |sc AS (SELECT grp, v, count(*)::BIGINT AS n_sv FROM vals GROUP BY 1, 2),
         |g AS (SELECT grp, count(*)::BIGINT AS n_s FROM vals GROUP BY 1),
@@ -6030,7 +5782,7 @@ object Queries {
         |  sum(abs(tot.n_g * cum.cum_s - cum.n_s * gc.cum_g) * cum.gap)::BIGINT AS emd_num,
         |  sum(abs(tot.n_g * cum.cum_s - cum.n_s * gc.cum_g) * cum.gap)::DOUBLE
         |    / (min(tot.n_g) * min(cum.n_s))::DOUBLE AS emd
-        |FROM cum JOIN gc USING (v) CROSS JOIN tot GROUP BY 1""".stripMargin)),
+        |FROM cum JOIN gc USING (v) CROSS JOIN tot GROUP BY 1""".stripMargin),
 
     // §2.2/284 — hapax legomena rate per source (r12): once-seen types
     // / all types — the vocabulary-health companion to row 262's TTR.
@@ -6045,7 +5797,7 @@ object Queries {
           sum(when(col("c") === 1L, 1L).otherwise(0L)).as("n_hapax"))
         .withColumn("hapax_rate",
           col("n_hapax").cast("double") / col("n_types").cast("double")),
-      Some("""WITH t AS (SELECT source,
+      """WITH t AS (SELECT source,
         |    unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
         |  FROM documents WHERE text IS NOT NULL AND source IS NOT NULL),
         |c AS (SELECT source, tok, count(*)::BIGINT AS c FROM t
@@ -6053,7 +5805,7 @@ object Queries {
         |SELECT source, count(*)::BIGINT AS n_types,
         |  sum(CASE WHEN c = 1 THEN 1 ELSE 0 END)::BIGINT AS n_hapax,
         |  sum(CASE WHEN c = 1 THEN 1 ELSE 0 END)::DOUBLE / count(*)::DOUBLE AS hapax_rate
-        |FROM c GROUP BY 1""".stripMargin)),
+        |FROM c GROUP BY 1""".stripMargin),
 
     // §2.2/285 — first-order partial correlation (r12): ρ_xy·z over
     // the three pairwise Pearsons from ONE scan's exact moments — the
@@ -6063,7 +5815,7 @@ object Queries {
         "qty" -> round(col("l_quantity")),
         "price_dd" -> round(col("l_extendedprice") / 10),
         "disc_c" -> round(col("l_discount") * 100)),
-      Some("""WITH v AS (SELECT round(l_quantity)::BIGINT AS x,
+      """WITH v AS (SELECT round(l_quantity)::BIGINT AS x,
         |    round(l_extendedprice / 10)::BIGINT AS y,
         |    round(l_discount * 100)::BIGINT AS z FROM lineitem
         |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
@@ -6094,7 +5846,7 @@ object Queries {
         |        AND (1.0 - r_xz * r_xz) * (1.0 - r_yz * r_yz) > 0
         |    THEN (r_xy - r_xz * r_yz)
         |      / sqrt((1.0 - r_xz * r_xz) * (1.0 - r_yz * r_yz)) END AS partial_r
-        |FROM r""".stripMargin)),
+        |FROM r""".stripMargin),
 
     // §2.2/286 — token burstiness / Fano factor for the top-30 tokens
     // (r12): D·Σc² − tot² over per-doc counts (zeros through D) in
@@ -6102,7 +5854,7 @@ object Queries {
     "text_burstiness" -> QueryDef(
       (s, d) => operators.Analytics.tokenBurstiness(
         ds(s, d, "documents").toDF, "doc_id", "text"),
-      Some("""WITH pd AS (SELECT doc_id, text FROM documents
+      """WITH pd AS (SELECT doc_id, text FROM documents
         |  WHERE text IS NOT NULL AND doc_id IS NOT NULL),
         |d AS (SELECT count(*)::BIGINT AS d_docs FROM pd),
         |c AS (SELECT doc_id, tok AS w, count(*)::BIGINT AS c FROM
@@ -6113,7 +5865,7 @@ object Queries {
         |top AS (SELECT *, row_number() OVER (ORDER BY tot DESC, w) AS rk FROM pt)
         |SELECT w AS token, tot, n_docs_with,
         |  ((d_docs * sumsq - tot * tot) * 1000 // (d_docs * tot))::BIGINT AS fano_milli
-        |FROM top CROSS JOIN d WHERE rk <= 30""".stripMargin)),
+        |FROM top CROSS JOIN d WHERE rk <= 30""".stripMargin),
 
     // §2.2/287 — Kendall τ-b (r12, emission fixed r13): the tie-robust
     // third correlation beside Pearson (229) and Spearman (263), exact
@@ -6125,7 +5877,7 @@ object Queries {
     "q_kendall" -> QueryDef(
       (s, d) => operators.Stats.kendallTau(ds(s, d, "lineitem").toDF,
         round(col("l_quantity")), round(col("l_discount") * 100)),
-      Some("""WITH v AS (SELECT round(l_quantity)::BIGINT AS x,
+      """WITH v AS (SELECT round(l_quantity)::BIGINT AS x,
         |    round(l_discount * 100)::BIGINT AS y FROM lineitem
         |  WHERE l_quantity IS NOT NULL AND l_discount IS NOT NULL),
         |cells AS (SELECT x, y, count(*)::BIGINT AS m FROM v GROUP BY 1, 2),
@@ -6147,7 +5899,7 @@ object Queries {
         |  CASE WHEN n0 > ties_x AND n0 > ties_y THEN
         |    (c_pairs - d_pairs)::DOUBLE
         |      / sqrt((n0 - ties_x)::DOUBLE * (n0 - ties_y)::DOUBLE) END AS tau
-        |FROM nn CROSS JOIN pr CROSS JOIN tx CROSS JOIN ty""".stripMargin)),
+        |FROM nn CROSS JOIN pr CROSS JOIN tx CROSS JOIN ty""".stripMargin),
 
     // §2.2/288 — Mann–Kendall trend test per series (r12): S and the
     // ×18-scaled tie-adjusted variance exact int64 from the per-series
@@ -6155,7 +5907,7 @@ object Queries {
     "q_mann_kendall" -> QueryDef(
       (s, d) => operators.TimeSeries.mannKendall(
         ds(s, d, "events").toDF, "event_type", "ts"),
-      Some("""WITH d AS (SELECT event_type AS series,
+      """WITH d AS (SELECT event_type AS series,
         |    floor(epoch(ts) / 86400)::BIGINT AS day, count(*)::BIGINT AS x
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
         |  GROUP BY 1, 2),
@@ -6173,7 +5925,7 @@ object Queries {
         |      / sqrt((m_days * (m_days - 1) * (2 * m_days + 5) - tie18)::DOUBLE / 18.0)
         |  END AS z
         |FROM m LEFT JOIN s ON m.series = s.series
-        |JOIN t ON m.series = t.series""".stripMargin)),
+        |JOIN t ON m.series = t.series""".stripMargin),
 
     // §2.2/289 — Wald–Wolfowitz runs test per series (r12): above/
     // below-median day signs (exact med2 over the full day curve,
@@ -6182,7 +5934,7 @@ object Queries {
     "q_runs_test" -> QueryDef(
       (s, d) => operators.TimeSeries.runsTest(
         ds(s, d, "events").toDF, "event_type", "ts"),
-      Some("""WITH d AS (SELECT event_type AS series,
+      """WITH d AS (SELECT event_type AS series,
         |    floor(epoch(ts) / 86400)::BIGINT AS day, count(*)::BIGINT AS x
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
         |  GROUP BY 1, 2),
@@ -6213,7 +5965,7 @@ object Queries {
         |            / ((n_above + n_below)::DOUBLE * (n_above + n_below)
         |               * (n_above + n_below - 1.0)))
         |  END AS z
-        |FROM agg""".stripMargin)),
+        |FROM agg""".stripMargin),
 
     // §2.2/290 — Flesch–Kincaid readability per source (r12): exact
     // integer word / vowel-group / sentence-mark counts (ASCII-class
@@ -6235,7 +5987,7 @@ object Queries {
             lit(0.39) * col("n_words").cast("double") / col("n_sentences").cast("double")
               + lit(11.8) * col("n_syllables").cast("double") / col("n_words").cast("double")
               - lit(15.59))),
-      Some("""WITH p AS (SELECT source,
+      """WITH p AS (SELECT source,
         |    len(regexp_split_to_array(trim(text), '\s+'))::BIGINT AS w,
         |    len(regexp_extract_all(text, '[aeiouyAEIOUY]+'))::BIGINT AS syl,
         |    greatest(len(regexp_extract_all(text, '[.!?]+')), 1)::BIGINT AS sent
@@ -6245,7 +5997,7 @@ object Queries {
         |  CASE WHEN sum(w) > 0 THEN
         |    0.39 * sum(w)::DOUBLE / sum(sent)::DOUBLE
         |      + 11.8 * sum(syl)::DOUBLE / sum(w)::DOUBLE - 15.59 END AS fk_grade
-        |FROM p GROUP BY 1""".stripMargin)),
+        |FROM p GROUP BY 1""".stripMargin),
 
     // §2.2/291 — l-diversity audit (r12): the sensitive-attribute
     // complement of row 255's k-anonymity — per quasi-identifier group
@@ -6261,13 +6013,13 @@ object Queries {
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("o_custkey")).as("l_distinct"))
         .withColumn("below_l5", col("l_distinct") < 5),
-      Some("""SELECT o_orderpriority, floor(epoch(o_orderdate) / 604800)::BIGINT AS epoch_week,
+      """SELECT o_orderpriority, floor(epoch(o_orderdate) / 604800)::BIGINT AS epoch_week,
         |  count(*)::BIGINT AS n_rows,
         |  count(DISTINCT o_custkey)::BIGINT AS l_distinct,
         |  count(DISTINCT o_custkey) < 5 AS below_l5
         |FROM orders WHERE o_orderpriority IS NOT NULL AND o_orderdate IS NOT NULL
         |  AND o_custkey IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin)),
+        |GROUP BY 1, 2""".stripMargin),
 
     // §2.2/292 — Lloyd k-means in exact fixed point (r12): md5-seeded
     // k=8 centers + 2 refinement rounds; every centroid is an exact
@@ -6277,7 +6029,7 @@ object Queries {
     "sim_kmeans" -> QueryDef(
       (s, d) => Similarity.kmeansLloyd(ds(s, d, "embeddings").toDF,
         "vec_id", "embedding", k = 8, dim = 64, iters = 2),
-      Some {
+      {
         def assign(cb: String, name: String) =
           s"""$name AS (SELECT vec_id, cid, dist FROM (
              |  SELECT vec_id, cid, dist,
@@ -6293,8 +6045,7 @@ object Queries {
              |    FROM $asg a JOIN quant q USING (vec_id) GROUP BY 1, 2) u
              |  ON u.cid = g.cid AND u.pos = g.pos)""".stripMargin
         s"""WITH eb AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-           |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL AND len(embedding) >= 64
-           |    AND len(list_filter(embedding[1:64], x -> x IS NULL OR NOT isfinite(x))) = 0),
+           |  WHERE ${finiteEmbeddingSql(Seq("vec_id"), Some(64))}),
            |quant AS (SELECT vec_id, g.i - 1 AS pos,
            |    round(v[g.i] * 1048576)::BIGINT AS q
            |  FROM eb, generate_series(1, 64) AS g(i)),
@@ -6322,7 +6073,7 @@ object Queries {
     "q_kruskal" -> QueryDef(
       (s, d) => operators.Stats.kruskalWallis(ds(s, d, "lineitem").toDF,
         col("l_returnflag"), col("l_quantity")),
-      Some("""WITH r0 AS (SELECT l_returnflag AS g, round(l_quantity)::BIGINT AS v
+      """WITH r0 AS (SELECT l_returnflag AS g, round(l_quantity)::BIGINT AS v
         |  FROM lineitem WHERE l_returnflag IS NOT NULL AND l_quantity IS NOT NULL),
         |cells AS (SELECT g, v, count(*)::BIGINT AS m FROM r0 GROUP BY 1, 2),
         |pv AS (SELECT v, sum(m)::BIGINT AS t FROM cells GROUP BY v),
@@ -6342,7 +6093,7 @@ object Queries {
         |      n::DOUBLE * n::DOUBLE * n::DOUBLE - n::DOUBLE
         |    THEN h_stat / (1.0 - tie_cub::DOUBLE /
         |      (n::DOUBLE * n::DOUBLE * n::DOUBLE - n::DOUBLE)) END AS h_adj
-        |FROM hh""".stripMargin)),
+        |FROM hh""".stripMargin),
 
     // §2.2/294 — McNemar's paired-binary test: per user "purchased on
     // even days" vs "purchased on odd days" — did behavior flip
@@ -6366,7 +6117,7 @@ object Queries {
             coalesce(col("b0"), lit(false)).as("b"))
         operators.Stats.mcnemar(units, col("a"), col("b"))
       },
-      Some("""WITH pe AS (SELECT user_id,
+      """WITH pe AS (SELECT user_id,
         |    floor(epoch(ts))::BIGINT // 86400 AS day FROM events
         |  WHERE event_type = 'purchase' AND user_id IS NOT NULL AND ts IS NOT NULL),
         |agg AS (SELECT user_id, max(((day % 2) + 2) % 2 = 0) AS a0,
@@ -6385,7 +6136,7 @@ object Queries {
         |       - sum(CASE WHEN NOT a AND b THEN 1 ELSE 0 END)) - 1)::DOUBLE
         |    / (sum(CASE WHEN a AND NOT b THEN 1 ELSE 0 END)
         |       + sum(CASE WHEN NOT a AND b THEN 1 ELSE 0 END))::DOUBLE END AS chi2
-        |FROM units""".stripMargin)),
+        |FROM units""".stripMargin),
 
     // §2.2/295 — Murphy decomposition of the Brier score: reliability −
     // resolution + uncertainty over row 239's min-max integer bins —
@@ -6394,7 +6145,7 @@ object Queries {
     "q_brier" -> QueryDef(
       (s, d) => operators.Stats.brierDecomposition(ds(s, d, "documents").toDF,
         col("n_chars"), col("lang") === "en", nBins = 10),
-      Some("""WITH v AS (SELECT n_chars::BIGINT AS s, (lang = 'en') AS pos
+      """WITH v AS (SELECT n_chars::BIGINT AS s, (lang = 'en') AS pos
         |  FROM documents WHERE n_chars IS NOT NULL AND lang IS NOT NULL),
         |b AS (SELECT min(s) AS mn, max(s) AS mx FROM v),
         |binned AS (SELECT least(9, (s - mn) * 10 // (mx - mn + 1)) AS bin,
@@ -6423,7 +6174,7 @@ object Queries {
         |  rel_q::DOUBLE / (n::DOUBLE * 1048576.0)
         |    - res_q::DOUBLE / (n::DOUBLE * 1048576.0)
         |    + n_pos::DOUBLE / n::DOUBLE * (1.0 - n_pos::DOUBLE / n::DOUBLE) AS brier
-        |FROM qq""".stripMargin)),
+        |FROM qq""".stripMargin),
 
     // §2.2/296 — mutual information source↔lang in 2^-20-nat units:
     // the dependence-STRENGTH companion to chi-square (225) and
@@ -6431,7 +6182,7 @@ object Queries {
     "q_mutual_info" -> QueryDef(
       (s, d) => operators.Stats.mutualInformation(ds(s, d, "documents").toDF,
         col("source"), col("lang")),
-      Some("""WITH cells AS (SELECT source AS a, lang AS b, count(*)::BIGINT AS n_ab
+      """WITH cells AS (SELECT source AS a, lang AS b, count(*)::BIGINT AS n_ab
         |  FROM documents WHERE source IS NOT NULL AND lang IS NOT NULL GROUP BY 1, 2),
         |ma AS (SELECT a, sum(n_ab)::BIGINT AS n_a FROM cells GROUP BY a),
         |mb AS (SELECT b, sum(n_ab)::BIGINT AS n_b FROM cells GROUP BY b),
@@ -6441,7 +6192,7 @@ object Queries {
         |  min(b_levels)::BIGINT AS b_levels,
         |  (sum(n_ab * floor(ln(n_ab::DOUBLE * nn.n::DOUBLE / (n_a::DOUBLE * n_b::DOUBLE))
         |     * 1048576)::BIGINT)::BIGINT // min(nn.n))::BIGINT AS mi_q
-        |FROM cells JOIN ma USING (a) JOIN mb USING (b) CROSS JOIN nn""".stripMargin)),
+        |FROM cells JOIN ma USING (a) JOIN mb USING (b) CROSS JOIN nn""".stripMargin),
 
     // §2.2/297 — Theil–Sen robust slope per series: lower median of
     // exact integer milli-slopes over the day-curve pair join (the
@@ -6449,7 +6200,7 @@ object Queries {
     "q_theil_sen" -> QueryDef(
       (s, d) => operators.TimeSeries.theilSen(
         ds(s, d, "events").toDF, "event_type", "ts"),
-      Some("""WITH d AS (SELECT event_type AS series,
+      """WITH d AS (SELECT event_type AS series,
         |    floor(epoch(ts) / 86400)::BIGINT AS day, count(*)::BIGINT AS x
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL GROUP BY 1, 2),
         |sl AS (SELECT a.series, ((b.x - a.x) * 1000) // (b.day - a.day) AS slope_milli
@@ -6460,7 +6211,7 @@ object Queries {
         |m AS (SELECT series, count(*)::BIGINT AS m_days FROM d GROUP BY 1)
         |SELECT rk.series AS series, m.m_days, rk.np::BIGINT AS n_pairs,
         |  rk.slope_milli::BIGINT AS slope_milli
-        |FROM rk JOIN m USING (series) WHERE rn = (np + 1) // 2""".stripMargin)),
+        |FROM rk JOIN m USING (series) WHERE rn = (np + 1) // 2""".stripMargin),
 
     // §2.2/298 — MASE-style forecastability diagnostic per series:
     // seasonal (calendar lag-7) vs successive-day naive error, exact
@@ -6468,7 +6219,7 @@ object Queries {
     "q_mase" -> QueryDef(
       (s, d) => operators.TimeSeries.maseDiagnostic(
         ds(s, d, "events").toDF, "event_type", "ts"),
-      Some("""WITH d AS (SELECT event_type AS series,
+      """WITH d AS (SELECT event_type AS series,
         |    floor(epoch(ts) / 86400)::BIGINT AS day, count(*)::BIGINT AS x
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL GROUP BY 1, 2),
         |l1 AS (SELECT series, count(*)::BIGINT AS n1_pairs,
@@ -6484,7 +6235,7 @@ object Queries {
         |  CASE WHEN n1_pairs > 0 AND coalesce(n7_pairs, 0) > 0 AND sae1 > 0 THEN
         |    (sae7::DOUBLE / n7_pairs::DOUBLE) / (sae1::DOUBLE / n1_pairs::DOUBLE)
         |  END AS mase
-        |FROM l1 LEFT JOIN l7 ON l1.series = l7.series""".stripMargin)),
+        |FROM l1 LEFT JOIN l7 ON l1.series = l7.series""".stripMargin),
 
     // §2.2/299 — log-rank test between two survival arms (user-id
     // parity): the "do the churn curves differ" companion to row 271's
@@ -6496,7 +6247,7 @@ object Queries {
       (s, d) => operators.Analytics.logRankTest(
         ds(s, d, "events").toDF, "user_id", "ts", pmod(col("u"), lit(2L)),
         censorDays = 1),
-      Some("""WITH pu AS (SELECT user_id AS u,
+      """WITH pu AS (SELECT user_id AS u,
         |    min(floor(epoch(ts) / 86400)::BIGINT) AS fd,
         |    max(floor(epoch(ts) / 86400)::BIGINT) AS ld,
         |    ((user_id % 2) + 2) % 2 AS arm
@@ -6529,7 +6280,7 @@ object Queries {
         |    (o1::DOUBLE * 1048576.0 - e1_q::DOUBLE)
         |    * (o1::DOUBLE * 1048576.0 - e1_q::DOUBLE)
         |    / (v_q::DOUBLE * 1048576.0) END AS chi2
-        |FROM ag CROSS JOIN un""".stripMargin)),
+        |FROM ag CROSS JOIN un""".stripMargin),
 
     // §2.2/300 — HITS hubs & authorities over the customer→supplier
     // bipartite graph (row 149's edge set): ENTIRELY integer power
@@ -6543,7 +6294,7 @@ object Queries {
           .select(col("o_custkey").as("src"), (col("l_suppkey") + 10000000L).as("dst"))
         operators.GraphMetrics.hits(edges, "src", "dst", iters = 2)
       },
-      Some("""WITH e AS (SELECT DISTINCT o_custkey AS src, l_suppkey + 10000000 AS dst
+      """WITH e AS (SELECT DISTINCT o_custkey AS src, l_suppkey + 10000000 AS dst
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
         |  WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL),
         |nodes AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
@@ -6558,30 +6309,18 @@ object Queries {
         |h2 AS (SELECT id, ((h * 1000000) // (SELECT max(h) FROM h2r))::BIGINT AS h FROM h2r)
         |SELECT n.id AS node_id, coalesce(h2.h, 0)::BIGINT AS hub_micro,
         |  coalesce(a2.a, 0)::BIGINT AS auth_micro
-        |FROM nodes n LEFT JOIN h2 ON h2.id = n.id LEFT JOIN a2 ON a2.id = n.id""".stripMargin)),
+        |FROM nodes n LEFT JOIN h2 ON h2.id = n.id LEFT JOIN a2 ON a2.id = n.id""".stripMargin),
 
     // §2.2/301 — per-query Average Precision (MAP@k): the
     // order-sensitive grade between MRR (266) and nDCG (243), entirely
     // integer (cum_hits·10^6 div rank summed, divided by min(n_rel,k)).
     "sim_map_eval" -> QueryDef(
       (s, d) => {
-        val emb = ds(s, d, "embeddings").toDF
-          .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
-            graft.functions.VectorFunctions.allFinite(col("embedding")))
+        val emb = finiteEmbeddings(s, d, "vec_id", "embedding")
         Similarity.mapAtK(emb, emb.filter(col("vec_id") < 20),
           "vec_id", "embedding", "label", k = 10)
       },
-      Some("""WITH reb AS (SELECT vec_id, embedding, label FROM embeddings
-        |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-        |    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0),
-        |q AS (SELECT vec_id AS qid, embedding AS qv, label AS ql
-        |  FROM reb WHERE vec_id < 20 AND label IS NOT NULL),
-        |sc AS (SELECT qid, ql, e.vec_id AS nid, e.label AS nl,
-        |    list_cosine_similarity(qv::DOUBLE[], e.embedding::DOUBLE[]) AS c
-        |  FROM q JOIN reb e ON e.vec_id <> qid),
-        |r AS (SELECT qid, ql, nl,
-        |    row_number() OVER (PARTITION BY qid ORDER BY c DESC, nid) AS rank
-        |  FROM sc WHERE c IS NOT NULL),
+      s"""WITH $rankedNeighborsSql,
         |r2 AS (SELECT qid, ql, nl, rank,
         |    sum(CASE WHEN nl = ql THEN 1 ELSE 0 END) OVER (PARTITION BY qid
         |      ORDER BY rank ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
@@ -6596,7 +6335,7 @@ object Queries {
         |  h.hits_at_k,
         |  CASE WHEN coalesce(nr.n_rel, 0) > 0
         |    THEN (ap_num // least(nr.n_rel, 10))::BIGINT END AS ap_micro
-        |FROM h LEFT JOIN nr ON h.qid = nr.qid""".stripMargin)),
+        |FROM h LEFT JOIN nr ON h.qid = nr.qid""".stripMargin),
 
     // §2.2/302 — population stability index per source vs corpus over
     // digit-count length buckets (exact integer bucketing — no
@@ -6623,7 +6362,7 @@ object Queries {
           .agg(min("n_s").as("n_docs"), min("n_buckets").as("n_buckets"),
             sum("term").as("psi_q"))
       },
-      Some("""WITH base AS (SELECT source, length((n_chars)::VARCHAR) AS b
+      """WITH base AS (SELECT source, length((n_chars)::VARCHAR) AS b
         |  FROM documents WHERE source IS NOT NULL AND n_chars IS NOT NULL
         |    AND n_chars > 0),
         |sb AS (SELECT source, b, count(*)::BIGINT AS n_sb FROM base GROUP BY 1, 2),
@@ -6637,7 +6376,7 @@ object Queries {
         |    * ln((n_sb::DOUBLE * n_c::DOUBLE) / (n_cb::DOUBLE * n_s::DOUBLE))
         |    * 1048576.0)::BIGINT)::BIGINT AS psi_q
         |FROM sb JOIN cb USING (b) JOIN ns USING (source) CROSS JOIN nc
-        |GROUP BY 1""".stripMargin)),
+        |GROUP BY 1""".stripMargin),
 
     // §2.2/303 — blocklist term filtering: per source the docs
     // containing any blocklisted token and the total distinct-term
@@ -6660,7 +6399,7 @@ object Queries {
             sum(when(col("h") > 0, 1L).otherwise(0L)).as("n_flagged"),
             coalesce(sum("h"), lit(0L)).cast("long").as("total_hits"))
       },
-      Some("""WITH docs AS (SELECT doc_id, source, text FROM documents
+      """WITH docs AS (SELECT doc_id, source, text FROM documents
         |  WHERE source IS NOT NULL AND text IS NOT NULL),
         |hits AS (SELECT doc_id, source, count(*)::BIGINT AS h FROM (
         |    SELECT doc_id, source,
@@ -6670,7 +6409,7 @@ object Queries {
         |SELECT d.source AS source, count(*)::BIGINT AS n_docs,
         |  sum(CASE WHEN h > 0 THEN 1 ELSE 0 END)::BIGINT AS n_flagged,
         |  coalesce(sum(h), 0)::BIGINT AS total_hits
-        |FROM docs d LEFT JOIN hits USING (doc_id) GROUP BY 1""".stripMargin)),
+        |FROM docs d LEFT JOIN hits USING (doc_id) GROUP BY 1""".stripMargin),
 
     // §2.2/304 — t-closeness audit: per quasi-group (customer nation)
     // the exact 1-D EMD (row 283's operator) between the group's
@@ -6684,7 +6423,7 @@ object Queries {
         .withColumn("is_tclose", col("emd") <= lit(500.0))
         .select(col("c_nationkey"), col("n_group"), col("n_total"),
           col("emd_num"), col("emd"), col("is_tclose")),
-      Some("""WITH vals AS (SELECT c_nationkey AS grp, round(c_acctbal)::BIGINT AS v
+      """WITH vals AS (SELECT c_nationkey AS grp, round(c_acctbal)::BIGINT AS v
         |  FROM customer WHERE c_nationkey IS NOT NULL AND c_acctbal IS NOT NULL),
         |sc AS (SELECT grp, v, count(*)::BIGINT AS n_sv FROM vals GROUP BY 1, 2),
         |g AS (SELECT grp, count(*)::BIGINT AS n_s FROM vals GROUP BY 1),
@@ -6704,7 +6443,7 @@ object Queries {
         |      / (min(tot.n_g) * min(cum.n_s))::DOUBLE AS emd
         |  FROM cum JOIN gc USING (v) CROSS JOIN tot GROUP BY 1)
         |SELECT c_nationkey, n_group, n_total, emd_num, emd,
-        |  emd <= 500.0 AS is_tclose FROM e""".stripMargin)),
+        |  emd <= 500.0 AS is_tclose FROM e""".stripMargin),
 
     // §2.2/305 — Cochran's Q over three related binary behaviors per
     // user (viewed / clicked / purchased): did the same users respond
@@ -6721,7 +6460,7 @@ object Queries {
           ("t_view", col("t_view")), ("t_click", col("t_click")),
           ("t_purchase", col("t_purchase"))))
       },
-      Some("""WITH u AS (SELECT user_id,
+      """WITH u AS (SELECT user_id,
         |    max(event_type = 'view') AS t_view,
         |    max(event_type = 'click') AS t_click,
         |    max(event_type = 'purchase') AS t_purchase
@@ -6744,7 +6483,7 @@ object Queries {
         |        + c3::DOUBLE * c3::DOUBLE)
         |      - n_yes::DOUBLE * n_yes::DOUBLE)
         |    / (3 * n_yes - r_sq)::DOUBLE END AS q_stat
-        |FROM a""".stripMargin)),
+        |FROM a""".stripMargin),
 
     // §2.2/306 — Wilcoxon signed-rank: per user, spend cents on
     // even-numbered days vs odd-numbered days (paired halves of the
@@ -6767,7 +6506,7 @@ object Queries {
             lit(0L)).as("y"))
         operators.Stats.wilcoxonSignedRank(units, col("x"), col("y"))
       },
-      Some("""WITH e AS (SELECT user_id,
+      """WITH e AS (SELECT user_id,
         |    floor(epoch(ts))::BIGINT // 86400 AS day,
         |    round(value * 100)::BIGINT AS cents
         |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
@@ -6798,7 +6537,7 @@ object Queries {
         |      / sqrt(n_eff::DOUBLE * (n_eff::DOUBLE + 1.0)
         |        * (2.0 * n_eff::DOUBLE + 1.0) / 6.0 - tie_cub::DOUBLE / 12.0)
         |    END AS z_stat
-        |FROM agg CROSS JOIN counts""".stripMargin)),
+        |FROM agg CROSS JOIN counts""".stripMargin),
 
     // §2.2/307 — Friedman rank test: blocks = users, treatments = the
     // event-type catalog, value = zero-filled per-type event count —
@@ -6818,7 +6557,7 @@ object Queries {
         operators.Stats.friedmanTest(cells, col("user_id"),
           col("event_type"), col("c"))
       },
-      Some("""WITH e AS (SELECT user_id, event_type FROM events
+      """WITH e AS (SELECT user_id, event_type FROM events
         |  WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
         |cnt AS (SELECT user_id, event_type, count(*)::BIGINT AS c
         |  FROM e GROUP BY 1, 2),
@@ -6851,7 +6590,7 @@ object Queries {
         |        * (k_treat::DOUBLE + 1.0) * (k_treat::DOUBLE + 1.0)) END AS chi2
         |  FROM shape CROSS JOIN a4t CROSS JOIN rsq)
         |SELECT j AS treat, n_blocks_t, r2_sum, n_blocks, k_treat, chi2
-        |FROM pt CROSS JOIN st""".stripMargin)),
+        |FROM pt CROSS JOIN st""".stripMargin),
 
     // §2.2/308 — Cohen's d + Hedges' g effect size: BUILDING-segment
     // account balances vs the rest — "how big is the difference",
@@ -6862,7 +6601,7 @@ object Queries {
           .filter(col("c_mktsegment").isNotNull && col("c_acctbal").isNotNull),
         col("c_mktsegment") === "BUILDING",
         round(col("c_acctbal") * 100).cast("long")),
-      Some("""WITH u AS (SELECT (c_mktsegment = 'BUILDING') AS g,
+      """WITH u AS (SELECT (c_mktsegment = 'BUILDING') AS g,
         |    round(c_acctbal * 100)::BIGINT AS v FROM customer
         |  WHERE c_mktsegment IS NOT NULL AND c_acctbal IS NOT NULL),
         |a AS (SELECT
@@ -6886,7 +6625,7 @@ object Queries {
         |SELECT n1, n2, s1, s2, d_stat,
         |  d_stat * (1.0 - 3.0 / (4.0 * (n1::DOUBLE + n2::DOUBLE) - 9.0))
         |    AS g_stat
-        |FROM dstat""".stripMargin)),
+        |FROM dstat""".stripMargin),
 
     // §2.2/309 — 2×2 odds-ratio battery: exposure = user ever
     // clicked, outcome = user ever purchased; OR, RR, Woolf 95% CI —
@@ -6899,7 +6638,7 @@ object Queries {
           max(col("event_type") === "purchase").as("o_purchase"))
         operators.Stats.oddsRatio(units, col("e_click"), col("o_purchase"))
       },
-      Some("""WITH u AS (SELECT user_id,
+      """WITH u AS (SELECT user_id,
         |    max(event_type = 'click') AS e, max(event_type = 'purchase') AS o
         |  FROM events WHERE user_id IS NOT NULL GROUP BY user_id),
         |f AS (SELECT * FROM u WHERE e IS NOT NULL AND o IS NOT NULL),
@@ -6922,7 +6661,7 @@ object Queries {
         |SELECT n_units, a, b, c, d, odds_ratio, risk_ratio,
         |  exp(ln(odds_ratio) - 1.96 * se) AS or_ci_lo,
         |  exp(ln(odds_ratio) + 1.96 * se) AS or_ci_hi
-        |FROM r""".stripMargin)),
+        |FROM r""".stripMargin),
 
     // §2.2/310 — per-class classifier eval battery over row 36's
     // langid heuristic vs the declared label: confusion cells,
@@ -6932,19 +6671,7 @@ object Queries {
       (s, d) => operators.Stats.confusionStats(
         ds(s, d, "documents").toDF.filter(col("lang").isNotNull),
         col("lang"), TextFunctions.langId(col("text"))),
-      Some("""WITH p AS (SELECT lang AS actual, CASE
-        |  WHEN len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) > 0 THEN 'zh'
-        |  WHEN len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |         t -> t IN ('the','and','of','to','a','in','is','it'))) >=
-        |       len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |         t -> t IN ('el','la','de','los','que','y')))
-        |   AND len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |         t -> t IN ('the','and','of','to','a','in','is','it'))) > 0 THEN 'en'
-        |  WHEN len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |         t -> t IN ('el','la','de','los','que','y'))) >
-        |       len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |         t -> t IN ('the','and','of','to','a','in','is','it'))) THEN 'es'
-        |  ELSE 'unknown' END AS pred
+      s"""WITH p AS (SELECT lang AS actual, $langIdCaseSql AS pred
         |  FROM documents WHERE lang IS NOT NULL),
         |p2 AS (SELECT actual, pred FROM p
         |  WHERE actual IS NOT NULL AND pred IS NOT NULL),
@@ -6977,7 +6704,7 @@ object Queries {
         |    / sqrt((tp::DOUBLE + fp::DOUBLE) * (tp::DOUBLE + fn::DOUBLE)
         |      * (tn::DOUBLE + fp::DOUBLE) * (tn::DOUBLE + fn::DOUBLE)) END AS mcc,
         |  CASE WHEN total > 0 THEN correct::DOUBLE / total::DOUBLE END AS accuracy
-        |FROM k""".stripMargin)),
+        |FROM k""".stripMargin),
 
     // §2.2/311 — exact average precision (PR-curve AP) for length as
     // an 'en' detector: rank by (n_chars DESC, doc_id), per-positive
@@ -6987,7 +6714,7 @@ object Queries {
     "q_pr_auc" -> QueryDef(
       (s, d) => operators.Stats.averagePrecision(ds(s, d, "documents").toDF,
         col("doc_id"), col("n_chars"), col("lang") === "en"),
-      Some("""WITH r AS (SELECT doc_id, n_chars::BIGINT AS s, (lang = 'en') AS y
+      """WITH r AS (SELECT doc_id, n_chars::BIGINT AS s, (lang = 'en') AS y
         |  FROM documents WHERE doc_id IS NOT NULL AND n_chars IS NOT NULL
         |    AND lang IS NOT NULL),
         |rk AS (SELECT y, row_number() OVER (ORDER BY s DESC, doc_id) AS r,
@@ -7000,7 +6727,7 @@ object Queries {
         |SELECT n, n_pos, ap_q,
         |  CASE WHEN n_pos > 0 THEN ap_q::DOUBLE / (n_pos::DOUBLE * 1048576.0)
         |    END AS avg_precision
-        |FROM a CROSS JOIN n""".stripMargin)),
+        |FROM a CROSS JOIN n""".stripMargin),
 
     // §2.2/312 — exact lower weighted median: extendedprice cents per
     // return flag weighted by quantity — "the price of the median
@@ -7011,7 +6738,7 @@ object Queries {
           col("l_returnflag"), round(col("l_extendedprice") * 100).cast("long"),
           round(col("l_quantity")).cast("long"))
         .withColumnRenamed("g", "l_returnflag"),
-      Some("""WITH r AS (SELECT l_returnflag AS g,
+      """WITH r AS (SELECT l_returnflag AS g,
         |    round(l_extendedprice * 100)::BIGINT AS v,
         |    round(l_quantity)::BIGINT AS w FROM lineitem
         |  WHERE l_returnflag IS NOT NULL AND l_extendedprice IS NOT NULL
@@ -7026,7 +6753,7 @@ object Queries {
         |  min(total_weight)::BIGINT AS total_weight,
         |  min(n_values)::BIGINT AS n_values
         |FROM cum JOIN tot ON cum.g = tot.g
-        |WHERE cw * 2 >= total_weight GROUP BY 1""".stripMargin)),
+        |WHERE cw * 2 >= total_weight GROUP BY 1""".stripMargin),
 
     // §2.2/313 — seeded permutation test: is the BUILDING-segment
     // balance difference (row 308's d) significant under label
@@ -7036,7 +6763,7 @@ object Queries {
       (s, d) => operators.Stats.permutationTest(ds(s, d, "customer").toDF,
         col("c_custkey"), col("c_mktsegment") === "BUILDING",
         round(col("c_acctbal") * 100).cast("long"), reps = 199),
-      Some("""WITH u AS (SELECT c_custkey::VARCHAR AS id,
+      """WITH u AS (SELECT c_custkey::VARCHAR AS id,
         |    (c_mktsegment = 'BUILDING') AS arm,
         |    round(c_acctbal * 100)::BIGINT AS v FROM customer
         |  WHERE c_custkey IS NOT NULL AND c_mktsegment IS NOT NULL
@@ -7068,7 +6795,7 @@ object Queries {
         |SELECT n_units, 199::BIGINT AS reps, obs_diff, n_ge,
         |  CASE WHEN obs_diff IS NOT NULL THEN (n_ge::DOUBLE + 1.0) / 200.0
         |    END AS p_value
-        |FROM ge CROSS JOIN obs""".stripMargin)),
+        |FROM ge CROSS JOIN obs""".stripMargin),
 
     // §2.2/314 — decile lift/gains table: account balance as a
     // BUILDING-segment targeting score; exact ntile machinery
@@ -7078,7 +6805,7 @@ object Queries {
       (s, d) => operators.Analytics.liftTable(ds(s, d, "customer").toDF,
         col("c_custkey"), round(col("c_acctbal") * 100).cast("long"),
         col("c_mktsegment") === "BUILDING", k = 10),
-      Some("""WITH r AS (SELECT c_custkey AS id,
+      """WITH r AS (SELECT c_custkey AS id,
         |    round(c_acctbal * 100)::BIGINT AS s,
         |    (c_mktsegment = 'BUILDING') AS y FROM customer
         |  WHERE c_custkey IS NOT NULL AND c_acctbal IS NOT NULL
@@ -7102,7 +6829,7 @@ object Queries {
         |  CASE WHEN pp > 0 THEN cum_pos::DOUBLE / pp::DOUBLE END AS cum_capture,
         |  CASE WHEN pp > 0 AND n_t > 0 THEN
         |    pos_t::DOUBLE * nn::DOUBLE / (n_t::DOUBLE * pp::DOUBLE) END AS lift
-        |FROM c CROSS JOIN g""".stripMargin)),
+        |FROM c CROSS JOIN g""".stripMargin),
 
     // §2.2/315 — ordered pair support within sessions ("a eventually
     // followed by b"): sequence mining's 2-step atom, first-occurrence
@@ -7112,17 +6839,7 @@ object Queries {
     "q_seq_pairs" -> QueryDef(
       (s, d) => operators.Analytics.seqPairSupport(ds(s, d, "events").toDF,
         "user_id", "ts", "event_type", gapSeconds = 1800),
-      Some("""WITH sess AS (SELECT user_id, ep, event_type,
-        |    CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT)
-        |      AS session_id
-        |  FROM (SELECT user_id, ts, event_type, floor(epoch(ts))::BIGINT AS ep,
-        |    CASE WHEN lag(floor(epoch(ts))::BIGINT)
-        |        OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |      OR floor(epoch(ts))::BIGINT - lag(floor(epoch(ts))::BIGINT)
-        |         OVER (PARTITION BY user_id ORDER BY ts) > 1800
-        |    THEN 1 ELSE 0 END AS brk FROM events
-        |    WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |      AND event_type IS NOT NULL) x),
+      s"""WITH sess AS (${sessionsSql("event_type")}),
         |firsts AS (SELECT user_id AS u, session_id AS sid, event_type AS t,
         |    min(ep) AS ft FROM sess GROUP BY 1, 2, 3),
         |ns AS (SELECT count(*)::BIGINT AS n_sessions
@@ -7135,14 +6852,14 @@ object Queries {
         |SELECT from_type, to_type, n_sessions_pair, n_sessions,
         |  CASE WHEN n_sessions > 0 THEN
         |    n_sessions_pair::DOUBLE / n_sessions::DOUBLE END AS support
-        |FROM p CROSS JOIN ns""".stripMargin)),
+        |FROM p CROSS JOIN ns""".stripMargin),
 
     // §2.2/316 — Zipf law fit per source: OLS of quantized ln(freq)
     // on ln(rank) over the token frequency table — the "is this
     // source natural language" diagnostic (natural text ≈ slope −1).
     "text_zipf" -> QueryDef(
       (s, d) => TfIdf.zipfFit(ds(s, d, "documents").toDF, "source", "text"),
-      Some("""WITH tok AS (SELECT source,
+      """WITH tok AS (SELECT source,
         |    unnest(regexp_split_to_array(trim(text), '\s+')) AS w
         |  FROM documents WHERE source IS NOT NULL),
         |cnt AS (SELECT source, w, count(*)::BIGINT AS c FROM tok
@@ -7169,7 +6886,7 @@ object Queries {
         |    END AS intercept_nats,
         |  CASE WHEN n_types > 1 AND dx > 0 AND dy > 0 THEN
         |    num * num / (dx * dy) END AS r2
-        |FROM f""".stripMargin)),
+        |FROM f""".stripMargin),
 
     // §2.2/317 — Slope One collaborative filtering: pairwise
     // event-type intensity deviations over per-user total spend —
@@ -7179,7 +6896,7 @@ object Queries {
       (s, d) => operators.Association.slopeOne(ds(s, d, "events").toDF,
         col("user_id"), col("event_type"),
         round(col("value") * 100).cast("long")),
-      Some("""WITH r AS (SELECT user_id AS u, event_type AS i,
+      """WITH r AS (SELECT user_id AS u, event_type AS i,
         |    round(value * 100)::BIGINT AS rr FROM events
         |  WHERE user_id IS NOT NULL AND event_type IS NOT NULL
         |    AND value IS NOT NULL),
@@ -7188,7 +6905,7 @@ object Queries {
         |    coalesce(sum(a.r - b.r), 0)::BIGINT AS dev_num
         |  FROM ui a JOIN ui b ON a.u = b.u AND a.i <> b.i GROUP BY 1, 2)
         |SELECT item_i, item_j, n_common, dev_num,
-        |  dev_num::DOUBLE / n_common::DOUBLE AS dev FROM p""".stripMargin)),
+        |  dev_num::DOUBLE / n_common::DOUBLE AS dev FROM p""".stripMargin),
 
     // §2.2/318 — turning-points randomness test per event-type daily
     // series: strict local extrema of (prev, cur, next) triples,
@@ -7197,7 +6914,7 @@ object Queries {
     "q_turning_points" -> QueryDef(
       (s, d) => operators.TimeSeries.turningPoints(
         ds(s, d, "events").toDF, "event_type", "ts"),
-      Some("""WITH d AS (SELECT event_type AS series,
+      """WITH d AS (SELECT event_type AS series,
         |    floor(epoch(ts) / 86400)::BIGINT AS day, count(*)::BIGINT AS x
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
         |  GROUP BY 1, 2),
@@ -7213,7 +6930,7 @@ object Queries {
         |  CASE WHEN n_days >= 4 THEN
         |    (t_points::DOUBLE - 2.0 * (n_days::DOUBLE - 2.0) / 3.0)
         |    / sqrt((16.0 * n_days::DOUBLE - 29.0) / 90.0) END AS z
-        |FROM f""".stripMargin)),
+        |FROM f""".stripMargin),
 
     // §2.2/319 — Durbin–Watson on per-series OLS trend residuals:
     // "after detrending, do adjacent days still co-move"; residuals
@@ -7221,7 +6938,7 @@ object Queries {
     "q_durbin_watson" -> QueryDef(
       (s, d) => operators.TimeSeries.durbinWatson(
         ds(s, d, "events").toDF, "event_type", "ts"),
-      Some("""WITH d AS (SELECT event_type AS series,
+      """WITH d AS (SELECT event_type AS series,
         |    floor(epoch(ts) / 86400)::BIGINT AS day, count(*)::BIGINT AS y
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
         |  GROUP BY 1, 2),
@@ -7252,7 +6969,7 @@ object Queries {
         |    coalesce(sum(den_t), 0)::BIGINT AS den_q FROM t GROUP BY series)
         |SELECT series, n_days, num_q, den_q,
         |  CASE WHEN den_q > 0 THEN num_q::DOUBLE / den_q::DOUBLE END AS dw
-        |FROM g""".stripMargin)),
+        |FROM g""".stripMargin),
 
     // §2.2/320 — weekly seasonal strength per series:
     // F = max(0, 1 − SSW(dow)/SST) over the daily curve — "is there a
@@ -7261,7 +6978,7 @@ object Queries {
     "q_seasonal_strength" -> QueryDef(
       (s, d) => operators.TimeSeries.seasonalStrength(
         ds(s, d, "events").toDF, "event_type", "ts"),
-      Some("""WITH d AS (SELECT event_type AS series,
+      """WITH d AS (SELECT event_type AS series,
         |    floor(epoch(ts) / 86400)::BIGINT AS day, count(*)::BIGINT AS y
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
         |  GROUP BY 1, 2),
@@ -7280,7 +6997,7 @@ object Queries {
         |    greatest(0.0, 1.0 - ssw_q::DOUBLE
         |      / ((q::DOUBLE - s::DOUBLE * s::DOUBLE / n_days::DOUBLE)
         |        * 1048576.0)) END AS strength
-        |FROM sw JOIN tt ON sw.series = tt.series""".stripMargin)),
+        |FROM sw JOIN tt ON sw.series = tt.series""".stripMargin),
 
     // §2.2/321 — information-gain feature ranking: which of
     // (priority, order month, customer band) best predicts order
@@ -7292,7 +7009,7 @@ object Queries {
           ("priority", col("o_orderpriority")),
           ("order_month", month(col("o_orderdate"))),
           ("cust_band", pmod(col("o_custkey"), lit(10L))))),
-      Some("""WITH st AS (
+      """WITH st AS (
         |  SELECT o_orderstatus AS l, 'priority' AS f,
         |    o_orderpriority::VARCHAR AS v FROM orders
         |  UNION ALL SELECT o_orderstatus, 'order_month',
@@ -7320,7 +7037,7 @@ object Queries {
         |  CASE WHEN nqn - val_t > 0 THEN
         |    (nqn - lab_t - val_t + cell_t)::DOUBLE / (nqn - val_t)::DOUBLE
         |  END AS gain_ratio
-        |FROM j""".stripMargin)),
+        |FROM j""".stripMargin),
 
     // §2.2/322 — sample-ratio-mismatch guardrail on the deterministic
     // md5 1:1 user split: the first check before ANY experiment
@@ -7333,7 +7050,7 @@ object Queries {
           graft.functions.HashFunctions.stableHash56(
             col("user_id").cast("string")) % 2L === 1L)
       },
-      Some("""WITH u AS (SELECT DISTINCT user_id FROM events
+      """WITH u AS (SELECT DISTINCT user_id FROM events
         |  WHERE user_id IS NOT NULL),
         |a AS (SELECT (('0x' || substring(md5(user_id::VARCHAR), 1, 14))::BIGINT
         |    % 2 = 1) AS arm FROM u),
@@ -7347,7 +7064,7 @@ object Queries {
         |  CASE WHEN n0 + n1 > 0 THEN (n1::DOUBLE - n0::DOUBLE)
         |    * (n1::DOUBLE - n0::DOUBLE) / (n0::DOUBLE + n1::DOUBLE) > 3.841
         |  END AS srm_flag
-        |FROM g""".stripMargin)),
+        |FROM g""".stripMargin),
 
     // §2.2/323 — Cochran–Armitage trend test: does the fulfilled rate
     // trend monotonically across the ordered priority tiers — the
@@ -7359,7 +7076,7 @@ object Queries {
       (s, d) => operators.Stats.cochranArmitage(ds(s, d, "orders").toDF,
         expr("try_cast(substring(o_orderpriority, 1, 1) AS BIGINT)"),
         col("o_orderstatus") === "F"),
-      Some("""WITH u AS (SELECT
+      """WITH u AS (SELECT
         |    TRY_CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS s,
         |    (o_orderstatus = 'F') AS y FROM orders
         |  WHERE o_orderstatus IS NOT NULL),
@@ -7378,7 +7095,7 @@ object Queries {
         |    / sqrt(r::DOUBLE * (n::DOUBLE - r::DOUBLE)
         |      * (n::DOUBLE * ssn::DOUBLE - sn::DOUBLE * sn::DOUBLE))
         |  END AS z_stat
-        |FROM a""".stripMargin)),
+        |FROM a""".stripMargin),
 
     // §2.2/324 — Theil T inequality of customer revenue within each
     // nation: the decomposable information-theoretic rail beside Gini
@@ -7393,7 +7110,7 @@ object Queries {
           col("c_nationkey"), col("c_custkey"),
           round(col("o_totalprice") * 100).cast("long"))
       },
-      Some("""WITH f AS (SELECT c_nationkey AS mkt, c_custkey AS ent,
+      """WITH f AS (SELECT c_nationkey AS mkt, c_custkey AS ent,
         |    round(o_totalprice * 100)::BIGINT AS u
         |  FROM orders JOIN customer ON o_custkey = c_custkey
         |  WHERE c_nationkey IS NOT NULL AND c_custkey IS NOT NULL
@@ -7411,7 +7128,7 @@ object Queries {
         |  coalesce(sum(term), 0)::BIGINT AS theil_q,
         |  coalesce(sum(term), 0)::DOUBLE
         |    / (min(sum_units)::DOUBLE * 1048576.0) AS theil
-        |FROM t GROUP BY mkt""".stripMargin)),
+        |FROM t GROUP BY mkt""".stripMargin),
 
     // §2.2/325 — Gini–Simpson lexical diversity per source: collision
     // probability over token counts — the third diversity rail beside
@@ -7419,7 +7136,7 @@ object Queries {
     "text_simpson" -> QueryDef(
       (s, d) => TfIdf.simpsonDiversity(ds(s, d, "documents").toDF,
         "source", "text"),
-      Some("""WITH tok AS (SELECT source,
+      """WITH tok AS (SELECT source,
         |    unnest(regexp_split_to_array(trim(text), '\s+')) AS w
         |  FROM documents WHERE source IS NOT NULL),
         |cnt AS (SELECT source, w, count(*)::BIGINT AS c FROM tok
@@ -7431,7 +7148,7 @@ object Queries {
         |SELECT source, n_tokens, n_types, cp::BIGINT AS coll_pairs2,
         |  CASE WHEN n_tokens > 1 THEN 1.0 - cp::DOUBLE
         |    / (n_tokens::DOUBLE * (n_tokens::DOUBLE - 1.0)) END AS simpson
-        |FROM a""".stripMargin)),
+        |FROM a""".stripMargin),
 
     // §2.2/326 — k-NN classification by retrieval (leave-one-out over
     // the labeled corpus, k=5 cosine vote): "are these embeddings
@@ -7440,15 +7157,12 @@ object Queries {
     // tie-break.
     "q_knn_classify" -> QueryDef(
       (s, d) => {
-        val emb = ds(s, d, "embeddings").toDF
-          .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
-            graft.functions.VectorFunctions.allFinite(col("embedding")))
+        val emb = finiteEmbeddings(s, d, "vec_id", "embedding")
         operators.Similarity.knnClassify(emb, emb.filter(col("vec_id") < 50),
           "vec_id", "embedding", "label", k = 5)
       },
-      Some("""WITH e AS MATERIALIZED (SELECT vec_id, embedding, label
-        |  FROM embeddings WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-        |    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0),
+      s"""WITH e AS MATERIALIZED (SELECT vec_id, embedding, label
+        |  FROM embeddings WHERE ${finiteEmbeddingSql(Seq("vec_id"))}),
         |lab AS (SELECT * FROM e WHERE label IS NOT NULL),
         |q AS (SELECT vec_id AS qid, embedding AS qv, label AS tl
         |  FROM e WHERE vec_id < 50),
@@ -7465,7 +7179,7 @@ object Queries {
         |      ORDER BY n_votes DESC, nl) AS rk FROM v) z WHERE rk = 1)
         |SELECT p.qid AS query_id, p.nl AS pred_label, n_votes,
         |  q.tl AS true_label, p.nl = q.tl AS correct
-        |FROM p JOIN q ON q.qid = p.qid""".stripMargin)),
+        |FROM p JOIN q ON q.qid = p.qid""".stripMargin),
 
     // §2.2/327 — price elasticity per brand: quantized log-log OLS of
     // part demand (summed quantity) on retail price — the power-law
@@ -7484,7 +7198,7 @@ object Queries {
           col("qty"))
           .withColumnRenamed("g", "p_brand")
       },
-      Some("""WITH li AS (SELECT l_partkey,
+      """WITH li AS (SELECT l_partkey,
         |    sum(round(l_quantity)::BIGINT)::BIGINT AS qty FROM lineitem
         |  WHERE l_partkey IS NOT NULL AND l_quantity IS NOT NULL GROUP BY 1),
         |pts AS (SELECT p_brand AS g, round(p_retailprice * 100)::BIGINT AS xr,
@@ -7510,7 +7224,7 @@ object Queries {
         |  END AS intercept_nats,
         |  CASE WHEN n_points > 1 AND dx > 0 AND dy > 0 THEN
         |    num * num / (dx * dy) END AS r2
-        |FROM ff""".stripMargin)),
+        |FROM ff""".stripMargin),
 
     // §2.2/328 — single changepoint per series by binary segmentation:
     // WHERE the level shifted, where CUSUM (210) only shows drift;
@@ -7519,7 +7233,7 @@ object Queries {
     "q_changepoint" -> QueryDef(
       (s, d) => operators.TimeSeries.changepointBinary(
         ds(s, d, "events").toDF, "event_type", "ts"),
-      Some("""WITH d AS (SELECT event_type AS series,
+      """WITH d AS (SELECT event_type AS series,
         |    floor(epoch(ts) / 86400)::BIGINT AS day, count(*)::BIGINT AS y
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
         |  GROUP BY 1, 2),
@@ -7547,7 +7261,7 @@ object Queries {
         |SELECT series, n::BIGINT AS n_days, day AS split_day, gain_q,
         |  CASE WHEN sst > 0 THEN gain_q::DOUBLE / (sst * 1048576.0)
         |    END AS gain_frac
-        |FROM b WHERE rk = 1""".stripMargin)),
+        |FROM b WHERE rk = 1""".stripMargin),
 
     // §2.2/329 — graph pseudo-diameter by double-sweep BFS over the
     // co-purchase graph: two bfsHops sweeps instead of the all-pairs
@@ -7555,20 +7269,9 @@ object Queries {
     // is this graph"; deterministic min-id anchor, (dist DESC, id)
     // far-node tie-break.
     "q_diameter" -> QueryDef(
-      (s, d) => {
-        val li = ds(s, d, "lineitem").toDF
-          .filter(col("l_quantity") >= 45)
-          .select("l_orderkey", "l_partkey")
-        val e = li.as("x").join(li.as("y"),
-            col("x.l_orderkey") === col("y.l_orderkey") &&
-              col("x.l_partkey") < col("y.l_partkey"))
-          .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-        operators.ShortestPaths.pseudoDiameter(e, "src", "dst", maxHops = 32)
-      },
-      Some("""WITH RECURSIVE e AS (SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM lineitem x JOIN lineitem y
-        |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
-        |  WHERE x.l_quantity >= 45 AND y.l_quantity >= 45),
+      (s, d) => operators.ShortestPaths.pseudoDiameter(
+        coPurchaseEdges(s, d, Some(col("l_quantity") >= 45)), "src", "dst", maxHops = 32),
+      s"""WITH RECURSIVE e AS (${coPurchaseSql(Some("l_quantity >= 45"))}),
         |u AS (SELECT a AS s, b AS t FROM e UNION SELECT b, a FROM e),
         |st AS (SELECT min(s) AS sid FROM (SELECT s FROM u UNION SELECT t FROM u) z
         |  ),
@@ -7584,7 +7287,7 @@ object Queries {
         |    count(*)::BIGINT AS n_reached FROM d2)
         |SELECT s2.sid::BIGINT AS start_node, far.fid::BIGINT AS far_node,
         |  far.ecc::BIGINT AS ecc_start, pseudo_diameter, n_reached
-        |FROM far CROSS JOIN s2 CROSS JOIN agg2""".stripMargin)),
+        |FROM far CROSS JOIN s2 CROSS JOIN agg2""".stripMargin),
 
     // §2.2/330 — exact per-group mode with the deterministic
     // (count DESC, value ASC) tie-break: the missing descriptive
@@ -7593,7 +7296,7 @@ object Queries {
       (s, d) => operators.Stats.modePerGroup(ds(s, d, "lineitem").toDF,
           col("l_returnflag"), round(col("l_quantity")))
         .withColumnRenamed("g", "l_returnflag"),
-      Some("""WITH cells AS (SELECT l_returnflag AS g,
+      """WITH cells AS (SELECT l_returnflag AS g,
         |    round(l_quantity)::BIGINT AS v, count(*)::BIGINT AS c
         |  FROM lineitem WHERE l_returnflag IS NOT NULL
         |    AND l_quantity IS NOT NULL GROUP BY 1, 2),
@@ -7604,7 +7307,7 @@ object Queries {
         |  FROM cells)
         |SELECT r.g AS l_returnflag, v AS mode_value, c AS mode_count,
         |  n_distinct, n_rows
-        |FROM r JOIN t ON r.g = t.g WHERE rk = 1""".stripMargin)),
+        |FROM r JOIN t ON r.g = t.g WHERE rk = 1""".stripMargin),
 
     // §2.2/331 — inter-event gap profile per user: exact epoch-second
     // gaps under a user-partitioned lag ordered by the total
@@ -7612,7 +7315,7 @@ object Queries {
     "q_gap_stats" -> QueryDef(
       (s, d) => operators.Analytics.gapStats(ds(s, d, "events").toDF,
         "user_id", "ts", "event_id"),
-      Some("""WITH e AS (SELECT user_id, floor(epoch(ts))::BIGINT AS ep,
+      """WITH e AS (SELECT user_id, floor(epoch(ts))::BIGINT AS ep,
         |    event_id AS eid FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
         |    AND event_id IS NOT NULL),
@@ -7629,7 +7332,7 @@ object Queries {
         |    THEN sum(gap)::DOUBLE
         |      / sum(CASE WHEN gap IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE
         |  END AS mean_gap_s
-        |FROM g GROUP BY user_id""".stripMargin)),
+        |FROM g GROUP BY user_id""".stripMargin),
 
     // §2.2/332 — content-defined chunking boilerplate report: CDC cut
     // after any token whose 3-token-gram hash ≡ 0 (mod 32) — the
@@ -7638,7 +7341,7 @@ object Queries {
     "dedup_cdc" -> QueryDef(
       (s, d) => operators.Dedup.cdcChunkReport(ds(s, d, "documents").toDF,
         "doc_id", "text", modulus = 32),
-      Some("""WITH base AS (SELECT doc_id,
+      """WITH base AS (SELECT doc_id,
         |    regexp_split_to_array(trim(text), '\s+') AS toks
         |  FROM documents WHERE doc_id IS NOT NULL AND text IS NOT NULL),
         |nz AS (SELECT * FROM base WHERE len(toks) > 0),
@@ -7666,7 +7369,7 @@ object Queries {
         |  FROM chunks JOIN occ USING (h) GROUP BY doc_id)
         |SELECT doc_id, n_chunks, n_shared,
         |  n_shared::DOUBLE / n_chunks::DOUBLE AS shared_ratio
-        |FROM per""".stripMargin)),
+        |FROM per""".stripMargin),
 
     // §2.2/333 — Brown–Forsythe variance-homogeneity test (r14): the
     // robust Levene — |deviation from the group's exact LOWER median|
@@ -7674,7 +7377,7 @@ object Queries {
     "q_brown_forsythe" -> QueryDef(
       (s, d) => operators.Stats.brownForsythe(ds(s, d, "lineitem").toDF,
         col("l_returnflag"), round(col("l_quantity"))),
-      Some("""WITH vals AS (SELECT l_returnflag AS g, round(l_quantity)::BIGINT AS v
+      """WITH vals AS (SELECT l_returnflag AS g, round(l_quantity)::BIGINT AS v
         |  FROM lineitem WHERE l_returnflag IS NOT NULL AND l_quantity IS NOT NULL),
         |vc AS (SELECT g, v, count(*)::BIGINT AS c FROM vals GROUP BY 1, 2),
         |cm AS (SELECT g, v, sum(c) OVER (PARTITION BY g ORDER BY v
@@ -7694,7 +7397,7 @@ object Queries {
         |  CASE WHEN k_groups > 1 AND n > k_groups AND q - tsum > 0
         |    THEN ((tsum - s * s // n)::DOUBLE / (k_groups - 1)::DOUBLE)
         |       / ((q - tsum)::DOUBLE / (n - k_groups)::DOUBLE) END AS f_stat
-        |FROM t""".stripMargin)),
+        |FROM t""".stripMargin),
 
     // §2.2/334 — Bartlett's equal-variance test (r14): the
     // normality-assuming sibling; per-group ln(s²) floor-quantized at
@@ -7702,7 +7405,7 @@ object Queries {
     "q_bartlett" -> QueryDef(
       (s, d) => operators.Stats.bartlettTest(ds(s, d, "lineitem").toDF,
         col("l_returnflag"), round(col("l_quantity"))),
-      Some("""WITH g0 AS (SELECT l_returnflag AS g, count(*)::BIGINT AS n_g,
+      """WITH g0 AS (SELECT l_returnflag AS g, count(*)::BIGINT AS n_g,
         |    sum(round(l_quantity)::BIGINT)::HUGEINT AS s_g,
         |    sum(round(l_quantity)::BIGINT * round(l_quantity)::BIGINT)::HUGEINT AS q_g
         |  FROM lineitem WHERE l_returnflag IS NOT NULL AND l_quantity IS NOT NULL
@@ -7737,14 +7440,14 @@ object Queries {
         |      / (1.0 + (inv_q::DOUBLE / 1048576.0
         |          - 1.0 / (n::DOUBLE - k_groups::DOUBLE))
         |        / (3.0 * (k_groups::DOUBLE - 1.0))) END AS chi2
-        |FROM t CROSS JOIN dg""".stripMargin)),
+        |FROM t CROSS JOIN dg""".stripMargin),
 
     // §2.2/335 — Jarque–Bera normality screen per group (r14): JB from
     // exact DECIMAL(38,0) raw-moment sums, skew/kurtosis fixed doubles.
     "q_jarque_bera" -> QueryDef(
       (s, d) => operators.Stats.jarqueBera(ds(s, d, "lineitem").toDF,
         col("l_returnflag"), round(col("l_quantity"))),
-      Some("""WITH b AS (SELECT l_returnflag AS g, round(l_quantity)::BIGINT AS x
+      """WITH b AS (SELECT l_returnflag AS g, round(l_quantity)::BIGINT AS x
         |  FROM lineitem WHERE l_returnflag IS NOT NULL AND l_quantity IS NOT NULL),
         |m AS (SELECT g, count(*)::HUGEINT AS n, sum(x)::HUGEINT AS s1,
         |    sum(x * x)::HUGEINT AS s2,
@@ -7767,14 +7470,14 @@ object Queries {
         |        + (n::DOUBLE * m4::DOUBLE / (m2::DOUBLE * m2::DOUBLE) - 3.0)
         |          * (n::DOUBLE * m4::DOUBLE / (m2::DOUBLE * m2::DOUBLE) - 3.0) / 4.0) END
         |    AS jb_stat
-        |FROM c""".stripMargin)),
+        |FROM c""".stripMargin),
 
     // §2.2/336 — Grubbs' single-outlier test per group (r14): suspect
     // = argmax |n·x − Σx| (tie: smaller value), G one fixed double.
     "q_grubbs" -> QueryDef(
       (s, d) => operators.Stats.grubbsTest(ds(s, d, "lineitem").toDF,
         col("l_returnflag"), round(col("l_extendedprice"))),
-      Some("""WITH b AS (SELECT l_returnflag AS g, round(l_extendedprice)::BIGINT AS x
+      """WITH b AS (SELECT l_returnflag AS g, round(l_extendedprice)::BIGINT AS x
         |  FROM lineitem WHERE l_returnflag IS NOT NULL AND l_extendedprice IS NOT NULL),
         |m AS (SELECT g, count(*)::BIGINT AS n, sum(x)::HUGEINT AS s,
         |    sum(x::HUGEINT * x)::HUGEINT AS q FROM b GROUP BY g),
@@ -7787,7 +7490,7 @@ object Queries {
         |    THEN (dv::DOUBLE / n::DOUBLE)
         |      / sqrt((n::HUGEINT * q - s * s)::DOUBLE / (n::DOUBLE * (n::DOUBLE - 1.0)))
         |  END AS g_stat
-        |FROM r WHERE rk = 1""".stripMargin)),
+        |FROM r WHERE rk = 1""".stripMargin),
 
     // §2.2/337 — Fleiss' kappa multi-rater agreement (r14): orders as
     // items, lineitems as raters, returnflag as category; items off
@@ -7796,7 +7499,7 @@ object Queries {
       (s, d) => operators.Stats.fleissKappa(ds(s, d, "lineitem").toDF
           .filter(col("l_orderkey").isNotNull && col("l_returnflag").isNotNull),
         col("l_orderkey"), col("l_returnflag")),
-      Some("""WITH r AS (SELECT l_orderkey AS i, l_returnflag AS c FROM lineitem
+      """WITH r AS (SELECT l_orderkey AS i, l_returnflag AS c FROM lineitem
         |  WHERE l_orderkey IS NOT NULL AND l_returnflag IS NOT NULL),
         |pi AS (SELECT i, count(*)::BIGINT AS n_i FROM r GROUP BY i),
         |md AS (SELECT n_i AS n_r FROM (SELECT n_i, count(*) AS cnt FROM pi GROUP BY n_i
@@ -7828,7 +7531,7 @@ object Queries {
         |      / (1.0 - marg_sq::DOUBLE
         |        / (n_items::DOUBLE * n_r::DOUBLE * n_items::DOUBLE * n_r::DOUBLE)) END
         |    AS kappa
-        |FROM s CROSS JOIN mg CROSS JOIN md CROSS JOIN ex""".stripMargin)),
+        |FROM s CROSS JOIN mg CROSS JOIN md CROSS JOIN ex""".stripMargin),
 
     // §2.2/338 — G-test of independence (r14): the additive
     // log-likelihood-ratio sibling of chi-square, per-cell quantized
@@ -7836,7 +7539,7 @@ object Queries {
     "q_gtest" -> QueryDef(
       (s, d) => operators.Stats.gTest(ds(s, d, "lineitem").toDF,
         col("l_returnflag"), col("l_linestatus")),
-      Some("""WITH p AS (SELECT l_returnflag AS a, l_linestatus AS b FROM lineitem
+      """WITH p AS (SELECT l_returnflag AS a, l_linestatus AS b FROM lineitem
         |  WHERE l_returnflag IS NOT NULL AND l_linestatus IS NOT NULL),
         |cells AS (SELECT a, b, count(*)::BIGINT AS o FROM p GROUP BY 1, 2),
         |ra AS (SELECT a, sum(o)::BIGINT AS r FROM cells GROUP BY a),
@@ -7850,14 +7553,14 @@ object Queries {
         |  FROM cells JOIN ra USING (a) JOIN cb USING (b) CROSS JOIN nn)
         |SELECT n, k_a, k_b, ((k_a - 1) * (k_b - 1))::BIGINT AS df, g_q,
         |  2.0 * g_q::DOUBLE / 1048576.0 AS g_stat
-        |FROM q CROSS JOIN ka CROSS JOIN kb""".stripMargin)),
+        |FROM q CROSS JOIN ka CROSS JOIN kb""".stripMargin),
 
     // §2.2/339 — Mood's median test (r14): global lower median splits
     // each group ≤/>, per-group χ² terms quantized and integer-summed.
     "q_mood_median" -> QueryDef(
       (s, d) => operators.Stats.moodMedianTest(ds(s, d, "lineitem").toDF,
         col("l_returnflag"), round(col("l_quantity"))),
-      Some("""WITH vals AS (SELECT l_returnflag AS g, round(l_quantity)::BIGINT AS v
+      """WITH vals AS (SELECT l_returnflag AS g, round(l_quantity)::BIGINT AS v
         |  FROM lineitem WHERE l_returnflag IS NOT NULL AND l_quantity IS NOT NULL),
         |vc AS (SELECT v, count(*)::BIGINT AS c FROM vals GROUP BY v),
         |cm AS (SELECT v, sum(c) OVER (ORDER BY v
@@ -7882,7 +7585,7 @@ object Queries {
         |  FROM pg CROSS JOIN tt)
         |SELECT g, n_le, n_gt, chi2_q, chi2_q::DOUBLE / 1048576.0 AS chi2,
         |  global_median
-        |FROM pg CROSS JOIN tq""".stripMargin)),
+        |FROM pg CROSS JOIN tq""".stripMargin),
 
     // §2.2/340 — Page's trend test (r14): Friedman's directional
     // sibling — L2 = Σ j·R2_j over the same tie-averaged double-ranks,
@@ -7901,7 +7604,7 @@ object Queries {
         operators.Stats.pageTrendTest(cells, col("user_id"),
           col("event_type"), col("c"))
       },
-      Some("""WITH e AS (SELECT user_id, event_type FROM events
+      """WITH e AS (SELECT user_id, event_type FROM events
         |  WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
         |cnt AS (SELECT user_id, event_type, count(*)::BIGINT AS c
         |  FROM e GROUP BY 1, 2),
@@ -7929,7 +7632,7 @@ object Queries {
         |    / sqrt(n_blocks::DOUBLE * k_treat::DOUBLE * k_treat::DOUBLE
         |      * (k_treat::DOUBLE + 1.0)
         |      * (k_treat::DOUBLE * k_treat::DOUBLE - 1.0) / 144.0) END AS z_stat
-        |FROM l2 CROSS JOIN shape""".stripMargin)),
+        |FROM l2 CROSS JOIN shape""".stripMargin),
 
     // §2.2/341 — Bowker's k×k symmetry test (r14): McNemar's
     // generalization over paired first/last lineitem categories per
@@ -7949,7 +7652,7 @@ object Queries {
               .getField("l_returnflag").as("b"))
         operators.Stats.bowkerTest(units, col("a"), col("b"))
       },
-      Some("""WITH u AS (SELECT l_orderkey,
+      """WITH u AS (SELECT l_orderkey,
         |    min({'k': l_linenumber, 'f': l_returnflag}).f AS a,
         |    max({'k': l_linenumber, 'f': l_returnflag}).f AS b
         |  FROM lineitem WHERE l_orderkey IS NOT NULL AND l_returnflag IS NOT NULL
@@ -7971,14 +7674,14 @@ object Queries {
         |  FROM sym WHERE n_ij + n_ji > 0)
         |SELECT n_units, k_cats, df, chi2_q,
         |  chi2_q::DOUBLE / 1048576.0 AS chi2
-        |FROM tq CROSS JOIN nn CROSS JOIN kk""".stripMargin)),
+        |FROM tq CROSS JOIN nn CROSS JOIN kk""".stripMargin),
 
     // §2.2/342 — Ljung–Box portmanteau whiteness diagnostic (r14):
     // Σ over lags 1..7 of quantized r²/n_pairs terms, Q one double.
     "q_ljung_box" -> QueryDef(
       (s, d) => operators.TimeSeries.ljungBox(ds(s, d, "events").toDF,
         "event_type", "ts", maxLag = 7),
-      Some("""WITH ser AS (SELECT event_type AS g,
+      """WITH ser AS (SELECT event_type AS g,
         |    floor(epoch(ts) / 86400)::BIGINT AS d, count(*)::BIGINT AS v
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
         |  GROUP BY 1, 2),
@@ -8005,14 +7708,14 @@ object Queries {
         |  coalesce(lb_q, 0)::BIGINT AS lb_q,
         |  n_days::DOUBLE * (n_days::DOUBLE + 2.0) * coalesce(lb_q, 0)::DOUBLE
         |    / 1099511627776.0 AS q_stat
-        |FROM len LEFT JOIN tq ON len.g = tq.g""".stripMargin)),
+        |FROM len LEFT JOIN tq ON len.g = tq.g""".stripMargin),
 
     // §2.2/343 — sMAPE of the weekly seasonal-naive forecast (r14):
     // the scale-free eval beside MASE, integer micro-units end to end.
     "q_smape" -> QueryDef(
       (s, d) => operators.TimeSeries.smapeSeasonal(ds(s, d, "events").toDF,
         "event_type", "ts", season = 7),
-      Some("""WITH ser AS (SELECT event_type AS g,
+      """WITH ser AS (SELECT event_type AS g,
         |    floor(epoch(ts) / 86400)::BIGINT AS d, count(*)::BIGINT AS v
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
         |  GROUP BY 1, 2),
@@ -8024,14 +7727,14 @@ object Queries {
         |  CASE WHEN sum(y + y7) > 0
         |    THEN ((2000000 * sum(abs(y - y7))) // sum(y + y7))::BIGINT END
         |    AS smape_micro
-        |FROM p GROUP BY g""".stripMargin)),
+        |FROM p GROUP BY g""".stripMargin),
 
     // §2.2/344 — rolling z-score anomaly tally (r14): trailing 7-day
     // full windows, |y−μ|>2σ tested entirely in integers.
     "q_rolling_zscore" -> QueryDef(
       (s, d) => operators.TimeSeries.rollingZscoreAnomalies(
         ds(s, d, "events").toDF, "event_type", "ts", w = 7),
-      Some("""WITH ser AS (SELECT event_type AS g,
+      """WITH ser AS (SELECT event_type AS g,
         |    floor(epoch(ts) / 86400)::BIGINT AS d, count(*)::BIGINT AS y
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
         |  GROUP BY 1, 2),
@@ -8047,26 +7750,16 @@ object Queries {
         |  coalesce(sum(CASE WHEN anom THEN 1 ELSE 0 END), 0)::BIGINT AS n_anomalies,
         |  min(CASE WHEN anom THEN d END)::BIGINT AS first_anomaly_day,
         |  max(CASE WHEN anom THEN d END)::BIGINT AS last_anomaly_day
-        |FROM f JOIN n ON f.g = n.g GROUP BY f.g, n_days""".stripMargin)),
+        |FROM f JOIN n ON f.g = n.g GROUP BY f.g, n_days""".stripMargin),
 
     // §2.2/345 — Adamic–Adar link prediction (r14): the textbook
     // log-discounted common-neighbor score beside row 220's RA form —
     // wedge weight floor(2²⁰/ln(deg)), order-free int64 sums.
     "q_adamic_adar" -> QueryDef(
-      (s, d) => {
-        val li = ds(s, d, "lineitem").toDF
-          .filter(col("l_partkey") % 5 === 0)
-          .select("l_orderkey", "l_partkey")
-        val e = li.as("x").join(li.as("y"),
-            col("x.l_orderkey") === col("y.l_orderkey") &&
-              col("x.l_partkey") < col("y.l_partkey"))
-          .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-        operators.LinkPrediction.adamicAdar(e, "src", "dst",
-          maxDegree = 64, minCommon = 2, topK = 5)
-      },
-      Some("""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem WHERE l_partkey % 5 = 0),
-        |e0 AS (SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b FROM li x JOIN li y
-        |  ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
+      (s, d) => operators.LinkPrediction.adamicAdar(
+        coPurchaseEdges(s, d, Some(col("l_partkey") % 5 === 0)), "src", "dst",
+        maxDegree = 64, minCommon = 2, topK = 5),
+      s"""WITH e0 AS (${coPurchaseSql(Some("l_partkey % 5 = 0"))}),
         |u AS (SELECT a, b FROM e0 UNION SELECT b, a FROM e0),
         |deg AS (SELECT a AS z, count(*)::BIGINT AS d FROM u GROUP BY 1),
         |ctr AS (SELECT u.a AS z, u.b AS n, deg.d FROM u JOIN deg ON deg.z = u.a
@@ -8083,25 +7776,14 @@ object Queries {
         |SELECT node_id, candidate_id, cn AS common_neighbors, aa_q, rank FROM (
         |  SELECT *, row_number() OVER (PARTITION BY node_id
         |    ORDER BY cn DESC, aa_q DESC, candidate_id)::INT AS rank FROM dir) t
-        |WHERE rank <= 5""".stripMargin)),
+        |WHERE rank <= 5""".stripMargin),
 
     // §2.2/346 — rich-club coefficient profile (r14): edge density
     // among degree->k nodes per cutoff — all cutoffs one explode pass.
     "q_rich_club" -> QueryDef(
-      (s, d) => {
-        val li = ds(s, d, "lineitem").toDF
-          .filter(col("l_partkey") % 7 === 0)
-          .select("l_orderkey", "l_partkey")
-        val e = li.as("x").join(li.as("y"),
-            col("x.l_orderkey") === col("y.l_orderkey") &&
-              col("x.l_partkey") < col("y.l_partkey"))
-          .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-        operators.GraphMetrics.richClub(e, "src", "dst", ks = Seq(1, 2, 4, 8, 16))
-      },
-      Some("""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-        |  WHERE l_partkey % 7 = 0),
-        |eraw AS (SELECT x.l_partkey AS s, y.l_partkey AS t FROM li x JOIN li y
-        |  ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
+      (s, d) => operators.GraphMetrics.richClub(
+        coPurchaseEdges(s, d, Some(col("l_partkey") % 7 === 0)), "src", "dst", ks = Seq(1, 2, 4, 8, 16)),
+      s"""WITH eraw AS (${coPurchaseSql(Some("l_partkey % 7 = 0"), "x.l_partkey AS s, y.l_partkey AS t")}),
         |e0 AS (SELECT DISTINCT least(s, t)::BIGINT AS a, greatest(s, t)::BIGINT AS b
         |  FROM eraw WHERE s IS NOT NULL AND t IS NOT NULL AND s <> t),
         |u AS (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
@@ -8117,7 +7799,7 @@ object Queries {
         |  CASE WHEN n_nodes >= 2
         |    THEN ((2000000 * n_edges) // (n_nodes * (n_nodes - 1)))::BIGINT END
         |    AS phi_micro
-        |FROM nk JOIN ek ON nk.k = ek.k""".stripMargin)),
+        |FROM nk JOIN ek ON nk.k = ek.k""".stripMargin),
 
     // §2.2/347 — query-likelihood LM retrieval, Dirichlet μ=2000
     // (r14): the probabilistic ranker beside BM25; per-term and
@@ -8130,7 +7812,7 @@ object Queries {
             array_join(slice(TextFunctions.tokens(col("text")), 1, 3), " ").as("qtext"))
         Retrieval.queryLikelihoodTopK(docs, "doc_id", "text", q, k = 10)
       },
-      Some("""WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
+      """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
         |  FROM documents WHERE doc_id IS NOT NULL),
         |tok AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS token FROM t),
         |tf AS (SELECT doc_id, token, max(dl) AS dl, count(*) AS tf_cnt FROM tok GROUP BY 1, 2),
@@ -8153,21 +7835,18 @@ object Queries {
         |SELECT query_id, doc_id,
         |  row_number() OVER (PARTITION BY query_id ORDER BY score_q DESC, doc_id)::BIGINT AS rank,
         |  score_q
-        |FROM sc QUALIFY rank <= 10""".stripMargin)),
+        |FROM sc QUALIFY rank <= 10""".stripMargin),
 
     // §2.2/348 — per-label centroid outliers (r14): the mislabeled-
     // example screen — exact fixed-point distance to own centroid,
     // top-5 per label, BIGINT-safe n-free dist2.
     "sim_centroid_outliers" -> QueryDef(
       (s, d) => operators.Similarity.centroidOutliers(
-        ds(s, d, "embeddings").toDF
-          .filter(graft.functions.VectorFunctions.allFinite(col("embedding"))),
+        finiteEmbeddings(s, d),
         "vec_id", "embedding", "label", topK = 5),
-      Some("""WITH e AS (SELECT vec_id, label,
+      s"""WITH e AS (SELECT vec_id, label,
         |    unnest(range(len(embedding)))::INT AS pos, unnest(embedding) AS v
-        |  FROM embeddings WHERE vec_id IS NOT NULL AND label IS NOT NULL
-        |    AND embedding IS NOT NULL
-        |    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0),
+        |  FROM embeddings WHERE ${finiteEmbeddingSql(Seq("vec_id", "label"))}),
         |b AS (SELECT vec_id, label, pos, round(v::DOUBLE * 1048576)::BIGINT AS vq FROM e),
         |cent AS (SELECT label, pos, count(*)::BIGINT AS n, sum(vq)::BIGINT AS sum_q
         |  FROM b GROUP BY 1, 2),
@@ -8181,7 +7860,7 @@ object Queries {
         |SELECT label, vec_id, rank, dist2_q, n_label FROM (
         |  SELECT *, row_number() OVER (PARTITION BY label
         |    ORDER BY dist2_q DESC, vec_id)::BIGINT AS rank FROM r) t
-        |WHERE rank <= 5""".stripMargin)),
+        |WHERE rank <= 5""".stripMargin),
 
     // §2.2/349 — ε-DP noisy group counts (r14): seeded inverse-CDF
     // Laplace from 52 md5 bits — the release gate beside the
@@ -8189,7 +7868,7 @@ object Queries {
     "q_dp_counts" -> QueryDef(
       (s, d) => operators.Stats.dpNoisyCounts(ds(s, d, "documents").toDF,
         col("source"), seed = 11),
-      Some("""WITH g AS (SELECT source AS g, count(*)::BIGINT AS n FROM documents
+      """WITH g AS (SELECT source AS g, count(*)::BIGINT AS n FROM documents
         |  WHERE source IS NOT NULL GROUP BY 1),
         |h AS (SELECT g, n,
         |    ('0x' || substring(md5('dp:11:' || g), 1, 13))::BIGINT AS u52 FROM g),
@@ -8203,7 +7882,7 @@ object Queries {
         |  greatest(0, n + floor((noise_q + 524288) / 1048576.0)::BIGINT)::BIGINT
         |    AS n_released,
         |  noise_q, 1000000::BIGINT AS epsilon_micro
-        |FROM nq""".stripMargin)),
+        |FROM nq""".stripMargin),
 
     // §2.2/350 — quota rebalancing to equal source shares (r14): the
     // deterministic flatten-the-mix selector; kept_id_sum pins WHICH
@@ -8211,7 +7890,7 @@ object Queries {
     "q_quota_sample" -> QueryDef(
       (s, d) => operators.Sampling.quotaRebalance(ds(s, d, "documents").toDF,
         "source", "doc_id", seed = 3),
-      Some("""WITH b AS (SELECT source AS g, doc_id AS id FROM documents
+      """WITH b AS (SELECT source AS g, doc_id AS id FROM documents
         |  WHERE source IS NOT NULL AND doc_id IS NOT NULL),
         |sz AS (SELECT g, count(*)::BIGINT AS n_before FROM b GROUP BY g),
         |qt AS (SELECT (sum(n_before) // count(*))::BIGINT AS quota FROM sz),
@@ -8225,7 +7904,7 @@ object Queries {
         |SELECT sz.g AS g, n_before, quota,
         |  coalesce(n_kept, 0)::BIGINT AS n_kept,
         |  coalesce(kept_id_sum, 0)::BIGINT AS kept_id_sum
-        |FROM sz LEFT JOIN kp ON sz.g = kp.g CROSS JOIN qt""".stripMargin)),
+        |FROM sz LEFT JOIN kp ON sz.g = kp.g CROSS JOIN qt""".stripMargin),
 
     // §2.2/351 — monthly VWAP per flag (r14): the execution-quality
     // benchmark beside OHLC (175) — exact integer cents end to end.
@@ -8233,7 +7912,7 @@ object Queries {
       (s, d) => operators.Analytics.vwap(ds(s, d, "lineitem").toDF,
         col("l_returnflag"), col("l_shipdate"),
         round(col("l_extendedprice") * 100), round(col("l_quantity"))),
-      Some("""SELECT l_returnflag AS grp,
+      """SELECT l_returnflag AS grp,
         |  date_trunc('month', l_shipdate)::VARCHAR AS month,
         |  count(*)::BIGINT AS n_fills,
         |  sum(round(l_quantity)::BIGINT)::BIGINT AS qty_sum,
@@ -8245,7 +7924,7 @@ object Queries {
         |FROM lineitem
         |WHERE l_returnflag IS NOT NULL AND l_shipdate IS NOT NULL
         |  AND l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin)),
+        |GROUP BY 1, 2""".stripMargin),
 
     // §2.2/352 — Jonckheere–Terpstra ordered-alternative test (r14):
     // tally-based dominance counts in DECIMAL, guarded-BIGINT 2J,
@@ -8253,7 +7932,7 @@ object Queries {
     "q_jonckheere" -> QueryDef(
       (s, d) => operators.Stats.jonckheereTerpstra(ds(s, d, "lineitem").toDF,
         col("l_returnflag"), round(col("l_quantity"))),
-      Some("""WITH cells AS (SELECT l_returnflag AS g, round(l_quantity)::BIGINT AS v,
+      """WITH cells AS (SELECT l_returnflag AS g, round(l_quantity)::BIGINT AS v,
         |    count(*)::BIGINT AS c
         |  FROM lineitem WHERE l_returnflag IS NOT NULL AND l_quantity IS NOT NULL
         |  GROUP BY 1, 2),
@@ -8272,14 +7951,14 @@ object Queries {
         |    THEN (j2::DOUBLE / 2.0 - ((n::HUGEINT * n - sum_sq)::DOUBLE / 2.0) / 2.0)
         |      / sqrt((n::DOUBLE * n::DOUBLE * (2.0 * n::DOUBLE + 3.0)
         |        - sum_sq3::DOUBLE) / 72.0) END AS z_stat
-        |FROM j CROSS JOIN sz""".stripMargin)),
+        |FROM j CROSS JOIN sz""".stripMargin),
 
     // §2.2/353 — Cliff's delta ordinal effect size (r14): tally-based
     // dominance between returned and kept lineitems, fixed double δ.
     "q_cliffs_delta" -> QueryDef(
       (s, d) => operators.Stats.cliffsDelta(ds(s, d, "lineitem").toDF,
         col("l_returnflag") === "R", round(col("l_quantity"))),
-      Some("""WITH cells AS (SELECT (l_returnflag = 'R') AS arm,
+      """WITH cells AS (SELECT (l_returnflag = 'R') AS arm,
         |    round(l_quantity)::BIGINT AS v, count(*)::BIGINT AS c
         |  FROM lineitem WHERE l_returnflag IS NOT NULL AND l_quantity IS NOT NULL
         |  GROUP BY 1, 2),
@@ -8299,14 +7978,14 @@ object Queries {
         |  CASE WHEN n0 > 0 AND n1 > 0
         |    THEN (n_gt::DOUBLE - n_lt::DOUBLE) / (n1::DOUBLE * n0::DOUBLE) END
         |    AS delta
-        |FROM d CROSS JOIN sz""".stripMargin)),
+        |FROM d CROSS JOIN sz""".stripMargin),
 
     // §2.2/354 — Gumbel extreme-value fit per series (r14): weekly
     // block maxima, method-of-moments μ/β, once-a-year return level.
     "q_gumbel" -> QueryDef(
       (s, d) => operators.TimeSeries.gumbelBlockMaxima(
         ds(s, d, "events").toDF, "event_type", "ts"),
-      Some("""WITH daily AS (SELECT event_type AS g,
+      """WITH daily AS (SELECT event_type AS g,
         |    floor(epoch(ts) / 86400)::BIGINT AS d, count(*)::BIGINT AS y
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
         |  GROUP BY 1, 2),
@@ -8325,7 +8004,7 @@ object Queries {
         |SELECT g AS series, n_blocks, sum_m, sumsq_m, beta, mu,
         |  CASE WHEN beta IS NOT NULL
         |    THEN mu - beta * ln(-ln(1.0 - 1.0 / 52.0)) END AS r52
-        |FROM u""".stripMargin)),
+        |FROM u""".stripMargin),
 
     // §2.2/355 — Moran's I + Geary's C with same-nation membership
     // weights (r14): "is supplier wealth geographically clustered" —
@@ -8334,7 +8013,7 @@ object Queries {
     "q_moran" -> QueryDef(
       (s, d) => operators.Stats.spatialAutocorr(ds(s, d, "supplier").toDF,
         col("s_nationkey"), round(col("s_acctbal") * 100)),
-      Some("""WITH v AS (SELECT s_nationkey AS g, round(s_acctbal*100)::BIGINT AS x
+      """WITH v AS (SELECT s_nationkey AS g, round(s_acctbal*100)::BIGINT AS x
         |  FROM supplier WHERE s_nationkey IS NOT NULL AND s_acctbal IS NOT NULL),
         |tot AS (SELECT count(*)::BIGINT AS n, coalesce(sum(x), 0)::HUGEINT AS t FROM v),
         |z AS (SELECT g, (tot.n::HUGEINT * x - tot.t)::HUGEINT AS z FROM v CROSS JOIN tot),
@@ -8356,7 +8035,7 @@ object Queries {
         |    THEN (tot.n::DOUBLE - 1.0) * a.num_c::DOUBLE
         |      / (2.0 * a.w_pairs::DOUBLE * a.den_q::DOUBLE) END AS geary_c,
         |  CASE WHEN tot.n > 1 THEN -1.0 / (tot.n::DOUBLE - 1.0) END AS e_i
-        |FROM a CROSS JOIN tot""".stripMargin)),
+        |FROM a CROSS JOIN tot""".stripMargin),
 
     // §2.2/356 — ordinal association battery (r14): gamma / Somers'
     // d / Stuart tau-c from ONE cell-tally concordance join (beside
@@ -8368,7 +8047,7 @@ object Queries {
         .filter("l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL"),
         least(lit(9L), expr("cast(round(l_quantity) as bigint) div 5")),
         least(lit(9L), expr("cast(round(l_extendedprice) as bigint) div 10000"))),
-      Some("""WITH v AS (SELECT least(9, round(l_quantity)::BIGINT // 5) AS x,
+      """WITH v AS (SELECT least(9, round(l_quantity)::BIGINT // 5) AS x,
         |    least(9, round(l_extendedprice)::BIGINT // 10000) AS y
         |  FROM lineitem WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL),
         |cells AS (SELECT x, y, count(*)::BIGINT AS c FROM v GROUP BY 1, 2),
@@ -8396,7 +8075,7 @@ object Queries {
         |  CASE WHEN n > 0 AND least(kx, ky) > 1
         |    THEN 2.0 * least(kx, ky)::DOUBLE * (n_conc::DOUBLE - n_disc::DOUBLE)
         |      / (n::DOUBLE * n::DOUBLE * (least(kx, ky)::DOUBLE - 1.0)) END AS tau_c
-        |FROM t CROSS JOIN sz""".stripMargin)),
+        |FROM t CROSS JOIN sz""".stripMargin),
 
     // §2.2/357 — Cohen's weighted kappa, quadratic weights (r14): the
     // ordinal agreement rail beside 281/337 — disagreement form, so
@@ -8408,7 +8087,7 @@ object Queries {
         .filter("l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL"),
         least(lit(4L), expr("cast(round(l_quantity) as bigint) div 10")),
         least(lit(4L), expr("cast(round(l_extendedprice) as bigint) div 20000"))),
-      Some("""WITH v AS (SELECT least(4, round(l_quantity)::BIGINT // 10) AS a,
+      """WITH v AS (SELECT least(4, round(l_quantity)::BIGINT // 10) AS a,
         |    least(4, round(l_extendedprice)::BIGINT // 20000) AS b
         |  FROM lineitem WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL),
         |cells AS (SELECT a, b, count(*)::BIGINT AS c FROM v GROUP BY 1, 2),
@@ -8422,7 +8101,7 @@ object Queries {
         |SELECT n, k_a, k_b, dis_obs::BIGINT AS dis_obs, dis_exp::DOUBLE AS dis_exp,
         |  CASE WHEN dis_exp > 0
         |    THEN 1.0 - n::DOUBLE * dis_obs::DOUBLE / dis_exp::DOUBLE END AS kappa_w
-        |FROM nn CROSS JOIN o CROSS JOIN e""".stripMargin)),
+        |FROM nn CROSS JOIN o CROSS JOIN e""".stripMargin),
 
     // §2.2/358 — Cronbach's alpha (r14): internal consistency of four
     // per-order "items" (lines, quantity, discount cents, tax cents) —
@@ -8439,7 +8118,7 @@ object Queries {
           "i_lines" -> col("i_lines"), "i_qty" -> col("i_qty"),
           "i_disc" -> col("i_disc"), "i_tax" -> col("i_tax")))
       },
-      Some("""WITH u AS (SELECT l_orderkey, count(*)::BIGINT AS i1,
+      """WITH u AS (SELECT l_orderkey, count(*)::BIGINT AS i1,
         |    sum(round(l_quantity)::BIGINT)::BIGINT AS i2,
         |    sum(round(l_discount*100)::BIGINT)::BIGINT AS i3,
         |    sum(round(l_tax*100)::BIGINT)::BIGINT AS i4
@@ -8461,7 +8140,7 @@ object Queries {
         |    THEN (4::BIGINT::DOUBLE / (4::BIGINT::DOUBLE - 1.0))
         |      * (1.0 - ((n*q1 - s1*s1) + (n*q2 - s2*s2) + (n*q3 - s3*s3)
         |        + (n*q4 - s4*s4))::DOUBLE / (n*qt - st*st)::DOUBLE) END AS alpha
-        |FROM m""".stripMargin)),
+        |FROM m""".stripMargin),
 
     // §2.2/359 — ICC(1,1) one-way intraclass correlation (r14): how
     // much of event-value variance is BETWEEN users; per-group S²/m
@@ -8469,7 +8148,7 @@ object Queries {
     "q_icc" -> QueryDef(
       (s, d) => operators.Stats.iccOneWay(ds(s, d, "events").toDF,
         col("user_id"), round(col("value") * 100)),
-      Some("""WITH v AS (SELECT user_id AS g, round(value*100)::BIGINT AS x FROM events
+      """WITH v AS (SELECT user_id AS g, round(value*100)::BIGINT AS x FROM events
         |  WHERE user_id IS NOT NULL AND value IS NOT NULL),
         |pg AS (SELECT g, count(*)::BIGINT AS m, sum(x)::BIGINT AS s,
         |    sum(x::HUGEINT*x)::HUGEINT AS q FROM v GROUP BY g),
@@ -8493,7 +8172,7 @@ object Queries {
         |  CASE WHEN msb IS NOT NULL AND msw IS NOT NULL
         |      AND (msb + (k0 - 1.0)*msw) <> 0
         |    THEN (msb - msw)/(msb + (k0 - 1.0)*msw) END AS icc1
-        |FROM b""".stripMargin)),
+        |FROM b""".stripMargin),
 
     // §2.2/360 — Mantel–Haenszel pooled OR + CMH χ² across strata
     // (r14): deep-discount → return association stratified by line
@@ -8501,7 +8180,7 @@ object Queries {
     "q_mantel_haenszel" -> QueryDef(
       (s, d) => operators.Stats.mantelHaenszel(ds(s, d, "lineitem").toDF,
         col("l_linestatus"), col("l_discount") >= 0.05, col("l_returnflag") === "R"),
-      Some("""WITH cells0 AS (SELECT l_linestatus AS st,
+      """WITH cells0 AS (SELECT l_linestatus AS st,
         |    sum(CASE WHEN l_discount >= 0.05 AND l_returnflag = 'R' THEN 1 ELSE 0 END)::BIGINT AS a,
         |    sum(CASE WHEN l_discount >= 0.05 AND l_returnflag <> 'R' THEN 1 ELSE 0 END)::BIGINT AS b,
         |    sum(CASE WHEN l_discount < 0.05 AND l_returnflag = 'R' THEN 1 ELSE 0 END)::BIGINT AS c,
@@ -8529,7 +8208,7 @@ object Queries {
         |    THEN (coalesce(sum(a), 0)::DOUBLE * 1048576.0 - coalesce(sum(e_q), 0)::DOUBLE)
         |      * (coalesce(sum(a), 0)::DOUBLE * 1048576.0 - coalesce(sum(e_q), 0)::DOUBLE)
         |      / (coalesce(sum(v_q), 0)::DOUBLE * 1048576.0) END AS chi2_cmh
-        |FROM t""".stripMargin)),
+        |FROM t""".stripMargin),
 
     // §2.2/361 — classifier log-loss / cross-entropy (r14): linear
     // score→probability map, per-CELL quantized ln so aggregation
@@ -8537,7 +8216,7 @@ object Queries {
     "q_log_loss" -> QueryDef(
       (s, d) => operators.Stats.linearLogLoss(ds(s, d, "documents").toDF,
         col("n_chars"), col("lang") === "en"),
-      Some("""WITH v AS (SELECT n_chars::BIGINT AS s, (lang = 'en') AS y FROM documents
+      """WITH v AS (SELECT n_chars::BIGINT AS s, (lang = 'en') AS y FROM documents
         |  WHERE n_chars IS NOT NULL AND lang IS NOT NULL),
         |mm AS (SELECT min(s) AS mn, max(s) AS mx FROM v),
         |cells AS (SELECT (s - mn + 1)::BIGINT AS num, (mx - mn + 2)::BIGINT AS den,
@@ -8552,7 +8231,7 @@ object Queries {
         |    THEN coalesce(sum(c * floor(-ln(CASE WHEN y THEN num::DOUBLE/den::DOUBLE
         |      ELSE 1.0 - num::DOUBLE/den::DOUBLE END)*1048576)::BIGINT), 0)::DOUBLE
         |      / coalesce(sum(c), 0)::DOUBLE / 1048576.0 END AS mean_logloss
-        |FROM cells""".stripMargin)),
+        |FROM cells""".stripMargin),
 
     // §2.2/362 — Hosmer–Lemeshow fit + expected calibration error
     // (r14): row 239's bins judged — exact rational E₁ per bin, HL
@@ -8560,7 +8239,7 @@ object Queries {
     "q_hosmer_lemeshow" -> QueryDef(
       (s, d) => operators.Stats.hosmerLemeshow(ds(s, d, "documents").toDF,
         col("n_chars"), col("lang") === "en", nBins = 10),
-      Some("""WITH v AS (SELECT n_chars::BIGINT AS s, (lang = 'en') AS y FROM documents
+      """WITH v AS (SELECT n_chars::BIGINT AS s, (lang = 'en') AS y FROM documents
         |  WHERE n_chars IS NOT NULL AND lang IS NOT NULL),
         |mm AS (SELECT min(s) AS mn, max(s) AS mx FROM v),
         |bins AS (SELECT least(9, (s - mn) * 10 // (mx - mn + 1)) AS bin,
@@ -8586,7 +8265,7 @@ object Queries {
         |        / (max(den)::DOUBLE * coalesce(sum(n_b), 0)::DOUBLE) END AS ece
         |  FROM t)
         |SELECT bin, n_b, o1, e1_num, den, hl_term_q, n, hl_chi2, ece
-        |FROM t CROSS JOIN tot""".stripMargin)),
+        |FROM t CROSS JOIN tot""".stripMargin),
 
     // §2.2/363 — Harrell's concordance index (r14): does activity
     // level rank user lifetimes correctly — right-censored pairs over
@@ -8606,7 +8285,7 @@ object Queries {
         operators.Stats.concordanceIndex(units, col("t"), col("ev"), col("r0"),
           scoreBands = 10)
       },
-      Some("""WITH pu AS (SELECT user_id,
+      """WITH pu AS (SELECT user_id,
         |    min(floor(epoch(ts)/86400)::BIGINT) AS fd,
         |    max(floor(epoch(ts)/86400)::BIGINT) AS ld, count(*)::BIGINT AS n_ev
         |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL GROUP BY 1),
@@ -8631,7 +8310,7 @@ object Queries {
         |  CASE WHEN n_comparable > 0
         |    THEN (n_concordant::DOUBLE + 0.5 * n_tied::DOUBLE)
         |      / n_comparable::DOUBLE END AS c_index
-        |FROM p CROSS JOIN nu""".stripMargin)),
+        |FROM p CROSS JOIN nu""".stripMargin),
 
     // §2.2/364 — Bartels rank von Neumann randomness test per series
     // (r14): rank-based serial drift detector beside runs (289) and
@@ -8639,7 +8318,7 @@ object Queries {
     "q_bartels" -> QueryDef(
       (s, d) => operators.TimeSeries.bartelsRankTest(
         ds(s, d, "events").toDF, "event_type", "ts"),
-      Some("""WITH d AS (SELECT event_type AS series,
+      """WITH d AS (SELECT event_type AS series,
         |    floor(epoch(ts)/86400)::BIGINT AS day, count(*)::BIGINT AS x
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL GROUP BY 1, 2),
         |vc AS (SELECT series, x, count(*)::BIGINT AS t FROM d GROUP BY 1, 2),
@@ -8669,7 +8348,7 @@ object Queries {
         |        *(5.0*n_days::DOUBLE*n_days::DOUBLE - 2.0*n_days::DOUBLE - 9.0)
         |        /(5.0*n_days::DOUBLE*(n_days::DOUBLE+1.0)
         |          *(n_days::DOUBLE-1.0)*(n_days::DOUBLE-1.0))) END AS z_stat
-        |FROM a""".stripMargin)),
+        |FROM a""".stripMargin),
 
     // §2.2/365 — ε-DP noisy SUMS with clipping (r14): row 349's
     // release pipeline for magnitudes — clip to [0, 2000] chars,
@@ -8677,7 +8356,7 @@ object Queries {
     "q_dp_sum" -> QueryDef(
       (s, d) => operators.Stats.dpNoisySums(ds(s, d, "documents").toDF,
         col("source"), col("n_chars"), clipAt = 2000L, seed = 7),
-      Some("""WITH b AS (SELECT source AS g, least(greatest(n_chars, 0), 2000)::BIGINT AS cx
+      """WITH b AS (SELECT source AS g, least(greatest(n_chars, 0), 2000)::BIGINT AS cx
         |  FROM documents WHERE source IS NOT NULL AND n_chars IS NOT NULL),
         |gr AS (SELECT g, count(*)::BIGINT AS n, sum(cx)::BIGINT AS cs FROM b GROUP BY 1),
         |h AS (SELECT g, n, cs,
@@ -8692,7 +8371,7 @@ object Queries {
         |  greatest(0, cs + floor((noise_q + 524288) / 1048576.0)::BIGINT)::BIGINT
         |    AS sum_released,
         |  noise_q, 2000::BIGINT AS clip_at, 1000000::BIGINT AS epsilon_micro
-        |FROM nq""".stripMargin)),
+        |FROM nq""".stripMargin),
 
     // §2.2/366 — Theil's U2 forecast-accuracy ratio per series (r14):
     // seasonal lag-7 model vs lag-1 naive over COMMON calendar
@@ -8700,7 +8379,7 @@ object Queries {
     "q_theil_u" -> QueryDef(
       (s, d) => operators.TimeSeries.theilU(
         ds(s, d, "events").toDF, "event_type", "ts"),
-      Some("""WITH d AS (SELECT event_type AS series,
+      """WITH d AS (SELECT event_type AS series,
         |    floor(epoch(ts)/86400)::BIGINT AS day, count(*)::BIGINT AS x
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL GROUP BY 1, 2)
         |SELECT d.series AS series, count(*)::BIGINT AS n_common,
@@ -8711,7 +8390,7 @@ object Queries {
         |      / sum((d.x - l1.x)*(d.x - l1.x))::DOUBLE) END AS u2
         |FROM d JOIN d l1 ON l1.series = d.series AND l1.day = d.day - 1
         |  JOIN d l7 ON l7.series = d.series AND l7.day = d.day - 7
-        |GROUP BY 1""".stripMargin)),
+        |GROUP BY 1""".stripMargin),
 
     // §2.2/367 — pinball (quantile) loss at τ = 0.9 per series (r14):
     // empirical-quantile constant forecast, loss in exact tenths —
@@ -8719,7 +8398,7 @@ object Queries {
     "q_pinball" -> QueryDef(
       (s, d) => operators.TimeSeries.pinballLoss(
         ds(s, d, "events").toDF, "event_type", "ts", num = 9, den = 10),
-      Some("""WITH d AS (SELECT event_type AS series,
+      """WITH d AS (SELECT event_type AS series,
         |    floor(epoch(ts)/86400)::BIGINT AS day, count(*)::BIGINT AS x
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL GROUP BY 1, 2),
         |sz AS (SELECT series, count(*)::BIGINT AS n_days FROM d GROUP BY 1),
@@ -8734,7 +8413,7 @@ object Queries {
         |  CASE WHEN count(*) > 0 THEN
         |    sum(CASE WHEN d.x >= f.f THEN 9*(d.x - f.f) ELSE (f.f - d.x) END)::DOUBLE
         |      / count(*)::DOUBLE / 10.0 END AS mean_pinball
-        |FROM d JOIN f ON f.series = d.series GROUP BY 1""".stripMargin)),
+        |FROM d JOIN f ON f.series = d.series GROUP BY 1""".stripMargin),
 
     // §2.2/368 — maximum drawdown per series (r14): running peak minus
     // cumulative daily cents, exact integers; trough day = earliest
@@ -8743,7 +8422,7 @@ object Queries {
     "q_drawdown" -> QueryDef(
       (s, d) => operators.TimeSeries.maxDrawdown(
         ds(s, d, "events").toDF, "event_type", "ts", round(col("value") * 100)),
-      Some("""WITH d AS (SELECT event_type AS series,
+      """WITH d AS (SELECT event_type AS series,
         |    floor(epoch(ts)/86400)::BIGINT AS day,
         |    sum(round(value*100)::BIGINT)::BIGINT AS dv
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
@@ -8757,7 +8436,7 @@ object Queries {
         |SELECT series, count(*)::BIGINT AS n_days, max(cum)::BIGINT AS peak_cum,
         |  max(dd_c)::BIGINT AS max_drawdown,
         |  min(CASE WHEN dd_c = mx THEN day END)::BIGINT AS trough_day
-        |FROM x GROUP BY 1""".stripMargin)),
+        |FROM x GROUP BY 1""".stripMargin),
 
     // §2.2/369 — interval union / coverage per user (r14): events as
     // 15-min spans, overlapping spans merged into islands (running-max
@@ -8766,7 +8445,7 @@ object Queries {
     "q_interval_merge" -> QueryDef(
       (s, d) => operators.Analytics.intervalUnion(
         ds(s, d, "events").toDF, "user_id", "ts", "event_id", spanSeconds = 900),
-      Some("""WITH b AS (SELECT user_id, floor(epoch(ts))::BIGINT AS s0, event_id,
+      """WITH b AS (SELECT user_id, floor(epoch(ts))::BIGINT AS s0, event_id,
         |    floor(epoch(ts))::BIGINT + 900 AS e0
         |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
         |    AND event_id IS NOT NULL),
@@ -8781,7 +8460,7 @@ object Queries {
         |SELECT user_id, sum(n_ev)::BIGINT AS n_events, count(*)::BIGINT AS n_islands,
         |  sum(i_end - i_start)::BIGINT AS covered_sec,
         |  max(i_end - i_start)::BIGINT AS max_island_sec
-        |FROM pi GROUP BY 1""".stripMargin)),
+        |FROM pi GROUP BY 1""".stripMargin),
 
     // §2.2/370 — cohort LTV curve (r14): customers cohorted by first
     // order month, cumulative revenue per month-age over the cohort
@@ -8789,7 +8468,7 @@ object Queries {
     "q_cohort_ltv" -> QueryDef(
       (s, d) => operators.Analytics.cohortLtv(ds(s, d, "orders").toDF,
         "o_custkey", "o_orderdate", round(col("o_totalprice") * 100)),
-      Some("""WITH o AS (SELECT o_custkey AS cust,
+      """WITH o AS (SELECT o_custkey AS cust,
         |    (year(o_orderdate)*12 + month(o_orderdate) - 1)::BIGINT AS em,
         |    round(o_totalprice*100)::BIGINT AS cents FROM orders
         |  WHERE o_custkey IS NOT NULL AND o_orderdate IS NOT NULL
@@ -8805,7 +8484,7 @@ object Queries {
         |  (sum(rev_cents) OVER (PARTITION BY ag.cm ORDER BY age_months
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) // cohort_size)::BIGINT
         |    AS ltv_cents
-        |FROM ag JOIN sz USING (cm)""".stripMargin)),
+        |FROM ag JOIN sz USING (cm)""".stripMargin),
 
     // §2.2/371 — linear multi-touch attribution (r14): row 177's
     // fractional-credit form — every touch in a converted session
@@ -8814,14 +8493,7 @@ object Queries {
     "q_attribution_linear" -> QueryDef(
       (s, d) => operators.Analytics.linearAttribution(
         ds(s, d, "events").toDF, "user_id", "ts", "event_type", "value"),
-      Some("""WITH s AS (SELECT user_id, event_type, value, event_id, ts,
-        |    CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_id
-        |  FROM (SELECT *, CASE WHEN lag(floor(epoch(ts))::BIGINT) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |      OR floor(epoch(ts))::BIGINT - lag(floor(epoch(ts))::BIGINT)
-        |        OVER (PARTITION BY user_id ORDER BY ts) > 1800
-        |    THEN 1 ELSE 0 END AS brk FROM events
-        |    WHERE user_id IS NOT NULL AND ts IS NOT NULL AND event_id IS NOT NULL
-        |      AND event_type IS NOT NULL) x),
+      s"""WITH s AS (${sessionsSql("event_id", "event_type")}),
         |sess AS (SELECT user_id, session_id, count(*)::BIGINT AS k,
         |    sum(CASE WHEN event_type = 'purchase' AND value IS NOT NULL
         |      THEN round(value * 100)::BIGINT ELSE 0 END)::BIGINT AS rev_cents
@@ -8833,7 +8505,7 @@ object Queries {
         |    AS n_sessions_touched,
         |  sum(cr.cpt)::BIGINT AS credit_q,
         |  sum(cr.cpt)::DOUBLE / 1048576.0 AS credit_cents
-        |FROM s JOIN cr USING (user_id, session_id) GROUP BY 1""".stripMargin)),
+        |FROM s JOIN cr USING (user_id, session_id) GROUP BY 1""".stripMargin),
 
     // §2.2/372 — directed-edge reciprocity + dyad census (r14): the
     // part→next-part order-sequence graph — one distinct pass + one
@@ -8855,7 +8527,7 @@ object Queries {
           .select(col("l_partkey").as("src"), col("nxt").as("dst"))
         operators.GraphMetrics.reciprocity(e, "src", "dst")
       },
-      Some("""WITH e0 AS (SELECT l_partkey AS src,
+      """WITH e0 AS (SELECT l_partkey AS src,
         |    lead(l_partkey) OVER (PARTITION BY l_orderkey
         |      ORDER BY l_linenumber, l_partkey) AS dst
         |  FROM lineitem WHERE l_orderkey IS NOT NULL AND l_linenumber IS NOT NULL
@@ -8868,33 +8540,16 @@ object Queries {
         |  (n_edges - n_reciprocal)::BIGINT AS n_asymmetric_dyads,
         |  CASE WHEN n_edges > 0 THEN n_reciprocal::DOUBLE / n_edges::DOUBLE END
         |    AS reciprocity
-        |FROM n CROSS JOIN r""".stripMargin)),
+        |FROM n CROSS JOIN r""".stripMargin),
 
     // §2.2/373 — per-edge embeddedness / tie strength (r14): common
     // neighbors per co-purchase edge = triangles through it — the
     // corner explode of row 150's oriented pipeline, top-20 bounded.
     "q_embeddedness" -> QueryDef(
-      (s, d) => {
-        val li = ds(s, d, "lineitem").toDF.select("l_orderkey", "l_partkey")
-        val e = li.as("x").join(li.as("y"),
-            col("x.l_orderkey") === col("y.l_orderkey") &&
-              col("x.l_partkey") < col("y.l_partkey"))
-          .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-        operators.Triangles.edgeEmbeddedness(e, "src", "dst", topK = 20)
-      },
-      Some("""WITH e0 AS (SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM lineitem x JOIN lineitem y
-        |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
-        |deg AS (SELECT id, count(*) AS dg FROM
-        |  (SELECT a AS id FROM e0 UNION ALL SELECT b FROM e0) GROUP BY 1),
-        |o AS (SELECT
-        |    CASE WHEN da.dg*100000000 + a < db.dg*100000000 + b THEN a ELSE b END AS u,
-        |    CASE WHEN da.dg*100000000 + a < db.dg*100000000 + b THEN b ELSE a END AS v,
-        |    greatest(da.dg*100000000 + a, db.dg*100000000 + b) AS kv
-        |  FROM e0 JOIN deg da ON a = da.id JOIN deg db ON b = db.id),
-        |w AS (SELECT e1.u AS u, e1.v AS x, e2.v AS y FROM o e1
-        |  JOIN o e2 ON e1.u = e2.u AND e1.kv < e2.kv),
-        |tri AS (SELECT w.u, w.x, w.y FROM w JOIN o ON w.x = o.u AND w.y = o.v),
+      (s, d) => operators.Triangles.edgeEmbeddedness(
+        coPurchaseEdges(s, d), "src", "dst", topK = 20),
+      s"""WITH e0 AS (${coPurchaseSql()}),
+        |$orientedTrianglesSql,
         |mem AS (SELECT least(u, x) AS a, greatest(u, x) AS b FROM tri
         |  UNION ALL SELECT least(u, y), greatest(u, y) FROM tri
         |  UNION ALL SELECT least(x, y), greatest(x, y) FROM tri),
@@ -8902,27 +8557,16 @@ object Queries {
         |SELECT a, b, embeddedness, rank FROM (
         |  SELECT *, row_number() OVER (ORDER BY embeddedness DESC, a, b)::BIGINT AS rank
         |  FROM emb) t
-        |WHERE rank <= 20""".stripMargin)),
+        |WHERE rank <= 20""".stripMargin),
 
     // §2.2/374 — hop-bounded harmonic centrality for anchor seeds
     // (r14): per-seed BFS sweeps over row 152's graph sharing ONE
     // adjacency; harmonic mass as exact per-layer integer tallies.
     "q_harmonic" -> QueryDef(
-      (s, d) => {
-        val li = ds(s, d, "lineitem").toDF
-          .filter(col("l_quantity") >= 45)
-          .select("l_orderkey", "l_partkey")
-        val e = li.as("x").join(li.as("y"),
-            col("x.l_orderkey") === col("y.l_orderkey") &&
-              col("x.l_partkey") < col("y.l_partkey"))
-          .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-        operators.ShortestPaths.harmonicCentrality(e, "src", "dst",
-          seedMod = 500L, nSeeds = 3, maxHops = 4)
-      },
-      Some("""WITH RECURSIVE e AS (SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM lineitem x JOIN lineitem y
-        |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
-        |  WHERE x.l_quantity >= 45 AND y.l_quantity >= 45),
+      (s, d) => operators.ShortestPaths.harmonicCentrality(
+        coPurchaseEdges(s, d, Some(col("l_quantity") >= 45)), "src", "dst",
+        seedMod = 500L, nSeeds = 3, maxHops = 4),
+      s"""WITH RECURSIVE e AS (${coPurchaseSql(Some("l_quantity >= 45"))}),
         |u AS (SELECT a AS s, b AS t FROM e UNION SELECT b, a FROM e),
         |seeds AS (SELECT DISTINCT s FROM u WHERE s % 500 = 0 ORDER BY s LIMIT 3),
         |r(seed, n, d) AS (SELECT s, s, 0 FROM seeds
@@ -8931,7 +8575,7 @@ object Queries {
         |SELECT seed, count(*)::BIGINT AS n_reached,
         |  sum(1048576 // dist)::BIGINT AS harmonic_q,
         |  (sum(1048576 // dist)::BIGINT)::DOUBLE / 1048576.0 AS harmonic
-        |FROM md WHERE dist > 0 GROUP BY seed""".stripMargin)),
+        |FROM md WHERE dist > 0 GROUP BY seed""".stripMargin),
 
     // §2.2/375 — simplified silhouette per label (r14): the
     // clustering-quality eval beside 292/348 — exact fixed-point
@@ -8939,14 +8583,11 @@ object Queries {
     // integer-averaged.
     "sim_silhouette" -> QueryDef(
       (s, d) => operators.Similarity.silhouette(
-        ds(s, d, "embeddings").toDF
-          .filter(graft.functions.VectorFunctions.allFinite(col("embedding"))),
+        finiteEmbeddings(s, d),
         "vec_id", "embedding", "label"),
-      Some("""WITH e AS (SELECT vec_id, label,
+      s"""WITH e AS (SELECT vec_id, label,
         |    unnest(range(len(embedding)))::INT AS pos, unnest(embedding) AS v
-        |  FROM embeddings WHERE vec_id IS NOT NULL AND label IS NOT NULL
-        |    AND embedding IS NOT NULL
-        |    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0),
+        |  FROM embeddings WHERE ${finiteEmbeddingSql(Seq("vec_id", "label"))}),
         |b AS (SELECT vec_id, label, pos, round(v::DOUBLE * 1048576)::BIGINT AS vq FROM e),
         |cent AS (SELECT label AS clabel, pos, count(*)::BIGINT AS cn,
         |    sum(vq)::BIGINT AS csum FROM b GROUP BY 1, 2),
@@ -8970,7 +8611,7 @@ object Queries {
         |SELECT label, count(*)::BIGINT AS n_vecs,
         |  (sum(sil_q) // count(*))::BIGINT AS mean_sil_q,
         |  ((sum(sil_q) // count(*))::BIGINT)::DOUBLE / 1048576.0 AS mean_silhouette
-        |FROM sil GROUP BY label""".stripMargin)),
+        |FROM sil GROUP BY label""".stripMargin),
 
     // §2.3/376 — char-bigram entropy per source (r14): the
     // encoding/noise screen beside the deflate signal (158) — MULTISET
@@ -8978,7 +8619,7 @@ object Queries {
     "text_char_entropy" -> QueryDef(
       (s, d) => operators.TfIdf.charBigramEntropy(
         ds(s, d, "documents").toDF, "source", "doc_id", "text"),
-      Some("""WITH g AS (SELECT source, doc_id, substring(text, i, 2) AS bg
+      """WITH g AS (SELECT source, doc_id, substring(text, i, 2) AS bg
         |  FROM (SELECT source, doc_id, text,
         |      unnest(range(1, length(text)))::INT AS i FROM documents
         |    WHERE source IS NOT NULL AND doc_id IS NOT NULL) z),
@@ -8991,7 +8632,7 @@ object Queries {
         |  FROM pd)
         |SELECT source, count(*)::BIGINT AS n_docs, sum(h_q)::BIGINT AS sum_h_q,
         |  ((sum(h_q) // count(*))::BIGINT)::DOUBLE / 1048576.0 AS mean_entropy
-        |FROM h GROUP BY 1""".stripMargin)),
+        |FROM h GROUP BY 1""".stripMargin),
 
     // §2.3/377 — source-pair cosine similarity over unigram count
     // vectors (r14): "which feeds write alike" beside KL/JS/PSI drift
@@ -8999,7 +8640,7 @@ object Queries {
     "text_source_cosine" -> QueryDef(
       (s, d) => operators.TfIdf.groupCosine(
         ds(s, d, "documents").toDF, "source", "text"),
-      Some("""WITH tok AS (SELECT source AS g,
+      """WITH tok AS (SELECT source AS g,
         |    unnest(regexp_split_to_array(trim(text), '\s+')) AS w
         |  FROM documents WHERE source IS NOT NULL),
         |cnt AS (SELECT g, w, count(*)::BIGINT AS c FROM tok
@@ -9011,7 +8652,7 @@ object Queries {
         |  CASE WHEN n1.norm_sq > 0 AND n2.norm_sq > 0
         |    THEN dot::DOUBLE / (sqrt(n1.norm_sq::DOUBLE) * sqrt(n2.norm_sq::DOUBLE))
         |    END AS cosine
-        |FROM p JOIN nrm n1 ON n1.g = p.g1 JOIN nrm n2 ON n2.g = p.g2""".stripMargin)),
+        |FROM p JOIN nrm n1 ON n1.g = p.g1 JOIN nrm n2 ON n2.g = p.g2""".stripMargin),
 
     // §2.2/378 — curriculum interleave (r14): easy→hard within source,
     // round-robin across sources, position by pure arithmetic (no
@@ -9019,7 +8660,7 @@ object Queries {
     "q_curriculum" -> QueryDef(
       (s, d) => operators.Sampling.curriculumInterleave(
         ds(s, d, "documents").toDF, "source", "doc_id", col("n_chars")),
-      Some("""WITH b AS (SELECT source AS g, doc_id AS id, n_chars::BIGINT AS d
+      """WITH b AS (SELECT source AS g, doc_id AS id, n_chars::BIGINT AS d
         |  FROM documents WHERE source IS NOT NULL AND doc_id IS NOT NULL
         |    AND n_chars IS NOT NULL),
         |dims AS (SELECT g, row_number() OVER (ORDER BY g)::BIGINT AS grp_index
@@ -9035,7 +8676,7 @@ object Queries {
         |  min(position)::BIGINT AS first_pos, max(position)::BIGINT AS last_pos,
         |  sum(position::HUGEINT * ((id % 1000003 + 1000003) % 1000003))::BIGINT
         |    AS pos_id_checksum
-        |FROM pos GROUP BY 1""".stripMargin)),
+        |FROM pos GROUP BY 1""".stripMargin),
 
     // §2.2/379 — Ansari–Bradley rank dispersion test (r14): do
     // returned lineitems differ in quantity SPREAD — closed-form
@@ -9044,7 +8685,7 @@ object Queries {
     "q_ansari" -> QueryDef(
       (s, d) => operators.Stats.ansariBradley(ds(s, d, "lineitem").toDF,
         col("l_returnflag") === "R", round(col("l_quantity"))),
-      Some("""WITH cells AS (SELECT round(l_quantity)::BIGINT AS v,
+      """WITH cells AS (SELECT round(l_quantity)::BIGINT AS v,
         |    count(*)::BIGINT AS c,
         |    sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)::BIGINT AS c1
         |  FROM lineitem WHERE l_returnflag IS NOT NULL AND l_quantity IS NOT NULL
@@ -9083,7 +8724,7 @@ object Queries {
         |        * (n::DOUBLE * sum_aa4_q::DOUBLE / 1048576.0
         |          - sum_a2::DOUBLE * sum_a2::DOUBLE)
         |        / (n::DOUBLE * n::DOUBLE * (n::DOUBLE - 1.0))) END AS z_stat
-        |FROM a""".stripMargin)),
+        |FROM a""".stripMargin),
 
     // §2.2/380 — Pettitt rank changepoint per series (r14): WHERE the
     // level shifted, nonparametrically — doubled-rank U-curve, exact
@@ -9091,7 +8732,7 @@ object Queries {
     "q_pettitt" -> QueryDef(
       (s, d) => operators.TimeSeries.pettittTest(
         ds(s, d, "events").toDF, "event_type", "ts"),
-      Some("""WITH d AS (SELECT event_type AS series,
+      """WITH d AS (SELECT event_type AS series,
         |    floor(epoch(ts)/86400)::BIGINT AS day, count(*)::BIGINT AS x
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL GROUP BY 1, 2),
         |vc AS (SELECT series, x, count(*)::BIGINT AS t FROM d GROUP BY 1, 2),
@@ -9113,7 +8754,7 @@ object Queries {
         |    THEN 2.0 * exp(-1.5 * max(au2)::DOUBLE * max(au2)::DOUBLE
         |      / (max(nn)::DOUBLE * max(nn)::DOUBLE * max(nn)::DOUBLE
         |        + max(nn)::DOUBLE * max(nn)::DOUBLE)) END AS p_approx
-        |FROM m GROUP BY 1""".stripMargin)),
+        |FROM m GROUP BY 1""".stripMargin),
 
     // §2.2/381 — lag-1 Granger-causality F between event-type series
     // (r14): does yesterday's X improve today's Y beyond yesterday's
@@ -9121,7 +8762,7 @@ object Queries {
     "q_granger" -> QueryDef(
       (s, d) => operators.Stats.grangerLag1(
         ds(s, d, "events").toDF, "event_type", "ts"),
-      Some("""WITH d AS (SELECT event_type AS series,
+      """WITH d AS (SELECT event_type AS series,
         |    floor(epoch(ts)/86400)::BIGINT AS day, count(*)::BIGINT AS x
         |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL GROUP BY 1, 2),
         |rows0 AS (SELECT xl.series AS xs, yt.series AS ys, yt.x AS w,
@@ -9152,7 +8793,7 @@ object Queries {
         |  CASE WHEN rss2 > 0 THEN rss1 / rss2 END AS rss_ratio,
         |  CASE WHEN n > 3 AND rss2 > 0 AND rss1 IS NOT NULL
         |    THEN (rss1 - rss2) * (n::DOUBLE - 3.0) / rss2 END AS f_stat
-        |FROM f""".stripMargin)),
+        |FROM f""".stripMargin),
 
     // §2.2/382 — one-sample KS vs the discrete uniform (r14): is each
     // source's length distribution flat over the corpus range —
@@ -9160,7 +8801,7 @@ object Queries {
     "q_ks_uniform" -> QueryDef(
       (s, d) => operators.Stats.ksUniform(ds(s, d, "documents").toDF,
         col("source"), col("n_chars")),
-      Some("""WITH v AS (SELECT source AS g, n_chars::BIGINT AS x FROM documents
+      """WITH v AS (SELECT source AS g, n_chars::BIGINT AS x FROM documents
         |  WHERE source IS NOT NULL AND n_chars IS NOT NULL),
         |mm AS (SELECT min(x) AS mn, (max(x) - min(x) + 1)::BIGINT AS v_range FROM v),
         |cells AS (SELECT g, x, count(*)::BIGINT AS c FROM v GROUP BY 1, 2),
@@ -9177,7 +8818,7 @@ object Queries {
         |  CASE WHEN max(ng) > 0 AND max(v_range) > 0
         |    THEN max(dev)::DOUBLE / (max(ng)::DOUBLE * max(v_range)::DOUBLE) END
         |    AS d_stat
-        |FROM dev GROUP BY 1""".stripMargin)),
+        |FROM dev GROUP BY 1""".stripMargin),
 
     // §2.3/383 — Yule's characteristic K per source (r14): the
     // size-robust repetitiveness constant beside TTR/hapax/Simpson —
@@ -9185,7 +8826,7 @@ object Queries {
     "text_yule_k" -> QueryDef(
       (s, d) => operators.TfIdf.yuleK(ds(s, d, "documents").toDF,
         "source", "text"),
-      Some("""WITH tok AS (SELECT source AS g,
+      """WITH tok AS (SELECT source AS g,
         |    unnest(regexp_split_to_array(trim(text), '\s+')) AS w
         |  FROM documents WHERE source IS NOT NULL),
         |cnt AS (SELECT g, w, count(*)::BIGINT AS c FROM tok
@@ -9194,21 +8835,18 @@ object Queries {
         |  sum(c*c)::BIGINT AS sum_c2,
         |  CASE WHEN sum(c) > 0 THEN 10000.0 * (sum(c*c)::DOUBLE - sum(c)::DOUBLE)
         |    / (sum(c)::DOUBLE * sum(c)::DOUBLE) END AS yule_k
-        |FROM cnt GROUP BY 1""".stripMargin)),
+        |FROM cnt GROUP BY 1""".stripMargin),
 
     // §2.2/384 — Davies–Bouldin clustering index (r14): worst-neighbor
     // compactness/separation beside the silhouette (375) — exact
     // fixed-point σ and centroid gaps, labels² pair work only.
     "sim_db_index" -> QueryDef(
       (s, d) => operators.Similarity.daviesBouldin(
-        ds(s, d, "embeddings").toDF
-          .filter(graft.functions.VectorFunctions.allFinite(col("embedding"))),
+        finiteEmbeddings(s, d),
         "vec_id", "embedding", "label"),
-      Some("""WITH e AS (SELECT vec_id, label,
+      s"""WITH e AS (SELECT vec_id, label,
         |    unnest(range(len(embedding)))::INT AS pos, unnest(embedding) AS v
-        |  FROM embeddings WHERE vec_id IS NOT NULL AND label IS NOT NULL
-        |    AND embedding IS NOT NULL
-        |    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0),
+        |  FROM embeddings WHERE ${finiteEmbeddingSql(Seq("vec_id", "label"))}),
         |b AS (SELECT vec_id, label, pos, round(v::DOUBLE * 1048576)::BIGINT AS vq FROM e),
         |cent AS (SELECT label, pos, count(*)::BIGINT AS cn, sum(vq)::BIGINT AS csum
         |  FROM b GROUP BY 1, 2),
@@ -9243,26 +8881,15 @@ object Queries {
         |db AS (SELECT (sum(r_max_q) // count(*))::BIGINT AS db_q FROM rr)
         |SELECT sg.label AS label, n_vecs, sigma_q, r_max_q, db.db_q,
         |  db.db_q::DOUBLE / 1048576.0 AS db
-        |FROM sg JOIN rr ON rr.label = sg.label CROSS JOIN db""".stripMargin)),
+        |FROM sg JOIN rr ON rr.label = sg.label CROSS JOIN db""".stripMargin),
 
     // §2.2/385 — degree-distribution power-law exponent (r14): the
     // scale-free screen beside assortativity (269) — Clauset MLE at
     // d_min = 2, cell-quantized ln, one combinable pass.
     "q_degree_powerlaw" -> QueryDef(
-      (s, d) => {
-        val li = ds(s, d, "lineitem").toDF
-          .filter(col("l_quantity") >= 45)
-          .select("l_orderkey", "l_partkey")
-        val e = li.as("x").join(li.as("y"),
-            col("x.l_orderkey") === col("y.l_orderkey") &&
-              col("x.l_partkey") < col("y.l_partkey"))
-          .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-        operators.GraphMetrics.degreePowerLaw(e, "src", "dst", dMin = 2)
-      },
-      Some("""WITH e0 AS (SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM lineitem x JOIN lineitem y
-        |    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
-        |  WHERE x.l_quantity >= 45 AND y.l_quantity >= 45),
+      (s, d) => operators.GraphMetrics.degreePowerLaw(
+        coPurchaseEdges(s, d, Some(col("l_quantity") >= 45)), "src", "dst", dMin = 2),
+      s"""WITH e0 AS (${coPurchaseSql(Some("l_quantity >= 45"))}),
         |deg AS (SELECT id, count(*)::BIGINT AS dg FROM
         |  (SELECT a AS id FROM e0 UNION ALL SELECT b FROM e0) GROUP BY 1),
         |cells AS (SELECT dg, count(*)::BIGINT AS cnt FROM deg GROUP BY 1),
@@ -9276,7 +8903,7 @@ object Queries {
         |SELECT n_nodes, n_tail, max_degree, lnsum_q,
         |  CASE WHEN lnsum_q > 0
         |    THEN 1.0 + n_tail::DOUBLE * 1048576.0 / lnsum_q::DOUBLE END AS alpha
-        |FROM a""".stripMargin)),
+        |FROM a""".stripMargin),
 
     // §2.2/386 — inter-event gap memory coefficient per series (r14):
     // Goh–Barabási memory beside the gap profile (331) — consecutive-
@@ -9284,7 +8911,7 @@ object Queries {
     "q_gap_memory" -> QueryDef(
       (s, d) => operators.TimeSeries.gapMemory(
         ds(s, d, "events").toDF, "event_type", "ts", "event_id"),
-      Some("""WITH e AS (SELECT event_type AS series, floor(epoch(ts))::BIGINT AS ep,
+      """WITH e AS (SELECT event_type AS series, floor(epoch(ts))::BIGINT AS ep,
         |    event_id FROM events
         |  WHERE event_type IS NOT NULL AND ts IS NOT NULL AND event_id IS NOT NULL),
         |g1 AS (SELECT series, ep, event_id,
@@ -9310,7 +8937,7 @@ object Queries {
         |      / (sqrt(n_pairs::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE)
         |        * sqrt(n_pairs::DOUBLE * syy::DOUBLE - sy::DOUBLE * sy::DOUBLE))
         |    END AS r_memory
-        |FROM m""".stripMargin)),
+        |FROM m""".stripMargin),
 
     // §2.2/387 — Atkinson inequality index per market segment (r14):
     // 1 − geomean/mean of per-customer revenue — the welfare-weighted
@@ -9324,7 +8951,7 @@ object Queries {
           col("c_mktsegment"), col("o_custkey"),
           round(col("o_totalprice") * 100))
       },
-      Some("""WITH rev AS (SELECT c.c_mktsegment AS mkt, o.o_custkey AS ent,
+      """WITH rev AS (SELECT c.c_mktsegment AS mkt, o.o_custkey AS ent,
         |    sum(round(o.o_totalprice * 100)::BIGINT)::BIGINT AS rev
         |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         |  WHERE c.c_mktsegment IS NOT NULL AND o.o_custkey IS NOT NULL
@@ -9336,7 +8963,7 @@ object Queries {
         |    THEN 1.0 - exp((sum(floor(ln(rev::DOUBLE) * 1048576)::BIGINT)
         |        // count(*))::DOUBLE / 1048576.0)
         |      * count(*)::DOUBLE / sum(rev)::DOUBLE END AS atkinson
-        |FROM rev GROUP BY 1""".stripMargin)),
+        |FROM rev GROUP BY 1""".stripMargin),
 
     // §2.2/388 — rank-biased overlap between two top-20 document
     // rankings (r14): do length and token count surface the same docs
@@ -9347,7 +8974,7 @@ object Queries {
         ds(s, d, "documents").toDF
           .withColumn("__bpe", TextFunctions.bpeTokenCount(col("text"))),
         "doc_id", col("n_chars"), col("__bpe"), k = 20),
-      Some("""WITH RECURSIVE base AS (SELECT doc_id AS id, n_chars::BIGINT AS sa,
+      """WITH RECURSIVE base AS (SELECT doc_id AS id, n_chars::BIGINT AS sa,
         |    len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))::BIGINT
         |      AS sb
         |  FROM documents WHERE doc_id IS NOT NULL AND n_chars IS NOT NULL
@@ -9370,14 +8997,21 @@ object Queries {
         |  coalesce(max(CASE WHEN d = 20 THEN x_d END), 0)::BIGINT AS x_k,
         |  coalesce(sum(term_q), 0)::BIGINT AS rbo_q,
         |  coalesce(sum(term_q), 0)::DOUBLE / 1048576.0 / 10.0 AS rbo
-        |FROM t""".stripMargin))
+        |FROM t""".stripMargin)
   )
 
-  lazy val asMap: Map[String, QueryDef] = registry.toMap
+  /** `entries` by name. A name given twice fails instead of silently
+    * keeping the later entry.
+    */
+  private[graft] def index(entries: Seq[(String, QueryDef)]): Map[String, QueryDef] = {
+    val dups = entries.groupBy(_._1).collect { case (n, es) if es.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    entries.toMap
+  }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map { case (n, q) => n -> q.build }.toMap
+  val asMap: Map[String, QueryDef] = index(registry)
 
-  def oracleSql: Map[String, String] =
-    registry.collect { case (n, QueryDef(_, Some(sql))) => n -> sql }.toMap
+  val queries: Map[String, (SparkSession, String) => DataFrame] = asMap.view.mapValues(_.build).toMap
+
+  val oracleSql: Map[String, String] = asMap.view.mapValues(_.oracle).toMap
 }

@@ -81,6 +81,11 @@ object MetricsRegistry {
     trackers.clear()
   }
 
+  def toRow(r: Rec): InternalRow = new GenericInternalRow(Array[Any](
+    UTF8String.fromString(r.kind), UTF8String.fromString(r.name),
+    r.startedAtMs, r.wallMs, r.records, r.bytesRead, r.shuffleWrite, r.shuffleRead,
+    r.eventLagMs.fold(null: Any)(identity)))
+
   def snapshot(): Seq[Rec] = {
     val base = ring.synchronized(ring.toVector)
     val stream = trackers.asScala.flatMap { case (name, t) =>
@@ -127,10 +132,9 @@ object MetricsService {
     * lazily, so the summary is as fresh as the base table.
     */
   def register(spark: SparkSession): Unit = {
-    spark.read.format(classOf[MetricsTableProvider].getName).load()
-      .createOrReplaceTempView("graft_metrics")
-    spark.read.format(classOf[PlanMetricsTableProvider].getName).load()
-      .createOrReplaceTempView("graft_plan_metrics")
+    for (view <- Seq("graft_metrics", "graft_plan_metrics"))
+      spark.read.format(classOf[SnapshotTableProvider].getName).option("view", view).load()
+        .createOrReplaceTempView(view)
     spark.sql("""
       CREATE OR REPLACE TEMPORARY VIEW graft_metrics_summary AS
       SELECT kind, name, count(*) AS n_queries,
@@ -145,42 +149,53 @@ object MetricsService {
   }
 }
 
-/** `spark.read.format("graft.metrics.MetricsTableProvider").load()`. */
-class MetricsTableProvider extends TableProvider {
+/** The DataSource V2 table behind both metrics views, picked by the
+  * `view` load option: `graft_metrics` ([[MetricsRegistry]]) or
+  * `graft_plan_metrics` ([[PlanMetricsRegistry]]). The scan snapshots
+  * the view's driver-side ring at `planInputPartitions` time and ships
+  * the rows, already converted to InternalRows, inside the partition.
+  */
+class SnapshotTableProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    MetricsRegistry.schema
+    SnapshotTable.view(options.get("view"))._1
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table =
-    new MetricsTable
+    new SnapshotTable(properties.get("view"))
 }
 
-class MetricsTable extends Table with SupportsRead {
-  override def name(): String = "graft_metrics"
-  override def schema(): StructType = MetricsRegistry.schema
+object SnapshotTable {
+  /** View name → (schema, snapshot as rows). */
+  private val views: Map[String, (StructType, () => Seq[InternalRow])] = Map(
+    "graft_metrics" -> (MetricsRegistry.schema, () => MetricsRegistry.snapshot().map(MetricsRegistry.toRow)),
+    "graft_plan_metrics" -> (PlanMetricsRegistry.schema, () => PlanMetricsRegistry.snapshot().map(PlanMetricsRegistry.toRow)))
+
+  def view(name: String): (StructType, () => Seq[InternalRow]) = views.getOrElse(name,
+    throw new IllegalArgumentException(
+      s"unknown metrics view '$name'; the view option is one of ${views.keys.toSeq.sorted.mkString(", ")}"))
+}
+
+class SnapshotTable(viewName: String) extends Table with SupportsRead {
+  private val (viewSchema, snapshot) = SnapshotTable.view(viewName)
+  override def name(): String = viewName
+  override def schema(): StructType = viewSchema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new MetricsScan
-}
-
-class MetricsScan extends Scan with Batch {
-  override def readSchema(): StructType = MetricsRegistry.schema
-  override def toBatch: Batch = this
-  // Driver-side: the snapshot rides inside the partition to executors.
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(MetricsPartition(MetricsRegistry.snapshot().toArray))
-  override def createReaderFactory(): PartitionReaderFactory =
-    (p: InputPartition) => new PartitionReader[InternalRow] {
-      private val rows = p.asInstanceOf[MetricsPartition].recs.iterator
-      private var cur: MetricsRegistry.Rec = _
-      override def next(): Boolean = { val h = rows.hasNext; if (h) cur = rows.next(); h }
-      override def get(): InternalRow = new GenericInternalRow(Array[Any](
-        UTF8String.fromString(cur.kind), UTF8String.fromString(cur.name),
-        cur.startedAtMs, cur.wallMs, cur.records, cur.bytesRead,
-        cur.shuffleWrite, cur.shuffleRead,
-        cur.eventLagMs.fold(null: Any)(identity)))
-      override def close(): Unit = ()
+    () => new Scan with Batch {
+      override def readSchema(): StructType = viewSchema
+      override def toBatch: Batch = this
+      // Driver-side: the snapshot rides inside the partition to executors.
+      override def planInputPartitions(): Array[InputPartition] =
+        Array(SnapshotPartition(snapshot().toArray))
+      override def createReaderFactory(): PartitionReaderFactory =
+        (p: InputPartition) => new PartitionReader[InternalRow] {
+          private val rows = p.asInstanceOf[SnapshotPartition].rows.iterator
+          private var cur: InternalRow = _
+          override def next(): Boolean = { val h = rows.hasNext; if (h) cur = rows.next(); h }
+          override def get(): InternalRow = cur
+          override def close(): Unit = ()
+        }
     }
 }
 
-final case class MetricsPartition(recs: Array[MetricsRegistry.Rec]) extends InputPartition
+final case class SnapshotPartition(rows: Array[InternalRow]) extends InputPartition

@@ -1,15 +1,10 @@
 package graft.metrics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-OPERATOR runtime breakdown over the wire (reference parity:
@@ -92,42 +87,8 @@ object PlanMetricsRegistry {
   def clear(): Unit = ring.synchronized(ring.clear())
 
   def snapshot(): Seq[PlanRec] = ring.synchronized(ring.toVector).flatten
-}
 
-/** `spark.read.format("graft.metrics.PlanMetricsTableProvider").load()`. */
-class PlanMetricsTableProvider extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    PlanMetricsRegistry.schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: java.util.Map[String, String]): Table =
-    new PlanMetricsTable
+  def toRow(r: PlanRec): InternalRow = new GenericInternalRow(Array[Any](
+    UTF8String.fromString(r.name), r.runId, r.nodeId,
+    UTF8String.fromString(r.nodeName), UTF8String.fromString(r.metricName), r.value))
 }
-
-class PlanMetricsTable extends Table with SupportsRead {
-  override def name(): String = "graft_plan_metrics"
-  override def schema(): StructType = PlanMetricsRegistry.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new PlanMetricsScan
-}
-
-class PlanMetricsScan extends Scan with Batch {
-  override def readSchema(): StructType = PlanMetricsRegistry.schema
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(PlanMetricsPartition(PlanMetricsRegistry.snapshot().toArray))
-  override def createReaderFactory(): PartitionReaderFactory =
-    (p: InputPartition) => new PartitionReader[InternalRow] {
-      private val rows = p.asInstanceOf[PlanMetricsPartition].recs.iterator
-      private var cur: PlanMetricsRegistry.PlanRec = _
-      override def next(): Boolean = { val h = rows.hasNext; if (h) cur = rows.next(); h }
-      override def get(): InternalRow = new GenericInternalRow(Array[Any](
-        UTF8String.fromString(cur.name), cur.runId, cur.nodeId,
-        UTF8String.fromString(cur.nodeName), UTF8String.fromString(cur.metricName),
-        cur.value))
-      override def close(): Unit = ()
-    }
-}
-
-final case class PlanMetricsPartition(recs: Array[PlanMetricsRegistry.PlanRec]) extends InputPartition

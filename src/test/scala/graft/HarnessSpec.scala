@@ -45,6 +45,26 @@ class HarnessSpec extends SparkSpecBase {
     assert(Measure.renderPlan("InMemoryTableScan [a#1]") == "InMemoryTableScan [a#1]")
   }
 
+  test("the plan renderer masks run-specific tokens and renumbers expression ids") {
+    def plan(ids: (Int, Int), hash: String, lambda: String, planId: Int, rdd: Int,
+             line: Int, size: String, rows: String) =
+      s"""Project [a#${ids._1}, b#${ids._2}, (a#${ids._1} + 1) AS c#${ids._2 + 7}L]
+         |+- ObjectHashAggregate [graft.functions.KMinAgg@$hash]
+         |   +- MapElements graft.Queries$lambda, obj#${ids._1 + 3}
+         |      +- ShuffleQueryStage (7), Statistics(sizeInBytes=$size, rowCount=$rows)
+         |         +- Scan ExistingRDD [plan_id=$planId] MapPartitionsRDD[$rdd] at LabelPropagation.scala:$line
+         |""".stripMargin
+    val a = plan((12, 40), "c083cec", "$$Lambda$6365/0x00007f6b2d5ebb58@7c76d466",
+      11, 640, 122, "1027.9 KiB", "500")
+    val b = plan((301, 7), "40503088", "$$Lambda$6378/0x00007f6b2d5f0d38@3528740f",
+      70, 680, 118, "2.44E+31 B", "1.37E+4")
+    assert(a != b)
+    assert(Measure.renderPlan(a) == Measure.renderPlan(b))
+    assert(Measure.renderPlan(a).linesIterator.next() == "Project [a#1, b#2, (a#1 + 1) AS c#3L]")
+    // renumbering keeps distinct ids distinct
+    assert(Measure.renderPlan("Project [a#5, b#5]") != Measure.renderPlan("Project [a#5, b#6]"))
+  }
+
   test("the steady-state timer returns a positive median and releaseAll frees storage") {
     val runs = Measure.steadyState(spark, sf(), SparkEntry.queries("q1_agg"))
     assert(runs.size == 3)

@@ -44,7 +44,7 @@ class OracleTypeContractSpec extends SparkSpecBase {
   }
 
   test("manifest covers every oracled query (regenerate with --dump-types after adding one)") {
-    val oracled = Queries.asMap.collect { case (n, q) if q.oracle.isDefined => n }.toSet
+    val oracled = Queries.asMap.keySet
     val missing = oracled -- manifest.keySet
     val stale = manifest.keySet -- oracled
     assert(missing.isEmpty, s"queries missing from tools/oracle_types.json: $missing")
@@ -65,5 +65,14 @@ class OracleTypeContractSpec extends SparkSpecBase {
       }
     }
     assert(bad.isEmpty, s"type-contract violations:\n  ${bad.mkString("\n  ")}")
+  }
+
+  test("the registry index rejects a query name given twice") {
+    val q = Queries.asMap("q1_agg")
+    val err = intercept[IllegalArgumentException] {
+      Queries.index(Seq("a" -> q, "b" -> q, "a" -> q))
+    }
+    assert(err.getMessage.contains("duplicate query names: a"))
+    assert(Queries.index(Seq("a" -> q, "b" -> q)).keySet == Set("a", "b"))
   }
 }

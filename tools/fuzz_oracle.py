@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Property-fuzz the oracle gate: all 220 oracled queries replay over
+"""Property-fuzz the oracle gate: all 346 oracled queries replay over
 the SAME deterministic generator tables every round, so data-dependent
 edges (negative values where the generator only emits positives, NULLs
 in joined/grouped/sorted columns, unicode beyond ASCII in text, empty
