@@ -19,6 +19,15 @@ import org.apache.spark.sql.SparkSession
   *    query shape, not one per key). Only a session built with this
   *    conf gets the rule; `GraftExtensions.register` cannot add it to a
   *    session that is already running.
+  *  - `file:` bound to [[sources.NioLocalFileSystem]] (FileSystem) and
+  *    [[sources.NioLocalFs]] (FileContext). Without Hadoop's native
+  *    library, the stock local filesystem forks `chmod` on every
+  *    create and mkdir and `readlink` on every FileContext rename:
+  *    one or two processes per checkpoint log entry, state-store
+  *    delta and sink file. The subclass does both through `java.nio`. Both
+  *    bindings are needed: Spark's checkpoint manager for `file:`
+  *    uses FileContext, while parquet writes and graft's own
+  *    existence checks use FileSystem. Other schemes are untouched.
   *
   * Every session in the repository is built here: the mains through
   * [[local]], the test session through [[builder]].
@@ -35,6 +44,8 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.hadoop.fs.file.impl", classOf[sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[sources.NioLocalFs].getName)
 
   def local(cores: Int = GraftSession.cores): SparkSession = {
     val s = builder(cores).master(s"local[$cores]")

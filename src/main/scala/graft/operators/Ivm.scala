@@ -210,7 +210,7 @@ object Ivm {
     // the read-back types so partition-column inference can't retype
     val stateShape = groupState(delta.limit(0), keyCols, valCol)
     val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     val existing =
       if (!fs.exists(hPath)) stateShape
       else spark.read.schema(stateShape.schema).parquet(path)
@@ -305,7 +305,7 @@ object Ivm {
     val shape = rState.join(sState, joinKey).limit(0)
       .withColumn("__jb", lit(0))
     val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     val existing =
       if (!fs.exists(hPath)) shape
       else spark.read.schema(shape.schema).parquet(path).filter(inTouched)
@@ -440,7 +440,7 @@ object Ivm {
     val inTouched = col("__kb").isin(touched.toIndexedSeq: _*)
     val shape = changes.drop(opCol).limit(0).withColumn("__kb", lit(0))
     val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     val existing =
       if (!fs.exists(hPath)) shape
       else spark.read.schema(shape.schema).parquet(path).filter(inTouched)

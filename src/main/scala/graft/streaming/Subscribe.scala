@@ -254,7 +254,7 @@ object Subscribe {
       // catch would also swallow schema/corruption failures and
       // silently overwrite good partitions with batch-only rows
       val hPath = new org.apache.hadoop.fs.Path(path)
-      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
       val existing =
         if (!fs.exists(hPath)) None
         else {

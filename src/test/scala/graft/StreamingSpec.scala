@@ -587,6 +587,73 @@ class StreamingSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
+  test("incremental sum and upsert sink resume from their checkpoints after a restart") {
+    import java.nio.file.{Files, StandardCopyOption}
+    val dir = Files.createTempDirectory("graft-restart")
+    val feed = Files.createDirectories(dir.resolve("feed"))
+    val staging = Files.createDirectories(dir.resolve("staging"))
+    val view = s"$dir/view"
+    val sums = scala.collection.mutable.Map.empty[Long, Long]
+    val latest = scala.collection.mutable.Map.empty[Long, (String, Long)]
+    var seq = 0
+    // one changelog file per batch, moved in whole like a producer's commit
+    def writeFile(): Unit = {
+      seq += 1
+      val lines = (0 until 20).map { i =>
+        val key = ((seq * 7 + i) % 5).toLong
+        val ts = seq * 1000L + i
+        if (i % 8 == 0) {
+          val version = seq * 100L + i
+          latest(key) = (s"t$version", version)
+          s"""{"payload":{"op":"u","ts_ms":$ts,"source":{"table":"stories"},""" +
+            s""""after":{"id":"$key","title":"t$version","version":"$version"}}}"""
+        } else {
+          val inc = (seq + i).toLong
+          sums(key) = sums.getOrElse(key, 0L) + inc
+          s"""{"payload":{"op":"c","ts_ms":$ts,"source":{"table":"votes"},""" +
+            s""""after":{"id":"$key","inc":"$inc"}}}"""
+        }
+      }
+      val tmp = staging.resolve(f"f-$seq%04d.json")
+      Files.write(tmp, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+      Files.move(tmp, feed.resolve(tmp.getFileName), StandardCopyOption.ATOMIC_MOVE)
+    }
+    def records = Subscribe.fromChangelog(spark, spark.readStream.text(feed.toString), "id")
+    def startSums() = Subscribe.incrementalSum(
+        Subscribe.changelogTable(records, "votes", Map("inc" -> "long")), "key", "inc")
+      .writeStream.format("memory").queryName("restart_sums").outputMode("complete")
+      .option("checkpointLocation", s"$dir/ckpt-votes").start()
+    def startView() = Subscribe.parquetUpsertSink(
+      Subscribe.changelogTable(records, "stories",
+        Map("title" -> "string", "version" -> "long"))
+        .withColumn("part", pmod(col("key"), lit(2L))),
+      view, s"$dir/ckpt-view", key = Seq("key"), tsCol = "ts",
+      tiebreak = Seq("version"), partitionCol = "part")
+    def batchIds(q: org.apache.spark.sql.streaming.StreamingQuery): Seq[Long] =
+      q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq
+    def run(n: Int): Seq[org.apache.spark.sql.streaming.StreamingQuery] = {
+      val qs = Seq(startSums(), startView())
+      try (1 to n).foreach { _ => writeFile(); qs.foreach(_.processAllAvailable()) }
+      finally qs.foreach(_.stop())
+      qs
+    }
+
+    val first = run(3)
+    assert(first.map(batchIds) === Seq(Seq(0L, 1L, 2L), Seq(0L, 1L, 2L)))
+    // the restarted queries reload offsets, commits, the file source's
+    // seen-file log and the state-store deltas: they resume at batch 3,
+    // replay no file, and the running sums carry the first run's state
+    val second = run(2)
+    assert(second.map(batchIds) === Seq(Seq(3L, 4L), Seq(3L, 4L)))
+    val got = spark.table("restart_sums").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === sums.toMap, "complete-mode sums after the restart")
+    val rows = spark.read.parquet(view).collect()
+      .map(r => r.getAs[Long]("key") -> (r.getAs[String]("title"), r.getAs[Long]("version")))
+    assert(rows.length === latest.size, "one view row per story")
+    assert(rows.toMap === latest.toMap, "the view holds each story's latest version")
+  }
+
   test("object store: atomic puts, snapshot listing, batch read-back") {
     import graft.sources.ObjectStore
     val bucket = java.nio.file.Files.createTempDirectory("graft-bucket").toString
