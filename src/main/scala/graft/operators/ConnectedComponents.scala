@@ -99,17 +99,13 @@ object ConnectedComponents {
       .distinct()
     val membership = canon.select(col("b1").as("id"), col("b1"), col("b2"))
       .union(canon.select(col("b2").as("id"), col("b1"), col("b2")))
-    val labels = propagateToFixpoint(membership, Seq("b1", "b2"), maxIterations)
-    // Rename INTO its own persisted frame and release the inner one:
-    // returning a renamed select over the persisted labels would leave
-    // callers unable to unpersist (unpersisting a transformed view does
-    // not release the underlying entry), leaking a node-sized cache
-    // entry per call until clearCache.
-    val out = labels.select(col("id").as("node_id"), col("label").as("component"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    labels.unpersist(blocking = false)
-    out
+    // Spark's cache lookup matches a pure rename of a cached plan, so the
+    // renamed view reads the persisted labels and the caller's
+    // `unpersist()` on it releases that entry. Persisting the view
+    // instead is a no-op ("Asked to cache already cached data"), and
+    // releasing `labels` afterwards would leave the result uncached.
+    propagateToFixpoint(membership, Seq("b1", "b2"), maxIterations)
+      .select(col("id").as("node_id"), col("label").as("component"))
   }
 
   /** Iterate until labels stop changing, capped at `maxIterations`.

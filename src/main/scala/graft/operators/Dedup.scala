@@ -65,7 +65,12 @@ object Dedup {
   private val maxPins = 4
 
   private[graft] def registerPin(df: DataFrame): DataFrame = recentPins.synchronized {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // a frame that is already cached (ConnectedComponents' labels) is
+    // only registered: a second persist is a wasted cache lookup that
+    // Spark answers with "Asked to cache already cached data"
+    val p =
+      if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
+      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     recentPins.addLast(p)
     while (recentPins.size > maxPins)
       recentPins.removeFirst().unpersist(blocking = false)

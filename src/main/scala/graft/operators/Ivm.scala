@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Batch incremental view maintenance — the OFFLINE half of the
   * reference's soul. Reference QPUs keep materialized state current by
@@ -27,8 +28,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the delta is aggregated FIRST (combinable, map-side),
   * so the merge join is state-keys × touched-keys — never base-table
-  * sized; the parquet-backed variant rewrites only the partitions the
-  * delta touches (same pruning discipline as `parquetUpsertSink`).
+  * sized; the parquet-backed variants rewrite only the partitions the
+  * delta touches, through [[rewritePartitions]].
   */
 object Ivm {
 
@@ -181,14 +182,11 @@ object Ivm {
 
   /** Parquet-backed refresh of a materialized group-by-sum table: read
     * ONLY the partitions the delta touches, merge with
-    * [[applyGroupDelta]], rewrite only those partitions (write-scoped
-    * dynamic overwrite — untouched partitions' files are never
-    * opened). `partitionCol` must be one of `keyCols` (the partition
+    * [[applyGroupDelta]], rewrite only those partitions
+    * ([[rewritePartitions]]); untouched partitions' files are never
+    * opened. `partitionCol` must be one of `keyCols` (the partition
     * is then automatically a pure function of the key, so a group
-    * never migrates between partitions). Same bounded-collect guard as
-    * `Subscribe.upsertBatch`: the distinct partition values
-    * parameterize the read-back filter, so a high-cardinality
-    * partition choice fails with a named error, not an OOM.
+    * never migrates between partitions).
     */
   def refreshGroupBySumTable(path: String, delta: DataFrame, opCol: String,
                              keyCols: Seq[String], valCol: String,
@@ -196,45 +194,85 @@ object Ivm {
                              maxPartitionsPerBatch: Int = 4096): Unit = {
     require(keyCols.contains(partitionCol),
       s"partitionCol '$partitionCol' must be one of the group keys $keyCols")
-    val spark = delta.sparkSession
-    val parts = delta.select(partitionCol).distinct()
-      .limit(maxPartitionsPerBatch + 1).collect().map(_.get(0))
-    require(parts.length <= maxPartitionsPerBatch,
-      s"delta touches > $maxPartitionsPerBatch distinct '$partitionCol' partitions — " +
-        "choose a lower-cardinality partition column or raise the bound")
+    // the STATE's schema (keys + sum + count) pins the read-back types
+    // so partition-column inference can't retype
+    val stateShape = groupState(delta.limit(0), keyCols, valCol).schema
+    rewritePartitions(path, partitionCol, delta, stateShape, maxPartitionsPerBatch) {
+      (existing, parts) =>
+        require(!parts.contains(null),
+          s"null '$partitionCol' partition values are not supported — " +
+            "map them to a sentinel before refreshing")
+        applyGroupDelta(existing, delta, opCol, keyCols, valCol)
+    }
+  }
+
+  /** The one partition-scoped rewrite of a parquet table, shared by
+    * [[refreshGroupBySumTable]], [[refreshJoinTable]],
+    * [[mergeKeyedTable]] and `Subscribe.upsertBatch`. The distinct
+    * `partitionCol` values of `touched` are collected, bounded by
+    * `maxPartitions` with a named error rather than an OOM (they
+    * parameterize the read-back filter, and a mis-chosen
+    * `partitionCol` such as the row key would balloon the collect).
+    * Only those partitions are read back, `merge(existing, values)` is
+    * checkpointed, and a dynamic overwrite rewrites just the touched
+    * partitions; untouched partitions' files are never opened.
+    */
+  private[graft] def rewritePartitions(path: String, partitionCol: String,
+                                       touched: DataFrame, shape: StructType,
+                                       maxPartitions: Int)(
+                                       merge: (DataFrame, Seq[Any]) => DataFrame): Unit = {
+    val spark = touched.sparkSession
+    val parts = touched.select(partitionCol).distinct()
+      .limit(maxPartitions + 1).collect().map(_.get(0)).toSeq
+    require(parts.length <= maxPartitions,
+      s"batch touches > $maxPartitions distinct '$partitionCol' partitions — " +
+        "partitionCol must be low-cardinality (a function of key, not the key itself); " +
+        "raise maxPartitionsPerBatch only if the table really has that many live partitions")
     if (parts.isEmpty) return
-    require(!parts.contains(null),
-      s"null '$partitionCol' partition values are not supported — " +
-        "map them to a sentinel before refreshing")
-    // empty frame with the STATE's schema (keys + sum + count) — pins
-    // the read-back types so partition-column inference can't retype
-    val stateShape = groupState(delta.limit(0), keyCols, valCol)
+    // explicit existence check — a blanket AnalysisException catch
+    // would also swallow schema/corruption failures and silently
+    // overwrite good partitions with batch-only rows
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     val existing =
-      if (!fs.exists(hPath)) stateShape
-      else spark.read.schema(stateShape.schema).parquet(path)
-        .filter(col(partitionCol).isin(parts.toIndexedSeq: _*))
-    val merged = applyGroupDelta(existing, delta, opCol, keyCols, valCol)
-      .localCheckpoint(true) // severs lineage from the files being overwritten
+      if (!fs.exists(hPath)) spark.createDataFrame(java.util.Collections.emptyList[Row](), shape)
+      else {
+        // a bare isin() never matches NULL, so the null partition is
+        // read back by its own predicate
+        val (nulls, nonNulls) = parts.partition(_ == null)
+        val cond = Option.when(nonNulls.nonEmpty)(col(partitionCol).isin(nonNulls: _*))
+          .toSeq ++ Option.when(nulls.nonEmpty)(col(partitionCol).isNull).toSeq
+        // read back with the schema pinned: partition-column type
+        // inference would otherwise retype numeric-looking string
+        // partition values ('01' -> int 1), making the merge's union
+        // fail or — worse — coercing '01' to '1' and rewriting those
+        // rows into a different partition directory
+        spark.read.schema(shape).parquet(path).filter(cond.reduce(_ || _))
+      }
+    // eager checkpoint: severs lineage from the files being
+    // overwritten. The surviving partition values ride the checkpoint
+    // job; struct() because collect_set skips NULLs, and a surviving
+    // null partition must not be swept
+    val (merged, probe) = Rounds.checkpoint(merge(existing, parts), Nil,
+      collect_set(struct(col(partitionCol))))
     merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
+      .option("partitionOverwriteMode", "dynamic") // write-scoped, no session conf leak
       .partitionBy(partitionCol).parquet(path)
     // dynamic overwrite only replaces partitions PRESENT in the written
-    // data: a touched partition whose groups ALL vanished writes no
-    // rows, so its stale directory must be dropped explicitly or reads
-    // would resurrect the deleted groups
-    val survived = merged.select(partitionCol).distinct().collect().map(_.get(0)).toSet
+    // data: a touched partition whose rows ALL vanished writes nothing,
+    // so its stale directory must be dropped explicitly or reads would
+    // resurrect the deleted rows
+    val survived = probe.getSeq[Row](0).map(_.get(0)).toSet
     parts.filterNot(survived.contains).foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(hPath,
-        partitionDirName(partitionCol, v)), true)
+      fs.delete(new org.apache.hadoop.fs.Path(hPath, partitionDirName(partitionCol, v)), true)
     }
   }
 
   /** The exact directory name the parquet writer used for a partition
     * value — `ExternalCatalogUtils.getPartitionPathString`, i.e. Hive
     * path escaping of both column and value (space, ':', '/', '%', …)
-    * and the `__HIVE_DEFAULT_PARTITION__` sentinel for empty strings.
+    * and the `__HIVE_DEFAULT_PARTITION__` sentinel for null and empty
+    * values.
     * A hand-built s"$col=$v" silently MISSES any partition whose
     * escaped directory differs from `String.valueOf` — the stale
     * directory then survives the vanished-partition sweep and deleted
@@ -254,8 +292,10 @@ object Ivm {
           "vanished-partition cleanup (date/timestamp/decimal render through " +
           "writer-side formatters this path does not replicate)")
     }
+    // a null value passes through as a null String: the writer's
+    // directory for it is `__HIVE_DEFAULT_PARTITION__`, not "null"
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      .getPartitionPathString(partitionCol, String.valueOf(v))
+      .getPartitionPathString(partitionCol, Option(v).map(String.valueOf).orNull)
   }
 
   /** The partition bucket for [[refreshJoinTable]]: a stable hash
@@ -277,13 +317,13 @@ object Ivm {
   /** Parquet-backed refresh of a [[writeJoinTable]] materialized join
     * under deltas to EITHER side: only the join-key buckets the delta
     * touches are read back, merged via [[applyTwoSidedJoinDelta]], and
-    * rewritten (dynamic overwrite); untouched buckets' files are never
-    * opened. Side states are pruned to the touched buckets too — the
-    * fact-table read is delta-keys-sized, not history-sized. A D row
+    * rewritten; untouched buckets' files are never opened. Side
+    * states are pruned to the touched buckets too — the fact-table
+    * read is delta-keys-sized, not history-sized. A D row
     * carries its full content, so a join-key-changing update touches
     * both the old and the new key's bucket, exactly the two buckets
     * whose rows change. Buckets whose rows ALL vanished are dropped
-    * explicitly (same discipline as [[refreshGroupBySumTable]]).
+    * ([[rewritePartitions]]).
     */
   def refreshJoinTable(path: String,
                        rState: DataFrame, deltaR: DataFrame,
@@ -291,36 +331,17 @@ object Ivm {
                        opCol: String, rIdCol: String, sIdCol: String,
                        joinKey: String, numBuckets: Int,
                        maxPartitionsPerBatch: Int = 4096): Unit = {
-    val spark = rState.sparkSession
     val jb = joinBucket(joinKey, numBuckets)
-    val touched = deltaR.select(jb).unionByName(deltaS.select(jb)).distinct()
-      .limit(maxPartitionsPerBatch + 1).collect().map(_.getInt(0))
-    require(touched.length <= maxPartitionsPerBatch,
-      s"delta touches > $maxPartitionsPerBatch join-key buckets — raise the bound " +
-        "or lower numBuckets")
-    if (touched.isEmpty) return
-    val inTouched = col("__jb").isin(touched.toIndexedSeq: _*)
-    def pruned(df: DataFrame): DataFrame =
-      df.withColumn("__jb", jb).filter(inTouched).drop("__jb")
-    val shape = rState.join(sState, joinKey).limit(0)
-      .withColumn("__jb", lit(0))
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val existing =
-      if (!fs.exists(hPath)) shape
-      else spark.read.schema(shape.schema).parquet(path).filter(inTouched)
-    val merged = applyTwoSidedJoinDelta(existing.drop("__jb"),
-        pruned(rState), pruned(deltaR), pruned(sState), pruned(deltaS),
-        opCol, rIdCol, sIdCol, joinKey)
-      .withColumn("__jb", jb)
-      .localCheckpoint(true) // severs lineage from the files being overwritten
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__jb").parquet(path)
-    val survived = merged.select("__jb").distinct().collect().map(_.getInt(0)).toSet
-    touched.filterNot(survived.contains).foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(hPath,
-        partitionDirName("__jb", v)), true)
+    val shape = rState.join(sState, joinKey).limit(0).withColumn("__jb", lit(0)).schema
+    rewritePartitions(path, "__jb", deltaR.select(jb).unionByName(deltaS.select(jb)),
+        shape, maxPartitionsPerBatch) { (existing, touched) =>
+      val inTouched = col("__jb").isin(touched: _*)
+      def pruned(df: DataFrame): DataFrame =
+        df.withColumn("__jb", jb).filter(inTouched).drop("__jb")
+      applyTwoSidedJoinDelta(existing.drop("__jb"),
+          pruned(rState), pruned(deltaR), pruned(sState), pruned(deltaS),
+          opCol, rIdCol, sIdCol, joinKey)
+        .withColumn("__jb", jb)
     }
   }
 
@@ -404,11 +425,10 @@ object Ivm {
     * each change row carries `opCol` = I/U (the full replacement row;
     * matched → update, unmatched → insert — upsert) or D (delete by
     * key — its other columns are ignored). Only the hash buckets the
-    * change keys touch are read back and rewritten (dynamic
-    * overwrite); untouched buckets' files are never opened, so merge
-    * IO tracks the CHANGE batch, not table size. Buckets whose rows
-    * all vanished are dropped explicitly (the
-    * [[refreshGroupBySumTable]] resurrect-on-read sweep).
+    * change keys touch are read back and rewritten
+    * ([[rewritePartitions]]); untouched buckets' files are never
+    * opened, so merge IO tracks the CHANGE batch, not table size, and
+    * buckets whose rows all vanished are dropped.
     *
     * At most ONE change row per key per batch — enforced, because two
     * same-key changes in one unordered batch have no defined merge
@@ -420,7 +440,6 @@ object Ivm {
   def mergeKeyedTable(path: String, changes: DataFrame, opCol: String,
                       keyCol: String, numBuckets: Int,
                       maxPartitionsPerBatch: Int = 4096): Unit = {
-    val spark = changes.sparkSession
     require(!changes.schema.fieldNames.contains("__kb"),
       "'__kb' is the reserved bucket column")
     require(changes.filter(col(keyCol).isNull).limit(1).collect().isEmpty,
@@ -431,32 +450,13 @@ object Ivm {
       s"multiple change rows for '$keyCol' = ${dup.headOption.map(_.get(0)).orNull} " +
         "in one batch — merge order would be undefined; net the batch first")
     val kb = pmod(hash(col(keyCol)), lit(numBuckets))
-    val touched = changes.select(kb.as("__kb")).distinct()
-      .limit(maxPartitionsPerBatch + 1).collect().map(_.getInt(0))
-    require(touched.length <= maxPartitionsPerBatch,
-      s"change batch touches > $maxPartitionsPerBatch buckets — raise the bound " +
-        "or lower numBuckets")
-    if (touched.isEmpty) return
-    val inTouched = col("__kb").isin(touched.toIndexedSeq: _*)
-    val shape = changes.drop(opCol).limit(0).withColumn("__kb", lit(0))
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val existing =
-      if (!fs.exists(hPath)) shape
-      else spark.read.schema(shape.schema).parquet(path).filter(inTouched)
-    val keep = existing.drop("__kb")
-      .join(changes.select(col(keyCol)), Seq(keyCol), "left_anti")
-    val upserts = changes.filter(col(opCol) =!= "D").drop(opCol)
-    val merged = keep.unionByName(upserts)
-      .withColumn("__kb", kb)
-      .localCheckpoint(true) // severs lineage from the files being overwritten
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__kb").parquet(path)
-    val survived = merged.select("__kb").distinct().collect().map(_.getInt(0)).toSet
-    touched.filterNot(survived.contains).foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(hPath,
-        partitionDirName("__kb", v)), true)
+    val shape = changes.drop(opCol).limit(0).withColumn("__kb", lit(0)).schema
+    rewritePartitions(path, "__kb", changes.select(kb.as("__kb")), shape,
+        maxPartitionsPerBatch) { (existing, _) =>
+      val keep = existing.drop("__kb")
+        .join(changes.select(col(keyCol)), Seq(keyCol), "left_anti")
+      val upserts = changes.filter(col(opCol) =!= "D").drop(opCol)
+      keep.unionByName(upserts).withColumn("__kb", kb)
     }
   }
 }

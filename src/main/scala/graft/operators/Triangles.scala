@@ -86,14 +86,18 @@ object Triangles {
       .groupBy("id").agg(count(lit(1)).as("dg"))
     val ka = col("da") * 100000000L + col("a")
     val kb = col("db") * 100000000L + col("b")
-    val oriented = und
+    val orientedPlan = und
       .join(deg.select(col("id").as("a"), col("dg").as("da")), "a")
       .join(deg.select(col("id").as("b"), col("dg").as("db")), "b")
       .select(
         when(ka < kb, col("a")).otherwise(col("b")).as("u"),
         when(ka < kb, col("b")).otherwise(col("a")).as("v"),
         when(ka < kb, kb).otherwise(ka).as("kv"))
-      .persist()
+    // an earlier call over the same edges may have left this plan
+    // cached; persisting it again only logs "already cached data"
+    val oriented =
+      if (orientedPlan.storageLevel != org.apache.spark.storage.StorageLevel.NONE) orientedPlan
+      else orientedPlan.persist()
     // materialize BEFORE the triple self-reference below: the wedge
     // join's two sides and the closing join otherwise race to fill the
     // cache concurrently inside one job and re-execute the whole

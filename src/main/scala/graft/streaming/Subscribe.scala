@@ -202,16 +202,15 @@ object Subscribe {
     * (reference: every QPU materializes its state and serves queries
     * from it; here the state lands as a table any engine can scan).
     *
-    * Each micro-batch UPSERTS: the batch's affected partitions are
+    * Each micro-batch UPSERTS through [[graft.operators.Ivm
+    * .rewritePartitions]]: the batch's affected partitions are
     * re-read, merged latest-per-key ([[graft.operators.AsOf
     * .latestPerKey]] — the same definition of "latest" as the batch
-    * snapshots), and rewritten with a write-scoped dynamic partition
-    * overwrite — partitions the batch didn't touch are never
-    * rewritten, so write cost tracks the change rate, not the table
-    * size. The merged frame is `localCheckpoint`ed before the
-    * overwrite: a persist would still recompute from the files being
-    * deleted if cache blocks were lost mid-write; the checkpoint
-    * severs that lineage.
+    * snapshots), checkpointed and rewritten — partitions the batch
+    * didn't touch are never rewritten, so write cost tracks the change
+    * rate, not the table size. The checkpoint, not a persist, sits
+    * before the overwrite: a persist would still recompute from the
+    * files being deleted if cache blocks were lost mid-write.
     *
     * CONTRACT: `partitionCol` must be a pure function of `key` — a
     * key that migrates between partitions would leave its old row
@@ -231,51 +230,18 @@ object Subscribe {
       .start()
 
   /** One micro-batch of the upsert — factored out so the
-    * partition-cardinality contract is directly testable. The distinct
-    * partition-value `collect` is driver-side by design (the values
-    * parameterize the read-back filter); it is bounded by
-    * `maxPartitionsPerBatch` with a named error rather than an OOM,
-    * because a mis-chosen `partitionCol` (e.g. the row key itself)
-    * would otherwise balloon the collect with the batch size.
+    * partition-cardinality contract (`maxPartitionsPerBatch`, enforced
+    * by [[graft.operators.Ivm.rewritePartitions]]) is directly
+    * testable.
     */
   private[graft] def upsertBatch(batch: DataFrame, path: String,
                                  key: Seq[String], tsCol: String,
                                  tiebreak: Seq[String], partitionCol: String,
-                                 maxPartitionsPerBatch: Int = 4096): Unit = {
-    val spark = batch.sparkSession
-    val parts = batch.select(partitionCol).distinct()
-      .limit(maxPartitionsPerBatch + 1).collect().map(_.get(0))
-    require(parts.length <= maxPartitionsPerBatch,
-      s"batch touches > $maxPartitionsPerBatch distinct '$partitionCol' partitions — " +
-        "partitionCol must be low-cardinality (a function of key, not the key itself); " +
-        "raise maxPartitionsPerBatch only if the table really has that many live partitions")
-    if (parts.nonEmpty) {
-      // explicit existence check — a blanket AnalysisException
-      // catch would also swallow schema/corruption failures and
-      // silently overwrite good partitions with batch-only rows
-      val hPath = new org.apache.hadoop.fs.Path(path)
-      val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-      val existing =
-        if (!fs.exists(hPath)) None
-        else {
-          val (nulls, nonNulls) = parts.partition(_ == null)
-          val cond = Option.when(nonNulls.nonEmpty)(col(partitionCol).isin(nonNulls.toIndexedSeq: _*))
-            .toSeq ++ Option.when(nulls.nonEmpty)(col(partitionCol).isNull).toSeq
-          // read back with the batch's schema pinned: partition-column
-          // type inference would otherwise retype numeric-looking
-          // string partition values ('01' -> int 1), making unionByName
-          // fail or — worse — coercing '01' to '1' and rewriting those
-          // rows into a different partition directory
-          Some(spark.read.schema(batch.schema).parquet(path).filter(cond.reduce(_ || _)))
-        }
-      val all = existing.fold(batch)(_.unionByName(batch))
-      val merged = graft.operators.AsOf.latestPerKey(all, tsCol, key, tiebreak)
-        .localCheckpoint(true) // eager; severs lineage from the files we overwrite
-      merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic") // write-scoped, no session conf leak
-        .partitionBy(partitionCol).parquet(path)
+                                 maxPartitionsPerBatch: Int = 4096): Unit =
+    graft.operators.Ivm.rewritePartitions(path, partitionCol, batch, batch.schema,
+        maxPartitionsPerBatch) { (existing, _) =>
+      graft.operators.AsOf.latestPerKey(existing.unionByName(batch), tsCol, key, tiebreak)
     }
-  }
 
   /** Streaming read of a stored table — the datastore driver's
     * subscribe path (reference: datastoredriver.go ProcessQuerySubscribe;

@@ -8,8 +8,12 @@ class GraphOpsSpec extends SparkSpecBase {
     import spark.implicits._
     val out = ConnectedComponents.componentsFromEdges(
       pairs.toDF("src", "dst"), "src", "dst")
+    assert(out.storageLevel !== org.apache.spark.storage.StorageLevel.NONE,
+      "the components come back cached")
     val m = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     out.unpersist()
+    assert(out.storageLevel === org.apache.spark.storage.StorageLevel.NONE,
+      "unpersist on the result releases its cache")
     m
   }
 

@@ -189,6 +189,21 @@ class IvmSpec extends SparkSpecBase {
       .select(expect.columns.map(col): _*)
     assert(got.exceptAll(expect).isEmpty && expect.exceptAll(got).isEmpty,
       "refreshed join table must equal recompute")
+    // a second batch into a bucket that holds joined rows (nation 12 has
+    // a supplier in S): the merge is not empty, and the surviving
+    // buckets are observed by the checkpoint job, not a collect of their own
+    val deltaR2 = cust.filter(col("nationkey") === 12 && col("c_custkey") % 4 === 0)
+      .withColumn("__op", lit("I"))
+    val jobs = jobsDuring {
+      Ivm.refreshJoinTable(path, rPost, deltaR2, sState, deltaS,
+        "__op", "c_custkey", "s_suppkey", "nationkey", nBuckets)
+    }
+    assert(jobs <= 7, s"refreshJoinTable ran $jobs jobs")
+    val expect2 = rPost.unionByName(deltaR2.drop("__op")).join(sState, "nationkey")
+    val got2 = spark.read.parquet(path).drop("__jb")
+      .select(expect2.columns.map(col): _*)
+    assert(got2.exceptAll(expect2).isEmpty && expect2.exceptAll(got2).isEmpty,
+      "second refresh must equal recompute")
   }
 
   test("vanished-partition cleanup escapes Hive path characters (space, colon, slash, percent)") {
@@ -208,6 +223,10 @@ class IvmSpec extends SparkSpecBase {
       s"escaped vanished partition must be dropped from disk: ${dirsAfter.toSeq}")
     val left = spark.read.parquet(path).select("k").as[Long].collect().toSet
     assert(left === Set(2L), "only the surviving group remains")
+    // null and "" both land in the writer's default-partition directory
+    Seq(null, "").foreach { v =>
+      assert(Ivm.partitionDirName("p", v) === "p=__HIVE_DEFAULT_PARTITION__", s"value '$v'")
+    }
   }
 
   test("vanished-partition cleanup rejects writer-formatted types (date) up front") {
@@ -241,7 +260,10 @@ class IvmSpec extends SparkSpecBase {
     // delta: touch pb 0 (update), empty out pb 2 entirely, leave 1 and 3 alone
     val delta = Seq(("I", 0L, 1L, 5L), ("D", 2L, 21L, 40L))
       .toDF("__op", "pb", "k", "v")
-    Ivm.refreshGroupBySumTable(path, delta, "__op", Seq("pb", "k"), "v", "pb")
+    val jobs = jobsDuring {
+      Ivm.refreshGroupBySumTable(path, delta, "__op", Seq("pb", "k"), "v", "pb")
+    }
+    assert(jobs <= 6, s"refreshGroupBySumTable ran $jobs jobs")
     val after = files()
     // untouched partitions: identical files, untouched on disk
     Seq("pb=1", "pb=3").foreach { p =>
@@ -283,7 +305,8 @@ class IvmSpec extends SparkSpecBase {
     // update 1, delete 3, insert 9 — the MERGE INTO triple
     val changes = Seq((1L, "a2", 11L, "U"), (3L, "zz", 0L, "D"),
       (9L, "i", 90L, "I")).toDF("k", "name", "v", "op")
-    Ivm.mergeKeyedTable(path, changes, "op", "k", nb)
+    val jobs = jobsDuring(Ivm.mergeKeyedTable(path, changes, "op", "k", nb))
+    assert(jobs <= 7, s"mergeKeyedTable ran $jobs jobs")
     val got = spark.read.parquet(path).drop("__kb")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(got === Set((1L, "a2", 11L), (2L, "b", 20L), (4L, "d", 40L),
@@ -316,5 +339,57 @@ class IvmSpec extends SparkSpecBase {
         Seq((Option.empty[Long], "x", 1L, "U")).toDF("k", "name", "v", "op"),
         "op", "k", nb)
     }
+  }
+
+  test("topk IVM: insert/delete maintenance equals recompute until underflow flags") {
+    import spark.implicits._
+    val k = 2; val b = 2
+    // base: group A values 50,40,30,20 (retained all 4 = k+b), B: 9,8
+    val state = Seq(("A", 1L, 50L), ("A", 2L, 40L), ("A", 3L, 30L), ("A", 4L, 20L),
+      ("B", 10L, 9L), ("B", 11L, 8L)).toDF("g", "id", "v")
+    // insert a new top row into A; delete one mid row; B untouched
+    val delta = Seq(("I", "A", 5L, 45L), ("D", "A", 3L, 30L))
+      .toDF("op", "g", "id", "v")
+    val out = Ivm.applyTopKDelta(state, delta, "op", "g", "id", "v", k, b)
+      .collect().map(r => (r.getString(0), r.getLong(1)) -> ((r.getLong(2), r.getBoolean(3)))).toMap
+    // A retained (k+b=4): 50,45,40,20 — no flag (still >= k after delete)
+    assert(out(("A", 1L))._1 === 50L && out(("A", 5L))._1 === 45L &&
+      out(("A", 2L))._1 === 40L && out(("A", 4L))._1 === 20L)
+    assert(!out.exists { case ((g, _), (_, f)) => g == "A" && f }, "A not flagged")
+    assert(out(("B", 10L))._1 === 9L && !out(("B", 10L))._2, "B untouched")
+    assert(out.size === 6)
+
+    // delete storm: kill 3 of A's 4 retained -> 1 < k -> flagged
+    val storm = Seq(("D", "A", 1L, 50L), ("D", "A", 2L, 40L), ("D", "A", 4L, 20L))
+      .toDF("op", "g", "id", "v")
+    val st2 = Seq(("A", 1L, 50L), ("A", 2L, 40L), ("A", 3L, 30L), ("A", 4L, 20L))
+      .toDF("g", "id", "v")
+    val flagged = Ivm.applyTopKDelta(st2, storm, "op", "g", "id", "v", k, b).collect()
+    assert(flagged.length === 1 && flagged(0).getLong(1) === 3L &&
+      flagged(0).getBoolean(3), "survivor carries the recompute flag")
+
+    // total wipe-out: the group may owe trimmed rows — NULL carrier row
+    val wipe = Seq(("D", "A", 1L, 50L), ("D", "A", 2L, 40L), ("D", "A", 3L, 30L),
+      ("D", "A", 4L, 20L)).toDF("op", "g", "id", "v")
+    val gone = Ivm.applyTopKDelta(st2, wipe, "op", "g", "id", "v", k, b).collect()
+    assert(gone.length === 1 && gone(0).isNullAt(1) && gone(0).getBoolean(3),
+      "vanished group cannot disappear unflagged")
+
+    // ADVICE r10 counterexample: inserts refilling the merged count
+    // must NOT clear the underflow flag — k=2, b=0: state {10,9} with
+    // 8 trimmed away earlier; delete 9, insert 1 → kept={10} < k, the
+    // group owes the trimmed 8 even though merged count is back to 2
+    val st3 = Seq(("A", 1L, 10L), ("A", 2L, 9L)).toDF("g", "id", "v")
+    val refill = Seq(("D", "A", 2L, 9L), ("I", "A", 3L, 1L))
+      .toDF("op", "g", "id", "v")
+    val ref = Ivm.applyTopKDelta(st3, refill, "op", "g", "id", "v", 2, 0).collect()
+    assert(ref.length === 2 && ref.forall(_.getBoolean(3)),
+      s"post-delete count < k flags even when inserts refill to k: ${ref.toSeq}")
+
+    // intra-batch I-then-D nets to a no-op
+    val noop = Seq(("I", "A", 9L, 99L), ("D", "A", 9L, 99L)).toDF("op", "g", "id", "v")
+    val same = Ivm.applyTopKDelta(st2, noop, "op", "g", "id", "v", k, b)
+      .collect().map(r => r.getLong(1)).toSet
+    assert(same === Set(1L, 2L, 3L, 4L), "netting discipline")
   }
 }

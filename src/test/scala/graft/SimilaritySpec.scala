@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Similarity
+import graft.operators.{Quantize, Similarity}
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpecBase {
@@ -187,5 +187,28 @@ class SimilaritySpec extends SparkSpecBase {
     assert(r.nonEmpty, "query must rank codable neighbors")
     assert(!r.map(_.getAs[Long]("neighbor_id")).contains(2L),
       "the un-codable vector is excluded from results, not a crash")
+  }
+
+  test("embed dim stats: exact fixed-point moments per dimension") {
+    import spark.implicits._
+    val df = Seq(
+      (1L, Array(1.0f, -0.5f, 0.0f)),
+      (2L, Array(0.5f, -0.5f, 0.0f)),
+      (3L, Array(0.0f, 1.0f, 0.0f))).toDF("vec_id", "embedding")
+    val out = Quantize.dimStats(df, "vec_id", "embedding")
+      .collect().map(r => r.getLong(0) -> r).toMap
+    val M = 1048576L
+    val d0 = out(0L)
+    assert((d0.getLong(1), d0.getLong(2)) === ((3L, M + M / 2)), "n, sum at dim0")
+    assert((d0.getLong(4), d0.getLong(5)) === ((0L, M)), "min/max")
+    val d2 = out(2L)
+    assert(d2.getLong(2) === 0L && d2.getDouble(7) === 0.0,
+      "dead dimension shows zero variance")
+    val d1 = out(1L)
+    assert(d1.getLong(4) === -M / 2 && d1.getLong(5) === M, "signed range at dim1")
+    // variance matches the literal formula
+    val qs = Seq(-M / 2, -M / 2, M).map(_.toDouble)
+    val n = 3.0; val s = qs.sum; val q2 = qs.map(x => x * x).sum
+    assert(d1.getDouble(7) === (n * q2 - s * s) / (n * (n - 1.0)), "unbiased variance")
   }
 }

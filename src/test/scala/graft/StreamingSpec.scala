@@ -192,7 +192,8 @@ class StreamingSpec extends SparkSpecBase {
       .toDF("k", "part", "value", "ts")
     Subscribe.upsertBatch(b1, path, Seq("k"), "ts", Nil, "part")
     val b2 = Seq((1L, "01", 11.0, ts(2))).toDF("k", "part", "value", "ts")
-    Subscribe.upsertBatch(b2, path, Seq("k"), "ts", Nil, "part")
+    val jobs = jobsDuring(Subscribe.upsertBatch(b2, path, Seq("k"), "ts", Nil, "part"))
+    assert(jobs <= 3, s"upsertBatch ran $jobs jobs")
     val rows = spark.read.schema(b1.schema).parquet(path).collect()
       .map(r => (r.getAs[Long]("k"), r.getAs[String]("part"), r.getAs[Double]("value")))
       .toSet

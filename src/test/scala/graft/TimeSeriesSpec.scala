@@ -36,4 +36,25 @@ class TimeSeriesSpec extends SparkSpecBase {
     assert(out === Set((1L, 1, 2.0), (2L, 2, 9.0)),
       "deterministic day-end pick; single-day entities get a single-row grid")
   }
+
+  test("trend decompose: hand window sums, gap-shrunk RANGE frame, exact micro") {
+    import spark.implicits._
+    // days 0..6 values 10..70 plus a gap: day 20 value 100
+    val ser = ((0L to 6L).map(d => ("A", d, (d + 1) * 10)) :+ (("A", 20L, 100L)))
+      .toDF("g", "d", "v")
+    val out = TimeSeries.trendDecompose(ser, "g", "d", "v", radius = 3)
+      .collect().map(r => r.getLong(1) -> r).toMap
+    // day 3: full window 0..6 -> wn 7, wsum 280, trend 40e6, dev 0
+    val d3 = out(3L)
+    assert((d3.getLong(3), d3.getLong(4)) === ((7L, 280L)))
+    assert(d3.getLong(5) === 40000000L && d3.getLong(6) === 0L)
+    // day 0: window [−3,3] has days 0..3 -> wn 4, wsum 100, trend 25e6
+    val d0 = out(0L)
+    assert((d0.getLong(3), d0.getLong(4)) === ((4L, 100L)))
+    assert(d0.getLong(5) === 25000000L && d0.getLong(6) === 10L * 1000000L - 25000000L)
+    // the gapped day 20 sees ONLY itself (RANGE, not ROWS)
+    val d20 = out(20L)
+    assert(d20.getLong(3) === 1L && d20.getLong(5) === 100000000L && d20.getLong(6) === 0L,
+      s"calendar gap isolates the point: ${d20.toSeq}")
+  }
 }
