@@ -6709,8 +6709,8 @@ object Queries {
     // §2.2/311 — exact average precision (PR-curve AP) for length as
     // an 'en' detector: rank by (n_chars DESC, doc_id), per-positive
     // floor-quantized precision terms integer-summed; rank + prefix
-    // counts computed with the range-partitioned distributedNtile
-    // construction — no global single-task sort.
+    // counts from one size-gated Stats.prefixSums — no global
+    // single-task sort past the gate.
     "q_pr_auc" -> QueryDef(
       (s, d) => operators.Stats.averagePrecision(ds(s, d, "documents").toDF,
         col("doc_id"), col("n_chars"), col("lang") === "en"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -663,74 +663,27 @@ object Analytics {
         col("d").as("d_churned"), col("c").as("c_censored"), col("s_micro"))
   }
 
-  /** Size-dispatched exact ntile: the plain window form below
-    * `NTILE_WINDOW_MAX` entities (one sort task of bounded size — the
-    * fast path at any bench scale), [[distributedNtile]] above it
-    * (range-partitioned parallel ranking). Both produce EXACT ntile
-    * output over the same total order (NtileSpec pins equality), so
-    * the dispatch is a plan choice, never a result choice.
-    *
-    * The constant is MEASURED (r14 ntile scale probe, recorded in
-    * SURVEY §5 — both paths timed on seeded 32-core data with a
-    * checksum equality probe):
-    * window/distributed seconds were 2.6/3.9 at 1M, 2.1/1.7 at 2M,
-    * 4.4/1.8 at 4M, 8.8/4.9 at 7M, 35.5/7.6 at 30M — the single sort
-    * task grows linearly while the distributed rank stays near-flat,
-    * crossing at ~2M rows (r13's provisional 10M rested on one
-    * bench-scale pair; the probe replaced it with the curve).
+  /** Exact global `ntile(k)` over a TOTAL order (append the entity
+    * key) of the `n` rows of `df`: the rank is a [[Stats.prefixSums]]
+    * of `lit(1L)` — so it inherits that primitive's size gate, one
+    * bounded sort task up to `spark.graft.tally.windowMax` rows and a
+    * range-partitioned parallel rank above it — and the standard
+    * bucket formula (the first n%k buckets get ceil(n/k) rows) runs
+    * with n/k and n%k computed on the driver. Bit-identical to Spark's
+    * and DuckDB's ntile over the same order (NtileSpec pins both
+    * paths), so the dispatch is a plan choice, never a result choice.
     */
-  private val NTILE_WINDOW_MAX = 2000000L
-  private def ntileScored(df: DataFrame, n: Long, k: Int,
-                          order: Seq[Column], out: String): DataFrame =
-    if (n <= NTILE_WINDOW_MAX)
-      df.withColumn(out, ntile(k).over(Window.orderBy(order: _*)).cast("long"))
-    else distributedNtile(df, k, order, out)
-
-  /** Exact global `ntile(k)` WITHOUT the single-task global sort
-    * (r13, ADVICE): range-repartition on the (total-order) sort key,
-    * rank = per-partition row_number + broadcast cumulative partition
-    * offsets, then the standard ntile bucket formula (first n%k
-    * buckets get ceil(n/k) rows) — bit-identical to Spark's and
-    * DuckDB's ntile over the same total order, but every stage is
-    * partition-parallel; the only partition-less window left is the
-    * offset cumsum over <= spark.sql.shuffle.partitions count rows.
-    * The order columns MUST be a total order (append the entity key),
-    * exactly the contract the ntile form already documented.
-    */
-  private[graft] def distributedNtile(df: DataFrame, k: Int, order: Seq[Column],
-                                      out: String): DataFrame = {
-    // The partition ids feed BOTH the offset table and the final rank
-    // join; an un-materialized plan would recompute the range shuffle
-    // independently per branch, and partition ASSIGNMENT is not stable
-    // across recomputes (AQE may coalesce each branch differently and
-    // the range-bound sampling reruns) — the r14 ntile scale probe
-    // (SURVEY §5) caught exactly that as a checksum mismatch at 7M rows. The eager
-    // localCheckpoint pins one materialized assignment for every
-    // consumer.
-    val parted = df.repartitionByRange(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
-    val counts = parted.groupBy("__pid").agg(count(lit(1)).as("__c"))
-    val offs = counts
-      .withColumn("__off", coalesce(sum("__c").over(Window.orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("__pid", "__off")
-    val total = counts.agg(sum("__c").as("__n"))
-    def td(x: Column, y: Column): Column =
-      graft.functions.TimeFunctions.truncDiv(x, y)
-    parted
-      .join(broadcast(offs), "__pid")
-      .withColumn("__r", row_number().over(
-        Window.partitionBy("__pid").orderBy(order: _*)).cast("long") + col("__off"))
-      .crossJoin(broadcast(total))
-      .withColumn("__q", td(col("__n"), lit(k.toLong)))
-      .withColumn("__rem", col("__n") % lit(k.toLong))
+  private[graft] def exactNtile(df: DataFrame, n: Long, k: Int, order: Seq[Column],
+                                out: String): DataFrame = {
+    val (q, rem) = (n / k, n % k)
+    def td(x: Column, y: Long): Column =
+      graft.functions.TimeFunctions.truncDiv(x, lit(y))
+    val r = col("__r")
+    Stats.prefixSums(df, n, order, (lit(1L), "__r"))
       .withColumn(out,
-        when(col("__r") <= (col("__q") + 1L) * col("__rem"),
-          td(col("__r") - 1L, col("__q") + 1L) + 1L)
-        .otherwise(col("__rem") +
-          td(col("__r") - 1L - (col("__q") + 1L) * col("__rem"), col("__q")) + 1L))
-      .drop("__pid", "__off", "__r", "__n", "__q", "__rem")
+        when(r <= (q + 1) * rem, td(r - 1L, q + 1) + 1L)
+          .otherwise(td(r - 1L - (q + 1) * rem, q) + rem + 1L))
+      .drop("__r")
   }
 
   /** Log-rank test between two survival arms — "do the two groups'
@@ -796,9 +749,9 @@ object Analytics {
     * Output: the ≤125-cell segment rollup — (r_score, f_score,
     * m_score, n_customers, sum_orders, sum_cents).
     *
-    * Scale note (r13): quintiles via [[distributedNtile]] — exact
-    * ntile semantics with range-partitioned parallel ranking, no
-    * single-task global sort at any size.
+    * Scale note: quintiles via [[exactNtile]] — exact ntile semantics,
+    * size-gated between one bounded sort task and a range-partitioned
+    * parallel rank, so no single-task global sort past the gate.
     */
   def rfmSegments(orders: DataFrame, custCol: String, tsCol: String,
                   valCol: String): DataFrame = {
@@ -810,22 +763,17 @@ object Analytics {
       .groupBy("cust")
       .agg(max("d").as("ld"), count(lit(1)).as("f"), sum("cents").as("m"))
     val maxd = perCust.agg(max("ld").as("maxd"))
-    // checkpoint once (the three scorings would otherwise re-run the
-    // orders aggregation per range-sampling pass), then size-dispatch:
-    // ntileScored picks the single-window path below the 10M-entity
-    // threshold and the distributed two-phase rank above it — both
-    // EXACT ntile semantics (NtileSpec pins their equality), so the
-    // dispatch can never change results, only plans
-    val base = perCust.crossJoin(broadcast(maxd))
-      .withColumn("r_days", col("maxd") - col("ld"))
-      .localCheckpoint(true)
-    val nCust = base.count()
+    // checkpoint once, counting in the same job (the three scorings
+    // would otherwise re-run the orders aggregation); the count sizes
+    // every exactNtile
+    val (base, Row(nCust: Long)) = Rounds.checkpoint(perCust.crossJoin(broadcast(maxd))
+      .withColumn("r_days", col("maxd") - col("ld")), Nil, count(lit(1)))
     val scored = Seq[(String, Seq[Column])](
       ("r_score", Seq(col("r_days").desc, col("cust"))),
       ("f_score", Seq(col("f"), col("cust"))),
       ("m_score", Seq(col("m"), col("cust"))))
       .foldLeft(base) { case (df, (out, ord)) =>
-        ntileScored(df, nCust, 5, ord, out)
+        exactNtile(df, nCust, 5, ord, out)
       }
     scored.groupBy("r_score", "f_score", "m_score")
       .agg(count(lit(1)).as("n_customers"), sum("f").as("sum_orders"),
@@ -869,8 +817,8 @@ object Analytics {
     * values only (cumulative shares of a mixed-sign total are not
     * monotone, and the floor division needs a positive domain).
     * Output ≤10 rows: (decile, n_units, decile_cents, cum_cents,
-    * cum_share_micro). Deciling via [[distributedNtile]] (r13): exact
-    * ntile semantics, range-partitioned, no global single-task sort.
+    * cum_share_micro). Deciling via [[exactNtile]]: exact ntile
+    * semantics, no global single-task sort past its size gate.
     */
   def lorenzCurve(facts: DataFrame, entityCol: Column, centsCol: Column,
                   deciles: Int = 10): DataFrame = {
@@ -879,9 +827,8 @@ object Analytics {
       .filter(col("ent").isNotNull && col("cents").isNotNull)
       .groupBy("ent").agg(sum("cents").as("v"))
       .filter(col("v") > 0)
-    val revC = rev.localCheckpoint(true)
-    val byDecile = ntileScored(revC, revC.count(), deciles,
-        Seq(col("v"), col("ent")), "decile")
+    val (revC, Row(n: Long)) = Rounds.checkpoint(rev, Nil, count(lit(1)))
+    val byDecile = exactNtile(revC, n, deciles, Seq(col("v"), col("ent")), "decile")
       .groupBy("decile")
       .agg(count(lit(1)).as("n_units"), sum("v").as("decile_cents"))
     val wCum = Window.orderBy("decile")
@@ -972,8 +919,8 @@ object Analytics {
     * the model-targeting report ("mail the top 2 deciles") built on
     * the same exact ntile machinery as [[rfmSegments]]: tiles over
     * (score DESC, id ASC — a total order, so both engines split
-    * identically; size-dispatched to [[distributedNtile]] past the
-    * window bound), per-tile exact counts, and cumulative capture /
+    * identically; [[exactNtile]] size-dispatches past the window
+    * bound), per-tile exact counts, and cumulative capture /
     * lift as fixed double ratios of exact integers. The cumulative
     * window runs over k rows. Output per tile: (tile, n_t, pos_t,
     * rate, cum_n, cum_pos, cum_capture, lift) — lift NULL when the
@@ -982,12 +929,12 @@ object Analytics {
   def liftTable(df: DataFrame, idCol: Column, scoreCol: Column,
                 labelCol: Column, k: Int = 10): DataFrame = {
     require(k >= 2 && k <= 1000, s"k must be in [2, 1000], got $k")
-    val rows = df.select(idCol.as("id"), scoreCol.cast("long").as("s"),
-        labelCol.cast("boolean").as("y"))
-      .filter(col("id").isNotNull && col("s").isNotNull && col("y").isNotNull)
-      .localCheckpoint(true)
-    val n = rows.count()
-    val tiles = ntileScored(rows, n, k, Seq(col("s").desc, col("id").asc), "tile")
+    val (rows, Row(n: Long)) = Rounds.checkpoint(
+      df.select(idCol.as("id"), scoreCol.cast("long").as("s"),
+          labelCol.cast("boolean").as("y"))
+        .filter(col("id").isNotNull && col("s").isNotNull && col("y").isNotNull),
+      Nil, count(lit(1)))
+    val tiles = exactNtile(rows, n, k, Seq(col("s").desc, col("id").asc), "tile")
       .groupBy("tile")
       .agg(count(lit(1)).as("n_t"),
         coalesce(sum(when(col("y"), 1L).otherwise(0L)), lit(0L)).as("pos_t"))

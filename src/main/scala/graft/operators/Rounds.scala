@@ -6,10 +6,13 @@ import org.apache.spark.sql.execution.LogicalRDD
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
-/** Round state for the iterative operators ([[PageRank]],
-  * [[GraphMetrics.hits]], [[ShortestPaths]], [[ConnectedComponents]],
-  * [[KCore]], [[LabelPropagation]], [[Hierarchy]], k-means in
-  * [[Similarity]]).
+/** Eager checkpoints with probes that ride their job: the round state
+  * of the iterative operators ([[PageRank]], [[GraphMetrics.hits]],
+  * [[ShortestPaths]], [[ConnectedComponents]], [[KCore]],
+  * [[LabelPropagation]], [[Hierarchy]], k-means in [[Similarity]]),
+  * and the one-shot checkpoints whose row count or guard scalars a
+  * caller needs ([[Stats.prefixSums]]' size gate, the A/B guards of
+  * [[Stats.welchTTest]], [[Stats.propZTest]], [[Stats.diffInDiff]]).
   *
   * Each superstep of those loops ends in an eager localCheckpoint (the
   * lineage truncation that keeps Catalyst's planning time flat, see

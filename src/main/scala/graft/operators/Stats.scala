@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -81,12 +81,11 @@ object Stats {
       .groupBy("s").agg(
         sum(when(col("y"), 1L).otherwise(0L)).as("pos"),
         sum(when(col("y"), 0L).otherwise(1L)).as("neg"))
-      .localCheckpoint(true)
-    val nScores = g.count()
+    val (tally, Row(nScores: Long)) = Rounds.checkpoint(g, Nil, count(lit(1)))
     // below (exclusive negatives) = inclusive cumsum − own negatives:
-    // exact long arithmetic, so the [[tallyCumSum]] size gate covers
+    // exact long arithmetic, so the [[prefixSums]] size gate covers
     // this frame too (a continuous score domain makes it row-sized)
-    tallyCumSum(g, nScores, "s", "neg", "__u")
+    prefixSums(tally, nScores, Seq(col("s")), (col("neg"), "__u"))
       .withColumn("below", col("__u") - col("neg"))
       .agg(
         sum("pos").as("n_pos"),
@@ -96,55 +95,57 @@ object Stats {
         col("u2").cast("double") / (lit(2) * col("n_pos") * col("n_neg")).cast("double"))
   }
 
-  /** Inclusive cumulative sum of long column `sumCol` over the total
-    * order of `vCol` on a VALUE-TALLY table — the shared scale-safe
-    * spine of the rank/position statistics ([[spearmanMatrix]] rank
-    * maps, [[kruskalWallis]] / [[wilcoxonSignedRank]] double-ranks,
-    * [[ansariBradley]] positions, [[moodMedianTest]]'s global
-    * median).
+  /** Exact inclusive prefix sums of non-null long columns over a TOTAL
+    * order — the one scale-safe spine of the ordered statistics: the
+    * value-tally cumsums of [[spearmanMatrix]], [[kruskalWallis]],
+    * [[wilcoxonSignedRank]], [[ansariBradley]], [[rocAuc]] and
+    * [[moodMedianTest]]'s global median, the row ranks of
+    * [[Analytics.exactNtile]] (a prefix sum of `lit(1L)`), and
+    * [[averagePrecision]]'s rank plus positive prefix count. Each
+    * `(column, name)` pair adds one output column.
     *
-    * Size-dispatched (r15, VERDICT what's-wrong #4): the registered
-    * queries feed ≤50-level discrete columns whose tally is tiny, and
-    * there ONE bounded sort task is the fastest plan — but these
-    * operators are GENERIC, and a continuous column makes cells ≈
-    * rows, turning the partition-less window into a single-task
-    * serialization at 100 TB. Above the gate the cumsum switches to
-    * the [[Analytics.distributedNtile]] construction: range
-    * repartition on the value (checkpointed so partition assignment
-    * is stable across the offset and join branches — the r14 ntile
-    * scale-probe lesson, SURVEY §5), per-partition inclusive cumsum, plus
-    * broadcast per-partition offsets whose own cumulative window runs
-    * over ≤ spark.sql.shuffle.partitions rows. Both paths cumulate
-    * the SAME total order on `vCol`, so the dispatch is a plan
-    * choice, never a result choice (Round15OptSpec pins path equality
-    * with the gate forced to 0).
+    * Size-dispatched on `n`, the caller's row count of `df`. Up to the
+    * gate, ONE `Window.orderBy(order)` frame: a single bounded sort
+    * task, the fastest plan at any bench scale. Above it, the SURVEY §5
+    * 100 TB rule (no single-task global sort): range repartition on
+    * `order`, partition ids pinned by an eager checkpoint (partition
+    * ASSIGNMENT is not stable across recomputes — AQE may coalesce
+    * each branch differently and the range-bound sampling reruns; the
+    * r14 ntile scale probe caught an unpinned plan as a checksum
+    * mismatch at 7M rows), per-partition inclusive sums, plus broadcast
+    * per-partition offsets whose own cumulative window runs over
+    * ≤ spark.sql.shuffle.partitions rows. Both paths cumulate the SAME
+    * total order, so the dispatch is a plan choice, never a result
+    * choice (Round15OptSpec and NtileSpec force the gate to 0).
     *
-    * `n` is the caller's row count of `tally` (callers checkpoint +
-    * count once, [[Analytics.rfmSegments]]-style); the gate is
-    * conf-overridable (`spark.graft.tally.windowMax`, default the
-    * measured 2M single-sort-task vs range-partitioned ntile
-    * crossover — the identical trade).
+    * The gate is `spark.graft.tally.windowMax` (default 2M: the r14
+    * probe timed both paths on seeded 32-core data at 2.6/3.9 s for 1M
+    * rows, 2.1/1.7 at 2M, 4.4/1.8 at 4M, 8.8/4.9 at 7M and 35.5/7.6 at
+    * 30M — the single sort task grows linearly while the distributed
+    * form stays near-flat).
     */
-  private[graft] def tallyCumSum(tally: DataFrame, n: Long, vCol: String,
-                                 sumCol: String, out: String): DataFrame = {
-    val gate = tally.sparkSession.conf
-      .get("spark.graft.tally.windowMax", "2000000").toLong
+  private[graft] def prefixSums(df: DataFrame, n: Long, order: Seq[Column],
+                                sums: (Column, String)*): DataFrame = {
+    val gate = df.sparkSession.conf.get("spark.graft.tally.windowMax", "2000000").toLong
     if (n <= gate) {
-      tally.withColumn(out, sum(sumCol).over(Window.orderBy(vCol)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      val w = Window.orderBy(order: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      sums.foldLeft(df) { case (d, (c, out)) => d.withColumn(out, sum(c).over(w)) }
     } else {
-      val parted = tally.repartitionByRange(col(vCol))
-        .withColumn("__pid", spark_partition_id())
-        .localCheckpoint(true)
-      val offs = parted.groupBy("__pid").agg(sum(sumCol).as("__pc"))
-        .withColumn("__coff", coalesce(sum("__pc").over(Window.orderBy("__pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("__pid", "__coff")
-      parted.join(broadcast(offs), "__pid")
-        .withColumn(out, sum(sumCol).over(Window.partitionBy("__pid")
-          .orderBy(vCol).rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          + col("__coff"))
-        .drop("__pid", "__coff")
+      val parted = Rounds.checkpoint(df.repartitionByRange(order: _*)
+        .withColumn("__pid", spark_partition_id()), Nil)._1
+      val offCols = sums.indices.map(i => s"__off$i")
+      val perPart = sums.zip(offCols).map { case ((c, _), o) => sum(c).as(o) }
+      val before = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
+      val offs = parted.groupBy("__pid").agg(perPart.head, perPart.tail: _*)
+        .select(col("__pid") +: offCols.map(o => coalesce(sum(o).over(before), lit(0L)).as(o)): _*)
+      val w = Window.partitionBy("__pid").orderBy(order: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      sums.zip(offCols)
+        .foldLeft(parted.join(broadcast(offs), "__pid")) { case (d, ((c, out), o)) =>
+          d.withColumn(out, sum(c).over(w) + col(o))
+        }
+        .drop("__pid" +: offCols: _*)
     }
   }
 
@@ -334,13 +335,12 @@ object Stats {
   def welchTTest(units: DataFrame, armCol: Column, yCol: Column): DataFrame = {
     val base = units.select(armCol.as("arm"), yCol.cast("long").as("y"))
       .filter(col("arm").isNotNull && col("y").isNotNull)
-    val arms = base.groupBy("arm").agg(count(lit(1)).as("n"),
-      sum("y").as("s"), sum(col("y") * col("y")).as("q"))
-      .localCheckpoint(true) // tiny; guards + pivot reuse it
-    val got = arms.count()
+    // tiny; the guards' probes ride its checkpoint, the pivot reuses it
+    val (arms, guard) = Rounds.checkpoint(base.groupBy("arm").agg(count(lit(1)).as("n"),
+      sum("y").as("s"), sum(col("y") * col("y")).as("q")), Nil, count(lit(1)), min("n"))
+    val got = guard.getLong(0)
     require(got == 2, s"welchTTest needs exactly 2 arms, got $got")
-    require(arms.filter(col("n") < 2).isEmpty,
-      "welchTTest needs >= 2 units per arm")
+    require(guard.getLong(1) >= 2, "welchTTest needs >= 2 units per arm")
     def d(c: Column) = c.cast("double")
     // two-row pivot via conditional aggregation against the min arm
     val piv = arms.crossJoin(broadcast(arms.agg(min(col("arm")).as("__lo"))))
@@ -385,10 +385,9 @@ object Stats {
   def propZTest(units: DataFrame, armCol: Column, convCol: Column): DataFrame = {
     val base = units.select(armCol.as("arm"), convCol.cast("boolean").as("c"))
       .filter(col("arm").isNotNull && col("c").isNotNull)
-    val arms = base.groupBy("arm").agg(count(lit(1)).as("n"),
-      sum(when(col("c"), 1L).otherwise(0L)).as("conv"))
-      .localCheckpoint(true)
-    val got = arms.count()
+    val (arms, Row(got: Long)) = Rounds.checkpoint(base.groupBy("arm").agg(
+      count(lit(1)).as("n"), sum(when(col("c"), 1L).otherwise(0L)).as("conv")),
+      Nil, count(lit(1)))
     require(got == 2, s"propZTest needs exactly 2 arms, got $got")
     def d(c: Column) = c.cast("double")
     val piv = arms.crossJoin(broadcast(arms.agg(min(col("arm")).as("__lo"))))
@@ -430,12 +429,14 @@ object Stats {
     val base = units.select(armCol.as("arm"), postCol.cast("boolean").as("post"),
         yCol.cast("long").as("y"))
       .filter(col("arm").isNotNull && col("post").isNotNull && col("y").isNotNull)
-    val cells = base.groupBy("arm", "post")
-      .agg(count(lit(1)).as("n"), sum("y").as("s"))
-      .localCheckpoint(true) // four rows; guard + pivot reuse
-    val arms = cells.select("arm").distinct().count()
+    // two rows per arm value, four on valid input (so the collect_set
+    // probe stays small); the guards' probes ride its checkpoint, the
+    // pivot reuses it
+    val (cells, Row(arms: Int, nCells: Long)) = Rounds.checkpoint(
+      base.groupBy("arm", "post").agg(count(lit(1)).as("n"), sum("y").as("s")),
+      Nil, size(collect_set(col("arm"))), count(lit(1)))
     require(arms == 2, s"diffInDiff needs exactly 2 arms, got $arms")
-    require(cells.count() == 4, "diffInDiff needs units in all four (arm, period) cells")
+    require(nCells == 4, "diffInDiff needs units in all four (arm, period) cells")
     def d(c: Column) = c.cast("double")
     def cell(treated: Boolean, post: Boolean, c: String) = {
       val armPick = if (treated) col("arm") =!= col("__lo") else col("arm") === col("__lo")
@@ -663,18 +664,17 @@ object Stats {
     // shape used (marginalized from the cells), joined back onto the
     // CELL table; every Σ is weighted by the cell count — identical
     // exact integers, k·(k−1)/2 pair sums unchanged.
-    // checkpoint + count once: the count feeds [[tallyCumSum]]'s size
-    // gate for every column's rank map (each marginal has ≤ nCells
-    // rows), and the checkpoint stops the k rank-map subtrees + the
-    // join spine from re-running the row-sized tally aggregation
-    val cells = rows.groupBy(names.map(col): _*)
-      .agg(count(lit(1)).as("__cnt"))
-      .localCheckpoint(true)
-    val nCells = cells.count()
+    // checkpoint once, counting in the same job: the count feeds
+    // [[prefixSums]]' size gate for every column's rank map (each
+    // marginal has ≤ nCells rows), and the checkpoint stops the k
+    // rank-map subtrees + the join spine from re-running the row-sized
+    // tally aggregation
+    val (cells, Row(nCells: Long)) = Rounds.checkpoint(rows.groupBy(names.map(col): _*)
+      .agg(count(lit(1)).as("__cnt")), Nil, count(lit(1)))
     var t = cells
     for (n <- names) {
       val marg = cells.groupBy(col(n).as("__v")).agg(sum("__cnt").as("__c"))
-      val ranks = tallyCumSum(marg, nCells, "__v", "__c", "__w")
+      val ranks = prefixSums(marg, nCells, Seq(col("__v")), (col("__c"), "__w"))
         .select(col("__v").as(n), (lit(2) * col("__w") - col("__c") + 1).as(s"__r_$n"))
       t = t.join(ranks, n)
     }
@@ -964,14 +964,13 @@ object Stats {
     val rows = df.select(groupCol.as("g"), round(valueCol).cast("long").as("v"))
       .filter(col("g").isNotNull && col("v").isNotNull)
     val cells = rows.groupBy("g", "v").agg(count(lit(1)).as("m"))
-    // checkpoint + count once: gate for the size-dispatched cumsum,
-    // and the ranked/tieSum branches read the tally instead of
-    // re-aggregating the fact table
-    val perValue = cells.groupBy("v").agg(sum("m").as("t"))
-      .localCheckpoint(true)
-    val nValues = perValue.count()
+    // checkpoint once, counting in the same job: gate for the
+    // size-dispatched cumsum, and the ranked/tieSum branches read the
+    // tally instead of re-aggregating the fact table
+    val (perValue, Row(nValues: Long)) = Rounds.checkpoint(
+      cells.groupBy("v").agg(sum("m").as("t")), Nil, count(lit(1)))
     // double-rank dr(v) = 2·avgrank = 2w − t + 1 over the value table
-    val ranked = tallyCumSum(perValue, nValues, "v", "t", "w")
+    val ranked = prefixSums(perValue, nValues, Seq(col("v")), (col("t"), "w"))
       .select(col("v"), (lit(2) * col("w") - col("t") + 1).as("dr"))
     val perGroup = cells.join(ranked, "v")
       .groupBy("g")
@@ -1257,13 +1256,11 @@ object Stats {
       .select((col("x") - col("y")).as("diff"))
     val counts = diffs.agg(count(lit(1)).as("n_pairs"),
       coalesce(sum(when(col("diff") === 0L, 1L).otherwise(0L)), lit(0L)).as("n_zero"))
-    val cells = diffs.filter(col("diff") =!= 0L)
+    val (cells, Row(nCells: Long)) = Rounds.checkpoint(diffs.filter(col("diff") =!= 0L)
       .groupBy(abs(col("diff")).as("a"))
       .agg(count(lit(1)).as("t"),
-        sum(when(col("diff") > 0, 1L).otherwise(0L)).as("p"))
-      .localCheckpoint(true)
-    val nCells = cells.count()
-    val ranked = tallyCumSum(cells, nCells, "a", "t", "w")
+        sum(when(col("diff") > 0, 1L).otherwise(0L)).as("p")), Nil, count(lit(1)))
+    val ranked = prefixSums(cells, nCells, Seq(col("a")), (col("t"), "w"))
       .withColumn("dr", lit(2) * col("w") - col("t") + 1)
     def dd(c: Column) = c.cast("double")
     ranked.agg(
@@ -1495,43 +1492,29 @@ object Stats {
     * AP weights early precision, the retrieval-facing metric.
     * Output one row: (n, n_pos, ap_q, avg_precision).
     *
-    * Scale shape: NO global single-task sort — the rank and the
-    * positive prefix count come from a range repartition on the sort
-    * key plus per-partition window offsets (the distributedNtile
-    * construction), so every stage is partition-parallel; the only
-    * partition-less window is the offset cumsum over
-    * ≤ shuffle-partition-count rows.
+    * Scale shape: the rank (a prefix sum of 1) and the positive
+    * prefix count come from ONE [[prefixSums]] call over the total
+    * order, so this statistic shares the rank statistics' size gate:
+    * one bounded window up to it, the range-partitioned form above.
+    * `n` is counted by the job that checkpoints the scored rows.
     */
   def averagePrecision(df: DataFrame, idCol: Column, scoreCol: Column,
                        labelCol: Column): DataFrame = {
-    val rows = df.select(idCol.as("id"), scoreCol.cast("long").as("s"),
-        labelCol.cast("boolean").as("y"))
-      .filter(col("id").isNotNull && col("s").isNotNull && col("y").isNotNull)
-    val order = Seq(col("s").desc, col("id").asc)
-    val parted = rows.repartitionByRange(order: _*)
-      .withColumn("__pid", spark_partition_id())
-    val offW = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    val offs = parted.groupBy("__pid")
-      .agg(count(lit(1)).as("__c"),
-        coalesce(sum(when(col("y"), 1L).otherwise(0L)), lit(0L)).as("__p"))
-      .withColumn("__off", coalesce(sum("__c").over(offW), lit(0L)))
-      .withColumn("__poff", coalesce(sum("__p").over(offW), lit(0L)))
-      .select("__pid", "__off", "__poff")
-    val w = Window.partitionBy("__pid").orderBy(order: _*)
-    val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val terms = parted.join(broadcast(offs), "__pid")
-      .withColumn("__r", row_number().over(w).cast("long") + col("__off"))
-      .withColumn("__cp", sum(when(col("y"), 1L).otherwise(0L)).over(cum) +
-        col("__poff"))
+    val (rows, Row(n: Long)) = Rounds.checkpoint(
+      df.select(idCol.as("id"), scoreCol.cast("long").as("s"),
+          labelCol.cast("boolean").as("y"))
+        .filter(col("id").isNotNull && col("s").isNotNull && col("y").isNotNull),
+      Nil, count(lit(1)))
+    val terms = prefixSums(rows, n, Seq(col("s").desc, col("id").asc),
+        (lit(1L), "__r"), (when(col("y"), 1L).otherwise(0L), "__cp"))
       .filter(col("y"))
       .select(expr("(__cp * 1048576) div __r").as("term"))
     def dd(c: Column) = c.cast("double")
     terms.agg(count(lit(1)).as("n_pos"),
         coalesce(sum("term"), lit(0L)).as("ap_q"))
-      .crossJoin(broadcast(rows.agg(count(lit(1)).as("n"))))
       .withColumn("avg_precision", when(col("n_pos") > 0,
         dd(col("ap_q")) / (dd(col("n_pos")) * 1048576.0)))
-      .select(col("n"), col("n_pos"), col("ap_q"), col("avg_precision"))
+      .select(lit(n).as("n"), col("n_pos"), col("ap_q"), col("avg_precision"))
   }
 
   /** Exact lower weighted median per group (the first value whose
@@ -1824,17 +1807,16 @@ object Stats {
     * window degenerates to a partition-less one when a caller passes
     * a single literal group ([[moodMedianTest]] did exactly that), so
     * the global form runs the same cells → cumsum → first-qualifying
-    * shape on [[tallyCumSum]]'s size-dispatched spine instead. Same
+    * shape on [[prefixSums]]' size-dispatched spine instead. Same
     * output contract: one (med) row per non-empty input, zero rows on
     * empty input (the groupBy-on-a-literal preserves the empty →
     * empty behavior the group form had).
     */
   private def globalLowerMedian(vals: DataFrame): DataFrame = {
-    val cells = vals.groupBy("v").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
-    val nCells = cells.count()
+    val (cells, Row(nCells: Long)) = Rounds.checkpoint(
+      vals.groupBy("v").agg(count(lit(1)).as("c")), Nil, count(lit(1)))
     val tot = cells.agg(coalesce(sum("c"), lit(0L)).as("n"))
-    tallyCumSum(cells, nCells, "v", "c", "cum")
+    prefixSums(cells, nCells, Seq(col("v")), (col("c"), "cum"))
       .crossJoin(broadcast(tot))
       .filter(col("cum") * 2 >= col("n"))
       .select(lit("__all").as("g"), col("v"))
@@ -2803,19 +2785,18 @@ object Stats {
   def ansariBradley(df: DataFrame, armCol: Column, valueCol: Column): DataFrame = {
     val dec = "decimal(38,0)"
     def dd(c: Column) = c.cast("double")
-    val cells = df.select(armCol.cast("boolean").as("arm"),
+    val tally = df.select(armCol.cast("boolean").as("arm"),
         valueCol.cast("long").as("v"))
       .filter(col("arm").isNotNull && col("v").isNotNull)
       .groupBy("v").agg(count(lit(1)).as("c"),
         sum(when(col("arm"), 1L).otherwise(0L)).as("c1"))
-      .localCheckpoint(true)
-    val nCells = cells.count()
+    val (cells, Row(nCells: Long)) = Rounds.checkpoint(tally, Nil, count(lit(1)))
     val tot = cells.agg(coalesce(sum("c"), lit(0L)).as("n"),
       coalesce(sum("c1"), lit(0L)).as("n1"))
     // size-dispatched position cumsum over the value tally (the
-    // [[tallyCumSum]] gate keeps a continuous-valued input from
+    // [[prefixSums]] gate keeps a continuous-valued input from
     // funneling through one sort task)
-    val pos = tallyCumSum(cells, nCells, "v", "c", "u")
+    val pos = prefixSums(cells, nCells, Seq(col("v")), (col("c"), "u"))
       .withColumn("l", col("u") - col("c") + 1)
       .crossJoin(broadcast(tot))
     // S(l, u) = Σ_{r=l..min(u,m)} r + Σ_{r=max(l,m+1)..u} (n+1−r),

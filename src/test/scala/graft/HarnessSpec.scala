@@ -25,6 +25,19 @@ class HarnessSpec extends SparkSpecBase {
     assert(sources.exists(p => p.toString.endsWith("/GraftSession.scala") && builds(p)))
   }
 
+  test("one prefix-sum construction and one read of its size gate in src/main") {
+    val pid = "spark_partition_id("
+    val gate = "\"spark.graft.tally.windowMax\"" // the conf key as a string literal
+    val walk = Files.walk(Paths.get("src/main"))
+    val text = try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => Files.readString(p)).toList
+      finally walk.close()
+    def occurrences(needle: String) =
+      text.map(_.split(java.util.regex.Pattern.quote(needle), -1).length - 1).sum
+    assert(occurrences(pid) == 1, s"$pid outside Stats.prefixSums")
+    assert(occurrences(gate) == 1, s"$gate read more than once")
+  }
+
   test("the plan renderer elides long plans, notes cached lineage only, escapes control chars") {
     val long = (1 to 450).map(i => s"line $i").mkString("\n")
     val cut = Measure.renderPlan(long)

@@ -444,37 +444,34 @@ class PlanAuditSpec extends SparkSpecBase {
       "q_token_budget",  // tokenBudget: cumsum over ≤buckets frame
       "q_exact_sample",  // exactKSample: cumsum over ≤buckets frame
       "q_upsample_mix",  // upsampleMix: max over group-cardinality frame
-      "q_auc",           // rocAuc: tallyCumSum window path — GATED, the
+      "q_auc",           // rocAuc: prefixSums window path — GATED, the
                          //   count-dispatched window never sees more than
                          //   spark.graft.tally.windowMax rows (Round15OptSpec
                          //   pins the distributed fallback's equality)
       // r12 additions, each bounded or documented:
-      "q_spearman",      // rank maps via tallyCumSum — gated (see q_auc)
+      "q_spearman",      // rank maps via prefixSums — gated (see q_auc)
       "q_bootstrap",     // rank over B=32 replicate means
       "q_survival",      // product-limit over the distinct-lifetime table (≤ day span)
-      "q_rfm",           // ntile dual path (r13): window form <= 10M entities (one
-                         //   BOUNDED sort task), distributedNtile beyond — the scale
-                         //   path is exercised + pinned equal in NtileSpec
-      "q_lorenz",        // same ntile dual path (NtileSpec)
+      "q_rfm",           // exactNtile's rank via prefixSums — gated (see q_auc);
+                         //   both paths pinned equal to Spark's ntile in NtileSpec
+      "q_lorenz",        // same exactNtile (NtileSpec)
       "q_decay_popularity", // top-50 rank over item-cardinality scores
       "text_burstiness", // top-30 rank over vocabulary-cardinality totals
       // r13 additions, both bounded:
-      "q_kruskal",       // rank cumsum via tallyCumSum — gated (see q_auc)
+      "q_kruskal",       // rank cumsum via prefixSums — gated (see q_auc)
       "q_log_rank",      // cumulative risk over the ≤day-span lifetime table (survival's frame)
       // r13 batch 2, each bounded:
-      "q_wilcoxon",      // rank cumsum via tallyCumSum — gated (see q_auc)
-      "q_pr_auc",        // offset cumsum over ≤ shuffle-partition-count rows — the
-                         //   distributedNtile construction; the per-row rank window
-                         //   itself is PARTITIONED by range-partition id
-      "q_lift",          // ntile dual path (NtileSpec) + cumsum over k=10 tile rows
+      "q_wilcoxon",      // rank cumsum via prefixSums — gated (see q_auc)
+      "q_pr_auc",        // rank + positive prefix via prefixSums — gated (see q_auc)
+      "q_lift",          // exactNtile (NtileSpec) + cumsum over k=10 tile rows
       // r14 additions, both bounded:
       "q_page_trend",    // hypothesized-order rank over k treatment rows
-      "q_mood_median",   // globalLowerMedian via tallyCumSum — gated (see q_auc)
+      "q_mood_median",   // globalLowerMedian via prefixSums — gated (see q_auc)
       // r14 wave 2/3, each bounded:
       "q_embeddedness",  // rank over ≤topK rows AFTER the distributed
                          //   TakeOrdered limit — the window never sees the edge table
       "q_curriculum",    // grp_index rank over the distinct-GROUP dim (source cardinality)
-      "q_ansari",        // position cumsum via tallyCumSum — gated (see q_auc)
+      "q_ansari",        // position cumsum via prefixSums — gated (see q_auc)
       "q_rbo")           // rank over ≤k rows post-limit, twice (vocabTopN's shape)
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     val offenders = Queries.registry.flatMap { case (name, q) =>

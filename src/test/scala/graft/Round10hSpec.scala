@@ -40,6 +40,10 @@ class Round10hSpec extends SparkSpecBase {
     val none = Seq((0L, false), (0L, false), (1L, false)).toDF("arm", "c")
     assert(Stats.propZTest(none, col("arm"), col("c")).collect()(0).isNullAt(9),
       "degenerate pool reports NULL, not a division blowup")
+    // a third arm is a named error, not a silently dropped arm
+    val three = Seq((0L, true), (1L, false), (2L, true)).toDF("arm", "c")
+    val err = intercept[IllegalArgumentException](Stats.propZTest(three, col("arm"), col("c")))
+    assert(err.getMessage.contains("propZTest needs exactly 2 arms, got 3"), err.getMessage)
   }
 
   test("mojibake count: marker occurrences, trailing markers, clean zero, NULL") {
